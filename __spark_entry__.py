@@ -89,14 +89,16 @@ def _corpus_tag(sf_dir: str) -> str:
 
 def _ensure_index(spark, sf_dir) -> str:
     """Build (once, content-keyed cache) the SPIMI index over the driver
-    corpus; returns the index dir. v2 in the path: a cached format-1 index
-    from an earlier round must never be picked up by the format-2 reader."""
+    corpus; returns the index dir. The version in the path is bumped
+    whenever a cached index from an earlier layout must not be reused:
+    v2 format-2 postings, v3 store_fields, v4 the tokens/ relation the
+    positions and bigram builds read."""
     import os
 
     from kafka_es_spark.plans.build_index import build_index
     from kafka_es_spark.sources.pages import docs_as_pages
 
-    idx = f"/tmp/kafka_es_index_v3_{_corpus_tag(sf_dir)}"
+    idx = f"/tmp/kafka_es_index_v4_{_corpus_tag(sf_dir)}"
     if not os.path.exists(os.path.join(idx, "_manifest", "term_stats.json")):
         # lang rides in the docmap as a stored field (ES doc-values
         # analogue) — the x8_facet_stored entry aggregates it with no

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_es_spark.functions.tokenize import tokens
@@ -172,15 +172,17 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(prev, cur, n): corpus bigram (adjacent-token transition) counts —
-    the relation the phrase suggester's bigram LM and lm_perplexity both
-    score against. Unigram transition counts fall out for free:
-    U(prev) = Σ_cur B(prev, cur), so callers never need a second pass.
+def bigram_counts(docs: DataFrame, terms: str | Column = "terms") -> DataFrame:
+    """(prev, cur, n): corpus bigram (adjacent-token transition) counts
+    over the token-array column ``terms`` (a column name, or an expression
+    such as ``tokens("text")``) — the relation the phrase suggester's
+    bigram LM and lm_perplexity both score against. Unigram transition
+    counts fall out for free: U(prev) = Σ_cur B(prev, cur), so callers
+    never need a second pass.
 
     Plan: per-partition PARTIAL counts in one vectorized pandas pass
-    (tokenize stays JVM codegen; each Arrow batch's transitions collapse
-    to a (prev, cur, n) frame before anything shuffles), then one hash
+    (each Arrow batch's transitions collapse to a (prev, cur, n) frame
+    before anything shuffles), then one hash
     aggregation summing the partials. r6 measurement: the previous
     array-side zip_with form built 30M per-transition structs through
     Spark's INTERPRETED higher-order lambda and shuffled nothing less —
@@ -190,8 +192,6 @@ def bigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     word_counts shape: Zipf collapses the stream to a vocab²-bounded
     (in practice vastly smaller) relation."""
     import numpy as np
-
-    tk = tokens(text_col)
 
     def count_batches(batches):
         for pdf in batches:
@@ -216,6 +216,7 @@ def bigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
             )
             yield g
 
+    tk = F.col(terms) if isinstance(terms, str) else terms
     part = docs.select(tk.alias("t")).mapInPandas(
         count_batches, "prev string, cur string, n long"
     )

@@ -5,8 +5,9 @@ positions (Lucene index_options=positions). Here positions live in a
 SEPARATE optional relation ``positions/`` beside ``postings/`` — phrase
 queries are rarer than term queries, and keeping positions out of the main
 segment format keeps the hot posting shuffle at format-2 size; the
-positional build is its own job over the same extracted/doc-id'd corpus
-(ids are deterministic, so the relations agree).
+positional build is its own job over the tokenized corpus build_index
+wrote to ``tokens/`` (the same rows, so the relations agree by
+construction).
 
 Row format (one row per (term, doc-range), same doc-range salt as X4/X5):
 
@@ -304,17 +305,20 @@ def merge_position_runs(runs: DataFrame, n_term_buckets: int = 8) -> DataFrame:
 
 
 def build_position_index(spark: SparkSession, pages: DataFrame, index_dir: str) -> dict:
-    """Add the ``positions/`` relation to an EXISTING index dataset: same
-    deterministic doc ids (extract + assign over the same corpus), same
-    seg/bucket scheme as stats.json records. Manifest-committed
-    (``positions`` stage) — rebuild-safe and resumable like every other
-    stage. Streaming epochs append their own positional unit via
+    """Add the ``positions/`` relation to an EXISTING index dataset: the
+    (doc_id, terms) rows build_index wrote to ``tokens/`` (so the doc ids
+    are the index's own, not a re-assignment), same seg/bucket scheme as
+    stats.json records. ``pages`` is unused — the corpus is read from
+    ``tokens/``, and an index without it raises; the parameter stays for
+    existing callers. Manifest-committed (``positions`` stage) —
+    rebuild-safe and resumable like every other stage. Streaming epochs
+    append their own positional unit via
     ``append_epoch(..., with_positions=True)`` (``append_epoch_positions``
     below); an index mixing positioned and position-less units serves
     phrase queries over the positioned units only."""
     import time
 
-    from kafka_es_spark.plans.build_index import load_stats, prepare_docs
+    from kafka_es_spark.plans.build_index import load_stats, read_tokens
     from kafka_es_spark.plans.manifest import Manifest
 
     st = load_stats(index_dir)
@@ -322,7 +326,7 @@ def build_position_index(spark: SparkSession, pages: DataFrame, index_dir: str) 
     n_term_buckets = int(st.get("n_term_buckets") or 8)
     man = Manifest(index_dir)
     t0 = time.time()
-    docs = prepare_docs(pages)
+    docs = read_tokens(spark, index_dir)
     runs = build_position_runs(docs, seg_bits=seg_bits)
     segs = merge_position_runs(runs, n_term_buckets=n_term_buckets)
     from pyspark.sql import Observation
@@ -539,7 +543,7 @@ def _phrase_topk_slots(
             if uids.size == 0:
                 return empty
         dl_base, dl_arr = spimi.decode_range_dls(dpdf.to_dict("records"))
-        dls = dl_arr[uids - dl_base].astype(np.float64)
+        dls = spimi.gather_dls(uids, dl_base, dl_arr).astype(np.float64)
         tf = tfp.astype(np.float64)
         score = w_total * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dls / avgdl))
         sel = np.lexsort((uids, -score))[:k]

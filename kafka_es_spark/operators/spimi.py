@@ -516,6 +516,24 @@ def build_range_dls(docs: DataFrame, seg_bits: int = SEG_BITS) -> DataFrame:
     )
 
 
+def gather_dls(ids: np.ndarray, dl_base: int, dl_arr: np.ndarray) -> np.ndarray:
+    """``dl_arr[ids - dl_base]``, validated: fancy indexing would silently
+    gather WRONG dls for any id outside [dl_base, dl_base + len) — negative
+    offsets wrap, positives past the end only sometimes raise — exactly the
+    silent-corruption mode of a mixed docmap/range_dls layout (ADVICE r3
+    #3). Every scorer gathers through here, so such an index raises."""
+    if ids.size:
+        lo, hi = int(ids.min()), int(ids.max())
+        if lo < dl_base or hi >= dl_base + dl_arr.size:
+            raise ValueError(
+                f"posting doc ids [{lo}, {hi}] fall outside the range-dl "
+                f"array [{dl_base}, {dl_base + dl_arr.size}): docmap/"
+                "range_dls rows are missing for this doc range (corrupt or "
+                "mixed-layout index)"
+            )
+    return dl_arr[ids - dl_base]
+
+
 def decode_range_dls(rows: list[dict]) -> tuple[int, np.ndarray]:
     """Range-dl rows of ONE seg → (base_doc_id, dl array). Rows (one per
     build unit/epoch) are sorted by first_docid; dense ids make them

@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_es_spark.operators.spimi import decode_range_dls, decode_segment
+from kafka_es_spark.operators.spimi import (
+    decode_range_dls, decode_segment, gather_dls,
+)
 from kafka_es_spark.operators.bm25 import K1, B
 
 TOPK_SCHEMA = T.StructType(
@@ -53,6 +55,20 @@ def _contrib(tfs: np.ndarray, dls: np.ndarray, w: float, avgdl: float,
     tf = tfs.astype(np.float64)
     dl = dls.astype(np.float64)
     return w * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _seg_dls(key, dpdf: pd.DataFrame) -> tuple[int, np.ndarray]:
+    """Seg-cogroup kernel preamble: the seg's decoded range-dl array
+    (dl_base, dl_arr). Postings for a doc range with no dl rows are never
+    a legal state (dls derive from the same docmap); returning empty
+    would silently drop the range's docs (ADVICE r3 #3), so it raises.
+    Every gather from the array goes through ``gather_dls``."""
+    if len(dpdf) == 0:
+        raise ValueError(
+            f"seg {key} has postings but no range-dl rows — "
+            "corrupt or mixed-layout index"
+        )
+    return decode_range_dls(dpdf.to_dict("records"))
 
 
 class _Cursor:
@@ -80,21 +96,7 @@ class _Cursor:
             tf_l.append(tfs)
         self.ids = np.concatenate(ids_l)
         tfs = np.concatenate(tf_l)
-        # fancy indexing would silently gather WRONG dls for any id outside
-        # [dl_base, dl_base + len): negative offsets wrap, positives past the
-        # end only sometimes raise — exactly the silent-corruption mode of a
-        # mixed docmap/range_dls layout (ADVICE r3 #3). Validate hard.
-        if self.ids.size and (
-            int(self.ids[0]) < dl_base
-            or int(self.ids[-1]) >= dl_base + dl_arr.size
-        ):
-            raise ValueError(
-                f"posting doc ids [{int(self.ids[0])}, {int(self.ids[-1])}] "
-                f"fall outside the range-dl array [{dl_base}, "
-                f"{dl_base + dl_arr.size}): docmap/range_dls rows are missing "
-                "for this doc range (corrupt or mixed-layout index)"
-            )
-        dls = dl_arr[self.ids - dl_base]
+        dls = gather_dls(self.ids, dl_base, dl_arr)
         self.contrib = _contrib(tfs, dls, w, avgdl, k1, b)
         last, maxtf, mindl = block_meta(self.ids, tfs, dls)
         self.blk_last = last
@@ -621,15 +623,7 @@ class Searcher:
                     {"doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            if len(dpdf) == 0:
-                # postings exist for this doc range but no dl rows — never a
-                # legal state (dls derive from the same docmap); returning
-                # empty would silently drop the range's docs (ADVICE r3 #3)
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             by_term: dict[str, list[dict]] = {}
             for r in pdf.to_dict("records"):
                 by_term.setdefault(r["term"], []).append(r)
@@ -836,8 +830,7 @@ class Searcher:
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(qterms)
         if not weights or (mode == "and" and len(weights) < len(qterms)) or (
             msm is not None and len(weights) < msm
         ):
@@ -856,12 +849,7 @@ class Searcher:
             )
             if len(pdf) == 0:
                 return empty
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             by_term: dict[str, list[dict]] = {}
             for r in pdf.to_dict("records"):
                 by_term.setdefault(r["term"], []).append(r)
@@ -1272,11 +1260,10 @@ class Searcher:
         )
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], out_schema)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(qterms)
         if not weights or (mode == "and" and len(weights) < len(qterms)):
             return spark.createDataFrame([], out_schema)
-        scored = self.relational_scores(query)
+        scored = self.relational_scores(query, weights)
         j = self._hit_fields(
             query, field_values, field, mode=mode,
             min_should_match=min_should_match, must_not=must_not,
@@ -1336,8 +1323,7 @@ class Searcher:
         out_cols = "url string, term string, tf long, dl long, idf double, contrib double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], out_cols)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(qterms)
         if not weights:
             return spark.createDataFrame([], out_cols)
         dm = (
@@ -1724,13 +1710,23 @@ class Searcher:
             out = out.join(fv_hit, "url", "left")
         return out
 
-    def relational_scores(self, query: str) -> DataFrame:
+    def _query_weights(self, qterms: list[str]) -> dict[str, float]:
+        """idf per query term present in the index: the one term_stats
+        collect a scorer makes (absent terms carry no weight)."""
+        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
+        return {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+
+    def relational_scores(
+        self, query: str, weights: dict[str, float] | None = None
+    ) -> DataFrame:
         """Full OR-mode BM25 scores of every live doc matching >= 1 query
         term, as a relational (doc_id, score) DataFrame (unrounded) —
         the building block multi-field scoring composes over. Same
         segment-decode path as range_filtered_topk: cost O(postings of
         the query terms), pruned scan, one hash aggregation; pending
-        tombstones excluded."""
+        tombstones excluded. ``weights``: the query terms' idfs when the
+        caller already collected them (``_query_weights``), so the
+        term_stats collect is not repeated."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
         spark = self.spark
@@ -1738,8 +1734,8 @@ class Searcher:
         empty = "doc_id long, score double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], empty)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        if weights is None:
+            weights = self._query_weights(qterms)
         if not weights:
             return spark.createDataFrame([], empty)
         segs = self._query_segs(list(weights))
@@ -1763,12 +1759,7 @@ class Searcher:
                     {"doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             rows = pdf.to_dict("records")
             rows.sort(key=lambda r: r["term"])
             ids_l, con_l = [], []
@@ -1776,7 +1767,7 @@ class Searcher:
                 ids, tfs = decode_segment(r, codec)
                 w = wmap[r["term"]]
                 tf = tfs.astype(np.float64)
-                dl = dl_arr[ids - dl_base].astype(np.float64)
+                dl = gather_dls(ids, dl_base, dl_arr).astype(np.float64)
                 con = (w * tf) * (K1 + 1.0) / (
                     tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
                 )
@@ -1862,8 +1853,7 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], TOPK_SCHEMA)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(qterms)
         if not weights or (mode == "and" and len(weights) < len(qterms)):
             return spark.createDataFrame([], TOPK_SCHEMA)
         hits = self.matching_doc_ids(
@@ -1888,7 +1878,7 @@ class Searcher:
         # hash aggregate's was not. The allowed set stays a plain
         # equi-join on the rank-sized score relation.
         out = (
-            self.relational_scores(query)
+            self.relational_scores(query, weights)
             .join(allowed, "doc_id")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
@@ -2916,8 +2906,7 @@ class Searcher:
         empty = "doc_id long, url string, score double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], empty)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(qterms)
         if not weights:
             return spark.createDataFrame([], empty)
         # r6: one seg-cogroup computes (score, matched) per doc — the old
@@ -2936,12 +2925,7 @@ class Searcher:
                      "score": pd.Series(dtype=np.float64),
                      "_matched": pd.Series(dtype=np.int64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             rows = pdf.to_dict("records")
             rows.sort(key=lambda r: r["term"])
             ids_l, con_l = [], []
@@ -2949,7 +2933,7 @@ class Searcher:
                 ids, tfs = decode_segment(r, codec)
                 w = wmap[r["term"]]
                 tf = tfs.astype(np.float64)
-                dl = dl_arr[ids - dl_base].astype(np.float64)
+                dl = gather_dls(ids, dl_base, dl_arr).astype(np.float64)
                 con = (w * tf) * (K1 + 1.0) / (
                     tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
                 )
@@ -3090,12 +3074,7 @@ class Searcher:
                     {"doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             ids_l, tf_l = [], []
             for r in pdf.to_dict("records"):
                 ids, tfs = decode_segment(r, codec)
@@ -3111,7 +3090,7 @@ class Searcher:
             )
             uids = ids_s[starts]
             tfp = np.add.reduceat(tf_s, starts).astype(np.float64)
-            dl = dl_arr[uids - dl_base].astype(np.float64)
+            dl = gather_dls(uids, dl_base, dl_arr).astype(np.float64)
             sc = (wf * tfp) * (K1 + 1.0) / (
                 tfp + K1 * ((1.0 - B) + (B * dl) / avgdl)
             )
@@ -3286,7 +3265,11 @@ class Searcher:
         grp_names = sorted(weights)
         gidx = {g: i for i, g in enumerate(grp_names)}
         warr_py = [float(weights[g]) for g in grp_names]
-        term2g = {m: gidx[g] for m, g in member_rows}
+        # a term may sit in several groups (a query term listed as another
+        # term's synonym): it contributes its tf to EACH of them
+        term2g: dict[str, list[int]] = {}
+        for m, g in member_rows:
+            term2g.setdefault(m, []).append(gidx[g])
         avgdl, codec = self.avgdl, self.codec
 
         def score_range(key, pdf, dpdf):
@@ -3296,22 +3279,18 @@ class Searcher:
             )
             if len(pdf) == 0:
                 return empty_pdf
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             warr = np.asarray(warr_py, dtype=np.float64)
             ids_l, tf_l, g_l = [], [], []
             for r in pdf.to_dict("records"):
-                g = term2g.get(r["term"])
-                if g is None:  # not a member term (defensive; segs pruned)
+                gs = term2g.get(r["term"])
+                if gs is None:  # not a member term (defensive; segs pruned)
                     continue
                 ids, tfs = decode_segment(r, codec)
-                ids_l.append(ids)
-                tf_l.append(tfs.astype(np.int64))
-                g_l.append(np.full(ids.size, g, dtype=np.int64))
+                for g in gs:  # one (doc, tf, group) triple per membership
+                    ids_l.append(ids)
+                    tf_l.append(tfs.astype(np.int64))
+                    g_l.append(np.full(ids.size, g, dtype=np.int64))
             if not ids_l:
                 return empty_pdf
             ids_all = np.concatenate(ids_l)
@@ -3328,7 +3307,7 @@ class Searcher:
             p_ids = ids_s[pstarts]
             p_g = g_s[pstarts]
             p_tf = np.add.reduceat(tf_s, pstarts).astype(np.float64)
-            dl = dl_arr[p_ids - dl_base].astype(np.float64)
+            dl = gather_dls(p_ids, dl_base, dl_arr).astype(np.float64)
             wv = warr[p_g]
             con = (wv * p_tf) * (K1 + 1.0) / (
                 p_tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
@@ -5013,12 +4992,7 @@ class Searcher:
                      "doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _seg_dls(key, dpdf)
             by_term: dict[str, list[dict]] = {}
             for r in pdf.to_dict("records"):
                 by_term.setdefault(r["term"], []).append(r)

@@ -3,6 +3,10 @@ pipeline: Kafka sink → ES bulk → ES index build, SURVEY.md §3.1).
 
 Layout of an index dataset at ``index_dir``:
 
+    tokens/epoch=base/*.parquet    (doc_id, url, dl, terms, *store_fields):
+                                   the extracted, doc-id'd, tokenized corpus,
+                                   written once; the docmap, shard, positions
+                                   and bigram jobs all read it
     postings/shard=<i>/*.parquet   segment rows (spimi.SEGMENT_SCHEMA + bucket)
     docmap/epoch=*/*.parquet       (doc_id, url, dl); epoch=base for the
                                    batch unit, epoch=<n> per streaming epoch
@@ -62,13 +66,14 @@ def extracted_pages(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → (url, text[, *store_fields]).
     The text is the ONLY column that is expensive to recompute (Python
-    UDF) — build_index persists exactly this slim relation. html is
-    dropped immediately; tokenization is JVM-side regex and is recomputed
-    by each consumer (cheaper than caching token arrays, which blows the
-    columnar cache at scale). ``store_fields`` carries small scalar page
-    columns through to the docmap — the ES stored-fields / doc-values
-    analogue (keep them scalar; a wide stored column belongs in an
-    external field relation, not the cached build lineage)."""
+    UDF) — build_index persists exactly this slim relation for the one
+    job that writes ``tokens/``. html is dropped immediately; the token
+    arrays are computed once, in that job, and every later build job reads
+    them from ``tokens/`` rather than re-running extraction or the regex
+    split. ``store_fields`` carries small scalar page columns through to
+    the docmap — the ES stored-fields / doc-values analogue (keep them
+    scalar; a wide stored column belongs in an external field relation,
+    not the build lineage)."""
     # The Python UDF is hoisted out of coalesce into an ArrowEvalPython node
     # that runs on EVERY row, so gate its INPUT: rows that already carry text
     # hand the UDF a null instead of the html bytes — no Arrow transfer of
@@ -87,9 +92,8 @@ def extracted_pages(
 
 
 def prepare_docs(pages: DataFrame, extract_if_missing: bool = True) -> DataFrame:
-    """pages → (doc_id, url, dl, terms). One-shot convenience (tests); the
-    multi-job build persists extracted_pages first — an Arrow UDF in the
-    lineage defeats column pruning, so without it every job re-extracts."""
+    """pages → (doc_id, url, dl, terms). One-shot convenience (tests): the
+    same rows build_index writes to ``tokens/``, without writing them."""
     docs = assign_doc_ids(extracted_pages(pages, extract_if_missing))
     t = tokens(F.col("text"))
     return docs.select(
@@ -120,41 +124,60 @@ def build_index(
     stats.json so epoch appends keep the docmap schema uniform."""
     os.makedirs(index_dir, exist_ok=True)
     man = Manifest(index_dir)
-    # The extracted text is persisted once: the build is multi-job (bucket
-    # counts, docmap, shards, stats), an Arrow UDF in the lineage defeats
-    # column pruning, and re-running it would re-extract every page. The
-    # POST-window relation (doc_id, url, terms, *store_fields) is persisted
-    # too: the doc-id window (bucket shuffle + per-bucket sort) used to be
-    # re-executed by BOTH the docmap job and every shard job (lineage
-    # recompute) — caching it once was measured ~11% off the whole build at
-    # 500k pages (guide §2.4: two operations keyed the same way share one
-    # exchange — here they share the materialized result outright). The
-    # cached relation carries the TOKEN ARRAYS, not the text: the docmap
-    # job (dl = size) and the shard job(s) each ran the regex split, and
-    # post-window tokenization measured ~1.5 s/run at 500k pages — caching
-    # terms tokenizes once (a further ~8% off; tokens are ~the same bytes
-    # as the text they replace). At cluster scale: DISK_ONLY or checkpoint
-    # the extracted/tokenized dataset (it is a deliverable of its own).
-    t_ex = time.time()
     store_fields = tuple(store_fields)
-    slim = extracted_pages(pages, extract_if_missing, store_fields).persist()
-    base = (  # the bucket-count job inside assign_doc_ids materializes `slim`
-        assign_doc_ids(slim)
-        .select(
-            "doc_id", "url", tokens(F.col("text")).alias("terms"),
-            *store_fields,
+    tokens_dir = os.path.join(index_dir, "tokens")
+
+    # --- tokens: the extracted, doc-id'd, tokenized corpus, written once ---
+    # Every later job reads this relation instead of re-deriving it: the
+    # docmap is a column projection of it, the shard jobs invert its terms,
+    # and positions / bigram stats read it back (read_tokens). Only the
+    # extracted text is cached, and only for this one job: an Arrow UDF in
+    # the lineage defeats column pruning, and assign_doc_ids reads its input
+    # twice (the bucket-count job, then the window), so without the persist
+    # every page would be extracted twice. Global stats ride the write via
+    # Observation and are committed with the stage, so a resumed build needs
+    # neither the pages nor a read-back job to recover them.
+    if not (resume and man.is_complete("tokens")):
+        t0 = time.time()
+        slim = extracted_pages(pages, extract_if_missing, store_fields).persist()
+        obs = Observation()
+        (
+            assign_doc_ids(slim)
+            .select(
+                "doc_id", "url", tokens(F.col("text")).alias("terms"),
+                *store_fields,
+            )
+            .select(
+                "doc_id", "url", F.size("terms").cast("long").alias("dl"),
+                "terms", *store_fields,
+            )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.avg("dl").alias("avgdl"),
+                F.sum("dl").alias("tok"),
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(tokens_dir, "epoch=base"))
         )
-        .persist()
-    )
-    docs = base.select(
-        "doc_id", "url", F.size("terms").cast("long").alias("dl"),
-        "terms", *store_fields
-    )
-    # not resume-gated (the persist must rebuild every run) — recorded so
-    # per-stage attribution covers the whole build, not just committed stages
-    man.commit("extract_docids", {"elapsed_sec": time.time() - t_ex})
-    if metrics is not None:
-        metrics.record_stage("extract_docids", time.time() - t_ex)
+        slim.unpersist()
+        st = obs.get
+        elapsed = time.time() - t0
+        man.commit(
+            "tokens",
+            {
+                "docs": int(st["n"]),
+                "avgdl": float(st["avgdl"] or 0.0),
+                "tokens": int(st["tok"] or 0),
+                "elapsed_sec": elapsed,
+            },
+        )
+        # per-stage attribution under the stage name the build has always
+        # reported for extraction + doc-id assignment
+        man.commit("extract_docids", {"elapsed_sec": elapsed})
+        if metrics is not None:
+            metrics.record_stage("extract_docids", elapsed)
+    docs = read_tokens(spark, index_dir)
 
     # --- docmap + global stats (its own committed stage) -------------------
     # The batch unit writes under epoch=base so batch and streaming layouts
@@ -164,27 +187,15 @@ def build_index(
     docmap_dir = os.path.join(index_dir, "docmap")
     if not (resume and man.is_complete("docmap")):
         t0 = time.time()
-        # global stats ride the write job via Observation — the old
-        # read-back agg was a whole extra job (~0.5 s of the flat per-build
-        # cost the scaling number pays at every corpus size)
-        obs = Observation()
-        (
-            docs.select("doc_id", "url", "dl", *store_fields)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("tok"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(docmap_dir, "epoch=base"))
-        )
-        st = obs.get
+        docs.select("doc_id", "url", "dl", *store_fields).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(docmap_dir, "epoch=base"))
+        tok = man.read("tokens")
         stats = {
             "format": 2,
-            "n_docs": int(st["n"]),
-            "avgdl": float(st["avgdl"] or 0.0),
-            "total_tokens": int(st["tok"] or 0),
+            "n_docs": int(tok["docs"]),
+            "avgdl": float(tok["avgdl"]),
+            "total_tokens": int(tok["tokens"]),
             "codec": codec,
             "seg_bits": seg_bits,
             "n_term_buckets": n_term_buckets,
@@ -203,17 +214,9 @@ def build_index(
         )
         if metrics is not None:
             metrics.record_stage("docmap", time.time() - t0)
-        # `base` (post-window) is materialized by the write above; the
-        # extraction-only cache has served its purpose — drop it so build
-        # memory holds one text copy (on the resume path the docmap job is
-        # skipped, so slim stays cached until the end for the shard jobs)
-        slim.unpersist()
 
     # --- range dl arrays (format 2: dl rides ONCE per doc, not per posting).
-    # Derived from the WRITTEN docmap parquet — reading (doc_id, dl) back is
-    # a two-column scan; deriving from `docs` would re-tokenize the whole
-    # corpus just to recompute dl (measured ~4 s of the fixed per-build cost
-    # at 1M pages). --
+    # Derived from the WRITTEN docmap parquet — a two-column scan. --
     if not (resume and man.is_complete("range_dls")):
         t0 = time.time()
         rd_dir = os.path.join(index_dir, "range_dls")
@@ -308,14 +311,27 @@ def build_index(
             {"terms": int(obs.get["terms"]), "elapsed_sec": time.time() - t0},
         )
 
-    slim.unpersist()
-    base.unpersist()
     return {e["name"]: e for e in man.entries()}
 
 
 def load_stats(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "stats.json")) as f:
         return json.load(f)
+
+
+def read_tokens(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The base unit's tokenized corpus (doc_id, url, dl, terms,
+    *store_fields) as build_index wrote it. An index built before
+    ``tokens/`` existed has nothing to read: raise rather than re-derive
+    the corpus from pages, whose doc ids the index need not share."""
+    path = os.path.join(index_dir, "tokens", "epoch=base")
+    if not (Manifest(index_dir).is_complete("tokens") and os.path.isdir(path)):
+        raise FileNotFoundError(
+            f"{path} is missing: this index has no committed tokens/ relation "
+            "(built before tokens/ existed, or its build did not finish); "
+            "rebuild it with build_index"
+        )
+    return spark.read.parquet(path)
 
 
 def build_bigram_stats(
@@ -333,16 +349,21 @@ def build_bigram_stats(
     suggestion request — VERDICT r4 #4). One build-time aggregation
     makes each suggest call a candidate-pair lookup: the broadcast
     pair dimension semi-joins a vocab²-bounded stats relation whose
-    parquet files are sorted by (prev, cur) for row-group pruning."""
+    parquet files are sorted by (prev, cur) for row-group pruning.
+
+    The transitions are counted over the token arrays build_index wrote to
+    ``tokens/``; ``pages`` is unused (kept for existing callers), and an
+    index without ``tokens/`` raises."""
     from kafka_es_spark.operators.cooccur import bigram_counts
 
     t0 = time.time()
+    docs = read_tokens(spark, index_dir)
     st = load_stats(index_dir)
     n_buckets = int(st.get("n_term_buckets") or 8)
     man = Manifest(index_dir)
     obs = Observation()
     (
-        bigram_counts(extracted_pages(pages))
+        bigram_counts(docs)
         .repartition(n_buckets, "prev")
         .sortWithinPartitions("prev", "cur")
         .observe(

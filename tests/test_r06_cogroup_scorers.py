@@ -9,12 +9,14 @@ Covered: terms_set_topk (score + per-doc matched count), span_or_topk
 range_filtered_topk (reuses relational_scores ⨝ allowed).
 """
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from kafka_es_spark.operators.wand import Searcher, idf
-from kafka_es_spark.plans.build_index import build_index
+from kafka_es_spark.plans.build_index import build_index, prepare_docs
 
 SEG_BITS = 6
 
@@ -102,13 +104,11 @@ def test_span_or_matches_join_formulation(spark, searcher):
     assert _rows(old) and _rows(got) == _rows(old)
 
 
-def test_synonym_matches_join_formulation(spark, searcher):
-    """synonym_topk via the cogroup kernel == the old two-level
-    (doc, grp) roll-up join shape, incl. a group member absent from
-    the index."""
-    s = searcher
-    syns = {"join": ["merge"], "query": ["scan", "zzznotindexed"]}
-    qterms = sorted({"join", "query", "data"})
+def _synonym_join_formulation(spark, s, query, syns, k):
+    """The old two-level (doc, grp) roll-up join shape of synonym_topk:
+    the gmap join emits one row per (term, group) membership, so a term
+    in several groups counts in each."""
+    qterms = sorted(set(query.split()))
     groups = {t: sorted({t} | set(syns.get(t, ()))) for t in qterms}
     all_terms = sorted({m for ms in groups.values() for m in ms})
     tsd = {
@@ -129,7 +129,7 @@ def test_synonym_matches_join_formulation(spark, searcher):
     w_df = spark.createDataFrame(
         sorted(weights.items()), "grp string, w double"
     )
-    old = (
+    return (
         s._postings_rows(segs)
         .join(F.broadcast(gmap), "term")
         .groupBy("doc_id", "grp")
@@ -139,10 +139,80 @@ def test_synonym_matches_join_formulation(spark, searcher):
         .groupBy("doc_id")
         .agg(F.round(F.sum(s._bm25_contrib_col()), 4).alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(25)
+        .limit(k)
     )
+
+
+def test_synonym_matches_join_formulation(spark, searcher):
+    """synonym_topk via the cogroup kernel == the old two-level
+    (doc, grp) roll-up join shape, incl. a group member absent from
+    the index."""
+    s = searcher
+    syns = {"join": ["merge"], "query": ["scan", "zzznotindexed"]}
+    old = _synonym_join_formulation(spark, s, "join query data", syns, 25)
     got = s.synonym_topk("join query data", syns, k=25)
     assert _rows(old) and _rows(got) == _rows(old)
+
+
+def test_synonym_overlapping_groups_match_join_formulation(spark, searcher):
+    """A query term that is also another query term's synonym belongs to
+    both groups and contributes its tf to each of them."""
+    s = searcher
+    syns = {"join": ["merge"]}
+    old = _synonym_join_formulation(spark, s, "join merge", syns, 25)
+    got = s.synonym_topk("join merge", syns, k=25)
+    assert _rows(old) and _rows(got) == _rows(old)
+
+
+def test_gather_dls_rejects_ids_outside_range():
+    import numpy as np
+
+    from kafka_es_spark.operators.spimi import gather_dls
+
+    arr = np.array([5, 6, 7], dtype=np.int64)
+    assert gather_dls(np.array([10, 12]), 10, arr).tolist() == [5, 7]
+    for bad in ([9, 10], [12, 13]):
+        with pytest.raises(ValueError, match="outside the range-dl array"):
+            gather_dls(np.array(bad), 10, arr)
+
+
+def test_cogroup_kernels_raise_on_mismatched_range_dls(
+    spark, pages, idx, docfields, tmp_path
+):
+    """A range_dls relation whose ranges start one doc too late (so the
+    first doc of every range falls below dl_base) must make every
+    seg-cogroup scorer raise instead of gathering a wrapped-around dl."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    bad = str(tmp_path / "bad_dls")
+    shutil.copytree(idx, bad)
+    rd = os.path.join(bad, "range_dls", "epoch=base")
+    t = pq.read_table(rd)
+    shutil.rmtree(rd)
+    os.makedirs(rd)
+    first = pa.compute.add(t.column("first_docid"), 1)
+    pq.write_table(
+        t.set_column(t.schema.get_field_index("first_docid"), "first_docid", first),
+        os.path.join(rd, "part-0.parquet"),
+    )
+    # a term of doc 0, the first doc of range 0 — now below its dl_base
+    term = prepare_docs(pages).filter("doc_id = 0").first()["terms"][0]
+    s = Searcher(spark, bad, cache=False)
+    try:
+        for call in (
+            lambda: s.relational_scores(term),
+            lambda: s.terms_set_topk(term, docfields, "required_matches"),
+            lambda: s.span_or_topk([term]),
+            lambda: s.synonym_topk(term, {}),
+            lambda: s.range_filtered_topk(term, docfields, "n_tokens", 0, 10**6),
+        ):
+            with pytest.raises(Exception, match="outside the range-dl array"):
+                call().collect()
+    finally:
+        s.close()
 
 
 def test_range_filtered_matches_hit_scores(spark, searcher, docfields):

@@ -183,13 +183,14 @@ def test_inlinestats_alias_equals_by_key(spark):
 
 
 def test_bigram_counts_equals_window_transitions(spark):
+    from kafka_es_spark.functions.tokenize import tokens
     from kafka_es_spark.operators.cooccur import bigram_counts
 
     df = spark.createDataFrame(
         [("a", "x y x y z"), ("b", "x"), ("c", ""), ("d", "y z")],
         "url string, text string",
     )
-    got = {(r.prev, r.cur): r.n for r in bigram_counts(df).collect()}
+    got = {(r.prev, r.cur): r.n for r in bigram_counts(df, tokens("text")).collect()}
     assert got == {
         ("x", "y"): 2, ("y", "x"): 1, ("y", "z"): 2,
     }
