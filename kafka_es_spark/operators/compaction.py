@@ -58,6 +58,7 @@ from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
 from kafka_es_spark.operators.deletes import clear_tombstones, read_tombstone_ids
 from kafka_es_spark.plans.manifest import Manifest
+from kafka_es_spark.session import local_frame
 
 _SWAP_DIRS = ("postings", "docmap", "range_dls", "term_stats", "positions")
 
@@ -314,8 +315,8 @@ def compact_index(
         "doc_id", "url", "dl", *tuple(stats.get("store_fields") or ())
     )
     if dead:
-        tdf = spark.createDataFrame(
-            [(int(x),) for x in sorted(dead)], "doc_id long"
+        tdf = local_frame(
+            spark, [(int(x),) for x in sorted(dead)], "doc_id long"
         )
         dm = dm.join(F.broadcast(tdf), "doc_id", "left_anti")
     dm.write.mode("overwrite").parquet(

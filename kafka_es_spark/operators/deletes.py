@@ -31,6 +31,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_es_spark.session import local_frame
+
 # Pending tombstones are meant to be collected into the query closure
 # (the live-docs-bitset analogue). Past this many the set is no longer
 # "pending deletes since the last merge" — force a compaction instead of
@@ -61,8 +63,8 @@ def add_tombstones(
             rels.append(doc_ids.select(F.col("doc_id").cast("long")))
         else:
             rels.append(
-                spark.createDataFrame(
-                    [(int(d),) for d in doc_ids], "doc_id long"
+                local_frame(
+                    spark, [(int(d),) for d in doc_ids], "doc_id long"
                 )
             )
     if urls is not None:

@@ -25,6 +25,12 @@ EXPLICIT ``n_buckets`` that leaves an oversized bucket raises instead of
 silently serializing a giant window through one task. Driver-side state is
 one (bucket, count) row per non-empty bucket in every case.
 
+The offsets go back into the plan as a LocalRelation: the driver turns
+the counts into (bucket, offset) rows, ``session.local_frame`` builds them
+as an Arrow table, and the join broadcasts that ``LocalTableScan``. The
+JVM reads it directly, so doc-id assignment (every build and every
+streaming epoch) needs no Python worker of its own.
+
 Reference parity: generalizes the sink's hash router
 (ElasticsearchSinkTask.kt:209-212, Actors.kt:55-75) from "route record to
 writer" to "assign stable dense ids".
@@ -36,6 +42,8 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from kafka_es_spark.session import local_frame
 
 # coarse first-pass bucket count for auto-sizing (driver rows ≤ 1024)
 COARSE_BUCKETS = 1024
@@ -92,8 +100,10 @@ def assign_doc_ids(
     for k in sorted(counts):
         offsets[k] = acc
         acc += counts[k]
-    off_df = b.sparkSession.createDataFrame(
-        [(int(k), int(v)) for k, v in offsets.items()], "_bkt: long, _off: long"
+    off_df = local_frame(
+        b.sparkSession,
+        [(int(k), int(v)) for k, v in offsets.items()],
+        "_bkt: long, _off: long",
     )
     w = Window.partitionBy("_bkt").orderBy(url_col)
     return (

@@ -29,6 +29,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_es_spark.session import local_frame
+
 _log = logging.getLogger(__name__)
 
 NON_RETRIABLE_ERRORS = [
@@ -478,7 +480,7 @@ def resend_with_backoff(
         fatal_parts.append(classified.filter(F.col("outcome") == "fatal").select(*keep))
         pending = classified.filter(F.col("outcome") == "retry").select(*action_cols)
     spark = actions.sparkSession
-    empty = spark.createDataFrame([], actions.schema)
+    empty = local_frame(spark, [], actions.schema)
 
     def _union(parts):
         out = None

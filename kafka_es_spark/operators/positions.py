@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
 from kafka_es_spark.operators.bm25 import B, K1
+from kafka_es_spark.session import local_frame
 
 POS_BITS = 21  # doc length < 2^21 tokens — validated at encode time
 
@@ -471,7 +472,7 @@ def _phrase_topk_slots(
     st = load_stats(index_dir)
     n_docs, avgdl = st["n_docs"], st["avgdl"]
     if not slot_terms or any(not s for s in slot_terms) or n_docs == 0 or avgdl == 0:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     uniq = sorted({t for s in slot_terms for t in s})
     ts = (
         spark.read.parquet(os.path.join(index_dir, "term_stats"))
@@ -485,7 +486,7 @@ def _phrase_topk_slots(
     # possible; a multi-term slot only needs one alternative present
     slot_terms = [[t for t in s if t in dfs] for s in slot_terms]
     if any(not s for s in slot_terms):
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     w_total = float(sum(idf(n_docs, dfs[t]) for s in slot_terms for t in s))
 
     pos_dir = os.path.join(index_dir, "positions")
@@ -613,7 +614,7 @@ def phrase_match_ids(
 
     slots = tokenize_py(phrase)
     if not slots:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     recover_swap_dirs(index_dir)
     excluded = read_tombstone_ids(spark, index_dir) or None
     st = load_stats(index_dir)
@@ -681,7 +682,7 @@ def phrase_prefix_topk(
     if not slots:
         from kafka_es_spark.operators.wand import TOPK_SCHEMA
 
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     prefix = slots[-1]
     rows = (
         spark.read.parquet(os.path.join(index_dir, "term_stats"))
@@ -696,7 +697,7 @@ def phrase_prefix_topk(
     if not expansion:
         from kafka_es_spark.operators.wand import TOPK_SCHEMA
 
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, [], TOPK_SCHEMA)
     slot_terms = [[t] for t in slots[:-1]] + [expansion]
     return _phrase_topk_slots(
         spark, index_dir, slot_terms, k, 0, round_to, with_url, fetch_k,
@@ -755,7 +756,7 @@ def _window_anchor_topk(
     if t not in dfs or n_docs == 0 or avgdl == 0 or (
         require and x not in dfs
     ):
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     w = sum(
         math.log(1 + (n_docs - dfs[q] + 0.5) / (dfs[q] + 0.5))
         for q in idf_terms if q in dfs
@@ -958,7 +959,7 @@ def span_first_topk(
         .collect()[0]
     )
     if dfrow["df"] is None or n_docs == 0 or avgdl == 0:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     w = math.log(1 + (n_docs - int(dfrow["df"]) + 0.5) / (int(dfrow["df"]) + 0.5))
     pos_dir = os.path.join(index_dir, "positions")
     if not os.path.isdir(pos_dir):

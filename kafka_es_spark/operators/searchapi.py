@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_es_spark.session import local_frame
+
 
 class DSLError(ValueError):
     pass
@@ -151,7 +153,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
     if kind == "match_none":
         return _Compiled(
             None,
-            searcher.spark.createDataFrame([], "doc_id long"),
+            local_frame(searcher.spark, [], "doc_id long"),
         )
 
     if kind == "match":
@@ -213,7 +215,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         )
         terms = [r["term"] for r in rows]
         if not terms:
-            empty = searcher.spark.createDataFrame([], "doc_id long")
+            empty = local_frame(searcher.spark, [], "doc_id long")
             return _Compiled(None, empty)
         q = " ".join(terms)
         if not scoring:
@@ -247,7 +249,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         terms = [r["term"] for r in rows]
         if not terms:
             return _Compiled(
-                None, searcher.spark.createDataFrame([], "doc_id long")
+                None, local_frame(searcher.spark, [], "doc_id long")
             )
         q = " ".join(terms)
         if not scoring:
@@ -280,8 +282,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
     if kind == "ids":
         import os
 
-        req = searcher.spark.createDataFrame(
-            [(u,) for u in body["values"]], "url string"
+        req = local_frame(
+            searcher.spark, [(u,) for u in body["values"]], "url string"
         )
         dm = searcher.spark.read.parquet(
             os.path.join(searcher.index_dir, "docmap")
@@ -473,7 +475,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         toks = tokenize_py(str(spec["query"]))
         if not toks:
             return _Compiled(
-                None, searcher.spark.createDataFrame([], "doc_id long")
+                None, local_frame(searcher.spark, [], "doc_id long")
             )
         cap = int(spec.get("max_expansions", 50))
         fixed, pre = toks[:-1], toks[-1]
@@ -484,7 +486,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         terms = sorted(set(fixed) | {r["term"] for r in rows})
         if not terms:
             return _Compiled(
-                None, searcher.spark.createDataFrame([], "doc_id long")
+                None, local_frame(searcher.spark, [], "doc_id long")
             )
         q = " ".join(terms)
         if not scoring:
@@ -527,7 +529,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             )
             if not present:
                 return _Compiled(
-                    None, searcher.spark.createDataFrame([], "doc_id long")
+                    None, local_frame(searcher.spark, [], "doc_id long")
                 )
             counts = (
                 searcher._postings_rows(searcher._query_segs(present))
@@ -585,8 +587,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
                     .cast("long").alias("vec_id")
                 )
                 embeddings = embeddings.join(keep, "vec_id", "left_semi")
-        qdf = searcher.spark.createDataFrame(
-            [(-1, [float(x) for x in body["query_vector"]])],
+        qdf = local_frame(
+            searcher.spark, [(-1, [float(x) for x in body["query_vector"]])],
             "query_id long, qvec array<double>",
         )
         top = cosine_topk(
@@ -649,7 +651,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         cand = sorted(t for t, c in tf.items() if c >= min_tf)
         if not cand:
             return _Compiled(
-                None, searcher.spark.createDataFrame([], "doc_id long")
+                None, local_frame(searcher.spark, [], "doc_id long")
             )
         dfs = {
             r["term"]: int(r["df"])
@@ -664,7 +666,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         )[: int(body.get("max_query_terms", 10))]
         if not ranked:
             return _Compiled(
-                None, searcher.spark.createDataFrame([], "doc_id long")
+                None, local_frame(searcher.spark, [], "doc_id long")
             )
         q = " ".join(sorted(ranked))
         if not scoring:
@@ -681,8 +683,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         organic = body.get("organic")
         if not urls or organic is None:
             raise DSLError("pinned needs ids[] and organic")
-        pin_df = searcher.spark.createDataFrame(
-            [(u, float(1e9 - i)) for i, u in enumerate(urls)],
+        pin_df = local_frame(
+            searcher.spark, [(u, float(1e9 - i)) for i, u in enumerate(urls)],
             "url string, score double",
         )
         dm = _docmap(searcher).select("doc_id", "url")
@@ -1379,8 +1381,8 @@ def search(
         qv = knn["query_vector"]
         # query_id -1: cosine_topk excludes self by id, and an external
         # query vector must never mask a corpus vector's id
-        qdf = searcher.spark.createDataFrame(
-            [(-1, [float(x) for x in qv])],
+        qdf = local_frame(
+            searcher.spark, [(-1, [float(x) for x in qv])],
             "query_id long, qvec array<double>",
         )
         return cosine_topk(
@@ -1677,8 +1679,8 @@ def _hybrid_rrf(
     )
 
     knn = body["knn"]
-    qdf = searcher.spark.createDataFrame(
-        [(-1, [float(x) for x in knn["query_vector"]])],
+    qdf = local_frame(
+        searcher.spark, [(-1, [float(x) for x in knn["query_vector"]])],
         "query_id long, qvec array<double>",
     )
     knn_rank = cosine_topk(
@@ -1916,8 +1918,8 @@ def _run_aggs(
         )
         n_fg = j2.count()
         if n_fg == 0:
-            return searcher.spark.createDataFrame(
-                [],
+            return local_frame(
+                searcher.spark, [],
                 "term string, fg_count long, bg_count long, "
                 "sig_score double",
             )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_es_spark.session import local_frame
+
 
 def sessionize(
     events: DataFrame,
@@ -107,8 +109,10 @@ def auto_date_histogram(
         F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
     ).collect()[0]
     if lo is None:
-        return events.sparkSession.createDataFrame(
-            [], "bucket timestamp, doc_count long, interval string"
+        return local_frame(
+            events.sparkSession,
+            [],
+            "bucket timestamp, doc_count long, interval string",
         )
     span = (hi - lo).total_seconds()
     unit = AUTO_DH_LADDER[-1][0]

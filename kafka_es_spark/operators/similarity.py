@@ -25,6 +25,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_es_spark.session import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -666,8 +668,8 @@ def ivf_ann_topk(
         for c in top:
             probe_rows.append((r["query_id"], list(r["qvec"]), int(c)))
     spark = emb.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows,
+    probes = local_frame(
+        spark, probe_rows,
         T.StructType(
             [
                 T.StructField("query_id", T.LongType(), False),
@@ -743,8 +745,8 @@ def _ivf_ann_topk_portable(
         for _, j in scored[:n_probe]:
             probe_rows.append((r["query_id"], list(r["qvec"]), int(j)))
     spark = emb.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows,
+    probes = local_frame(
+        spark, probe_rows,
         T.StructType(
             [
                 T.StructField("query_id", T.LongType(), False),

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from kafka_es_spark.operators import bm25 as _bm25
+from kafka_es_spark.session import local_frame
 
 
 def build_rank_features(
@@ -91,8 +92,8 @@ def sparse_vector_topk(
     if not query_weights:
         raise ValueError("sparse_vector query needs at least one weighted token")
     spark = features.sparkSession
-    q = spark.createDataFrame(
-        sorted(query_weights.items()), "feature string, qw double"
+    q = local_frame(
+        spark, sorted(query_weights.items()), "feature string, qw double"
     )
     scored = (
         features.join(broadcast(q), "feature")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from kafka_es_spark.functions.tokenize import tokens
 from kafka_es_spark.operators.dedup import hash32
+from kafka_es_spark.session import local_frame
 
 RATE_DENOM = 1_000_000
 
@@ -101,7 +102,7 @@ def pack_sequences(
         offsets.append((g, acc))
         acc += gsums[g]
     spark = docs.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "grp long, grp_offset long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "grp long, grp_offset long")
     # broadcast-joined offsets (NOT a literal map — 10⁶ groups would bloat
     # the plan; a broadcast relation stays O(#groups) off-plan bytes)
     d = d.join(F.broadcast(off_df), "grp", "left").withColumn(
@@ -298,7 +299,8 @@ def importance_weights(
     T = sum(tcounts.values())
     Q = sum(qcounts.values())
     spark = docs.sparkSession
-    ratio = spark.createDataFrame(
+    ratio = local_frame(
+        spark,
         [
             (
                 f,
@@ -467,8 +469,8 @@ def mix_plan(
     ``weights`` are excluded (weight 0 by convention). The plan row is a
     pure function of (weights, budget, per-stratum totals)."""
     spark = docs.sparkSession
-    w = spark.createDataFrame(
-        sorted(weights.items()), f"{key_col} string, weight double"
+    w = local_frame(
+        spark, sorted(weights.items()), f"{key_col} string, weight double"
     )
     totals = docs.groupBy(key_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -625,8 +627,8 @@ def filter_blocked_hosts(
     semi join on the host key. No shuffle of the corpus at any point."""
     spark = docs.sparkSession
     if isinstance(blocked_hosts, list):
-        bl = spark.createDataFrame(
-            [(h.lower(),) for h in blocked_hosts], "bhost string"
+        bl = local_frame(
+            spark, [(h.lower(),) for h in blocked_hosts], "bhost string"
         )
     else:
         bl = blocked_hosts.toDF("bhost")

@@ -37,6 +37,7 @@ from kafka_es_spark.operators.spimi import (
     decode_range_dls, decode_segment, gather_dls,
 )
 from kafka_es_spark.operators.bm25 import K1, B
+from kafka_es_spark.session import local_frame
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -587,7 +588,7 @@ class Searcher:
                     "positive term (ES match_all + must_not is a full "
                     "corpus scan — not a top-k posting-list query)"
                 )
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
 
         ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
         # query-time boosts (ES term ^boost): scale the term weight —
@@ -598,10 +599,10 @@ class Searcher:
             for r in ts
         }
         if not weights:
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         if mode == "and" and len(weights) < len(qterms):
             # a required term has no postings anywhere — no doc can match
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         msm = min_should_match
         if msm is not None and (msm < 1 or mode == "and"):
             raise ValueError(
@@ -610,7 +611,7 @@ class Searcher:
             )
         if msm is not None and len(weights) < msm:
             # fewer terms exist in the index than the match floor requires
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         term_order = sorted(weights)
         avgdl, codec = self.avgdl, self.codec
 
@@ -708,7 +709,7 @@ class Searcher:
         )
         terms = [r["term"] for r in rows]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -755,7 +756,7 @@ class Searcher:
         )
         terms = [r["term"] for r in rows]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -791,7 +792,7 @@ class Searcher:
         )
         terms = [r["term"] for r in rows]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -823,7 +824,7 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         msm = min_should_match
         if msm is not None and (msm < 1 or mode == "and"):
             raise ValueError(
@@ -834,7 +835,7 @@ class Searcher:
         if not weights or (mode == "and" and len(weights) < len(qterms)) or (
             msm is not None and len(weights) < msm
         ):
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         need = msm if msm is not None else (len(qterms) if mode == "and" else 1)
         term_order = sorted(weights)
         avgdl, codec = self.avgdl, self.codec
@@ -898,11 +899,16 @@ class Searcher:
         mode: str = "or",
         min_should_match: int | None = None,
         must_not: str | None = None,
+        weights: dict[str, float] | None = None,
     ) -> DataFrame:
         """All doc ids matching the query (ES filter context / the doc set
         behind ``_count`` and aggregations): OR = union of the query
         terms' posting lists, AND = intersection, min_should_match = docs
         on >= m lists; minus must_not docs and pending tombstones.
+        ``weights``: the query terms' idfs when the caller already
+        collected them (``_query_weights``); only its keys, the terms
+        present in the index, are used, so term_stats is not collected
+        again.
 
         No scoring, so no range_dls read and no _Cursor decode of tfs —
         one pruned postings scan, per-range vectorized set algebra in
@@ -916,19 +922,20 @@ class Searcher:
         neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
         out_schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
         if not qterms:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         msm = min_should_match
         if msm is not None and (msm < 1 or mode == "and"):
             raise ValueError(
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        present = sorted(r["term"] for r in ts)
+        if weights is None:
+            weights = self._query_weights(qterms)
+        present = sorted(weights)
         if not present or (mode == "and" and len(present) < len(qterms)) or (
             msm is not None and len(present) < msm
         ):
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         codec = self.codec
         excluded = self.persistent_excluded or None
         need = msm if msm is not None else (len(present) if mode == "and" else 1)
@@ -1073,7 +1080,8 @@ class Searcher:
             F.count("*").alias("n_postings"),
             F.sum("tf").alias("sum_tf"),
         ).collect()[0]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(
                 int(self.n_docs), int(n_deleted), int(n_terms),
                 int(p["n_postings"]), int(p["sum_tf"]),
@@ -1087,6 +1095,7 @@ class Searcher:
         self, query: str, field_values: DataFrame | None, field: str,
         mode: str = "or", min_should_match: int | None = None,
         must_not: str | None = None,
+        weights: dict[str, float] | None = None,
     ) -> DataFrame:
         """The hit set joined to its per-doc field values — the shared
         input relation of every aggregation (doc_id, url, field).
@@ -1096,10 +1105,11 @@ class Searcher:
         build via ``build_index(store_fields=...)``, plus ``dl``, which
         every index stores): one join on the dense doc id, no external
         table, no second url-keyed shuffle. The external-relation path
-        stays for fields the index doesn't store."""
+        stays for fields the index doesn't store. ``weights``: as in
+        ``matching_doc_ids``."""
         hits = self.matching_doc_ids(
             query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
+            must_not=must_not, weights=weights,
         )
         dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
         if field_values is None:
@@ -1259,14 +1269,15 @@ class Searcher:
             "score double"
         )
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         weights = self._query_weights(qterms)
         if not weights or (mode == "and" and len(weights) < len(qterms)):
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         scored = self.relational_scores(query, weights)
         j = self._hit_fields(
             query, field_values, field, mode=mode,
             min_should_match=min_should_match, must_not=must_not,
+            weights=weights,
         )
         js = j.join(scored, "doc_id")
         if round_to is not None:
@@ -1322,10 +1333,10 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         out_cols = "url string, term string, tf long, dl long, idf double, contrib double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], out_cols)
+            return local_frame(spark, [], out_cols)
         weights = self._query_weights(qterms)
         if not weights:
-            return spark.createDataFrame([], out_cols)
+            return local_frame(spark, [], out_cols)
         dm = (
             spark.read.parquet(os.path.join(self.index_dir, "docmap"))
             .filter(F.col("url").isin(list(urls)))
@@ -1336,8 +1347,8 @@ class Searcher:
                 ~F.col("doc_id").isin(sorted(self.persistent_excluded))
             )
         segs = self._query_segs(list(weights))
-        w_df = spark.createDataFrame(
-            [(t, float(w)) for t, w in sorted(weights.items())],
+        w_df = local_frame(
+            spark, [(t, float(w)) for t, w in sorted(weights.items())],
             "term string, w double",
         )
         out = (
@@ -1400,7 +1411,7 @@ class Searcher:
         )[: int(max_query_terms)]
         terms = [r["term"] for r in ranked]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         # over-fetch one slot: the source doc itself scores high and is
         # dropped post-ranking
         out = self.topk(
@@ -1441,7 +1452,7 @@ class Searcher:
             "input string, suggestion string, dist long, freq long, rnk long"
         )
         if not toks:
-            return spark.createDataFrame([], out_cols)
+            return local_frame(spark, [], out_cols)
         if suggest_mode not in ("missing", "popular", "always"):
             raise ValueError(f"unknown suggest_mode: {suggest_mode!r}")
         present = {
@@ -1451,9 +1462,9 @@ class Searcher:
         if suggest_mode == "missing":
             toks = [t for t in toks if t not in present]
             if not toks:
-                return spark.createDataFrame([], out_cols)
-        inputs = spark.createDataFrame(
-            [(t, present.get(t, 0)) for t in toks], "input string, in_df long"
+                return local_frame(spark, [], out_cols)
+        inputs = local_frame(
+            spark, [(t, present.get(t, 0)) for t in toks], "input string, in_df long"
         )
         cand = (
             self.term_stats.select("term", "df")
@@ -1534,8 +1545,8 @@ class Searcher:
         if max_errors < 0:
             raise ValueError("max_errors must be >= 0")
 
-        slots = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(toks)], "slot long, input string"
+        slots = local_frame(
+            spark, [(i, t) for i, t in enumerate(toks)], "slot long, input string"
         )
         cand = (
             self.term_stats.select("term", "df")
@@ -1581,7 +1592,7 @@ class Searcher:
             for a, _ in by_slot[i]
             for b, _ in by_slot[i + 1]
         })
-        pair_dim = spark.createDataFrame(pairs, "prev string, cur string")
+        pair_dim = local_frame(spark, pairs, "prev string, cur string")
         srcs = sorted({a for a, _ in pairs})
         bs_dir = os.path.join(self.index_dir, "bigram_stats")
         if os.path.isdir(bs_dir):
@@ -1669,8 +1680,8 @@ class Searcher:
 
         rec(0, [], 0)
         out = sorted(results, key=lambda e: (-e[1], e[0]))[: int(size)]
-        return spark.createDataFrame(
-            out, "suggestion string, score double, n_changed long"
+        return local_frame(
+            spark, out, "suggestion string, score double, n_changed long"
         )
 
     def mget(
@@ -1689,7 +1700,7 @@ class Searcher:
         left-join back onto the request list to materialize the
         found=false rows."""
         spark = self.spark
-        req = spark.createDataFrame([(u,) for u in urls], "url string")
+        req = local_frame(spark, [(u,) for u in urls], "url string")
         dm = spark.read.parquet(
             os.path.join(self.index_dir, "docmap")
         ).select("url", "doc_id")
@@ -1733,11 +1744,11 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         empty = "doc_id long, score double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         if weights is None:
             weights = self._query_weights(qterms)
         if not weights:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         segs = self._query_segs(list(weights))
         # One seg-cogroup instead of the old postings⨝dl doc_id shuffle join
         # + hash aggregation (3 Exchanges → 0): postings and range-dls are
@@ -1852,13 +1863,13 @@ class Searcher:
         k = max(k, fetch_k or 0)
         qterms = sorted(set(tokenize_py(query)))
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         weights = self._query_weights(qterms)
         if not weights or (mode == "and" and len(weights) < len(qterms)):
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         hits = self.matching_doc_ids(
             query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
+            must_not=must_not, weights=weights,
         )
         dm = spark.read.parquet(os.path.join(self.index_dir, "docmap")).select(
             "doc_id", "url"
@@ -1924,8 +1935,8 @@ class Searcher:
         )
         n_fg = hits.count()
         if n_fg == 0:
-            return self.spark.createDataFrame(
-                [],
+            return local_frame(
+                self.spark, [],
                 "term string, fg_count long, bg_count long, sig_score double",
             )
         fg = (
@@ -2356,7 +2367,8 @@ class Searcher:
             f = lambda v: "*" if v is None else format(float(v), "g")
             return f"{f(lo)}-{f(hi)}"
 
-        rdf = self.spark.createDataFrame(
+        rdf = local_frame(
+            self.spark,
             [
                 (_key(lo, hi),
                  None if lo is None else float(lo),
@@ -2425,8 +2437,8 @@ class Searcher:
                     None if lo is None else int(ipaddress.IPv4Address(lo)),
                     None if hi is None else int(ipaddress.IPv4Address(hi)),
                 ))
-        rdf = self.spark.createDataFrame(
-            rows, "range_key string, lo long, hi long"
+        rdf = local_frame(
+            self.spark, rows, "range_key string, lo long, hi long"
         )
         j = self._hit_fields(query, field_values, field, mode=mode)
         v = ipv4_to_long(F.col(field))
@@ -2465,8 +2477,8 @@ class Searcher:
                 continue
             rows.append((f_.name, f_.dataType.simpleString(),
                          False, True, True))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "field string, type string, searchable boolean, "
             "aggregatable boolean, stored boolean",
         )
@@ -2905,10 +2917,10 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         empty = "doc_id long, url string, score double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         weights = self._query_weights(qterms)
         if not weights:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         # r6: one seg-cogroup computes (score, matched) per doc — the old
         # postings ⨝ dl_rows doc_id-shuffle join + hash aggregation
         # (3 Exchanges) is gone (guide §2.4, same kernel family as
@@ -3055,11 +3067,11 @@ class Searcher:
             else "doc_id long, score double"
         )
         if len(toks) < 1 or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         ts = self.term_stats.filter(F.col("term").isin(toks)).collect()
         w = sum(idf(self.n_docs, int(r["df"])) for r in ts)
         if not ts:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         # r6: one seg-cogroup pools the span freq (Σ tf over the clause
         # terms, exact int64) and scores per doc in numpy — the old
         # tf-aggregate ⨝ dl_rows doc_id-shuffle chain (3 Exchanges) is
@@ -3230,7 +3242,7 @@ class Searcher:
             "doc_id long, score double"
         )
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         groups = {t: sorted({t} | set(synonyms.get(t, ()))) for t in qterms}
         all_terms = sorted({m for ms in groups.values() for m in ms})
         ts = {
@@ -3245,7 +3257,7 @@ class Searcher:
             if dfs:
                 weights[g] = idf(self.n_docs, max(dfs))
         if not weights:
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         member_rows = sorted(
             (m, g)
             for g, ms in groups.items()
@@ -3424,7 +3436,7 @@ class Searcher:
         topk + |pins| lookups."""
         pins = [(u, float(1e9 - i)) for i, u in enumerate(pinned_urls)]
         spark = self.spark
-        pin_df = spark.createDataFrame(pins, "url string, score double")
+        pin_df = local_frame(spark, pins, "url string, score double")
         dm = spark.read.parquet(os.path.join(self.index_dir, "docmap"))
         pin_rows = pin_df.join(dm.select("doc_id", "url"), "url")
         if self.persistent_excluded:
@@ -3905,8 +3917,8 @@ class Searcher:
             .collect()
         )
         if not rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, url string, score double"
+            return local_frame(
+                self.spark, [], "doc_id long, url string, score double"
             )
         terms = sorted({t for t in (rows[0][terms_col] or []) if t})
         if len(terms) > int(max_terms):
@@ -3915,8 +3927,8 @@ class Searcher:
                 f"{max_terms}; join against the lookup relation instead"
             )
         if not terms:
-            return self.spark.createDataFrame(
-                [], "doc_id long, url string, score double"
+            return local_frame(
+                self.spark, [], "doc_id long, url string, score double"
             )
         hits = self.matching_doc_ids(" ".join(terms), mode="or")
         dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
@@ -3956,7 +3968,8 @@ class Searcher:
             f = lambda v: "*" if v is None else format(float(v), "g")  # noqa: E731
             return f"{f(lo)}-{f(hi)}"
 
-        rdf = self.spark.createDataFrame(
+        rdf = local_frame(
+            self.spark,
             [
                 (_key(lo, hi),
                  None if lo is None else float(lo),
@@ -4026,7 +4039,7 @@ class Searcher:
 
         toks = tokenize_py(query)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         fixed, pre = toks[:-1], toks[-1]
         en_dir = os.path.join(self.index_dir, "edge_ngrams")
         meta_p = os.path.join(self.index_dir, "edge_ngrams_meta.json")
@@ -4051,7 +4064,7 @@ class Searcher:
         rows = rel.orderBy("term").limit(int(max_expansions)).collect()
         terms = sorted(set(fixed) | {r["term"] for r in rows})
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -4084,7 +4097,7 @@ class Searcher:
 
         toks = tokenize_py(query)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         fixed, pre = toks[:-1], toks[-1]
         rows = (
             self.term_stats.filter(F.col("term").startswith(pre))
@@ -4095,7 +4108,7 @@ class Searcher:
         )
         terms = sorted(set(fixed) | {r["term"] for r in rows})
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -4357,7 +4370,7 @@ class Searcher:
         )
         terms = [r["term"] for r in rows]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
             " ".join(terms), k=k, round_to=round_to, with_url=with_url,
             fetch_k=fetch_k,
@@ -4605,7 +4618,7 @@ class Searcher:
             set(should_terms) | {t for g in must_groups for t in g if t != "\x00nomatch"}
         )
         if not positive or any(g == ["\x00nomatch"] for g in must_groups):
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, [], TOPK_SCHEMA)
         out = self.relational_scores(" ".join(positive))
         for g in must_groups:
             out = out.join(
@@ -4804,7 +4817,7 @@ class Searcher:
         relational scores. Tombstoned ids drop via relational_scores'
         exclusion; unknown ids simply match nothing (ES semantics)."""
         spark = self.spark
-        req = spark.createDataFrame([(u,) for u in urls], "url string")
+        req = local_frame(spark, [(u,) for u in urls], "url string")
         dm = spark.read.parquet(
             os.path.join(self.index_dir, "docmap")
         ).select("url", "doc_id")
@@ -4894,7 +4907,7 @@ class Searcher:
                 {p for neg, _, phs in groups if not neg for p in phs}
             )
             if not pos_phrases:
-                return spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(spark, [], TOPK_SCHEMA)
             ids = None
             for p in pos_phrases:
                 pm = phrase_match_ids(spark, self.index_dir, p).select(
@@ -4930,7 +4943,7 @@ class Searcher:
                     pm = phrase_match_ids(spark, self.index_dir, p)
                     ids = pm if ids is None else ids.union(pm).distinct()
                 if ids is None:
-                    return spark.createDataFrame([], TOPK_SCHEMA)
+                    return local_frame(spark, [], TOPK_SCHEMA)
                 out = out.join(ids, "doc_id", "left_semi")
             else:
                 # should group: phrases still gate nothing in OR mode —
@@ -4972,11 +4985,11 @@ class Searcher:
             ]
         )
         if not all_terms or self.n_docs == 0 or self.avgdl == 0:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         ts = self.term_stats.filter(F.col("term").isin(all_terms)).collect()
         weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
         if not weights:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         avgdl, codec = self.avgdl, self.codec
         excluded = (
             frozenset(int(d) for d in (exclude_doc_ids or ()))
@@ -5159,7 +5172,7 @@ def combined_fields_topk(
         else "doc_id long, score double"
     )
     if not qterms or n == 0:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     per = []
     for f in fields:
         s = searchers[f]
@@ -5177,7 +5190,7 @@ def combined_fields_topk(
             )
         )
     if not per:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     u = _reduce(lambda a, b: a.unionByName(b), per)
     tfc = u.groupBy("doc_id", "term").agg(F.sum("wtf").alias("tfc"))
     dfc = (
@@ -5207,7 +5220,7 @@ def combined_fields_topk(
     )
     avgdlc = float(dlc.agg(F.avg("dlc")).collect()[0][0] or 0.0)
     if avgdlc == 0:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     contrib = (
         F.col("w") * F.col("tfc") * F.lit(K1 + 1.0)
         / (

@@ -11,8 +11,10 @@ size.
 from __future__ import annotations
 
 import os
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 _MALLOC_TUNING = {
@@ -79,3 +81,44 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[tuple | dict[str, Any]],
+    schema: StructType | str,
+) -> DataFrame:
+    """A driver-built relation (offsets, id lists, request rows, empty
+    results) as an Arrow-backed LocalRelation.
+
+    ``spark.createDataFrame(<python list>)`` pickles the rows into an RDD
+    that a Python worker pool has to unpickle, so the first such relation
+    of a session starts a ``pyspark.daemon`` and its workers (about
+    180 MB PSS on 4 cores) and every collect of it is a Python job — even
+    when the list is empty. Built here as a ``pyarrow.Table`` in the Spark
+    schema, the same rows plan as a ``LocalTableScan`` and no Python
+    process starts.
+
+    ``rows``: tuples in field order or dicts keyed by field name. Field
+    names, types and nullability are those ``createDataFrame(rows,
+    schema)`` gives; a null in a non-nullable field raises, as it does
+    there."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    if rows and isinstance(rows[0], dict):
+        table = pa.Table.from_pylist(rows, schema=arrow_schema)
+    else:
+        cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    for f, col in zip(schema.fields, table.columns):
+        if not f.nullable and col.null_count:
+            raise ValueError(f"local_frame: null in non-nullable field {f.name!r}")
+    return spark.createDataFrame(table, schema)

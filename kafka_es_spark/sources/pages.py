@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from kafka_es_spark.session import local_frame
+
 PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -141,7 +143,7 @@ def gen_pages_distributed(
 
     per = (n_rows + slices - 1) // slices
     bounds = [(i, min(per, n_rows - i * per)) for i in range(slices) if n_rows - i * per > 0]
-    bdf = spark.createDataFrame(bounds, "slice_id: int, n: int").repartition(len(bounds), "slice_id")
+    bdf = local_frame(spark, bounds, "slice_id: int, n: int").repartition(len(bounds), "slice_id")
 
     def gen(batches):
         for pdf in batches:

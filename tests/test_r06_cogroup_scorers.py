@@ -260,3 +260,51 @@ def docfields(spark, pages):
             "required_matches"
         ),
     )
+
+
+class _CountingTermStats:
+    """Stands in for ``Searcher.term_stats`` and counts the
+    ``filter(...).collect()`` round trips a scorer makes."""
+
+    def __init__(self, df):
+        self._df = df
+        self.collects = 0
+
+    def filter(self, cond):
+        outer, inner = self, self._df.filter(cond)
+
+        class _Filtered:
+            def collect(self):
+                outer.collects += 1
+                return inner.collect()
+
+            def __getattr__(self, name):
+                return getattr(inner, name)
+
+        return _Filtered()
+
+    def __getattr__(self, name):
+        return getattr(self._df, name)
+
+
+@pytest.mark.parametrize("scorer", ["range_filtered_topk", "top_hits"])
+def test_scorer_collects_term_stats_once(spark, searcher, docfields, scorer):
+    """range_filtered_topk and top_hits pass the weights they collected to
+    matching_doc_ids: one term_stats collect per call, not two."""
+    s = searcher
+    counting = _CountingTermStats(s.term_stats)
+    real, s.term_stats = s.term_stats, counting
+    try:
+        if scorer == "range_filtered_topk":
+            out = s.range_filtered_topk(
+                "data index search", docfields, "n_tokens", 20, 120, k=5
+            )
+        else:
+            out = s.top_hits(
+                "data index search", docfields, "required_matches",
+                buckets=2, per_bucket=2,
+            )
+        assert out.collect()
+    finally:
+        s.term_stats = real
+    assert counting.collects == 1
