@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from kafka_es_spark.functions.tokenize import duckdb_tokens_sql, tokens
 from kafka_es_spark.operators import bm25 as _bm25
+from kafka_es_spark.session import local_frame
 
 # Flagship query terms (present in the driver's synthetic `documents` corpus).
 QUERY_TERMS = ["spark", "query", "join"]
@@ -791,7 +792,7 @@ def _q_analyze(spark, sf_dir):
     literal input — the same Column tokenizer the index build runs."""
     from kafka_es_spark.functions.tokenize import tokens
 
-    df = spark.createDataFrame([(ANALYZE_TEXT,)], "text string")
+    df = local_frame(spark, [(ANALYZE_TEXT,)], "text string")
     return df.select(
         F.posexplode(tokens("text")).alias("position", "token")
     ).select(F.col("position").cast("long").alias("position"), "token")
@@ -982,7 +983,8 @@ def _q_partial_update(spark, sf_dir):
         "doc_id", "CAST(2 AS LONG) AS seq", "CAST(NULL AS STRING) AS lang",
         "'srcU' AS source", "CAST(NULL AS LONG) AS n_chars",
     )
-    u3 = spark.createDataFrame(
+    u3 = local_frame(
+        spark,
         [(1000000, 3, "zz", None, None)],
         "doc_id long, seq long, lang string, source string, n_chars long",
     )
@@ -1712,7 +1714,7 @@ def _q_rank_eval(spark, sf_dir):
     run = cosine_topk(e, q, k=RE_K).select(
         "query_id", F.col("vec_id").alias("doc_id"), "rank"
     )
-    qids = spark.createDataFrame([(0,), (1,), (2,)], "query_id long")
+    qids = local_frame(spark, [(0,), (1,), (2,)], "query_id long")
     ratings = (
         e.select("vec_id")
         .crossJoin(F.broadcast(qids))
@@ -2322,8 +2324,8 @@ def _q_percolate(spark, sf_dir):
     one (doc, query) count aggregate; q_never can never match."""
     from kafka_es_spark.operators.percolate import percolate
 
-    qdf = spark.createDataFrame(
-        sorted(PERC_QUERIES.items()), "query_id string, terms array<string>"
+    qdf = local_frame(
+        spark, sorted(PERC_QUERIES.items()), "query_id string, terms array<string>"
     )
     return percolate(_docs(spark, sf_dir), qdf, mode="and")
 
@@ -3255,8 +3257,8 @@ def _q_esql_enrich(spark, sf_dir):
 
     tables = {
         "documents": spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        "langnames": spark.createDataFrame(
-            LANGNAMES, "lang string, lang_name string"
+        "langnames": local_frame(
+            spark, LANGNAMES, "lang string, lang_name string"
         ),
     }
     return esql_query(spark, ESQL6, tables)
@@ -3524,7 +3526,7 @@ def _q_cms_term_counts(spark, sf_dir):
 
     toks = _docs(spark, sf_dir).select(F.explode(tokens("text")).alias("v"))
     counters = cms_counters(toks, "v", w=CMS_W, d=CMS_D)
-    probes = spark.createDataFrame([(t,) for t in QUERY_TERMS], "v string")
+    probes = local_frame(spark, [(t,) for t in QUERY_TERMS], "v string")
     return cms_point_estimates(probes, "v", counters, w=CMS_W, d=CMS_D)
 
 

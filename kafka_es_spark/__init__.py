@@ -19,4 +19,10 @@ physical logic (posting-list codecs, WAND) lives in Arrow-vectorized
 pandas UDFs only.
 """
 
+from kafka_es_spark import _zipcache
+
+# every engine UDF imports this package in its Python worker, so reused
+# workers stop re-reading pyspark.zip's directory at each task start
+_zipcache.install()
+
 __version__ = "0.1.0"

@@ -521,12 +521,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             from kafka_es_spark.functions.tokenize import tokenize_py
 
             qterms = sorted(set(tokenize_py(q)))
-            present = sorted(
-                r["term"]
-                for r in searcher.term_stats.filter(
-                    F.col("term").isin(qterms)
-                ).collect()
-            )
+            present = sorted(searcher.doc_freqs(qterms))
             if not present:
                 return _Compiled(
                     None, local_frame(searcher.spark, [], "doc_id long")
@@ -654,11 +649,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
                 None, local_frame(searcher.spark, [], "doc_id long")
             )
         dfs = {
-            r["term"]: int(r["df"])
-            for r in searcher.term_stats.filter(
-                F.col("term").isin(cand)
-            ).collect()
-            if int(r["df"]) >= min_df
+            t: df for t, df in searcher.doc_freqs(cand).items() if df >= min_df
         }
         ranked = sorted(
             dfs,

@@ -3,15 +3,21 @@
 Query plan (SURVEY.md §3.3):
 
 1. tokenize the query with the document analyzer;
-2. read ``term_stats`` filtered to the query terms (broadcast-sized: ≤|q|
-   rows) → idf per term, with N/avgdl from ``stats.json``;
+2. look the query terms' df up in the term dictionary a cached
+   ``Searcher`` loaded at open (``Searcher.doc_freqs``: pure driver work,
+   no Spark job; a one-shot or over-cap reader collects the ≤|q| rows of
+   ``term_stats`` instead) → idf per term, with N/avgdl from
+   ``stats.json``;
 3. read posting segments with ``term IN qterms AND bucket IN qbuckets`` —
    both predicates push into the parquet scan (bucket prunes row groups of
    other term-hash buckets; the files are sorted by term within buckets so
    min/max stats prune precisely);
 4. group segments by ``seg`` (doc range): every doc lives in exactly one
    range, so per-range top-k followed by a global TakeOrdered(k) is the
-   EXACT global top-k — ranges score in parallel with no cross-talk;
+   EXACT global top-k — ranges score in parallel with no cross-talk. A
+   cached Searcher holds postings and range_dls hash-partitioned by
+   ``seg``, so the cogroup plans with no Exchange and, with step 2 done in
+   the driver, a query is one Spark job;
 5. inside each range: block-max WAND (Broder et al. WAND + Ding/Suel
    block-max skipping; see PAPERS.md) over per-term cursors with a bounded
    min-heap, float64, deterministic tie-break (score desc, doc_id asc).
@@ -414,11 +420,49 @@ def cursor_range_topk(
     return [(int(uids[i]), float(rs[i])) for i in sel]
 
 
+# Above this many term_stats rows (all partials, from the parquet footers)
+# a cached Searcher keeps no in-memory dictionary. The dict costs about
+# 130 bytes per term (46,403 terms: 5.8 MB), so the cap bounds it near
+# 130 MB.
+DOC_FREQS_MAX_ROWS = 1_000_000
+
+
+def _load_doc_freqs(ts_dir: str) -> dict[str, int] | None:
+    """term → df summed over the term_stats partials, read with pyarrow
+    (no Spark job); None when the relation has more than
+    ``DOC_FREQS_MAX_ROWS`` rows."""
+    import pyarrow.dataset as ds
+
+    dset = ds.dataset(ts_dir, format="parquet", partitioning="hive")
+    if dset.count_rows() > DOC_FREQS_MAX_ROWS:
+        return None
+    agg = dset.to_table(columns=["term", "df"]).group_by("term").aggregate(
+        [("df", "sum")]
+    )
+    return dict(zip(agg["term"].to_pylist(), agg["df_sum"].to_pylist()))
+
+
 class Searcher:
-    """Query engine over an index dataset. Loads stats once and keeps the
-    (small) segment-row and term-stats relations persisted so repeated
-    queries pay only the scoring job — the amortization a serving engine
-    does with its open index readers. One-shot use: ``wand_topk``."""
+    """Query engine over an index dataset — the amortization a serving
+    engine does with its open index readers. At open it loads stats.json
+    and, with ``cache=True`` (the default):
+
+    * persists the segment rows (``segs``) and range dls hash-partitioned
+      by ``seg`` into ``spark.sql.shuffle.partitions`` partitions, so once
+      they are materialized (by the first query) every seg cogroup reads
+      them with no Exchange;
+    * loads the term dictionary (term → df, summed over the term_stats
+      partials) with pyarrow, so ``doc_freqs`` and every query's idf
+      weights cost no Spark job. An index with more than
+      ``DOC_FREQS_MAX_ROWS`` term_stats rows keeps no dictionary.
+
+    A query is then one Spark job. ``cache=False`` (one-shot readers such
+    as ``wand_topk``) persists nothing and loads no dictionary: the
+    cogroup shuffles the pruned parquet scan by seg, and ``doc_freqs``
+    collects the pushed-down ``term_stats`` rows. The
+    ``term_stats`` DataFrame stays available for dictionary scans (prefix,
+    fuzzy, wildcard expansion). A Searcher sees the index as it was at
+    open: reopen it after ``append_epoch`` or ``compact_index``."""
 
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         from kafka_es_spark.operators.compaction import recover_swap_dirs
@@ -463,18 +507,42 @@ class Searcher:
         self.segs = spark.read.parquet(os.path.join(index_dir, "postings"))
         # term_stats holds PARTIALS (unit=base + one per streaming epoch;
         # doc sets are disjoint so df/cf sum exactly) — aggregate per term
+        ts_dir = os.path.join(index_dir, "term_stats")
         self.term_stats = (
-            spark.read.parquet(os.path.join(index_dir, "term_stats"))
+            spark.read.parquet(ts_dir)
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
         # the norms analogue: tiny (1-2 bytes/doc), resident while serving
         self.range_dls = spark.read.parquet(os.path.join(index_dir, "range_dls"))
         self._cached = cache
+        # term → df, read once at open so a query's weights cost no job;
+        # None (one-shot readers, or a dictionary over the row cap) means
+        # doc_freqs runs the pushed-down term_stats collect instead
+        self._dfs = _load_doc_freqs(ts_dir) if cache else None
         if cache:
-            self.segs = self.segs.persist()
+            # cached hash-partitioned by seg, as a seg cogroup requires: every
+            # query's cogroup then reads both sides with no Exchange. Not
+            # applied uncached, where the cogroup's own exchange does the
+            # same work and a repartition would add one to the paths that do
+            # not group by seg (_postings_rows)
+            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            self.segs = self.segs.repartition(n_parts, "seg").persist()
             self.term_stats = self.term_stats.persist()
-            self.range_dls = self.range_dls.persist()
+            self.range_dls = self.range_dls.repartition(n_parts, "seg").persist()
+
+    def doc_freqs(self, terms) -> dict[str, int]:
+        """Index-level df of each of ``terms`` present in the index (absent
+        terms are left out), summed over the term_stats partials. A cached
+        Searcher answers from the dictionary it loaded at open; otherwise
+        one pushed-down ``term_stats`` collect."""
+        terms = sorted(set(terms))
+        if not terms:
+            return {}
+        if self._dfs is not None:
+            return {t: self._dfs[t] for t in terms if t in self._dfs}
+        rows = self.term_stats.filter(F.col("term").isin(terms)).collect()
+        return {r["term"]: int(r["df"]) for r in rows}
 
     def _query_segs(self, terms) -> DataFrame:
         """Segment rows for the query terms, with term-bucket pruning pushed
@@ -590,13 +658,11 @@ class Searcher:
                 )
             return local_frame(spark, [], TOPK_SCHEMA)
 
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
         # query-time boosts (ES term ^boost): scale the term weight —
         # pure driver arithmetic, the scorers are boost-agnostic
         weights = {
-            r["term"]: idf(self.n_docs, int(r["df"]))
-            * float((boosts or {}).get(r["term"], 1.0))
-            for r in ts
+            t: idf(self.n_docs, df) * float((boosts or {}).get(t, 1.0))
+            for t, df in self.doc_freqs(qterms).items()
         }
         if not weights:
             return local_frame(spark, [], TOPK_SCHEMA)
@@ -1455,10 +1521,7 @@ class Searcher:
             return local_frame(spark, [], out_cols)
         if suggest_mode not in ("missing", "popular", "always"):
             raise ValueError(f"unknown suggest_mode: {suggest_mode!r}")
-        present = {
-            r["term"]: int(r["df"])
-            for r in self.term_stats.filter(F.col("term").isin(toks)).collect()
-        }
+        present = self.doc_freqs(toks)
         if suggest_mode == "missing":
             toks = [t for t in toks if t not in present]
             if not toks:
@@ -1722,10 +1785,11 @@ class Searcher:
         return out
 
     def _query_weights(self, qterms: list[str]) -> dict[str, float]:
-        """idf per query term present in the index: the one term_stats
-        collect a scorer makes (absent terms carry no weight)."""
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        return {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        """idf per query term present in the index: the one ``doc_freqs``
+        lookup a scorer makes (absent terms carry no weight)."""
+        return {
+            t: idf(self.n_docs, df) for t, df in self.doc_freqs(qterms).items()
+        }
 
     def relational_scores(
         self, query: str, weights: dict[str, float] | None = None
@@ -2496,10 +2560,7 @@ class Searcher:
         terms = sorted(set(tokenize_py(query)))
         if not terms:
             return {"valid": False, "error": "query analyzes to no terms"}
-        present = sorted(
-            r["term"] for r in
-            self.term_stats.filter(F.col("term").isin(terms)).collect()
-        )
+        present = sorted(self.doc_freqs(terms))
         op = " +" if mode == "and" else " "
         return {
             "valid": True,
@@ -3068,9 +3129,9 @@ class Searcher:
         )
         if len(toks) < 1 or self.n_docs == 0 or self.avgdl == 0:
             return local_frame(spark, [], empty)
-        ts = self.term_stats.filter(F.col("term").isin(toks)).collect()
-        w = sum(idf(self.n_docs, int(r["df"])) for r in ts)
-        if not ts:
+        dfs = self.doc_freqs(toks)
+        w = sum(idf(self.n_docs, df) for df in dfs.values())
+        if not dfs:
             return local_frame(spark, [], empty)
         # r6: one seg-cogroup pools the span freq (Σ tf over the clause
         # terms, exact int64) and scores per doc in numpy — the old
@@ -3245,12 +3306,7 @@ class Searcher:
             return local_frame(spark, [], empty)
         groups = {t: sorted({t} | set(synonyms.get(t, ()))) for t in qterms}
         all_terms = sorted({m for ms in groups.values() for m in ms})
-        ts = {
-            r["term"]: int(r["df"])
-            for r in self.term_stats.filter(
-                F.col("term").isin(all_terms)
-            ).collect()
-        }
+        ts = self.doc_freqs(all_terms)
         weights = {}
         for g, ms in groups.items():
             dfs = [ts[m] for m in ms if m in ts]
@@ -4619,15 +4675,27 @@ class Searcher:
         )
         if not positive or any(g == ["\x00nomatch"] for g in must_groups):
             return local_frame(spark, [], TOPK_SCHEMA)
-        out = self.relational_scores(" ".join(positive))
+        # one doc_freqs lookup for the scoring, + and - terms; each clause
+        # below gets its slice of the weights, so none looks them up again
+        weights = self._query_weights(sorted(set(positive) | set(not_terms)))
+
+        def clause_weights(terms) -> dict[str, float]:
+            return {t: weights[t] for t in terms if t in weights}
+
+        out = self.relational_scores(" ".join(positive), clause_weights(positive))
         for g in must_groups:
             out = out.join(
-                self.matching_doc_ids(" ".join(g), mode="or"),
+                self.matching_doc_ids(
+                    " ".join(g), mode="or", weights=clause_weights(g)
+                ),
                 "doc_id", "left_semi",
             )
         if not_terms:
+            nots = sorted(set(not_terms))
             out = out.join(
-                self.matching_doc_ids(" ".join(sorted(set(not_terms))), mode="or"),
+                self.matching_doc_ids(
+                    " ".join(nots), mode="or", weights=clause_weights(nots)
+                ),
                 "doc_id", "left_anti",
             )
         if must_phrases or not_phrases:
@@ -4986,8 +5054,7 @@ class Searcher:
         )
         if not all_terms or self.n_docs == 0 or self.avgdl == 0:
             return local_frame(spark, [], out_schema)
-        ts = self.term_stats.filter(F.col("term").isin(all_terms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
+        weights = self._query_weights(all_terms)
         if not weights:
             return local_frame(spark, [], out_schema)
         avgdl, codec = self.avgdl, self.codec
@@ -5176,10 +5243,7 @@ def combined_fields_topk(
     per = []
     for f in fields:
         s = searchers[f]
-        present = sorted(
-            r["term"]
-            for r in s.term_stats.filter(F.col("term").isin(qterms)).collect()
-        )
+        present = sorted(s.doc_freqs(qterms))
         if not present:
             continue
         boost = float(field_indexes[f][1])

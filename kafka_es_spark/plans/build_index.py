@@ -177,7 +177,8 @@ def build_index(
         man.commit("extract_docids", {"elapsed_sec": elapsed})
         if metrics is not None:
             metrics.record_stage("extract_docids", elapsed)
-    docs = read_tokens(spark, index_dir)
+    # the base unit this build just wrote (or a resume found committed)
+    docs = spark.read.parquet(os.path.join(tokens_dir, "epoch=base"))
 
     # --- docmap + global stats (its own committed stage) -------------------
     # The batch unit writes under epoch=base so batch and streaming layouts
@@ -323,13 +324,33 @@ def read_tokens(spark: SparkSession, index_dir: str) -> DataFrame:
     """The base unit's tokenized corpus (doc_id, url, dl, terms,
     *store_fields) as build_index wrote it. An index built before
     ``tokens/`` existed has nothing to read: raise rather than re-derive
-    the corpus from pages, whose doc ids the index need not share."""
+    the corpus from pages, whose doc ids the index need not share.
+
+    Streaming epochs and compaction do not maintain ``tokens/``, so once
+    the manifest records either (an ``epoch-*`` or ``compact-*`` entry, or
+    a docmap that folded epochs in) the base tokens no longer describe the
+    live corpus — they miss the streamed docs and keep deleted ones — and
+    this raises rather than let positions or bigram stats be rebuilt from
+    them."""
     path = os.path.join(index_dir, "tokens", "epoch=base")
-    if not (Manifest(index_dir).is_complete("tokens") and os.path.isdir(path)):
+    man = Manifest(index_dir)
+    if not (man.is_complete("tokens") and os.path.isdir(path)):
         raise FileNotFoundError(
             f"{path} is missing: this index has no committed tokens/ relation "
             "(built before tokens/ existed, or its build did not finish); "
             "rebuild it with build_index"
+        )
+    stale = sorted(
+        e["name"] for e in man.entries()
+        if e["name"].startswith(("epoch-", "compact-"))
+        or (e["name"] == "docmap" and e.get("folded_epochs"))
+    )
+    if stale:
+        raise ValueError(
+            f"{path} is stale: the manifest records streamed or compacted "
+            f"units ({', '.join(stale)}) that tokens/ does not hold; build "
+            "the index afresh (build_index into a new directory) to get "
+            "positions or bigram stats over the live corpus"
         )
     return spark.read.parquet(path)
 

@@ -119,12 +119,16 @@ ALLOWED = {
 
 
 def test_engine_builds_no_relation_outside_local_frame():
-    """Every ``createDataFrame(`` call in the package is inside
-    ``local_frame`` or one of the pandas-frame generators."""
+    """Every ``createDataFrame(`` call in the package and in the driver
+    contract (``__spark_entry__.py``) is inside ``local_frame`` or one of
+    the pandas-frame generators."""
     root = pathlib.Path(kafka_es_spark.__file__).parent
+    entry = root.parent / "__spark_entry__.py"
     offenders = []
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
+    for path in sorted(root.rglob("*.py")) + [entry]:
+        rel = (
+            path.name if path == entry else path.relative_to(root).as_posix()
+        )
         tree = ast.parse(path.read_text(), filename=str(path))
         allowed = set()
         for node in ast.walk(tree):

@@ -287,24 +287,36 @@ class _CountingTermStats:
         return getattr(self._df, name)
 
 
-@pytest.mark.parametrize("scorer", ["range_filtered_topk", "top_hits"])
-def test_scorer_collects_term_stats_once(spark, searcher, docfields, scorer):
-    """range_filtered_topk and top_hits pass the weights they collected to
-    matching_doc_ids: one term_stats collect per call, not two."""
-    s = searcher
+@pytest.mark.parametrize(
+    "scorer, cache",
+    [
+        pytest.param(scorer, cache, id=scorer if cache else f"{scorer}-uncached")
+        for scorer in ("range_filtered_topk", "top_hits", "query_string_topk")
+        for cache in (True, False)
+    ],
+)
+def test_scorer_collects_term_stats_once(spark, idx, docfields, scorer, cache):
+    """A scorer looks its terms' df up once and passes the weights down to
+    matching_doc_ids: a cached Searcher answers from its open-time term
+    dictionary (no term_stats collect), an uncached one collects once.
+    query_string_topk looks up its scoring, ``+`` and ``-`` terms together
+    instead of once per clause."""
+    s = Searcher(spark, idx, cache=cache)
     counting = _CountingTermStats(s.term_stats)
-    real, s.term_stats = s.term_stats, counting
+    s.term_stats = counting
     try:
         if scorer == "range_filtered_topk":
             out = s.range_filtered_topk(
                 "data index search", docfields, "n_tokens", 20, 120, k=5
             )
-        else:
+        elif scorer == "top_hits":
             out = s.top_hits(
                 "data index search", docfields, "required_matches",
                 buckets=2, per_bucket=2,
             )
+        else:
+            out = s.query_string_topk("+index +the +of -and", k=5)
         assert out.collect()
     finally:
-        s.term_stats = real
-    assert counting.collects == 1
+        s.close()
+    assert counting.collects == (0 if cache else 1)

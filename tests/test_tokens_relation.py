@@ -133,3 +133,31 @@ def test_resume_after_tokens_stage_reproduces_stats(spark, pages, tidx, tmp_path
         .agg(F.sum("dl")).first()[0]
         == want["total_tokens"]
     )
+
+
+def test_positions_and_bigrams_raise_on_a_streamed_or_compacted_index(
+    spark, pages, tidx, tmp_path
+):
+    """tokens/ holds only the base unit: after an epoch is appended, or a
+    compaction folds epochs and tombstones into the base, rebuilding
+    positions or bigram stats from it would drop the streamed docs and
+    keep the deleted ones — so it raises."""
+    from kafka_es_spark.operators.compaction import compact_index
+    from kafka_es_spark.operators.deletes import add_tombstones
+    from kafka_es_spark.sources.pages import gen_pages
+    from kafka_es_spark.streaming.ingest_stream import append_epoch
+
+    d = str(tmp_path / "streamed")
+    shutil.copytree(tidx, d)
+    append_epoch(
+        spark, gen_pages(spark, 40, seed=7, partitions=2), d, epoch=0,
+        seg_bits=SEG_BITS, n_term_buckets=BUCKETS, store_fields=("lang",),
+    )
+    with pytest.raises(ValueError, match="stale.*epoch-00000000"):
+        build_bigram_stats(spark, pages, d)
+    assert add_tombstones(spark, d, doc_ids=[0]) == 1
+    compact_index(spark, d)
+    with pytest.raises(ValueError, match="stale.*compact-"):
+        build_position_index(spark, pages, d)
+    with pytest.raises(ValueError, match="stale"):
+        build_bigram_stats(spark, pages, d)
