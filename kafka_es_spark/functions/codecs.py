@@ -1,5 +1,5 @@
-"""Posting-list codecs — vectorized numpy varint + BP128 binary packing,
-block-max metadata. All pure numpy (no per-element Python loops): these run
+"""Posting-list codecs — vectorized numpy varint + BP128 binary packing.
+All pure numpy (no per-element Python loops): these run
 inside Arrow-batched pandas UDFs on executors, so the hot loops must be
 C-speed.
 
@@ -14,10 +14,8 @@ PForDelta-family member):
 * delta-gap doc ids: gaps[0] = doc_ids[0], gaps[i] = doc_ids[i] - doc_ids[i-1]
   (strictly positive for i>0 since doc ids are unique and sorted).
 
-Block layout (BLOCK = 128 docs) for block-max WAND:
-per block we keep (last_docid, max_tf, min_dl) — enough to compute a valid
-BM25 upper bound at query time for any (N, avgdl, df): the per-term score is
-monotonically increasing in tf and decreasing in dl.
+Block-max upper bounds are not stored: the query side takes per-window
+maxima of the exact decoded contributions (``wand.blockmax_topk_vectorized``).
 """
 
 from __future__ import annotations
@@ -170,26 +168,6 @@ def delta_decode(gaps: np.ndarray) -> np.ndarray:
     return np.cumsum(np.asarray(gaps, dtype=np.uint64), dtype=np.uint64)
 
 
-# ---------------------------------------------------------------------------
-# block-max metadata
-# ---------------------------------------------------------------------------
-
-
-def block_meta(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray):
-    """Per-BLOCK (last_docid, max_tf, min_dl) arrays for WAND upper bounds."""
-    n = doc_ids.size
-    nb = (n + BLOCK - 1) // BLOCK
-    last = np.empty(nb, dtype=np.int64)
-    maxtf = np.empty(nb, dtype=np.int64)
-    mindl = np.empty(nb, dtype=np.int64)
-    for i in range(nb):
-        s, e = i * BLOCK, min((i + 1) * BLOCK, n)
-        last[i] = doc_ids[e - 1]
-        maxtf[i] = tfs[s:e].max()
-        mindl[i] = dls[s:e].min()
-    return last, maxtf, mindl
-
-
 __all__ = [
     "BLOCK",
     "varint_encode",
@@ -200,5 +178,4 @@ __all__ = [
     "bp128_decode",
     "delta_encode",
     "delta_decode",
-    "block_meta",
 ]

@@ -8,6 +8,11 @@ on query terms, scalar math inside whole-stage codegen. No UDFs.
 It doubles as the *exhaustive oracle* for the block-max WAND path
 (operators/wand.py): WAND must be rank-identical to this.
 
+It is also the one home of the BM25 formula: ``idf`` and ``contrib`` are
+the numpy forms every per-range kernel calls, ``idf_col`` and
+``contrib_col`` the Column forms every relational plan calls. A change to
+the scoring rule is a change here and nowhere else.
+
 Scale notes (100 TB):
 * tokenization+explode is a narrow map — no shuffle;
 * doc-length and tf aggregates are hash aggregates with map-side partial
@@ -22,6 +27,8 @@ Reference parity: semantics of the ES index fed by the sink
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
@@ -29,6 +36,33 @@ from kafka_es_spark.functions.tokenize import tokens
 
 K1 = 1.2
 B = 0.75
+
+
+def idf(n_docs: int, df: int) -> float:
+    """ES-7 idf of a term with document frequency ``df`` in ``n_docs``."""
+    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+
+
+def contrib(tf, dl, w, avgdl: float) -> np.ndarray:
+    """Per-posting BM25 contribution, float64: term weight ``w`` (a
+    scalar or one per posting) saturated by ``tf`` against doc length
+    ``dl``."""
+    tf = np.asarray(tf, dtype=np.float64)
+    dl = np.asarray(dl, dtype=np.float64)
+    return w * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def idf_col(n, df):
+    """``idf`` as a Column over Columns ``n`` (doc count) and ``df``."""
+    return F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+
+
+def contrib_col(w, tf, dl, avgdl):
+    """``contrib`` as a Column, op for op; ``w`` and ``avgdl`` may be
+    Columns or Python floats."""
+    return F.lit(w) * tf * F.lit(K1 + 1.0) / (
+        tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / F.lit(avgdl))
+    )
 
 
 def doc_tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -69,20 +103,12 @@ def doc_freqs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def bm25_score_col(tf, df, dl, n, avgdl, k1: float = K1, b: float = B):
-    """score(t,d) as a Column expression; float64 throughout (codegen'd)."""
-    idf = F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
-    return idf * tf * F.lit(k1 + 1.0) / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl))
-
-
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
     round_to: int | None = 4,
 ) -> DataFrame:
     """Exhaustive BM25 top-k over a (doc_id, text) corpus — OR semantics over
@@ -116,7 +142,10 @@ def bm25_topk(
         .crossJoin(broadcast(stats))
         .withColumn(
             "tscore",
-            bm25_score_col(F.col("tf"), F.col("df"), F.col("dl"), F.col("n_docs"), F.col("avgdl"), k1, b),
+            contrib_col(
+                idf_col(F.col("n_docs"), F.col("df")),
+                F.col("tf"), F.col("dl"), F.col("avgdl"),
+            ),
         )
         .groupBy("doc_id")
         .agg(F.sum("tscore").alias("score"))

@@ -50,7 +50,7 @@ from pyspark.sql import types as T
 
 from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
-from kafka_es_spark.operators.bm25 import B, K1
+from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf
 from kafka_es_spark.session import local_frame
 
 POS_BITS = 21  # doc length < 2^21 tokens — validated at encode time
@@ -461,7 +461,7 @@ def _phrase_topk_slots(
     scoring (cogrouped with range dls), global TakeOrdered is exact."""
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
-    from kafka_es_spark.operators.wand import TOPK_SCHEMA, idf
+    from kafka_es_spark.operators.wand import TOPK_SCHEMA, _seg_dls
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     k = max(k, fetch_k or 0)
@@ -506,7 +506,6 @@ def _phrase_topk_slots(
         bs = sorted({hash32_py(t) % int(st["n_term_buckets"]) for t in live})
         rel = rel.filter(F.col("bucket").isin(bs))
     dls_rel = spark.read.parquet(os.path.join(index_dir, "range_dls"))
-    k1, b = K1, B
 
     def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -515,8 +514,7 @@ def _phrase_topk_slots(
         )
         if len(pdf) == 0:
             return empty
-        if len(dpdf) == 0:
-            raise ValueError(f"seg {key} has positions but no range-dl rows")
+        dl_base, dl_arr = _seg_dls(key, dpdf)
         by_term: dict[str, list[dict]] = {}
         for r in pdf.to_dict("records"):
             by_term.setdefault(r["term"], []).append(r)
@@ -543,10 +541,8 @@ def _phrase_topk_slots(
             uids, tfp = uids[keep], tfp[keep]
             if uids.size == 0:
                 return empty
-        dl_base, dl_arr = spimi.decode_range_dls(dpdf.to_dict("records"))
-        dls = spimi.gather_dls(uids, dl_base, dl_arr).astype(np.float64)
-        tf = tfp.astype(np.float64)
-        score = w_total * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dls / avgdl))
+        dls = spimi.gather_dls(uids, dl_base, dl_arr)
+        score = contrib(tfp, dls, w_total, avgdl)
         sel = np.lexsort((uids, -score))[:k]
         return pd.DataFrame({"doc_id": uids[sel], "score": score[sel]})
 
@@ -732,8 +728,6 @@ def _window_anchor_topk(
     are masked, so a probe hit at the end of one doc can never affect
     the start of the next. One TakeOrdered; tombstones drop as
     everywhere."""
-    import math
-
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
@@ -757,10 +751,7 @@ def _window_anchor_topk(
         require and x not in dfs
     ):
         return local_frame(spark, [], empty)
-    w = sum(
-        math.log(1 + (n_docs - dfs[q] + 0.5) / (dfs[q] + 0.5))
-        for q in idf_terms if q in dfs
-    )
+    w = sum(idf(n_docs, dfs[q]) for q in idf_terms if q in dfs)
     pos_dir = os.path.join(index_dir, "positions")
     if not os.path.isdir(pos_dir):
         raise ValueError(
@@ -812,14 +803,7 @@ def _window_anchor_topk(
     out = tf_rel.join(dm.select("doc_id", "url", "dl"), "doc_id")
     if excluded is not None:
         out = out.filter(~F.col("doc_id").isin(sorted(excluded)))
-    score = (
-        F.lit(w) * F.col("tf") * F.lit(K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-        )
-    )
+    score = contrib_col(w, F.col("tf"), F.col("dl"), avgdl)
     if round_to is not None:
         score = F.round(score, round_to)
     cols = ["doc_id", "url"] if with_url else ["doc_id"]
@@ -933,8 +917,6 @@ def span_first_topk(
     df for idf comes from term_stats — index-level stats, unchanged by
     the position window (exactly Lucene: SpanWeight uses the term's
     docFreq)."""
-    import math
-
     from kafka_es_spark.functions.tokenize import tokenize_py
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
@@ -960,7 +942,7 @@ def span_first_topk(
     )
     if dfrow["df"] is None or n_docs == 0 or avgdl == 0:
         return local_frame(spark, [], empty)
-    w = math.log(1 + (n_docs - int(dfrow["df"]) + 0.5) / (int(dfrow["df"]) + 0.5))
+    w = idf(n_docs, int(dfrow["df"]))
     pos_dir = os.path.join(index_dir, "positions")
     if not os.path.isdir(pos_dir):
         raise ValueError(
@@ -1010,14 +992,7 @@ def span_first_topk(
     out = tf_rel.join(dm.select("doc_id", "url", "dl"), "doc_id")
     if excluded is not None:
         out = out.filter(~F.col("doc_id").isin(sorted(excluded)))
-    score = (
-        F.lit(w) * F.col("tf") * F.lit(K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-        )
-    )
+    score = contrib_col(w, F.col("tf"), F.col("dl"), avgdl)
     if round_to is not None:
         score = F.round(score, round_to)
     cols = ["doc_id", "url"] if with_url else ["doc_id"]

@@ -625,7 +625,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         from collections import Counter
 
         from kafka_es_spark.functions.tokenize import tokenize_py
-        from kafka_es_spark.operators.wand import idf
+        from kafka_es_spark.operators.bm25 import idf
 
         like = body.get("like")
         if isinstance(like, str):

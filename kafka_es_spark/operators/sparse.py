@@ -58,9 +58,7 @@ def build_rank_features(
     tf = _bm25.term_freqs(docs, id_col, text_col)
     dfreq = _bm25.doc_freqs(docs, id_col, text_col).select("term", "df")
     stats = _bm25.corpus_stats(docs, id_col, text_col)
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
+    idf = _bm25.idf_col(F.col("n_docs"), F.col("df"))
     w = F.row_number().over(
         Window.partitionBy("doc_id").orderBy(F.col("weight").desc(), F.col("feature").asc())
     )

@@ -28,9 +28,9 @@ posting shuffle is the dominant byte mover — so the per-RANGE dl array is
 materialized ONCE from the docmap (``build_range_dls``, the Lucene-norms
 analogue: doc ids are dense, so a doc range's lengths are one
 position-indexed varint blob) and the query side gathers
-``dl = dls[doc_id - base]`` per cursor. Block-max metadata
-(last/maxtf/mindl per 128-doc block) is likewise derived at cursor init
-from the decoded arrays — cheaper to recompute than to shuffle and store.
+``dl = dls[doc_id - base]`` per cursor. Block-max upper bounds are
+likewise derived at query time from the decoded contributions — cheaper
+to recompute than to shuffle and store.
 
 Reference parity: the per-partition batch builder replaces the sink's
 BufferingActor/BulkSinkActor pipeline (Actors.kt:107-259); blobs replace
@@ -245,7 +245,7 @@ def build_segments_spimi(
     (term, seg, first_docid), stream-merge inside mapInPandas — decode all
     runs of a batch in one pass (cumsum-of-gaps with per-run rebasing),
     re-sort each group by doc_id (runs from different input partitions
-    interleave doc ranges), encode final blobs + block-max metadata.
+    interleave doc ranges), encode final blobs.
     Memory stays bounded: a (term, seg) group is ≤ 2^seg_bits postings by
     construction (the doc-range salt)."""
     from collections.abc import Iterator as _Iterator

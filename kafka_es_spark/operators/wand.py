@@ -18,18 +18,26 @@ Query plan (SURVEY.md §3.3):
    cached Searcher holds postings and range_dls hash-partitioned by
    ``seg``, so the cogroup plans with no Exchange and, with step 2 done in
    the driver, a query is one Spark job;
-5. inside each range: block-max WAND (Broder et al. WAND + Ding/Suel
-   block-max skipping; see PAPERS.md) over per-term cursors with a bounded
-   min-heap, float64, deterministic tie-break (score desc, doc_id asc).
+5. inside each range, one numpy pass over per-term cursors (decoded doc
+   ids and their BM25 contributions). OR queries use window-level
+   block-max pruning (``blockmax_topk_vectorized``: the WAND / block-max
+   principle of Broder et al. and Ding & Suel, see PAPERS.md, applied to
+   doc-id windows): a window is scored only if the sum of its per-term
+   contribution maxima can reach the k-th best score θ. AND,
+   minimum_should_match and search_after count each doc's matched terms
+   in one exhaustive pass (``counted_range_topk``). Ties break score desc,
+   doc_id asc.
 
-Rank-identity discipline: per-term contributions are summed in sorted-term
-order (fixed cursor order), so WAND, the per-range scorer, and the
-exhaustive numpy oracle produce bit-identical float64 scores.
+Rank-identity discipline: every scorer takes its contributions from
+``bm25.contrib`` and pools them per doc with ``_pool``, which adds each
+doc's contributions in sorted-term order starting from 0.0 (np.bincount
+adds in element order). So topk, topk_many, search_after_topk,
+relational_scores, terms_set_topk and synonym_topk give bit-identical
+float64 scores for the same doc, equal to a sequential per-term sum.
 """
 
 from __future__ import annotations
 
-import heapq
 import os
 
 import numpy as np
@@ -42,7 +50,7 @@ from pyspark.sql import types as T
 from kafka_es_spark.operators.spimi import (
     decode_range_dls, decode_segment, gather_dls,
 )
-from kafka_es_spark.operators.bm25 import K1, B
+from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf, idf_col
 from kafka_es_spark.session import local_frame
 
 TOPK_SCHEMA = T.StructType(
@@ -51,17 +59,6 @@ TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
-
-
-def idf(n_docs: int, df: int) -> float:
-    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-
-
-def _contrib(tfs: np.ndarray, dls: np.ndarray, w: float, avgdl: float,
-             k1: float = K1, b: float = B) -> np.ndarray:
-    tf = tfs.astype(np.float64)
-    dl = dls.astype(np.float64)
-    return w * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def _seg_dls(key, dpdf: pd.DataFrame) -> tuple[int, np.ndarray]:
@@ -78,23 +75,35 @@ def _seg_dls(key, dpdf: pd.DataFrame) -> tuple[int, np.ndarray]:
     return decode_range_dls(dpdf.to_dict("records"))
 
 
+def _pool(
+    ids: np.ndarray, vals: np.ndarray, excluded: frozenset[int] | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-doc pooling of one range's term-ordered postings: the distinct
+    doc ids (ascending), how many postings each has, and the sum of its
+    ``vals``. np.bincount adds in element order, so a doc's sum runs in
+    input order from 0.0 — the order ``np.add.at`` and a sequential loop
+    use; callers concatenate their inputs term by term in sorted-term
+    order. ``excluded`` doc ids (delete tombstones) are dropped."""
+    uids, inv, cnt = np.unique(ids, return_inverse=True, return_counts=True)
+    sums = np.bincount(inv, weights=vals, minlength=uids.size)
+    if excluded:
+        dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
+        keep = ~np.isin(uids, dead)
+        uids, cnt, sums = uids[keep], cnt[keep], sums[keep]
+    return uids, cnt, sums
+
+
 class _Cursor:
     """One query term's postings within a doc range (possibly several
-    segment rows from different shards/epochs, concatenated in doc order).
+    segment rows from different shards/epochs, concatenated in doc order):
+    the doc ids and their BM25 contributions. Per-posting dl is gathered
+    from the range dl array (``dl_arr[doc_id - dl_base]``, the norms
+    analogue)."""
 
-    Format 2: per-posting dl is gathered from the range dl array
-    (``dl_arr[doc_id - dl_base]``, the norms analogue) and block-max
-    metadata (last/maxtf/mindl per 128-posting block) is recomputed here
-    from the decoded arrays — one reduceat per cursor, cheaper than
-    shuffling and storing it per segment."""
-
-    __slots__ = ("ids", "contrib", "blk_last", "blk_ub", "pos", "n")
+    __slots__ = ("ids", "contrib")
 
     def __init__(self, rows: list[dict], w: float, avgdl: float, codec: str,
-                 dl_base: int, dl_arr: np.ndarray,
-                 k1: float = K1, b: float = B):
-        from kafka_es_spark.functions.codecs import block_meta
-
+                 dl_base: int, dl_arr: np.ndarray):
         rows = sorted(rows, key=lambda r: r["first_docid"])
         ids_l, tf_l = [], []
         for r in rows:
@@ -102,119 +111,34 @@ class _Cursor:
             ids_l.append(i)
             tf_l.append(tfs)
         self.ids = np.concatenate(ids_l)
-        tfs = np.concatenate(tf_l)
         dls = gather_dls(self.ids, dl_base, dl_arr)
-        self.contrib = _contrib(tfs, dls, w, avgdl, k1, b)
-        last, maxtf, mindl = block_meta(self.ids, tfs, dls)
-        self.blk_last = last
-        self.blk_ub = _contrib(maxtf, mindl, w, avgdl, k1, b)
-        self.pos = 0
-        self.n = self.ids.size
-
-    @property
-    def exhausted(self) -> bool:
-        return self.pos >= self.n
-
-    @property
-    def cur_doc(self) -> int:
-        return int(self.ids[self.pos])
-
-    def term_ub(self) -> float:
-        return float(self.blk_ub.max()) if self.blk_ub.size else 0.0
-
-    def block_ub_at(self, doc: int) -> float:
-        bi = int(np.searchsorted(self.blk_last, doc, side="left"))
-        return float(self.blk_ub[min(bi, self.blk_ub.size - 1)])
-
-    def block_last_at(self, doc: int) -> int:
-        bi = int(np.searchsorted(self.blk_last, doc, side="left"))
-        return int(self.blk_last[min(bi, self.blk_last.size - 1)])
-
-    def advance_to(self, doc: int) -> None:
-        """Gallop to the first posting with id >= doc."""
-        self.pos += int(np.searchsorted(self.ids[self.pos:], doc, side="left"))
+        self.contrib = contrib(np.concatenate(tf_l), dls, w, avgdl)
 
 
-def wand_range_topk(
-    cursors: list[_Cursor], k: int, excluded: frozenset[int] | None = None
-) -> list[tuple[int, float]]:
-    """Block-max WAND over one doc range. Returns up to k (doc_id, score),
-    best-first by (score desc, doc_id asc). Cursors MUST be in sorted-term
-    order — contributions are accumulated in cursor-index order so the sum
-    is bit-identical to the exhaustive oracle. ``excluded`` docs (delete
-    tombstones) are skipped inside the scorer — the live-docs-bitset
-    analogue; index-level stats are unchanged, like ES before merge."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id): heap[0] = worst kept
-    ubs = [c.term_ub() for c in cursors]
+def _seg_cursors(key, pdf: pd.DataFrame, dpdf: pd.DataFrame,
+                 weights: dict[str, float], avgdl: float,
+                 codec: str) -> list[_Cursor]:
+    """One seg-cogroup group's cursors, one per term, in sorted-term
+    order; every term in ``pdf`` must have a weight."""
+    dl_base, dl_arr = _seg_dls(key, dpdf)
+    by_term: dict[str, list[dict]] = {}
+    for r in pdf.to_dict("records"):
+        by_term.setdefault(r["term"], []).append(r)
+    return [
+        _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
+        for t in sorted(by_term)
+    ]
 
-    while True:
-        order = [i for i in range(len(cursors)) if not cursors[i].exhausted]
-        if not order:
-            break
-        order.sort(key=lambda i: cursors[i].cur_doc)
-        theta = heap[0][0] if len(heap) >= k else -np.inf
-        acc = 0.0
-        pivot_j = -1
-        for j, ci in enumerate(order):
-            acc += ubs[ci]
-            if acc >= theta:
-                pivot_j = j
-                break
-        if pivot_j < 0:
-            break  # no remaining doc can reach the threshold
-        pivot_doc = cursors[order[pivot_j]].cur_doc
-        # extend the pivot across cursors tied at pivot_doc so their block
-        # upper bounds count toward the refinement (Ding & Suel BMW, Alg. 3)
-        while (
-            pivot_j + 1 < len(order)
-            and cursors[order[pivot_j + 1]].cur_doc == pivot_doc
-        ):
-            pivot_j += 1
-        if cursors[order[0]].cur_doc == pivot_doc:
-            # block-max refinement: tighter per-block bound before full eval
-            bub = sum(
-                cursors[ci].block_ub_at(pivot_doc)
-                for ci in order[: pivot_j + 1]
-            )
-            if bub < theta:
-                # skip to just past the nearest block boundary, clamped at
-                # the next (non-pivot) cursor's current doc: a doc in
-                # (pivot, boundary] may also appear in lists beyond the
-                # pivot, whose contribution bub did not count — d' rule.
-                nxt = min(
-                    cursors[ci].block_last_at(pivot_doc)
-                    for ci in order[: pivot_j + 1]
-                ) + 1
-                if pivot_j + 1 < len(order):
-                    nxt = min(nxt, cursors[order[pivot_j + 1]].cur_doc)
-                nxt = max(nxt, pivot_doc + 1)  # guarantee progress
-                for ci in order[: pivot_j + 1]:
-                    cursors[ci].advance_to(nxt)
-                continue
-            if excluded is not None and pivot_doc in excluded:
-                # tombstoned: step every cursor past it without scoring
-                for ci in range(len(cursors)):
-                    c = cursors[ci]
-                    if not c.exhausted and c.cur_doc == pivot_doc:
-                        c.pos += 1
-                continue
-            # full evaluation — fixed cursor order for float determinism
-            score = 0.0
-            for ci in range(len(cursors)):
-                c = cursors[ci]
-                if not c.exhausted and c.cur_doc == pivot_doc:
-                    score += float(c.contrib[c.pos])
-                    c.pos += 1
-            if len(heap) < k:
-                heapq.heappush(heap, (score, -pivot_doc))
-            elif (score, -pivot_doc) > heap[0]:
-                heapq.heapreplace(heap, (score, -pivot_doc))
-        else:
-            for ci in order[:pivot_j]:
-                cursors[ci].advance_to(pivot_doc)
 
-    out = sorted(heap, key=lambda e: (-e[0], -e[1]))
-    return [(-d, s) for s, d in out]
+def _pool_cursors(
+    cursors: list[_Cursor], excluded: frozenset[int] | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``_pool`` over whole cursors, in their order."""
+    return _pool(
+        np.concatenate([c.ids for c in cursors]),
+        np.concatenate([c.contrib for c in cursors]),
+        excluded,
+    )
 
 
 def blockmax_topk_vectorized(
@@ -232,12 +156,9 @@ def blockmax_topk_vectorized(
     growth) until k docs are scored → θ = k-th best; (2) evaluate every
     remaining window whose upper bound ≥ θ (ties included, same as WAND's
     pivot condition). Docs in never-evaluated windows provably score < θ.
-    Scores are bit-identical to wand_range_topk and the exhaustive oracle:
-    per-doc contributions accumulate in cursor-index order (np.add.at adds
-    in element order over the cursor-ordered concatenation). Upper bounds
-    here are per-window maxima of the *exact* decoded contributions —
-    tighter than the stored block metadata, which remains what the classic
-    cursor algorithm (wand_range_topk) uses.
+    Scores are bit-identical to the exhaustive scorers: per-doc
+    contributions pool in cursor-index order (``_pool``). Upper bounds
+    are per-window maxima of the *exact* decoded contributions.
 
     Python-loop cost is O(#cursors + log(#windows)) per range instead of
     O(#postings) — the constant-factor fix for sub-second serving at large
@@ -260,22 +181,12 @@ def blockmax_topk_vectorized(
     order = np.argsort(-ub, kind="stable")
 
     def eval_mask(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        ids_parts, con_parts = [], []
-        for c, w_of in zip(cursors, wins_per_cursor):
-            sel = mask[w_of]
-            ids_parts.append(c.ids[sel])
-            con_parts.append(c.contrib[sel])
-        aid = np.concatenate(ids_parts)
-        if aid.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        acon = np.concatenate(con_parts)
-        uids, inv = np.unique(aid, return_inverse=True)
-        sc = np.zeros(uids.size, dtype=np.float64)
-        np.add.at(sc, inv, acon)
-        if excluded is not None and excluded:
-            dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
-            keep = ~np.isin(uids, dead)
-            uids, sc = uids[keep], sc[keep]
+        sels = [mask[w_of] for w_of in wins_per_cursor]
+        uids, _, sc = _pool(
+            np.concatenate([c.ids[s] for c, s in zip(cursors, sels)]),
+            np.concatenate([c.contrib[s] for c, s in zip(cursors, sels)]),
+            excluded,
+        )
         return uids, sc
 
     n_live = int((ub > 0).sum())
@@ -306,71 +217,6 @@ def blockmax_topk_vectorized(
     return [(int(uids[i]), float(sc[i])) for i in sel]
 
 
-def conjunctive_range_topk(
-    cursors: list[_Cursor], k: int, excluded: frozenset[int] | None = None
-) -> list[tuple[int, float]]:
-    """Conjunctive (AND / ES bool.must) top-k over one doc range: every
-    query term must match. The optimal plan is posting-list INTERSECTION
-    (cost ~ the shortest list — Lucene's ConjunctionDISI shape), then exact
-    scoring of the survivors; WAND-style pivoting buys nothing when all
-    terms are required. Cursors MUST be in sorted-term order: contributions
-    accumulate in cursor-index order, so scores are bit-identical to the
-    OR-mode scorers on the same docs."""
-    if not cursors or k <= 0:
-        return []
-    ids = cursors[0].ids
-    for c in cursors[1:]:
-        if ids.size == 0:
-            return []
-        ids = np.intersect1d(ids, c.ids, assume_unique=True)
-    if ids.size == 0:
-        return []
-    if excluded is not None and excluded:
-        dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
-        ids = ids[~np.isin(ids, dead)]
-        if ids.size == 0:
-            return []
-    score = np.zeros(ids.size, dtype=np.float64)
-    for c in cursors:
-        pos = np.searchsorted(c.ids, ids)
-        score += c.contrib[pos]
-    sel = np.lexsort((ids, -score))[:k]
-    return [(int(ids[i]), float(score[i])) for i in sel]
-
-
-def msm_range_topk(
-    cursors: list[_Cursor],
-    k: int,
-    min_match: int,
-    excluded: frozenset[int] | None = None,
-) -> list[tuple[int, float]]:
-    """minimum_should_match top-k over one doc range: a doc qualifies iff it
-    matches at least ``min_match`` of the query terms (ES bool
-    minimum_should_match; min_match=1 ≡ OR, =len(cursors) ≡ AND). One
-    vectorized pass over the range's postings: unique doc ids with
-    per-term membership counts, qualifying docs scored by np.add.at in
-    cursor-index order (bit-identical accumulation to the other scorers).
-    No block-max pruning — an upper bound over "any ≥m subset" is much
-    weaker than WAND's, and a range is ≤ 2^seg_bits postings per term by
-    construction, so the exhaustive pass stays bounded."""
-    if not cursors or k <= 0 or min_match > len(cursors):
-        return []
-    aid = np.concatenate([c.ids for c in cursors])
-    acon = np.concatenate([c.contrib for c in cursors])
-    uids, inv, cnt = np.unique(aid, return_inverse=True, return_counts=True)
-    sc = np.zeros(uids.size, dtype=np.float64)
-    np.add.at(sc, inv, acon)
-    keep = cnt >= min_match
-    if excluded is not None and excluded:
-        dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
-        keep &= ~np.isin(uids, dead)
-    uids, sc = uids[keep], sc[keep]
-    if uids.size == 0:
-        return []
-    sel = np.lexsort((uids, -sc))[:k]
-    return [(int(uids[i]), float(sc[i])) for i in sel]
-
-
 def round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
     """SQL ROUND (HALF_UP for positive values) — the serving-score
     rounding rule, applied inside the pagination scorer so cursor
@@ -379,45 +225,40 @@ def round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
     return np.floor(x * scale + 0.5) / scale
 
 
-def cursor_range_topk(
+def counted_range_topk(
     cursors: list[_Cursor],
     k: int,
     need: int,
-    round_to: int,
-    after: tuple[float, int] | None,
-    excluded: frozenset[int] | None = None,
+    excluded: frozenset[int] | None,
+    round_to: int | None = None,
+    after: tuple[float, int] | None = None,
 ) -> list[tuple[int, float]]:
-    """search_after scorer for one doc range: exhaustive vectorized
-    scoring (block-max pruning is unsound here — a θ seeded from the
-    unfiltered top-k would prune docs that qualify *after* the cursor),
-    ranked on the ROUNDED serving score, filtered to rows strictly after
-    ``after=(score, doc_id)`` in (score desc, doc_id asc) order. A range
-    is ≤ 2^seg_bits postings per term by construction, so the exhaustive
-    pass stays bounded — deep pagination pays the collector cost in ES
-    too. ``need`` = minimum matching terms (1=OR, #terms=AND, m=msm)."""
+    """Top-k over one doc range of the docs that match at least ``need``
+    of the cursors' terms: 1 is OR, ``len(cursors)`` is AND (ES
+    bool.must), anything between is minimum_should_match. One exhaustive
+    vectorized pass: a bound over "any ≥ need subset" is much weaker than
+    the OR bound, ``_Cursor`` has decoded every posting already (so an
+    intersection plan saves no decode), and a range holds ≤ 2^seg_bits
+    postings per term by construction.
+
+    search_after: ``round_to`` ranks on the rounded serving score and
+    ``after=(score, doc_id)`` keeps only rows strictly after it in
+    (score desc, doc_id asc) order. Block-max pruning would be unsound
+    there — a θ seeded from the unfiltered top-k would prune docs that
+    qualify after the cursor."""
     if not cursors or k <= 0:
         return []
-    aid = np.concatenate([c.ids for c in cursors])
-    acon = np.concatenate([c.contrib for c in cursors])
-    uids, inv, cnt = np.unique(aid, return_inverse=True, return_counts=True)
-    sc = np.zeros(uids.size, dtype=np.float64)
-    np.add.at(sc, inv, acon)
+    uids, cnt, sc = _pool_cursors(cursors, excluded)
     keep = cnt >= need
-    if excluded is not None and excluded:
-        dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
-        keep &= ~np.isin(uids, dead)
     uids, sc = uids[keep], sc[keep]
-    if uids.size == 0:
-        return []
-    rs = round_half_up(sc, round_to)
+    if round_to is not None:
+        sc = round_half_up(sc, round_to)
     if after is not None:
         s_a, d_a = float(after[0]), int(after[1])
-        m = (rs < s_a) | ((rs == s_a) & (uids > d_a))
-        uids, rs = uids[m], rs[m]
-        if uids.size == 0:
-            return []
-    sel = np.lexsort((uids, -rs))[:k]
-    return [(int(uids[i]), float(rs[i])) for i in sel]
+        m = (sc < s_a) | ((sc == s_a) & (uids > d_a))
+        uids, sc = uids[m], sc[m]
+    sel = np.lexsort((uids, -sc))[:k]
+    return [(int(uids[i]), float(sc[i])) for i in sel]
 
 
 # Above this many term_stats rows (all partials, from the parquet footers)
@@ -588,7 +429,7 @@ class Searcher:
              with_url: bool = False, fetch_k: int | None = None,
              exclude_doc_ids: set[int] | None = None,
              exclude_urls: DataFrame | None = None,
-             algo: str = "vector", mode: str = "or",
+             mode: str = "or",
              min_should_match: int | None = None,
              must_not: str | None = None,
              boosts: dict[str, float] | None = None) -> DataFrame:
@@ -599,14 +440,14 @@ class Searcher:
         ``mode="and"`` switches to conjunctive semantics (ES bool.must,
         SURVEY §2.8 X8's other half): a doc must contain EVERY query term.
         A term absent from the whole index ⇒ empty result; per range the
-        scorer intersects posting lists instead of pivoting. Scores of
+        counting scorer keeps the docs on every posting list. Scores of
         surviving docs are identical to OR-mode scores (same contributions,
         same accumulation order).
 
         ``min_should_match=m`` (ES bool minimum_should_match) requires a
         doc to match at least m of the query's distinct terms — m=1 is
         plain OR, m=#terms is AND; intermediate m uses the vectorized
-        counting scorer (msm_range_topk). Mutually exclusive with
+        counting scorer (counted_range_topk). Mutually exclusive with
         mode="and" (which is the m=#terms special case).
 
         ``must_not`` (ES bool.must_not): a doc containing ANY of the
@@ -721,11 +562,9 @@ class Searcher:
                 if t in by_term
             ]
             if mode == "and":
-                top = conjunctive_range_topk(cursors, k, excluded=range_excluded)
+                top = counted_range_topk(cursors, k, len(cursors), range_excluded)
             elif msm is not None and msm > 1:
-                top = msm_range_topk(cursors, k, msm, excluded=range_excluded)
-            elif algo == "bmw":
-                top = wand_range_topk(cursors, k, excluded=range_excluded)
+                top = counted_range_topk(cursors, k, msm, range_excluded)
             else:
                 top = blockmax_topk_vectorized(cursors, k, excluded=range_excluded)
             return pd.DataFrame(top, columns=["doc_id", "score"])
@@ -881,7 +720,7 @@ class Searcher:
         serving score — the cursor a client passes back is what it was
         shown, so the sort key must round identically (round_to is
         therefore required here, unlike topk). Per-range scoring is
-        exhaustive (see cursor_range_topk: pruning against a cursor-
+        exhaustive (see counted_range_topk: pruning against a cursor-
         filtered θ is unsound); stateless between pages, like
         search_after and unlike scroll contexts."""
         from kafka_es_spark.functions.tokenize import tokenize_py
@@ -939,8 +778,8 @@ class Searcher:
                 for t in term_order
                 if t in by_term
             ]
-            top = cursor_range_topk(
-                cursors, k, need, round_to, after, excluded=range_excluded
+            top = counted_range_topk(
+                cursors, k, need, range_excluded, round_to, after
             )
             return pd.DataFrame(top, columns=["doc_id", "score"])
 
@@ -1282,18 +1121,6 @@ class Searcher:
             decode_dls, "doc_id long, dl long"
         )
 
-    def _bm25_contrib_col(self):
-        """The BM25 per-(doc, term) contribution as a Column over
-        (tf, dl, w) — shared by every relational scorer."""
-        return (
-            F.col("w") * F.col("tf") * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(self.avgdl))
-            )
-        )
-
     def top_hits(
         self,
         query: str,
@@ -1425,7 +1252,9 @@ class Searcher:
             .select(
                 "url", "term", "tf", "dl",
                 F.col("w").alias("idf"),
-                self._bm25_contrib_col().alias("contrib"),
+                contrib_col(
+                    F.col("w"), F.col("tf"), F.col("dl"), self.avgdl
+                ).alias("contrib"),
             )
         )
         if round_to is not None:
@@ -1817,12 +1646,10 @@ class Searcher:
         # One seg-cogroup instead of the old postings⨝dl doc_id shuffle join
         # + hash aggregation (3 Exchanges → 0): postings and range-dls are
         # both seg-organized, a doc lives in exactly ONE range, so per-range
-        # numpy scoring (dl gathered position-indexed, per-doc sums via
-        # reduceat in term-lex order) yields final (doc_id, score) rows with
-        # no doc-keyed shuffle at all — the same plan shape topk already
-        # uses (guide §2.4). Arithmetic matches the old Column expression
-        # op-for-op (same IEEE doubles); the per-doc sum order is now
-        # deterministic (term-lex) where the hash-agg order was not.
+        # numpy scoring (dl gathered position-indexed, per-doc sums pooled
+        # in term-lex order) yields final (doc_id, score) rows with no
+        # doc-keyed shuffle at all — the same plan shape and the same
+        # per-doc sums as topk (guide §2.4).
         dls_rel = self._query_dls(segs)
         avgdl, codec = self.avgdl, self.codec
         wmap = {t: float(w) for t, w in weights.items()}
@@ -1834,36 +1661,9 @@ class Searcher:
                     {"doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            dl_base, dl_arr = _seg_dls(key, dpdf)
-            rows = pdf.to_dict("records")
-            rows.sort(key=lambda r: r["term"])
-            ids_l, con_l = [], []
-            for r in rows:
-                ids, tfs = decode_segment(r, codec)
-                w = wmap[r["term"]]
-                tf = tfs.astype(np.float64)
-                dl = gather_dls(ids, dl_base, dl_arr).astype(np.float64)
-                con = (w * tf) * (K1 + 1.0) / (
-                    tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
-                )
-                ids_l.append(ids)
-                con_l.append(con)
-            ids_all = np.concatenate(ids_l)
-            con_all = np.concatenate(con_l)
-            order = np.argsort(ids_all, kind="stable")
-            ids_s = ids_all[order]
-            con_s = con_all[order]
-            starts = np.flatnonzero(
-                np.concatenate([[True], ids_s[1:] != ids_s[:-1]])
+            uids, _, scores = _pool_cursors(
+                _seg_cursors(key, pdf, dpdf, wmap, avgdl, codec), excluded
             )
-            uids = ids_s[starts]
-            scores = np.add.reduceat(con_s, starts)
-            if excluded is not None and uids.size:
-                dead = np.fromiter(
-                    excluded, dtype=np.int64, count=len(excluded)
-                )
-                keep = ~np.isin(uids, dead)
-                uids, scores = uids[keep], scores[keep]
             return pd.DataFrame({"doc_id": uids, "score": scores})
 
         return (
@@ -2984,8 +2784,8 @@ class Searcher:
             return local_frame(spark, [], empty)
         # r6: one seg-cogroup computes (score, matched) per doc — the old
         # postings ⨝ dl_rows doc_id-shuffle join + hash aggregation
-        # (3 Exchanges) is gone (guide §2.4, same kernel family as
-        # relational_scores). matched = posting rows per doc, which IS
+        # (3 Exchanges) is gone (guide §2.4, same kernel as
+        # relational_scores). matched = postings per doc, which IS
         # count_distinct(term): a doc appears at most once per term (one
         # epoch owns a doc, one merged segment row per (term, seg, shard)).
         avgdl, codec = self.avgdl, self.codec
@@ -2998,31 +2798,9 @@ class Searcher:
                      "score": pd.Series(dtype=np.float64),
                      "_matched": pd.Series(dtype=np.int64)}
                 )
-            dl_base, dl_arr = _seg_dls(key, dpdf)
-            rows = pdf.to_dict("records")
-            rows.sort(key=lambda r: r["term"])
-            ids_l, con_l = [], []
-            for r in rows:
-                ids, tfs = decode_segment(r, codec)
-                w = wmap[r["term"]]
-                tf = tfs.astype(np.float64)
-                dl = gather_dls(ids, dl_base, dl_arr).astype(np.float64)
-                con = (w * tf) * (K1 + 1.0) / (
-                    tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
-                )
-                ids_l.append(ids)
-                con_l.append(con)
-            ids_all = np.concatenate(ids_l)
-            con_all = np.concatenate(con_l)
-            order = np.argsort(ids_all, kind="stable")
-            ids_s = ids_all[order]
-            con_s = con_all[order]
-            starts = np.flatnonzero(
-                np.concatenate([[True], ids_s[1:] != ids_s[:-1]])
+            uids, matched, scores = _pool_cursors(
+                _seg_cursors(key, pdf, dpdf, wmap, avgdl, codec)
             )
-            uids = ids_s[starts]
-            scores = np.add.reduceat(con_s, starts)
-            matched = np.diff(np.append(starts, ids_s.size))
             return pd.DataFrame(
                 {"doc_id": uids, "score": scores, "_matched": matched}
             )
@@ -3134,10 +2912,10 @@ class Searcher:
         if not dfs:
             return local_frame(spark, [], empty)
         # r6: one seg-cogroup pools the span freq (Σ tf over the clause
-        # terms, exact int64) and scores per doc in numpy — the old
+        # terms, exact in float64) and scores per doc in numpy — the old
         # tf-aggregate ⨝ dl_rows doc_id-shuffle chain (3 Exchanges) is
-        # gone (guide §2.4). Arithmetic mirrors _bm25_contrib_col
-        # op-for-op with the combined clause weight.
+        # gone (guide §2.4). One contribution per doc with the combined
+        # clause weight.
         avgdl, codec = self.avgdl, self.codec
         wf = float(w)
 
@@ -3152,21 +2930,9 @@ class Searcher:
             for r in pdf.to_dict("records"):
                 ids, tfs = decode_segment(r, codec)
                 ids_l.append(ids)
-                tf_l.append(tfs.astype(np.int64))
-            ids_all = np.concatenate(ids_l)
-            tf_all = np.concatenate(tf_l)
-            order = np.argsort(ids_all, kind="stable")
-            ids_s = ids_all[order]
-            tf_s = tf_all[order]
-            starts = np.flatnonzero(
-                np.concatenate([[True], ids_s[1:] != ids_s[:-1]])
-            )
-            uids = ids_s[starts]
-            tfp = np.add.reduceat(tf_s, starts).astype(np.float64)
-            dl = gather_dls(uids, dl_base, dl_arr).astype(np.float64)
-            sc = (wf * tfp) * (K1 + 1.0) / (
-                tfp + K1 * ((1.0 - B) + (B * dl) / avgdl)
-            )
+                tf_l.append(tfs)
+            uids, _, tfp = _pool(np.concatenate(ids_l), np.concatenate(tf_l))
+            sc = contrib(tfp, gather_dls(uids, dl_base, dl_arr), wf, avgdl)
             return pd.DataFrame({"doc_id": uids, "score": sc})
 
         out = self._score_cogroup(
@@ -3322,14 +3088,13 @@ class Searcher:
             if m in ts
         )
         # r6: one seg-cogroup does the whole group roll-up in numpy — pool
-        # tf per (doc, group) (exact int64 lexsort + reduceat), one BM25
-        # contribution per (doc, group) with the group's blended weight,
-        # sum per doc in group-lex order. The old chain (postings ⨝ gmap →
-        # (doc, grp) hash agg → ⨝ dl_rows → ⨝ w_df → doc hash agg) paid
-        # THREE doc_id/grp-keyed Exchanges for data already co-organized
-        # by doc range (guide §2.4). Per-group arithmetic mirrors
-        # _bm25_contrib_col op-for-op; the per-doc sum order is now
-        # deterministic (group-lex) where the hash aggregate's was not.
+        # tf per (doc, group) (exact in float64), one BM25 contribution per
+        # (doc, group) with the group's blended weight, pool per doc in
+        # group-lex order. The old chain (postings ⨝ gmap → (doc, grp)
+        # hash agg → ⨝ dl_rows → ⨝ w_df → doc hash agg) paid THREE
+        # doc_id/grp-keyed Exchanges for data already co-organized by doc
+        # range (guide §2.4). With no synonyms every group is one term and
+        # the scores equal topk's bit for bit.
         grp_names = sorted(weights)
         gidx = {g: i for i, g in enumerate(grp_names)}
         warr_py = [float(weights[g]) for g in grp_names]
@@ -3349,42 +3114,25 @@ class Searcher:
                 return empty_pdf
             dl_base, dl_arr = _seg_dls(key, dpdf)
             warr = np.asarray(warr_py, dtype=np.float64)
-            ids_l, tf_l, g_l = [], [], []
+            ng = warr.size
+            keys_l, tf_l = [], []
             for r in pdf.to_dict("records"):
                 gs = term2g.get(r["term"])
                 if gs is None:  # not a member term (defensive; segs pruned)
                     continue
                 ids, tfs = decode_segment(r, codec)
-                for g in gs:  # one (doc, tf, group) triple per membership
-                    ids_l.append(ids)
-                    tf_l.append(tfs.astype(np.int64))
-                    g_l.append(np.full(ids.size, g, dtype=np.int64))
-            if not ids_l:
+                for g in gs:  # one (doc, group) key per membership
+                    keys_l.append(ids * ng + g)
+                    tf_l.append(tfs)
+            if not keys_l:
                 return empty_pdf
-            ids_all = np.concatenate(ids_l)
-            tf_all = np.concatenate(tf_l)
-            g_all = np.concatenate(g_l)
-            order = np.lexsort((g_all, ids_all))
-            ids_s, tf_s, g_s = ids_all[order], tf_all[order], g_all[order]
-            pstarts = np.flatnonzero(
-                np.concatenate(
-                    [[True],
-                     (ids_s[1:] != ids_s[:-1]) | (g_s[1:] != g_s[:-1])]
-                )
+            # (doc, group) key doc * ng + g sorts doc-major, group-minor
+            pk, _, p_tf = _pool(np.concatenate(keys_l), np.concatenate(tf_l))
+            p_ids, p_g = pk // ng, pk % ng
+            con = contrib(
+                p_tf, gather_dls(p_ids, dl_base, dl_arr), warr[p_g], avgdl
             )
-            p_ids = ids_s[pstarts]
-            p_g = g_s[pstarts]
-            p_tf = np.add.reduceat(tf_s, pstarts).astype(np.float64)
-            dl = gather_dls(p_ids, dl_base, dl_arr).astype(np.float64)
-            wv = warr[p_g]
-            con = (wv * p_tf) * (K1 + 1.0) / (
-                p_tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
-            )
-            dstarts = np.flatnonzero(
-                np.concatenate([[True], p_ids[1:] != p_ids[:-1]])
-            )
-            uids = p_ids[dstarts]
-            scores = np.add.reduceat(con, dstarts)
+            uids, _, scores = _pool(p_ids, con)
             return pd.DataFrame({"doc_id": uids, "score": scores})
 
         out = self._score_cogroup(
@@ -5088,7 +4836,7 @@ class Searcher:
                 if mode == "and":
                     if len(qc) < len(qts):
                         continue  # a required term is absent in this range
-                    top = conjunctive_range_topk(qc, k, excluded=excluded)
+                    top = counted_range_topk(qc, k, len(qc), excluded)
                 else:
                     top = blockmax_topk_vectorized(qc, k, excluded=excluded)
                 for d, s in top:
@@ -5262,13 +5010,7 @@ def combined_fields_topk(
         .distinct()
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn(
-            "w",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+        .withColumn("w", idf_col(F.lit(float(n)), F.col("df")))
     )
     dls = None
     for f in fields:
@@ -5285,19 +5027,12 @@ def combined_fields_topk(
     avgdlc = float(dlc.agg(F.avg("dlc")).collect()[0][0] or 0.0)
     if avgdlc == 0:
         return local_frame(spark, [], empty)
-    contrib = (
-        F.col("w") * F.col("tfc") * F.lit(K1 + 1.0)
-        / (
-            F.col("tfc")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dlc") / F.lit(avgdlc))
-        )
-    )
+    con = contrib_col(F.col("w"), F.col("tfc"), F.col("dlc"), avgdlc)
     out = (
         tfc.join(F.broadcast(dfc), "term")
         .join(dlc, "doc_id")
         .groupBy("doc_id")
-        .agg(F.sum(contrib).alias("score"))
+        .agg(F.sum(con).alias("score"))
     )
     dead = frozenset().union(
         *(searchers[f].persistent_excluded for f in fields)
@@ -5448,38 +5183,3 @@ def wand_topk(
         query, k=k, round_to=round_to, with_url=with_url, fetch_k=fetch_k,
         mode=mode,
     )
-
-
-# ---------------------------------------------------------------------------
-# Exhaustive numpy oracle (rank-identity reference for WAND; FIXTURES.md §2)
-# ---------------------------------------------------------------------------
-
-
-def exhaustive_topk_numpy(
-    doc_terms: pd.DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = K1,
-    b: float = B,
-) -> list[tuple[int, float]]:
-    """Brute-force BM25 over a pandas (doc_id, terms:list[str]) frame; sums
-    per-term contributions in sorted-term order (same as WAND)."""
-    qs = sorted(set(query_terms))
-    n = len(doc_terms)
-    dls = doc_terms["terms"].map(len).to_numpy(dtype=np.int64)
-    avgdl = float(dls.mean()) if n else 0.0
-    ids = doc_terms["doc_id"].to_numpy(dtype=np.int64)
-    scores = np.zeros(n, dtype=np.float64)
-    for q in qs:
-        tf = doc_terms["terms"].map(
-            lambda ts: int((np.asarray(ts, dtype=object) == q).sum())
-        ).to_numpy(dtype=np.int64)
-        df = int((tf > 0).sum())
-        if df == 0:
-            continue
-        w = idf(n, df)
-        mask = tf > 0
-        scores[mask] += _contrib(tf[mask], dls[mask], w, avgdl, k1, b)
-    hit = scores > 0
-    rows = sorted(zip(ids[hit], scores[hit]), key=lambda e: (-e[1], e[0]))
-    return [(int(d), float(s)) for d, s in rows[:k]]

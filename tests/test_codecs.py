@@ -6,7 +6,6 @@ from hypothesis import strategies as st
 
 from kafka_es_spark.functions.codecs import (
     BLOCK,
-    block_meta,
     bp128_decode,
     bp128_encode,
     delta_decode,
@@ -63,17 +62,3 @@ def test_bp128_roundtrip_prop(xs):
 def test_delta_roundtrip(ids):
     arr = np.array(sorted(ids), dtype=np.uint64)
     assert delta_decode(delta_encode(arr)).tolist() == arr.tolist()
-
-
-def test_block_meta():
-    n = BLOCK + 17
-    ids = np.arange(10, 10 + n, dtype=np.uint64)
-    tfs = np.ones(n, dtype=np.int64)
-    tfs[5] = 9
-    tfs[BLOCK + 3] = 4
-    dls = np.full(n, 50, dtype=np.int64)
-    dls[BLOCK + 1] = 7
-    last, maxtf, mindl = block_meta(ids, tfs, dls)
-    assert last.tolist() == [10 + BLOCK - 1, 10 + n - 1]
-    assert maxtf.tolist() == [9, 4]
-    assert mindl.tolist() == [50, 7]

@@ -11,9 +11,11 @@ from pyspark.sql import functions as F
 
 from kafka_es_spark.operators.docids import assign_doc_ids
 from kafka_es_spark.operators.spimi import decode_segment
-from kafka_es_spark.operators.wand import exhaustive_topk_numpy, wand_topk
+from kafka_es_spark.operators.wand import wand_topk
 from kafka_es_spark.plans.build_index import build_index, prepare_docs
 from kafka_es_spark.plans.manifest import Manifest
+
+from bm25_oracle import exhaustive_topk_numpy
 
 SEG_BITS = 6  # 64-doc ranges → several ranges at 400 docs
 
@@ -1320,7 +1322,7 @@ def test_collapse_boosting_regexp(spark, index_dir, pages, doc_terms):
     from collections import defaultdict
 
     from kafka_es_spark.operators.wand import (
-        Searcher, exhaustive_topk_numpy, round_half_up,
+        Searcher, round_half_up,
     )
 
     s = Searcher(spark, index_dir, cache=False)
@@ -1990,7 +1992,7 @@ def test_terms_set_constant_score_sampler(spark, index_dir, pages, doc_terms):
     constant_score: every filter-context match scores the boost;
     sampler/diversified_sampler: sub-agg over only the top sample."""
     from kafka_es_spark.operators.wand import (
-        Searcher, exhaustive_topk_numpy, round_half_up,
+        Searcher, round_half_up,
     )
     import numpy as np
 
@@ -2128,7 +2130,7 @@ def test_synonym_topk_lucene_semantics(spark, index_dir, doc_terms):
     import numpy as np
 
     from kafka_es_spark.operators.wand import (
-        Searcher, exhaustive_topk_numpy, round_half_up,
+        Searcher, round_half_up,
     )
 
     s = Searcher(spark, index_dir, cache=False)
@@ -2179,7 +2181,7 @@ def test_feature_boost_topk_bounded_additive(spark, index_dir, pages, doc_terms)
     import numpy as np
 
     from kafka_es_spark.operators.wand import (
-        Searcher, exhaustive_topk_numpy, round_half_up,
+        Searcher, round_half_up,
     )
 
     s = Searcher(spark, index_dir, cache=False)
@@ -2228,7 +2230,7 @@ def test_pinned_topk_order_and_dedup(spark, index_dir, doc_terms):
     """Pinned query: pins first in list order (even non-matching docs),
     organic hits follow with BM25 scores, a pin that is also an organic
     hit appears once."""
-    from kafka_es_spark.operators.wand import Searcher, exhaustive_topk_numpy
+    from kafka_es_spark.operators.wand import Searcher
 
     s = Searcher(spark, index_dir, cache=False)
     q = "data index"

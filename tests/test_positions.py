@@ -98,7 +98,8 @@ def test_query_string_full_subset_vs_brute(spark, pages, pidx):
     """query_string '+data ind* -the "data index"': must / prefix
     expansion / must_not / quoted-phrase filter all compose; score =
     BM25 sum over every positive term matched, vs a brute recomputation."""
-    from kafka_es_spark.operators.wand import Searcher, exhaustive_topk_numpy
+    from bm25_oracle import exhaustive_topk_numpy
+    from kafka_es_spark.operators.wand import Searcher
 
     doc_terms = prepare_docs(pages).select("doc_id", "terms").toPandas()
     vocab = sorted({t for ts in doc_terms["terms"] for t in ts})

@@ -15,10 +15,16 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_es_spark.operators.bm25 import contrib_col
 from kafka_es_spark.operators.wand import Searcher, idf
 from kafka_es_spark.plans.build_index import build_index, prepare_docs
 
 SEG_BITS = 6
+
+
+def _contrib(s):
+    """The per-(doc, term) BM25 contribution over (w, tf, dl) columns."""
+    return contrib_col(F.col("w"), F.col("tf"), F.col("dl"), s.avgdl)
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +63,7 @@ def test_terms_set_matches_join_formulation(spark, searcher, docfields):
         .join(F.broadcast(w_df), "term")
         .groupBy("doc_id")
         .agg(
-            F.round(F.sum(s._bm25_contrib_col()), 4).alias("score"),
+            F.round(F.sum(_contrib(s)), 4).alias("score"),
             F.count_distinct("term").alias("m"),
         )
     )
@@ -95,7 +101,7 @@ def test_span_or_matches_join_formulation(spark, searcher):
         .join(s._dl_rows(segs), "doc_id")
         .withColumn("w", F.lit(float(w)))
         .select(
-            "doc_id", F.round(s._bm25_contrib_col(), 4).alias("score")
+            "doc_id", F.round(_contrib(s), 4).alias("score")
         )
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(25)
@@ -137,7 +143,7 @@ def _synonym_join_formulation(spark, s, query, syns, k):
         .join(s._dl_rows(segs), "doc_id")
         .join(F.broadcast(w_df), "grp")
         .groupBy("doc_id")
-        .agg(F.round(F.sum(s._bm25_contrib_col()), 4).alias("score"))
+        .agg(F.round(F.sum(_contrib(s)), 4).alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from kafka_es_spark.operators.wand import Searcher, exhaustive_topk_numpy, wand_topk
+from kafka_es_spark.operators.wand import Searcher, wand_topk
 from kafka_es_spark.plans.build_index import load_stats, prepare_docs
 from kafka_es_spark.plans.manifest import Manifest
 from kafka_es_spark.sources.pages import gen_pages
@@ -17,6 +17,8 @@ from kafka_es_spark.streaming.ingest_stream import (
     stream_pages_to_index,
     windowed_action_counts,
 )
+
+from bm25_oracle import exhaustive_topk_numpy
 
 
 def test_append_epoch_incremental_and_idempotent(spark, tmp_path):

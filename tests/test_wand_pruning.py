@@ -1,52 +1,29 @@
-"""Adversarial block-max WAND pruning tests (pure Python, no Spark).
+"""Per-range scorer tests against brute force (pure numpy, no Spark).
 
-Regression for the r1 unsoundness: when the block-max refinement rejects a
-pivot, the skip target must be clamped at the next (non-pivot) cursor's
-current doc (Ding & Suel BMW d' rule), and the pivot must be extended
-across cursors tied at pivot_doc before summing block upper bounds.
-Without either, a doc appearing in both a skipped-over list and a later
-list permanently loses the skipped list's contribution.
+``blockmax_topk_vectorized`` (OR, window-level block-max pruning) and
+``counted_range_topk`` (AND, minimum_should_match, search_after) must be
+bit-identical to exhaustive scorers that add each doc's contributions in
+cursor-index order.
 """
 
 import numpy as np
 
-from kafka_es_spark.operators.wand import _Cursor, wand_range_topk
+from kafka_es_spark.operators.wand import (
+    _Cursor, blockmax_topk_vectorized, counted_range_topk, round_half_up,
+)
 
 
-def mk_cursor(ids, contribs, block_spec):
-    """Build a _Cursor directly from raw postings. block_spec is either a
-    fixed block size (int) or explicit block lengths (list summing to
-    len(ids)); block upper bound = max contribution within the block (the
-    tightest valid bound, same role as blk_maxtf/blk_mindl in the real
-    index)."""
+def mk_cursor(ids, contribs):
+    """A _Cursor built directly from raw postings and contributions."""
     c = object.__new__(_Cursor)
     c.ids = np.asarray(ids, dtype=np.int64)
     c.contrib = np.asarray(contribs, dtype=np.float64)
-    n = c.ids.size
-    if isinstance(block_spec, int):
-        bounds = list(range(0, n, block_spec)) + [n]
-    else:
-        assert sum(block_spec) == n
-        bounds = [0]
-        for ln in block_spec:
-            bounds.append(bounds[-1] + ln)
-    bl, bu = [], []
-    for s, e in zip(bounds, bounds[1:]):
-        if s == e:
-            continue
-        bl.append(int(c.ids[e - 1]))
-        bu.append(float(c.contrib[s:e].max()))
-    c.blk_last = np.asarray(bl, dtype=np.int64)
-    c.blk_ub = np.asarray(bu, dtype=np.float64)
-    c.pos = 0
-    c.n = n
     return c
 
 
 def brute_topk(raw, k):
     """Exhaustive scorer accumulating per-doc contributions in cursor-index
-    order — the same float64 op order as wand_range_topk, so results must be
-    bit-identical."""
+    order, so results must be bit-identical to the range scorers."""
     docs = sorted({int(d) for ids, _ in raw for d in ids})
     out = []
     for d in docs:
@@ -60,90 +37,6 @@ def brute_topk(raw, k):
     return out[:k]
 
 
-def run_wand(raw, blocks, k):
-    cursors = [mk_cursor(ids, con, b) for (ids, con), b in zip(raw, blocks)]
-    return wand_range_topk(cursors, k)
-
-
-def test_bmw_skip_clamped_at_next_cursor_doc():
-    # c0's block [5,11,40] has ub 0.5; at pivot=5 with theta=5.0 the
-    # refinement rejects and the unclamped skip jumps c0 to 41, losing
-    # c0's 0.5 contribution to doc 11 (true winner 5.3).
-    raw = [
-        ([1, 5, 11, 40], [5.0, 0.5, 0.5, 0.5]),
-        ([11, 50], [4.8, 0.1]),
-    ]
-    # c0 block layout [1] | [5,11,40] — the rejected-pivot block's last doc
-    # (40) reaches past c1's current doc (11)
-    got = run_wand(raw, blocks=[[1, 3], [2]], k=1)
-    assert got == brute_topk(raw, 1) == [(11, 5.3)]
-
-
-def test_bmw_pivot_extended_across_ties():
-    # all three cursors sit on doc 11; without extending the pivot across
-    # the ties, bub counts only c0's 0.5 < theta=5.0 and skips c0 past 11,
-    # undercounting doc 11 (true 5.6) to 5.1.
-    raw = [
-        ([1, 11, 40], [5.0, 0.5, 0.5]),
-        ([11, 40], [0.6, 0.6]),
-        ([11], [4.5]),
-    ]
-    got = run_wand(raw, blocks=[1, 2, 1], k=1)
-    want = brute_topk(raw, 1)
-    assert got == want
-    assert want[0][0] == 11 and abs(want[0][1] - 5.6) < 1e-12
-
-
-def test_wand_matches_bruteforce_random_layouts():
-    # many random posting layouts with tiny blocks (1-4 docs) — small
-    # blocks maximize refinement-skip opportunities, the regression zone.
-    rng = np.random.default_rng(1234)
-    for trial in range(300):
-        n_terms = int(rng.integers(2, 5))
-        raw, blocks = [], []
-        for _ in range(n_terms):
-            n = int(rng.integers(1, 15))
-            ids = np.sort(rng.choice(60, size=n, replace=False))
-            con = np.round(rng.uniform(0.1, 5.0, size=n), 3)
-            raw.append((ids.tolist(), con.tolist()))
-            blocks.append(int(rng.integers(1, 5)))
-        k = int(rng.integers(1, 6))
-        got = run_wand(raw, blocks, k)
-        want = brute_topk(raw, k)
-        assert got == want, f"trial={trial} k={k} raw={raw} blocks={blocks}"
-
-
-def test_vectorized_matches_bmw_and_bruteforce():
-    """blockmax_topk_vectorized must be bit-identical to both the classic
-    cursor BMW and the brute-force scorer on random layouts, including with
-    tombstone exclusions."""
-    from kafka_es_spark.operators.wand import blockmax_topk_vectorized
-
-    rng = np.random.default_rng(99)
-    for trial in range(300):
-        n_terms = int(rng.integers(2, 5))
-        raw, blocks = [], []
-        for _ in range(n_terms):
-            n = int(rng.integers(1, 20))
-            ids = np.sort(rng.choice(8000, size=n, replace=False))
-            con = np.round(rng.uniform(0.1, 5.0, size=n), 3)
-            raw.append((ids.tolist(), con.tolist()))
-            blocks.append(int(rng.integers(1, 5)))
-        k = int(rng.integers(1, 6))
-        excluded = None
-        if trial % 3 == 0:
-            pool = sorted({d for ids, _ in raw for d in ids})
-            excluded = frozenset(pool[:: max(1, len(pool) // 3)])
-        want = brute_topk_excl(raw, k, excluded)
-        cursors = [mk_cursor(ids, con, b) for (ids, con), b in zip(raw, blocks)]
-        got_v = blockmax_topk_vectorized(cursors, k, excluded=excluded, wbits=3)
-        assert got_v == want, f"vector trial={trial}"
-        if excluded is None:
-            cursors2 = [mk_cursor(ids, con, b) for (ids, con), b in zip(raw, blocks)]
-            got_b = wand_range_topk(cursors2, k)
-            assert got_b == want, f"bmw trial={trial}"
-
-
 def brute_topk_excl(raw, k, excluded=None):
     out = [
         (d, s)
@@ -153,22 +46,27 @@ def brute_topk_excl(raw, k, excluded=None):
     return out[:k]
 
 
-def test_bmw_exclusion_matches_bruteforce():
-    rng = np.random.default_rng(7)
-    for trial in range(100):
-        raw, blocks = [], []
-        for _ in range(3):
-            n = int(rng.integers(2, 15))
-            ids = np.sort(rng.choice(100, size=n, replace=False))
+def test_vectorized_matches_bmw_and_bruteforce():
+    """blockmax_topk_vectorized must be bit-identical to the brute-force
+    scorer on random layouts, including with tombstone exclusions."""
+    rng = np.random.default_rng(99)
+    for trial in range(300):
+        n_terms = int(rng.integers(2, 5))
+        raw = []
+        for _ in range(n_terms):
+            n = int(rng.integers(1, 20))
+            ids = np.sort(rng.choice(8000, size=n, replace=False))
             con = np.round(rng.uniform(0.1, 5.0, size=n), 3)
             raw.append((ids.tolist(), con.tolist()))
-            blocks.append(int(rng.integers(1, 4)))
-        pool = sorted({d for ids, _ in raw for d in ids})
-        excluded = frozenset(pool[::2])
-        want = brute_topk_excl(raw, 3, excluded)
-        cursors = [mk_cursor(ids, con, b) for (ids, con), b in zip(raw, blocks)]
-        got = wand_range_topk(cursors, 3, excluded=excluded)
-        assert got == want, f"trial={trial}"
+        k = int(rng.integers(1, 6))
+        excluded = None
+        if trial % 3 == 0:
+            pool = sorted({d for ids, _ in raw for d in ids})
+            excluded = frozenset(pool[:: max(1, len(pool) // 3)])
+        want = brute_topk_excl(raw, k, excluded)
+        cursors = [mk_cursor(ids, con) for ids, con in raw]
+        got = blockmax_topk_vectorized(cursors, k, excluded=excluded, wbits=3)
+        assert got == want, f"vector trial={trial}"
 
 
 # ---------------------------------------------------------------------------
@@ -193,8 +91,6 @@ def brute_and_topk(raw, k):
 
 
 def test_conjunctive_matches_brute_intersection():
-    from kafka_es_spark.operators.wand import conjunctive_range_topk
-
     rng = np.random.default_rng(5)
     for trial in range(20):
         raw = []
@@ -203,38 +99,36 @@ def test_conjunctive_matches_brute_intersection():
             ids = np.sort(rng.choice(100, size=n, replace=False))
             con = np.round(rng.uniform(0.1, 3.0, size=n), 6)
             raw.append((ids.astype(np.int64), con))
-        cursors = [mk_cursor(ids, con, 4) for ids, con in raw]
+        cursors = [mk_cursor(ids, con) for ids, con in raw]
         k = int(rng.integers(1, 8))
-        got = conjunctive_range_topk(cursors, k)
+        got = counted_range_topk(cursors, k, len(cursors), None)
         want = brute_and_topk(raw, k)
         assert got == want, f"trial {trial}"
 
 
 def test_conjunctive_empty_on_disjoint_lists():
-    from kafka_es_spark.operators.wand import conjunctive_range_topk
-
     raw = [
         ([1, 3, 5], [1.0, 1.0, 1.0]),
         ([2, 4, 6], [1.0, 1.0, 1.0]),
     ]
-    cursors = [mk_cursor(i, c, 2) for i, c in raw]
-    assert conjunctive_range_topk(cursors, 5) == []
+    cursors = [mk_cursor(i, c) for i, c in raw]
+    assert counted_range_topk(cursors, 5, len(cursors), None) == []
 
 
 def test_conjunctive_excluded_docs_skipped():
-    from kafka_es_spark.operators.wand import conjunctive_range_topk
-
     raw = [
         ([1, 2, 3], [3.0, 2.0, 1.0]),
         ([1, 2, 3], [3.0, 2.0, 1.0]),
     ]
-    cursors = [mk_cursor(i, c, 2) for i, c in raw]
-    got = conjunctive_range_topk(cursors, 2, excluded=frozenset({1}))
+    cursors = [mk_cursor(i, c) for i, c in raw]
+    got = counted_range_topk(cursors, 2, len(cursors), frozenset({1}))
     assert got == [(2, 4.0), (3, 2.0)]
 
 
-def brute_msm_topk(raw, k, m):
-    """Docs matching >= m lists, scored in cursor-index order."""
+def brute_msm_topk(raw, k, m, round_to=None, after=None):
+    """Docs matching >= m lists, scored in cursor-index order; with
+    ``round_to`` ranked on the rounded score, with ``after=(score, doc)``
+    only the rows strictly after it."""
     from collections import Counter
 
     cnt = Counter()
@@ -248,14 +142,16 @@ def brute_msm_topk(raw, k, m):
             j = int(np.searchsorted(ids, d))
             if j < len(ids) and ids[j] == d:
                 s += float(con[j])
+        if round_to is not None:
+            s = float(round_half_up(np.float64(s), round_to))
         out.append((d, s))
     out.sort(key=lambda e: (-e[1], e[0]))
+    if after is not None:
+        out = [e for e in out if (-e[1], e[0]) > (-after[0], after[1])]
     return out[:k]
 
 
 def test_msm_matches_brute_counting():
-    from kafka_es_spark.operators.wand import msm_range_topk
-
     rng = np.random.default_rng(9)
     for trial in range(20):
         n_lists = int(rng.integers(2, 6))
@@ -265,16 +161,25 @@ def test_msm_matches_brute_counting():
             ids = np.sort(rng.choice(80, size=n, replace=False))
             con = np.round(rng.uniform(0.1, 3.0, size=n), 6)
             raw.append((ids.astype(np.int64), con))
-        cursors = [mk_cursor(ids, con, 4) for ids, con in raw]
+        cursors = [mk_cursor(ids, con) for ids, con in raw]
         k = int(rng.integers(1, 8))
         m = int(rng.integers(1, n_lists + 1))
-        got = msm_range_topk(cursors, k, m)
+        got = counted_range_topk(cursors, k, m, None)
         want = brute_msm_topk(raw, k, m)
         assert got == want, f"trial {trial} m={m}"
-    # boundary equivalences: m=1 == OR (all docs), m=n == AND
-    from kafka_es_spark.operators.wand import conjunctive_range_topk
-
-    cursors = [mk_cursor(ids, con, 4) for ids, con in raw]
-    assert msm_range_topk(cursors, 50, len(raw)) == conjunctive_range_topk(
-        [mk_cursor(i, c, 4) for i, c in raw], 50
+        # search_after: the rounded ranking, strictly after a random row
+        # of the full rounded order (or before all of them)
+        full = brute_msm_topk(raw, 10**9, m, round_to=4)
+        after = None
+        if full:
+            i = int(rng.integers(-1, len(full)))
+            if i >= 0:
+                after = (full[i][1], full[i][0])
+        got = counted_range_topk(cursors, k, m, None, round_to=4, after=after)
+        want = brute_msm_topk(raw, k, m, round_to=4, after=after)
+        assert got == want, f"trial {trial} m={m} after={after}"
+    # boundary equivalence: m=n is AND
+    cursors = [mk_cursor(ids, con) for ids, con in raw]
+    assert counted_range_topk(cursors, 50, len(raw), None) == brute_and_topk(
+        raw, 50
     )
