@@ -150,6 +150,61 @@ def bp128_decode(buf: bytes, count: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
+# codec dispatch: the one place that maps a codec name to its functions
+# ---------------------------------------------------------------------------
+
+_CODECS = {
+    "varint": (varint_encode, varint_decode),
+    "bp128": (bp128_encode, bp128_decode),
+}
+
+
+def _codec(codec: str):
+    try:
+        return _CODECS[codec]
+    except KeyError:
+        raise ValueError(
+            f"unknown codec {codec!r}; expected one of {sorted(_CODECS)}"
+        ) from None
+
+
+def encode(values: np.ndarray, codec: str) -> bytes:
+    """Encode one uint64 array in ``codec``."""
+    return _codec(codec)[0](values)
+
+
+def decode(buf: bytes, count: int, codec: str) -> np.ndarray:
+    """Decode one blob of ``count`` values in ``codec``."""
+    return _codec(codec)[1](buf, count)
+
+
+def decode_concat(blobs, counts: np.ndarray, codec: str) -> np.ndarray:
+    """Decode a sequence of blobs (``counts[i]`` values each) into one
+    uint64 array. varint is concatenative, so its blobs decode in one pass;
+    bp128 blobs are block-structured and decode one by one."""
+    counts = np.asarray(counts, dtype=np.int64)
+    if codec == "varint":
+        return varint_decode(b"".join(blobs), int(counts.sum()))
+    dec = _codec(codec)[1]
+    parts = [dec(bytes(b), int(n)) for b, n in zip(blobs, counts)]
+    return np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64)
+
+
+def encode_segmented(
+    values: np.ndarray, run_lengths: np.ndarray, codec: str
+) -> list[bytes]:
+    """One blob per run of ``values`` (runs laid end to end, lengths
+    ``run_lengths``) in ``codec``: varint in one vectorized pass, bp128 one
+    run at a time."""
+    if codec == "varint":
+        return varint_encode_segmented(values, run_lengths)
+    enc = _codec(codec)[0]
+    v = np.asarray(values, dtype=np.uint64)
+    ends = np.cumsum(np.asarray(run_lengths, dtype=np.int64))
+    return [enc(v[e - n : e]) for e, n in zip(ends, run_lengths)]
+
+
+# ---------------------------------------------------------------------------
 # delta gaps
 # ---------------------------------------------------------------------------
 
@@ -176,6 +231,10 @@ __all__ = [
     "varint_encode_segmented",
     "bp128_encode",
     "bp128_decode",
+    "encode",
+    "decode",
+    "decode_concat",
+    "encode_segmented",
     "delta_encode",
     "delta_decode",
 ]

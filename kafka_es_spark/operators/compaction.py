@@ -8,13 +8,15 @@ from 10⁴ small files and pending delete tombstones pile up in ``_deletes/``
 with stats frozen at build time. ``compact_index`` folds everything back to
 one base unit:
 
-* postings: one segment-row shuffle by (term, seg) → streaming merge in
-  ``mapInPandas`` (decode each unit's blob, concatenate, drop tombstoned
-  ids, re-encode ONE row per (term, seg)). Memory stays bounded: a
-  (term, seg) group is ≤ 2^seg_bits postings by construction, same as the
-  build. Bucket hashes are recomputed under the current scheme, so a
-  mixed-scheme index (stats.n_term_buckets == None) comes out prunable
-  again.
+* postings and positions: a stored unit row is a run in the index codec
+  (absolute first id, then gaps), so they fold with the build's own
+  encoder — ``spimi.merge_units``: one segment-row shuffle by (term, seg),
+  the shared vectorized merge kernel drops tombstoned ids (with their
+  position slices) and re-encodes ONE row per (term, seg). Memory stays
+  bounded: a (term, seg) group is ≤ 2^seg_bits postings by construction,
+  same as the build. Buckets are recomputed by ``spimi.write_units``
+  under the current scheme, so a mixed-scheme index
+  (stats.n_term_buckets == None) comes out prunable again.
 * docmap: union of epoch partitions minus tombstones → ``epoch=base``.
 * range_dls: per-seg concatenation of unit rows → one row per seg. Dead
   ids KEEP their dl slots — the format-2 contiguity contract indexes dl
@@ -45,14 +47,12 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
@@ -61,12 +61,6 @@ from kafka_es_spark.plans.manifest import Manifest
 from kafka_es_spark.session import local_frame
 
 _SWAP_DIRS = ("postings", "docmap", "range_dls", "term_stats", "positions")
-
-COMPACT_SEGMENT_SCHEMA = T.StructType(
-    list(spimi.SEGMENT_SCHEMA.fields)
-    + [T.StructField("bucket", T.LongType(), False)]
-)
-
 
 def recover_swap_dirs(index_dir: str) -> list[str]:
     """Repair a crash inside a compaction swap window: restore any relation
@@ -107,14 +101,12 @@ def compact_index(
     """Merge all build/epoch units into one base unit, applying pending
     tombstones (see module docstring). Returns counters. Quiesce readers
     first; a crash mid-swap is repaired by ``recover_swap_dirs``."""
-    from kafka_es_spark.operators.dedup import hash32_py
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     t0 = time.time()
     recover_swap_dirs(index_dir)
     stats = load_stats(index_dir)
     codec = stats.get("codec", "varint")
-    seg_bits = int(stats.get("seg_bits", spimi.SEG_BITS))
     if n_term_buckets is None:
         n_term_buckets = int(stats.get("n_term_buckets") or 8)
     dead = read_tombstone_ids(spark, index_dir)
@@ -124,188 +116,34 @@ def compact_index(
         else np.empty(0, dtype=np.int64)
     )
 
-    # --- postings: one segment-row shuffle + streaming per-(term,seg) merge
-    seg_cols = [f.name for f in spimi.SEGMENT_SCHEMA.fields]
-    out_cols = [f.name for f in COMPACT_SEGMENT_SCHEMA.fields]
-    enc = codecs.varint_encode if codec == "varint" else codecs.bp128_encode
+    # --- postings and positions: stored rows ARE runs in the index codec
+    # (absolute first id, then gaps), so the build's merge kernel folds
+    # them: one (term, seg) shuffle, tombstoned docs dropped with their
+    # position slices, one row per surviving (term, seg) group. Positions
+    # follow suit so phrase queries stay consistent with the postings.
+    def as_runs(rel: str, *extra: str):
+        return spark.read.parquet(os.path.join(index_dir, rel)).select(
+            "term", "seg", "first_docid", F.col("df_seg").alias("n"),
+            F.col("docs_blob").alias("ids_blob"), "tfs_blob", *extra,
+        )
 
-    def merge_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = pdf["term"].to_numpy(dtype=object)
-        segs_ = pdf["seg"].to_numpy(dtype=np.int64)
-        change = np.flatnonzero((terms[1:] != terms[:-1]) | (segs_[1:] != segs_[:-1])) + 1
-        gstarts = np.concatenate([[0], change])
-        gends = np.concatenate([change, [len(pdf)]])
-        recs = pdf.to_dict("records")
-        rows = []
-        for s, e in zip(gstarts, gends):
-            ids_l, tfs_l = [], []
-            for r in recs[s:e]:
-                i, t = spimi.decode_segment(r, codec)
-                ids_l.append(i)
-                tfs_l.append(t)
-            ids = np.concatenate(ids_l)
-            tfs = np.concatenate(tfs_l)
-            order = np.argsort(ids, kind="stable")
-            ids, tfs = ids[order], tfs[order]
-            if dead_arr.size:
-                keep = ~np.isin(ids, dead_arr)
-                ids, tfs = ids[keep], tfs[keep]
-            if ids.size == 0:
-                continue  # the whole posting list was deleted
-            term = terms[s]
-            rows.append(
-                (
-                    term,
-                    int(segs_[s]),
-                    int(ids.size),
-                    int(tfs.sum()),
-                    int(ids[0]),
-                    int(ids[-1]),
-                    enc(codecs.delta_encode(ids.astype(np.uint64))),
-                    enc(tfs.astype(np.uint64)),
-                    int(hash32_py(term) % n_term_buckets),
-                )
-            )
-        return pd.DataFrame(rows, columns=out_cols)
-
-    def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hold: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-                hold = None
-            lt = pdf["term"].iat[len(pdf) - 1]
-            ls = pdf["seg"].iat[len(pdf) - 1]
-            tail = (pdf["term"].to_numpy(dtype=object) == lt) & (
-                pdf["seg"].to_numpy(dtype=np.int64) == ls
-            )
-            cut = int(len(pdf) - np.flip(tail).argmin()) if not tail.all() else 0
-            if cut == 0:
-                hold = pdf
-                continue
-            hold = pdf.iloc[cut:].copy()
-            out = merge_block(pdf.iloc[:cut])
-            if len(out):
-                yield out
-        if hold is not None and len(hold):
-            out = merge_block(hold)
-            if len(out):
-                yield out
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    segs = spark.read.parquet(os.path.join(index_dir, "postings")).select(*seg_cols)
-    merged = (
-        segs.repartition(n_part, "term", "seg")
-        .sortWithinPartitions("term", "seg", "first_docid")
-        .mapInPandas(merge_stream, COMPACT_SEGMENT_SCHEMA)
+    spimi.write_units(
+        spimi.merge_units(
+            as_runs("postings"), spimi.SEGMENT_SCHEMA,
+            codec=codec, run_codec=codec, dead=dead_arr,
+        ),
+        n_term_buckets,
+        os.path.join(index_dir, "postings.new", "shard=base"),
     )
-    post_new = os.path.join(index_dir, "postings.new", "shard=base")
-    (
-        merged.repartition(n_term_buckets, "bucket")
-        .sortWithinPartitions("term", "seg")
-        .write.mode("overwrite")
-        .parquet(post_new)
-    )
+    if os.path.isdir(os.path.join(index_dir, "positions")):
+        from kafka_es_spark.operators.positions import POS_UNIT_SCHEMA
 
-    # --- positions (if the index has the optional positional relation):
-    # same fold — per-(term, seg) decode, drop tombstoned docs WITH their
-    # position slices, re-encode one row. Keeps phrase queries consistent
-    # with the post-compaction postings (deletes are physical everywhere).
-    pos_dir = os.path.join(index_dir, "positions")
-    has_positions = os.path.isdir(pos_dir)
-    if has_positions:
-        from kafka_es_spark.operators import positions as posmod
-
-        pos_cols = [f.name for f in posmod.POS_SEGMENT_SCHEMA.fields]
-
-        def pos_merge_block(pdf: pd.DataFrame) -> pd.DataFrame:
-            terms = pdf["term"].to_numpy(dtype=object)
-            segs_ = pdf["seg"].to_numpy(dtype=np.int64)
-            change = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (segs_[1:] != segs_[:-1])
-            ) + 1
-            gstarts = np.concatenate([[0], change])
-            gends = np.concatenate([change, [len(pdf)]])
-            recs = pdf.to_dict("records")
-            rows = []
-            for s, e in zip(gstarts, gends):
-                ids_l, tfs_l, pos_l = [], [], []
-                for r in recs[s:e]:
-                    i, t, p = posmod.decode_position_segment(r)
-                    ids_l.append(i)
-                    tfs_l.append(t)
-                    pos_l.append(p)
-                ids = np.concatenate(ids_l)
-                tfs = np.concatenate(tfs_l)
-                pos = np.concatenate(pos_l)
-                starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-                order = np.argsort(ids, kind="stable")
-                if dead_arr.size:
-                    order = order[~np.isin(ids[order], dead_arr)]
-                if order.size == 0:
-                    continue
-                ids_o = ids[order]
-                tfs_o = tfs[order]
-                pos_o = posmod._gather_slices(pos, starts, tfs, order)
-                od = np.concatenate([[0], np.cumsum(tfs_o)[:-1]]).astype(np.int64)
-                pd_out = pos_o.astype(np.uint64).copy()
-                if pos_o.size > 1:
-                    pd_out[1:] = (pos_o[1:] - pos_o[:-1]).astype(np.uint64)
-                pd_out[od] = pos_o[od].astype(np.uint64)
-                term = terms[s]
-                rows.append(
-                    (
-                        term,
-                        int(segs_[s]),
-                        int(ids_o.size),
-                        int(ids_o[0]),
-                        int(ids_o[-1]),
-                        codecs.varint_encode(codecs.delta_encode(ids_o.astype(np.uint64))),
-                        codecs.varint_encode(tfs_o.astype(np.uint64)),
-                        codecs.varint_encode(pd_out),
-                        int(hash32_py(term) % n_term_buckets),
-                    )
-                )
-            return pd.DataFrame(rows, columns=pos_cols)
-
-        def pos_merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            hold: pd.DataFrame | None = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if hold is not None:
-                    pdf = pd.concat([hold, pdf], ignore_index=True)
-                    hold = None
-                lt = pdf["term"].iat[len(pdf) - 1]
-                ls = pdf["seg"].iat[len(pdf) - 1]
-                tail = (pdf["term"].to_numpy(dtype=object) == lt) & (
-                    pdf["seg"].to_numpy(dtype=np.int64) == ls
-                )
-                cut = int(len(pdf) - np.flip(tail).argmin()) if not tail.all() else 0
-                if cut == 0:
-                    hold = pdf
-                    continue
-                hold = pdf.iloc[cut:].copy()
-                out = pos_merge_block(pdf.iloc[:cut])
-                if len(out):
-                    yield out
-            if hold is not None and len(hold):
-                out = pos_merge_block(hold)
-                if len(out):
-                    yield out
-
-        pos_segs = spark.read.parquet(pos_dir).select(*pos_cols)
-        (
-            pos_segs
-            .repartition(n_part, "term", "seg")
-            .sortWithinPartitions("term", "seg", "first_docid")
-            .mapInPandas(pos_merge_stream, posmod.POS_SEGMENT_SCHEMA)
-            .repartition(n_term_buckets, "bucket")
-            .sortWithinPartitions("term", "seg")
-            .write.mode("overwrite")
-            .parquet(os.path.join(index_dir, "positions.new", "shard=base"))
+        spimi.write_units(
+            spimi.merge_units(
+                as_runs("positions", "pos_blob"), POS_UNIT_SCHEMA, dead=dead_arr
+            ),
+            n_term_buckets,
+            os.path.join(index_dir, "positions.new", "shard=base"),
         )
 
     # --- docmap: drop tombstoned rows, fold epochs into epoch=base --------

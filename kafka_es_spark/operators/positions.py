@@ -18,10 +18,11 @@ Row format (one row per (term, doc-range), same doc-range salt as X4/X5):
                  concatenated in doc order (sum(tf) values)
     bucket     — term-hash bucket (same md5 scheme as postings pruning)
 
-Build is the SPIMI two-stage shape: narrow map-side packing of runs
-(one vectorized pass per flush: sort occurrences by (term, doc), cut on
-(term, doc-range), delta-encode ids and positions, segmented varint
-encode), then ONE shuffle by (term, seg) and a streaming merge. The
+Build is the SPIMI two-stage shape, on the postings' own encoder: the
+position runs are ``spimi.pack_runs`` with a position stream, merged by
+``spimi.merge_units`` — ONE shuffle by (term, seg) and the shared merge
+kernel, which also gathers each doc's position slice. The bucket column
+and the unit write are ``spimi.write_units``, as for postings. The
 position payload makes this exchange carry ~one value per token
 occurrence — inherently ~(tokens/postings)× the format-2 posting shuffle,
 which is exactly why it is opt-in (Lucene pays the same ratio for
@@ -53,19 +54,7 @@ from kafka_es_spark.operators import spimi
 from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf
 from kafka_es_spark.session import local_frame
 
-POS_BITS = 21  # doc length < 2^21 tokens — validated at encode time
-
-POS_RUN_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("seg", T.LongType(), False),
-        T.StructField("first_docid", T.LongType(), False),
-        T.StructField("n", T.LongType(), False),
-        T.StructField("ids_blob", T.BinaryType(), False),
-        T.StructField("tfs_blob", T.BinaryType(), False),
-        T.StructField("pos_blob", T.BinaryType(), False),
-    ]
-)
+POS_BITS = spimi.POS_BITS  # doc length < 2^21 tokens — validated at pack time
 
 POS_SEGMENT_SCHEMA = T.StructType(
     [
@@ -82,26 +71,8 @@ POS_SEGMENT_SCHEMA = T.StructType(
 )
 
 
-def _rebase_cumsum(deltas: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Absolute values from per-run deltas whose first element is absolute:
-    cumsum with rebasing at each run start (the spimi merge trick)."""
-    gcum = np.cumsum(deltas)
-    base = gcum[starts] - deltas[starts]
-    return gcum - np.repeat(base, lengths)
-
-
-def _gather_slices(
-    values: np.ndarray, starts: np.ndarray, lengths: np.ndarray, perm: np.ndarray
-) -> np.ndarray:
-    """Concatenate values[starts[p] : starts[p]+lengths[p]] for p in perm,
-    fully vectorized (no per-slice Python)."""
-    lp = lengths[perm]
-    total = int(lp.sum())
-    if total == 0:
-        return values[:0]
-    out_starts = np.concatenate([[0], np.cumsum(lp)[:-1]])
-    idx = np.repeat(starts[perm] - out_starts, lp) + np.arange(total, dtype=np.int64)
-    return values[idx]
+# the unit rows before the bucket column is added
+POS_UNIT_SCHEMA = T.StructType(POS_SEGMENT_SCHEMA.fields[:-1])
 
 
 def build_position_runs(
@@ -110,199 +81,16 @@ def build_position_runs(
     pack_docs: int = 50_000,
     terms_col: str = "terms",
 ) -> DataFrame:
-    """Narrow stage: per-flush packed position runs (see module doc)."""
-
-    def pack_flush(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        toks = pdf[terms_col]
-        lens = toks.map(len).to_numpy(dtype=np.int64)
-        if lens.sum() == 0:
-            return None
-        if int(lens.max()) >= (1 << POS_BITS):
-            raise ValueError(
-                f"document of {int(lens.max())} tokens exceeds the "
-                f"2^{POS_BITS} position key space"
-            )
-        term_flat = np.concatenate(
-            [np.asarray(t, dtype=object) for t in toks if len(t)]
-        )
-        id_flat = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
-        pos_flat = np.concatenate(
-            [np.arange(n, dtype=np.int64) for n in lens if n]
-        )
-        # factorize + stable int lexsort replaces the string-keyed
-        # sort_values (r6, same rewrite as spimi.pack_flush — ~3× faster);
-        # lexsort is stable, so positions stay ascending within each doc
-        codes, uniq = pd.factorize(pd.Series(term_flat), sort=True)
-        order = np.lexsort((id_flat, codes))
-        tcode = codes[order]
-        ids = id_flat[order]
-        pos = pos_flat[order]
-        terms = np.asarray(uniq, dtype=object)[tcode]
-
-        docchg = np.flatnonzero((tcode[1:] != tcode[:-1]) | (ids[1:] != ids[:-1])) + 1
-        dstarts = np.concatenate([[0], docchg])  # occurrence index of each doc start
-        tf = np.diff(np.concatenate([dstarts, [ids.size]]))
-
-        # positions: delta within doc, absolute at each doc start
-        posd = pos.astype(np.uint64).copy()
-        posd[1:] = (pos[1:] - pos[:-1]).astype(np.uint64)
-        posd[dstarts] = pos[dstarts].astype(np.uint64)
-
-        dterm = terms[dstarts]
-        dids = ids[dstarts]
-        dseg = dids >> seg_bits
-        runchg = np.flatnonzero((dterm[1:] != dterm[:-1]) | (dseg[1:] != dseg[:-1])) + 1
-        rstarts = np.concatenate([[0], runchg])  # in doc-index space
-        run_docs = np.diff(np.concatenate([rstarts, [dids.size]]))
-        occ_starts = dstarts[rstarts]
-        run_occ = np.diff(np.concatenate([occ_starts, [ids.size]]))
-
-        gaps = dids.astype(np.uint64).copy()
-        gaps[1:] -= dids[:-1].astype(np.uint64)
-        gaps[rstarts] = dids[rstarts]  # absolute first id per run
-        return pd.DataFrame(
-            {
-                "term": dterm[rstarts],
-                "seg": dseg[rstarts],
-                "first_docid": dids[rstarts],
-                "n": run_docs,
-                "ids_blob": codecs.varint_encode_segmented(gaps, run_docs),
-                "tfs_blob": codecs.varint_encode_segmented(
-                    tf.astype(np.uint64), run_docs
-                ),
-                "pos_blob": codecs.varint_encode_segmented(posd, run_occ),
-            }
-        )[[f.name for f in POS_RUN_SCHEMA.fields]]
-
-    def pack(batches):
-        buf: list[pd.DataFrame] = []
-        ndocs = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            buf.append(pdf)
-            ndocs += len(pdf)
-            if ndocs >= pack_docs:
-                out = pack_flush(buf)
-                buf, ndocs = [], 0
-                if out is not None and len(out):
-                    yield out
-        if buf:
-            out = pack_flush(buf)
-            if out is not None and len(out):
-                yield out
-
-    return docs.select("doc_id", terms_col).mapInPandas(pack, POS_RUN_SCHEMA)
+    """Narrow stage: per-flush packed position runs (``spimi.pack_runs``)."""
+    return spimi.pack_runs(docs, seg_bits, pack_docs, terms_col, with_positions=True)
 
 
 def merge_position_runs(runs: DataFrame, n_term_buckets: int = 8) -> DataFrame:
-    """The one position-sized shuffle + streaming per-(term, seg) merge."""
-    from kafka_es_spark.operators.dedup import hash32_py
-
-    out_cols = [f.name for f in POS_SEGMENT_SCHEMA.fields]
-
-    def merge_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_per = pdf["n"].to_numpy(dtype=np.int64)
-        total_docs = int(n_per.sum())
-        gaps = codecs.varint_decode(b"".join(pdf["ids_blob"]), total_docs)
-        tfs_all = codecs.varint_decode(b"".join(pdf["tfs_blob"]), total_docs).astype(np.int64)
-        total_occ = int(tfs_all.sum())
-        posd = codecs.varint_decode(b"".join(pdf["pos_blob"]), total_occ)
-        rs = np.concatenate([[0], np.cumsum(n_per)])  # doc-index run bounds
-        ids_all = _rebase_cumsum(
-            gaps, rs[:-1].astype(np.int64), n_per
-        ).astype(np.int64)
-        # absolute positions: rebase the delta stream at every DOC start
-        occ_doc_starts = np.concatenate([[0], np.cumsum(tfs_all)[:-1]]).astype(np.int64)
-        pos_abs = _rebase_cumsum(posd, occ_doc_starts, tfs_all).astype(np.int64)
-
-        terms = pdf["term"].to_numpy(dtype=object)
-        segs_ = pdf["seg"].to_numpy(dtype=np.int64)
-        gchange = np.flatnonzero((terms[1:] != terms[:-1]) | (segs_[1:] != segs_[:-1])) + 1
-        gstarts = np.concatenate([[0], gchange])
-        # vectorized across ALL (term, seg) groups (r6, same rewrite as
-        # spimi.merge_block): label every doc entry with its group, ONE
-        # lexsort by (group, doc_id), one global position gather, per-doc
-        # re-delta and segmented varint encodes — no per-group Python
-        # loop. Byte-identical output (LEB128 is per-value).
-        n_runs = len(pdf)
-        glabel_run = np.zeros(n_runs, dtype=np.int64)
-        glabel_run[gchange] = 1
-        glabel_run = np.cumsum(glabel_run)
-        lab = np.repeat(glabel_run, n_per)  # per doc entry
-        order = np.lexsort((ids_all, lab))
-        ids_o = ids_all[order]
-        tfs_o = tfs_all[order]
-        # one global gather of every doc's position slice in sorted order
-        pos_o = _gather_slices(pos_abs, occ_doc_starts, tfs_all, order)
-        # per-doc re-delta (absolute at every doc start — global list of
-        # doc starts equals the within-group lists concatenated)
-        od_starts = np.concatenate([[0], np.cumsum(tfs_o)[:-1]]).astype(np.int64)
-        pd_out = pos_o.astype(np.uint64).copy()
-        if pos_o.size > 1:
-            pd_out[1:] = (pos_o[1:] - pos_o[:-1]).astype(np.uint64)
-        pd_out[od_starts] = pos_o[od_starts].astype(np.uint64)
-        gs = rs[:-1][gstarts]  # doc-entry-space group starts
-        glens = np.diff(np.concatenate([gs, [ids_o.size]]))
-        gocc = np.add.reduceat(tfs_o, gs)  # occurrences per group
-        gaps_out = ids_o.astype(np.uint64).copy()
-        gaps_out[1:] -= ids_o[:-1].astype(np.uint64)
-        gaps_out[gs] = ids_o[gs].astype(np.uint64)
-        gterms = terms[gstarts]
-        bcache: dict = {}
-        buckets = np.fromiter(
-            (
-                bcache.setdefault(t, hash32_py(t) % n_term_buckets)
-                for t in gterms
-            ),
-            dtype=np.int64, count=gterms.size,
-        )
-        return pd.DataFrame(
-            {
-                "term": gterms,
-                "seg": segs_[gstarts],
-                "df_seg": glens,
-                "first_docid": ids_o[gs],
-                "last_docid": ids_o[np.concatenate([gs[1:], [ids_o.size]]) - 1],
-                "docs_blob": codecs.varint_encode_segmented(gaps_out, glens),
-                "tfs_blob": codecs.varint_encode_segmented(
-                    tfs_o.astype(np.uint64), glens
-                ),
-                "pos_blob": codecs.varint_encode_segmented(pd_out, gocc),
-                "bucket": buckets,
-            }
-        )[out_cols]
-
-    def merge_stream(batches):
-        hold: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-                hold = None
-            lt = pdf["term"].iat[len(pdf) - 1]
-            ls = pdf["seg"].iat[len(pdf) - 1]
-            tail = (pdf["term"].to_numpy(dtype=object) == lt) & (
-                pdf["seg"].to_numpy(dtype=np.int64) == ls
-            )
-            cut = int(len(pdf) - np.flip(tail).argmin()) if not tail.all() else 0
-            if cut == 0:
-                hold = pdf
-                continue
-            hold = pdf.iloc[cut:].copy()
-            out = merge_block(pdf.iloc[:cut])
-            if len(out):
-                yield out
-        if hold is not None and len(hold):
-            yield merge_block(hold)
-
-    n_part = int(runs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    part = runs.repartition(n_part, "term", "seg").sortWithinPartitions(
-        "term", "seg", "first_docid"
+    """The one position-sized shuffle + streaming per-(term, seg) merge
+    (``spimi.merge_units``), with the unit's bucket column."""
+    return spimi.with_bucket(
+        spimi.merge_units(runs, POS_UNIT_SCHEMA), n_term_buckets
     )
-    return part.mapInPandas(merge_stream, POS_SEGMENT_SCHEMA)
 
 
 def build_position_index(spark: SparkSession, pages: DataFrame, index_dir: str) -> dict:
@@ -329,22 +117,13 @@ def build_position_index(spark: SparkSession, pages: DataFrame, index_dir: str) 
     t0 = time.time()
     docs = read_tokens(spark, index_dir)
     runs = build_position_runs(docs, seg_bits=seg_bits)
-    segs = merge_position_runs(runs, n_term_buckets=n_term_buckets)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        segs.repartition(n_term_buckets, "bucket")
-        .sortWithinPartitions("term", "seg")
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("segments"),
-            F.sum("df_seg").alias("postings"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(index_dir, "positions", "shard=base"))
+    c = spimi.write_units(
+        merge_position_runs(runs, n_term_buckets),
+        n_term_buckets,
+        os.path.join(index_dir, "positions", "shard=base"),
+        segments=F.count(F.lit(1)),
+        postings=F.sum("df_seg"),
     )
-    c = obs.get
     counters = {
         "segments": int(c["segments"] or 0),
         "postings": int(c["postings"] or 0),
@@ -366,13 +145,10 @@ def append_epoch_positions(
     FINAL dense ids — called by append_epoch before its manifest commit,
     so the C1 contract covers positions too: a replayed epoch overwrites
     its own positional files)."""
-    runs = build_position_runs(docs, seg_bits=seg_bits)
-    segs = merge_position_runs(runs, n_term_buckets=n_term_buckets)
-    (
-        segs.repartition(n_term_buckets, "bucket")
-        .sortWithinPartitions("term", "seg")
-        .write.mode("overwrite")
-        .parquet(os.path.join(index_dir, "positions", f"shard={epoch_name}"))
+    spimi.write_units(
+        merge_position_runs(build_position_runs(docs, seg_bits=seg_bits), n_term_buckets),
+        n_term_buckets,
+        os.path.join(index_dir, "positions", f"shard={epoch_name}"),
     )
 
 
@@ -386,7 +162,7 @@ def decode_position_segment(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     total = int(tfs.sum())
     posd = codecs.varint_decode(bytes(row["pos_blob"]), total)
     starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-    pos = _rebase_cumsum(posd, starts, tfs).astype(np.int64)
+    pos = spimi.rebase_cumsum(posd, starts, tfs).astype(np.int64)
     return ids, tfs, pos
 
 

@@ -9,7 +9,8 @@ Two stages, exactly one wide shuffle:
    (~10^14 rows at 100 TB); after local tf-compression the shuffled
    relation is one row per *distinct* (term, doc) pair.
 
-2. **Segment build** (``build_segments``): group by ``(term, seg)`` where
+2. **Segment build** (``build_segments_spimi``; ``build_segments`` over
+   raw postings is the test reference): group by ``(term, seg)`` where
    ``seg = doc_id >> seg_bits``. The doc-range component is the salt
    (SURVEY.md §2.3 P1 generalized): a Zipf head term with 10^11 postings
    splits into bounded segments of ≤ 2^seg_bits docs each, so no reducer
@@ -21,6 +22,19 @@ Two stages, exactly one wide shuffle:
 
 Segment row schema (format 2): term, seg, df_seg, cf_seg, first_docid,
 last_docid, docs_blob (delta-gap + codec), tfs_blob.
+
+This module is the one run encoder of the index. Postings, the positional
+relation, streaming epochs and compaction all write their units through
+it:
+
+* ``pack_runs`` / ``pack_flush`` — map side: invert a flush of docs into
+  varint runs, one per (term, seg), with an optional position stream;
+* ``merge_units`` / ``merge_runs`` — the one (term, seg) shuffle and the
+  vectorized merge kernel: decode, drop dead ids, one lexsort by (group,
+  doc_id), gather position slices, re-delta, encode in the index codec.
+  Compaction feeds stored unit rows in as runs;
+* ``stream_groups`` — carries a batch's open group into the next batch;
+* ``write_units`` — the bucket column and file layout of every unit.
 
 Doc lengths do NOT ride with postings: dl-per-posting is redundant with the
 docmap (~⅓ of every shuffled/stored posting triple), and at 100 TB the
@@ -39,12 +53,12 @@ NDJSON bulks (BulkAction.kt:104-111).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -119,27 +133,63 @@ def doc_term_freqs(docs: DataFrame, terms_col: str = "terms", metrics=None) -> D
     return docs.select("doc_id", terms_col).mapInPandas(invert, POSTING_SCHEMA)
 
 
+def group_starts(*keys: np.ndarray) -> np.ndarray:
+    """Row indices where a group of equal key tuples begins (row 0
+    included), for rows sorted by ``keys``."""
+    n = len(keys[0])
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(new)
+
+
+def stream_groups(
+    batches: Iterator[pd.DataFrame],
+    keys: tuple[str, ...],
+    fn: Callable[[pd.DataFrame], pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """Apply ``fn`` to frames of COMPLETE key groups of a stream of Arrow
+    batches sorted by ``keys``. Python runs once per batch; a batch that
+    ends mid-group carries its open tail into the next one (bounded: a
+    (term, seg) group is one doc range's postings, a seg group one doc
+    range). Empty outputs are dropped."""
+    hold: pd.DataFrame | None = None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if hold is not None:
+            pdf = pd.concat([hold, pdf], ignore_index=True)
+        cut = int(group_starts(*(pdf[k].to_numpy() for k in keys))[-1])
+        if cut == 0:
+            hold = pdf
+            continue
+        hold = pdf.iloc[cut:].copy()
+        out = fn(pdf.iloc[:cut])
+        if len(out):
+            yield out
+    if hold is not None:
+        out = fn(hold)
+        if len(out):
+            yield out
+
+
 def build_segments(
     postings: DataFrame,
     seg_bits: int = SEG_BITS,
     codec: str = "varint",
     metrics=None,
 ) -> DataFrame:
-    """One shuffle: repartition by (term, seg = doc_id >> seg_bits), sort
-    each partition by (term, seg, doc_id), stream-encode groups inside
-    mapInPandas.
+    """Reference build over raw postings (tests check the SPIMI path
+    against it): one shuffle of (term, doc_id, tf) rows by (term, seg =
+    doc_id >> seg_bits), each partition sorted by (term, seg, doc_id) and
+    encoded group by group inside mapInPandas.
 
     Why not groupBy().applyInPandas(): that pays ~ms of Arrow/pandas
     plumbing PER GROUP (one function call, one 1-row result frame each) —
     measured ~220 core-seconds for a 62k-term corpus whose actual encode
     work is a few core-seconds. Here Python is invoked once per Arrow
-    batch; group boundaries are found vectorized; a batch that ends
-    mid-group carries its open tail into the next batch (bounded: a group
-    is ≤ 2^seg_bits docs by construction, so the tail never exceeds one
-    doc-range posting list)."""
-    from collections.abc import Iterator as _Iterator
-
-    enc = codecs.varint_encode if codec == "varint" else codecs.bp128_encode
+    batch (``stream_groups``)."""
     cols = [f.name for f in SEGMENT_SCHEMA.fields]
 
     def encode_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -148,14 +198,12 @@ def build_segments(
         segs_ = pdf["seg"].to_numpy(dtype=np.int64)
         ids_all = pdf["doc_id"].to_numpy(dtype=np.int64)
         tf_all = pdf["tf"].to_numpy(dtype=np.int64)
-        change = np.flatnonzero((terms[1:] != terms[:-1]) | (segs_[1:] != segs_[:-1])) + 1
-        starts = np.concatenate([[0], change])
-        ends = np.concatenate([change, [len(pdf)]])
+        starts = group_starts(terms, segs_)
+        ends = np.append(starts[1:], len(pdf))
         rows = []
         for s, e in zip(starts, ends):
             ids = ids_all[s:e].astype(np.uint64)
             tfs = tf_all[s:e].astype(np.uint64)
-            gaps = codecs.delta_encode(ids)
             rows.append(
                 (
                     terms[s],
@@ -164,8 +212,8 @@ def build_segments(
                     int(tfs.sum()),
                     int(ids[0]),
                     int(ids[-1]),
-                    enc(gaps),
-                    enc(tfs),
+                    codecs.encode(codecs.delta_encode(ids), codec),
+                    codecs.encode(tfs, codec),
                 )
             )
         if metrics is not None:
@@ -173,40 +221,26 @@ def build_segments(
             metrics.add("posting_bytes", sum(len(r[6]) + len(r[7]) for r in rows))
         return pd.DataFrame(rows, columns=cols)
 
-    def encode_stream(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        hold: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-                hold = None
-            # the final (term, seg) group may continue into the next batch
-            lt = pdf["term"].iat[len(pdf) - 1]
-            ls = pdf["seg"].iat[len(pdf) - 1]
-            tail_mask = (pdf["term"].to_numpy(dtype=object) == lt) & (
-                pdf["seg"].to_numpy(dtype=np.int64) == ls
-            )
-            # tail_mask is contiguous at the end (sorted input): cut = first
-            # tail-group row = len - count of trailing Trues
-            cut = int(len(pdf) - np.flip(tail_mask).argmin()) if not tail_mask.all() else 0
-            if cut == 0:
-                hold = pdf
-                continue
-            hold = pdf.iloc[cut:].copy()
-            out = encode_block(pdf.iloc[:cut])
-            if len(out):
-                yield out
-        if hold is not None and len(hold):
-            yield encode_block(hold)
-
     seg = postings.withColumn("seg", F.shiftright(F.col("doc_id"), seg_bits))
     n_part = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     part = seg.repartition(n_part, "term", "seg").sortWithinPartitions(
         "term", "seg", "doc_id"
     )
-    return part.mapInPandas(encode_stream, SEGMENT_SCHEMA)
+    return part.mapInPandas(
+        lambda b: stream_groups(b, ("term", "seg"), encode_block), SEGMENT_SCHEMA
+    )
 
+
+# --- the run format and its one encoder --------------------------------------
+#
+# A run is one (term, seg) slice of postings: ``n`` docs, ``ids_blob`` =
+# the absolute first doc id then gaps, ``tfs_blob`` = per-doc tf and, for
+# the positional relation, ``pos_blob`` = each doc's token positions,
+# delta-coded and absolute at every doc start (sum(tf) values). Map-side
+# runs travel as varint (bp128 blobs are block-structured, not
+# concatenative). A stored unit row is a run in the index codec, so
+# compaction merges stored rows with the same kernel the build merges
+# runs with.
 
 RUN_SCHEMA = T.StructType(
     [
@@ -219,6 +253,236 @@ RUN_SCHEMA = T.StructType(
     ]
 )
 
+POS_RUN_SCHEMA = T.StructType(
+    list(RUN_SCHEMA.fields) + [T.StructField("pos_blob", T.BinaryType(), False)]
+)
+
+POS_BITS = 21  # doc length < 2^21 tokens — validated when packing positions
+
+
+def deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """uint64 deltas of ``values``, absolute at every index in ``starts``."""
+    out = values.astype(np.uint64)
+    out[1:] -= values[:-1].astype(np.uint64)
+    out[starts] = values[starts]
+    return out
+
+
+def rebase_cumsum(d: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """Absolute values from per-run deltas ``d`` whose first element is
+    absolute: one cumsum, rebased at each run start."""
+    gcum = np.cumsum(d)
+    base = gcum[starts] - d[starts]
+    return gcum - np.repeat(base, lengths)
+
+
+def gather_slices(
+    values: np.ndarray, starts: np.ndarray, lengths: np.ndarray, perm: np.ndarray
+) -> np.ndarray:
+    """Concatenate values[starts[p] : starts[p]+lengths[p]] for p in perm,
+    fully vectorized (no per-slice Python)."""
+    lp = lengths[perm]
+    total = int(lp.sum())
+    if total == 0:
+        return values[:0]
+    idx = np.repeat(starts[perm] - _starts(lp), lp) + np.arange(total, dtype=np.int64)
+    return values[idx]
+
+
+def _starts(lengths: np.ndarray) -> np.ndarray:
+    """Start offsets of runs laid end to end."""
+    return np.concatenate([[0], np.cumsum(lengths)[:-1]]).astype(np.int64)
+
+
+def pack_flush(
+    pdf: pd.DataFrame,
+    seg_bits: int,
+    terms_col: str = "terms",
+    with_positions: bool = False,
+    metrics=None,
+) -> pd.DataFrame | None:
+    """Invert a frame of (doc_id, terms) rows into varint runs, one per
+    (term, seg): factorize the terms, one int lexsort by (term, doc_id), a
+    run cut on (term, seg), one segmented varint encode per blob column."""
+    toks = pdf[terms_col]
+    lens = toks.map(len).to_numpy(dtype=np.int64)
+    if metrics is not None:
+        metrics.add("docs", len(pdf))
+        metrics.add("tokens", int(lens.sum()))
+    if lens.sum() == 0:
+        return None
+    if with_positions and int(lens.max()) >= (1 << POS_BITS):
+        raise ValueError(
+            f"document of {int(lens.max())} tokens exceeds the "
+            f"2^{POS_BITS} position key space"
+        )
+    term_flat = np.concatenate([np.asarray(t, dtype=object) for t in toks if len(t)])
+    id_flat = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
+    # factorize + int lexsort: the (term-lex, doc_id) order of a string
+    # groupby at ~1/3 of its cost; lexsort is stable, so each doc's
+    # positions stay ascending
+    codes, uniq = pd.factorize(pd.Series(term_flat), sort=True)
+    order = np.lexsort((id_flat, codes))
+    tc = codes[order]
+    di = id_flat[order]
+    dstarts = group_starts(tc, di)  # first occurrence of each posting
+    tfs = np.diff(np.append(dstarts, tc.size))
+    tcg = tc[dstarts]
+    ids = di[dstarts]
+    if metrics is not None:
+        metrics.add("postings", ids.size)
+    segs_ = ids >> seg_bits
+    starts = group_starts(tcg, segs_)  # run starts, posting space
+    nlens = np.diff(np.append(starts, ids.size))
+    out = {
+        "term": np.asarray(uniq, dtype=object)[tcg[starts]],
+        "seg": segs_[starts],
+        "first_docid": ids[starts],
+        "n": nlens,
+        "ids_blob": codecs.varint_encode_segmented(deltas(ids, starts), nlens),
+        "tfs_blob": codecs.varint_encode_segmented(tfs, nlens),
+    }
+    if with_positions:
+        pos = (np.arange(tc.size, dtype=np.int64) - np.repeat(_starts(lens), lens))[order]
+        out["pos_blob"] = codecs.varint_encode_segmented(
+            deltas(pos, dstarts), np.add.reduceat(tfs, starts)
+        )
+    return pd.DataFrame(out)
+
+
+def pack_runs(
+    docs: DataFrame,
+    seg_bits: int,
+    pack_docs: int,
+    terms_col: str = "terms",
+    with_positions: bool = False,
+    metrics=None,
+) -> DataFrame:
+    """Narrow stage: ``pack_flush`` over up to ``pack_docs`` docs at a time
+    (longer runs amortize per-run overhead)."""
+    schema = POS_RUN_SCHEMA if with_positions else RUN_SCHEMA
+
+    def flush(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
+        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        return pack_flush(pdf, seg_bits, terms_col, with_positions, metrics)
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buf: list[pd.DataFrame] = []
+        ndocs = 0
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            buf.append(pdf)
+            ndocs += len(pdf)
+            if ndocs >= pack_docs:
+                out = flush(buf)
+                buf, ndocs = [], 0
+                if out is not None and len(out):
+                    yield out
+        if buf:
+            out = flush(buf)
+            if out is not None and len(out):
+                yield out
+
+    return docs.select("doc_id", terms_col).mapInPandas(pack, schema)
+
+
+MERGED_COLUMNS = (
+    "term", "seg", "df_seg", "cf_seg", "first_docid", "last_docid",
+    "docs_blob", "tfs_blob", "pos_blob",
+)
+
+
+def merge_runs(
+    pdf: pd.DataFrame,
+    codec: str = "varint",
+    run_codec: str = "varint",
+    dead: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """The one merge kernel: complete (term, seg) groups of runs (sorted by
+    term, seg) → one row per group, vectorized across every group of the
+    block. Decode all runs in one pass, drop ``dead`` doc ids, one lexsort
+    by (group, doc_id), gather each doc's position slice, re-delta and
+    encode in ``codec`` (positions always varint). A group left empty by
+    the dead-id drop disappears."""
+    n_per = pdf["n"].to_numpy(dtype=np.int64)
+    rs = _starts(n_per)
+    gaps = codecs.decode_concat(pdf["ids_blob"], n_per, run_codec)
+    ids = rebase_cumsum(gaps, rs, n_per).astype(np.int64)
+    tfs = codecs.decode_concat(pdf["tfs_blob"], n_per, run_codec).astype(np.int64)
+    terms = pdf["term"].to_numpy(dtype=object)
+    segs_ = pdf["seg"].to_numpy(dtype=np.int64)
+    gfirst = group_starts(terms, segs_)  # first run of each group
+    run_group = np.zeros(len(pdf), dtype=np.int64)
+    run_group[gfirst[1:]] = 1
+    lab = np.repeat(np.cumsum(run_group), n_per)
+    order = np.lexsort((ids, lab))
+    if dead is not None and dead.size:
+        order = order[~np.isin(ids[order], dead)]
+    if order.size == 0:
+        return pd.DataFrame(columns=list(MERGED_COLUMNS))
+    ids_o = ids[order]
+    tfs_o = tfs[order]
+    lab_o = lab[order]
+    gs = group_starts(lab_o)
+    glens = np.diff(np.append(gs, ids_o.size))
+    first = gfirst[lab_o[gs]]
+    out = {
+        "term": terms[first],
+        "seg": segs_[first],
+        "df_seg": glens,
+        "cf_seg": np.add.reduceat(tfs_o, gs),
+        "first_docid": ids_o[gs],
+        "last_docid": ids_o[gs + glens - 1],
+        "docs_blob": codecs.encode_segmented(deltas(ids_o, gs), glens, codec),
+        "tfs_blob": codecs.encode_segmented(tfs_o, glens, codec),
+    }
+    if "pos_blob" in pdf.columns:
+        occ = _starts(tfs)
+        posd = codecs.decode_concat(pdf["pos_blob"], np.add.reduceat(tfs, rs), "varint")
+        pos = rebase_cumsum(posd, occ, tfs).astype(np.int64)
+        pos_o = gather_slices(pos, occ, tfs, order)
+        out["pos_blob"] = codecs.varint_encode_segmented(
+            deltas(pos_o, _starts(tfs_o)), np.add.reduceat(tfs_o, gs)
+        )
+    return pd.DataFrame(out)
+
+
+def merge_units(
+    runs: DataFrame,
+    schema: T.StructType,
+    codec: str = "varint",
+    run_codec: str = "varint",
+    dead: np.ndarray | None = None,
+    metrics=None,
+) -> DataFrame:
+    """The one (term, seg) shuffle: repartition runs by (term, seg), sort
+    by (term, seg, first_docid) and stream ``merge_runs`` over each
+    partition; ``schema`` names the output columns."""
+    cols = [f.name for f in schema.fields]
+
+    def block(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = merge_runs(pdf, codec, run_codec, dead)[cols]
+        if metrics is not None:
+            metrics.add("segments", len(out))
+            metrics.add(
+                "posting_bytes",
+                int(out["docs_blob"].map(len).sum() + out["tfs_blob"].map(len).sum()),
+            )
+        return out
+
+    # explicit partition count: a bare repartition(cols) is subject to AQE
+    # partition coalescing, which shrinks this (compressed, so small-looking)
+    # exchange to a handful of partitions and serializes the merge stage —
+    # measured as flat 8→32-core scaling before the fix
+    n_part = int(runs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    part = runs.repartition(n_part, "term", "seg").sortWithinPartitions(
+        "term", "seg", "first_docid"
+    )
+    return part.mapInPandas(
+        lambda b: stream_groups(b, ("term", "seg"), block), schema
+    )
+
 
 def build_segments_spimi(
     docs: DataFrame,
@@ -230,228 +494,62 @@ def build_segments_spimi(
 ) -> DataFrame:
     """X4/X5 — the true SPIMI two-stage build: per-partition inverted RUNS
     are delta-gapped and varint-encoded BEFORE the shuffle (map-side
-    compression), then merged per (term, doc-range) into final segment
-    rows. vs shuffling raw (term, doc_id, tf, dl) rows this moves ~5-10×
-    fewer bytes and rows through the exchange — at 100 TB the posting
-    shuffle is THE dominant cost, so map-side encoding is the design, not
-    an optimization. Output rows are bit-identical to
-    ``build_segments(doc_term_freqs(docs))`` (tested).
-
-    Stage 1 (narrow): accumulate up to ``pack_docs`` docs per flush (longer
-    runs amortize per-run overhead), invert with a vectorized groupby, cut
-    runs on (term, seg) boundaries, encode ALL runs of the flush in one
-    segmented varint pass.
-    Stage 2 (the one posting shuffle): repartition by (term, seg), sort by
-    (term, seg, first_docid), stream-merge inside mapInPandas — decode all
-    runs of a batch in one pass (cumsum-of-gaps with per-run rebasing),
-    re-sort each group by doc_id (runs from different input partitions
-    interleave doc ranges), encode final blobs.
+    compression, ``pack_runs``), then merged per (term, doc-range) into
+    final segment rows (``merge_units``). vs shuffling raw (term, doc_id,
+    tf, dl) rows this moves ~5-10× fewer bytes and rows through the
+    exchange — at 100 TB the posting shuffle is THE dominant cost, so
+    map-side encoding is the design, not an optimization. Output rows are
+    bit-identical to ``build_segments(doc_term_freqs(docs))`` (tested).
     Memory stays bounded: a (term, seg) group is ≤ 2^seg_bits postings by
     construction (the doc-range salt)."""
-    from collections.abc import Iterator as _Iterator
+    runs = pack_runs(docs, seg_bits, pack_docs, terms_col, metrics=metrics)
+    return merge_units(runs, SEGMENT_SCHEMA, codec, metrics=metrics)
 
-    if codec != "varint":
-        # bp128 blobs are block-structured, not concatenative — the partial
-        # runs still travel as varint; only final blobs use the codec
-        pass
-    final_enc = codecs.varint_encode if codec == "varint" else codecs.bp128_encode
-    run_cols = [f.name for f in RUN_SCHEMA.fields]
-    seg_cols = [f.name for f in SEGMENT_SCHEMA.fields]
 
-    def pack_flush(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        toks = pdf[terms_col]
-        lens = toks.map(len).to_numpy(dtype=np.int64)
-        if metrics is not None:
-            metrics.add("docs", len(pdf))
-            metrics.add("tokens", int(lens.sum()))
-        if lens.sum() == 0:
-            return None
-        term_flat = np.concatenate(
-            [np.asarray(t, dtype=object) for t in toks if len(t)]
-        )
-        id_flat = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), lens)
-        # invert via factorize + int lexsort + run-length count — same
-        # (term-lex, doc_id) group order as the old
-        # groupby(sort=True).size() but ~3× faster (r6: the pandas
-        # string-keyed groupby hashtable dominated the pack stage)
-        codes, uniq = pd.factorize(pd.Series(term_flat), sort=True)
-        order = np.lexsort((id_flat, codes))
-        tc = codes[order]
-        di = id_flat[order]
-        new_grp = np.concatenate([[True], (tc[1:] != tc[:-1]) | (di[1:] != di[:-1])])
-        gi = np.flatnonzero(new_grp)
-        tfs = np.diff(np.concatenate([gi, [tc.size]]))
-        tcg = tc[gi]
-        ids = di[gi]
-        terms = np.asarray(uniq, dtype=object)[tcg]
-        if metrics is not None:
-            metrics.add("postings", ids.size)
-        segs_ = ids >> seg_bits
-        change = np.flatnonzero((tcg[1:] != tcg[:-1]) | (segs_[1:] != segs_[:-1])) + 1
-        starts = np.concatenate([[0], change])
-        nlens = np.diff(np.concatenate([starts, [ids.size]]))
-        gaps = ids.astype(np.uint64).copy()
-        gaps[1:] -= ids[:-1].astype(np.uint64)
-        gaps[starts] = ids[starts]  # absolute first id per run
-        return pd.DataFrame(
-            {
-                "term": terms[starts],
-                "seg": segs_[starts],
-                "first_docid": ids[starts],
-                "n": nlens,
-                "ids_blob": codecs.varint_encode_segmented(gaps, nlens),
-                "tfs_blob": codecs.varint_encode_segmented(tfs, nlens),
-            }
-        )[run_cols]
+def with_bucket(segs: DataFrame, n_term_buckets: int, nullable: bool = False) -> DataFrame:
+    """``bucket = pmod(hash32(term), n)``: the portable md5 hash the query
+    side recomputes driver-side to prune files. The value is never null;
+    ``nullable`` only sets the parquet flag, which each relation keeps as
+    it has always stored it (optional in build and epoch postings,
+    required in positions and compacted postings)."""
+    from kafka_es_spark.operators.dedup import hash32
 
-    def pack(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        buf: list[pd.DataFrame] = []
-        ndocs = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            buf.append(pdf)
-            ndocs += len(pdf)
-            if ndocs >= pack_docs:
-                out = pack_flush(buf)
-                buf, ndocs = [], 0
-                if out is not None and len(out):
-                    yield out
-        if buf:
-            out = pack_flush(buf)
-            if out is not None and len(out):
-                yield out
+    b = F.pmod(hash32(F.col("term")), F.lit(n_term_buckets))
+    return segs.withColumn("bucket", b if nullable else F.coalesce(b, F.lit(0)))
 
-    def merge_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        """pdf: complete (term, seg) groups of runs, sorted by
-        (term, seg, first_docid)."""
-        n_per = pdf["n"].to_numpy(dtype=np.int64)
-        total = int(n_per.sum())
-        gaps = codecs.varint_decode(b"".join(pdf["ids_blob"]), total)
-        tfs_all = codecs.varint_decode(b"".join(pdf["tfs_blob"]), total).astype(np.int64)
-        rs = np.concatenate([[0], np.cumsum(n_per)])
-        gcum = np.cumsum(gaps)
-        base = gcum[rs[:-1]] - gaps[rs[:-1]]  # cumsum before each run's start
-        ids_all = (gcum - np.repeat(base, n_per)).astype(np.int64)
-        terms = pdf["term"].to_numpy(dtype=object)
-        segs_ = pdf["seg"].to_numpy(dtype=np.int64)
-        gchange = np.flatnonzero((terms[1:] != terms[:-1]) | (segs_[1:] != segs_[:-1])) + 1
-        gstarts = np.concatenate([[0], gchange])  # in run index space
-        gends = np.concatenate([gchange, [len(pdf)]])
-        if codec == "varint":
-            # vectorized across ALL groups of the block (r6): label each
-            # posting with its group, one lexsort by (group, doc_id), delta
-            # with per-group rebasing, segmented varint encode — no
-            # per-group Python loop. LEB128 is per-value, so the segmented
-            # encoding is byte-identical to per-group encodes.
-            n_runs = len(pdf)
-            glabel_run = np.zeros(n_runs, dtype=np.int64)
-            glabel_run[gchange] = 1
-            glabel_run = np.cumsum(glabel_run)
-            lab = np.repeat(glabel_run, n_per)
-            order = np.lexsort((ids_all, lab))
-            ids_s = ids_all[order]
-            tfs_s = tfs_all[order]
-            gs = rs[:-1][gstarts]  # posting-space group starts (sorted keys)
-            glens = np.diff(np.concatenate([gs, [ids_s.size]]))
-            gaps_out = ids_s.astype(np.uint64).copy()
-            gaps_out[1:] -= ids_s[:-1].astype(np.uint64)
-            gaps_out[gs] = ids_s[gs].astype(np.uint64)
-            docs_blobs = codecs.varint_encode_segmented(gaps_out, glens)
-            tfs_blobs = codecs.varint_encode_segmented(
-                tfs_s.astype(np.uint64), glens
-            )
-            out = pd.DataFrame(
-                {
-                    "term": terms[gstarts],
-                    "seg": segs_[gstarts],
-                    "df_seg": glens,
-                    "cf_seg": np.add.reduceat(tfs_s, gs),
-                    "first_docid": ids_s[gs],
-                    "last_docid": ids_s[np.concatenate([gs[1:], [ids_s.size]]) - 1],
-                    "docs_blob": docs_blobs,
-                    "tfs_blob": tfs_blobs,
-                }
-            )[seg_cols]
-            if metrics is not None:
-                metrics.add("segments", len(out))
-                metrics.add(
-                    "posting_bytes",
-                    sum(len(b) for b in docs_blobs)
-                    + sum(len(b) for b in tfs_blobs),
-                )
-            return out
-        rows = []
-        for rs_i, re_i in zip(gstarts, gends):
-            s, e = int(rs[rs_i]), int(rs[re_i])
-            ids = ids_all[s:e]
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            tfs = tfs_all[s:e][order]
-            rows.append(
-                (
-                    terms[rs_i],
-                    int(segs_[rs_i]),
-                    int(ids.size),
-                    int(tfs.sum()),
-                    int(ids[0]),
-                    int(ids[-1]),
-                    final_enc(codecs.delta_encode(ids.astype(np.uint64))),
-                    final_enc(tfs.astype(np.uint64)),
-                )
-            )
-        if metrics is not None:
-            metrics.add("segments", len(rows))
-            metrics.add(
-                "posting_bytes",
-                sum(len(r[6]) + len(r[7]) for r in rows),
-            )
-        return pd.DataFrame(rows, columns=seg_cols)
 
-    def merge_stream(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        hold: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-                hold = None
-            lt = pdf["term"].iat[len(pdf) - 1]
-            ls = pdf["seg"].iat[len(pdf) - 1]
-            tail = (pdf["term"].to_numpy(dtype=object) == lt) & (
-                pdf["seg"].to_numpy(dtype=np.int64) == ls
-            )
-            cut = int(len(pdf) - np.flip(tail).argmin()) if not tail.all() else 0
-            if cut == 0:
-                hold = pdf
-                continue
-            hold = pdf.iloc[cut:].copy()
-            out = merge_block(pdf.iloc[:cut])
-            if len(out):
-                yield out
-        if hold is not None and len(hold):
-            yield merge_block(hold)
-
-    runs = docs.select("doc_id", terms_col).mapInPandas(pack, RUN_SCHEMA)
-    # explicit partition count: a bare repartition(cols) is subject to AQE
-    # partition coalescing, which shrinks this (compressed, so small-looking)
-    # exchange to a handful of partitions and serializes the merge stage —
-    # measured as flat 8→32-core scaling before the fix
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    part = runs.repartition(n_part, "term", "seg").sortWithinPartitions(
-        "term", "seg", "first_docid"
+def write_units(
+    segs: DataFrame,
+    n_term_buckets: int,
+    path: str,
+    nullable_bucket: bool = False,
+    **observed: Column,
+) -> dict:
+    """The layout of every unit write (postings and positions; build, epoch
+    and compaction): ``with_bucket``, one partition per bucket, rows sorted
+    by (term, seg), so a query prunes files by bucket and row groups by
+    term. ``observed`` aggregates ride the write; returns their values."""
+    out = (
+        with_bucket(segs, n_term_buckets, nullable_bucket)
+        .repartition(n_term_buckets, "bucket")
+        .sortWithinPartitions("term", "seg")
     )
-    return part.mapInPandas(merge_stream, SEGMENT_SCHEMA)
+    if not observed:
+        out.write.mode("overwrite").parquet(path)
+        return {}
+    obs = Observation()
+    out.observe(obs, *(c.alias(k) for k, c in observed.items())).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get
 
 
 def decode_segment(row, codec: str = "varint"):
     """Segment row → (doc_ids, tfs) numpy arrays. Used by scorers/tests.
     Doc lengths come from the range dl array (``decode_range_dls``)."""
-    dec = codecs.varint_decode if codec == "varint" else codecs.bp128_decode
     n = int(row["df_seg"])
-    gaps = dec(bytes(row["docs_blob"]), n)
-    tfs = dec(bytes(row["tfs_blob"]), n)
+    gaps = codecs.decode(bytes(row["docs_blob"]), n, codec)
+    tfs = codecs.decode(bytes(row["tfs_blob"]), n, codec)
     return codecs.delta_decode(gaps).astype(np.int64), tfs.astype(np.int64)
 
 
@@ -465,43 +563,23 @@ def build_range_dls(docs: DataFrame, seg_bits: int = SEG_BITS) -> DataFrame:
     streaming epoch appends its own rows, which concatenate contiguously.
     Size: ~1-2 bytes/doc — negligible next to postings."""
 
-    def encode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hold: pd.DataFrame | None = None
-        cols = [f.name for f in RANGE_DLS_SCHEMA.fields]
+    cols = [f.name for f in RANGE_DLS_SCHEMA.fields]
 
-        def enc_block(pdf: pd.DataFrame) -> pd.DataFrame:
-            segs_ = pdf["seg"].to_numpy(dtype=np.int64)
-            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            dls = pdf["dl"].to_numpy(dtype=np.uint64)
-            change = np.flatnonzero(segs_[1:] != segs_[:-1]) + 1
-            starts = np.concatenate([[0], change])
-            nlens = np.diff(np.concatenate([starts, [ids.size]]))
-            blobs = codecs.varint_encode_segmented(dls, nlens)
-            return pd.DataFrame(
-                {
-                    "seg": segs_[starts],
-                    "first_docid": ids[starts],
-                    "n": nlens,
-                    "dls_blob": blobs,
-                }
-            )[cols]
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if hold is not None:
-                pdf = pd.concat([hold, pdf], ignore_index=True)
-                hold = None
-            last_seg = pdf["seg"].iat[len(pdf) - 1]
-            tail = pdf["seg"].to_numpy(dtype=np.int64) == last_seg
-            cut = int(len(pdf) - np.flip(tail).argmin()) if not tail.all() else 0
-            if cut == 0:
-                hold = pdf
-                continue
-            hold = pdf.iloc[cut:].copy()
-            yield enc_block(pdf.iloc[:cut])
-        if hold is not None and len(hold):
-            yield enc_block(hold)
+    def enc_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        segs_ = pdf["seg"].to_numpy(dtype=np.int64)
+        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+        dls = pdf["dl"].to_numpy(dtype=np.uint64)
+        starts = group_starts(segs_)
+        nlens = np.diff(np.append(starts, ids.size))
+        blobs = codecs.varint_encode_segmented(dls, nlens)
+        return pd.DataFrame(
+            {
+                "seg": segs_[starts],
+                "first_docid": ids[starts],
+                "n": nlens,
+                "dls_blob": blobs,
+            }
+        )[cols]
 
     n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     rel = docs.select(
@@ -512,7 +590,7 @@ def build_range_dls(docs: DataFrame, seg_bits: int = SEG_BITS) -> DataFrame:
     return (
         rel.repartition(n_part, "seg")
         .sortWithinPartitions("seg", "doc_id")
-        .mapInPandas(encode_stream, RANGE_DLS_SCHEMA)
+        .mapInPandas(lambda b: stream_groups(b, ("seg",), enc_block), RANGE_DLS_SCHEMA)
     )
 
 

@@ -248,36 +248,19 @@ def build_index(
         segs = spimi.build_segments_spimi(
             sdocs, seg_bits=seg_bits, codec=codec, metrics=metrics
         )
-        # bucket hash is the engine-portable md5 hash32 so the query side can
-        # compute a term's bucket driver-side (no Spark job) and push
-        # `bucket IN (...)` into the parquet scan — each bucket lands in one
-        # file per shard, so non-query buckets are never read
-        from kafka_es_spark.operators.dedup import hash32
-
-        segs = segs.withColumn(
-            "bucket", F.pmod(hash32(F.col("term")), F.lit(n_term_buckets))
-        )
-        out = os.path.join(index_dir, "postings", f"shard={shard}")
         # counters observed on the write itself (no read-back job); `terms`
         # is approx_count_distinct — exact distinct is disallowed inside
         # observe, and the counter is observability, not a correctness input
-        obs = Observation()
-        (
-            segs.repartition(n_term_buckets, "bucket")
-            .sortWithinPartitions("term", "seg")
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("segments"),
-                F.approx_count_distinct("term").alias("terms"),
-                F.sum("df_seg").alias("postings"),
-                F.sum(
-                    F.octet_length("docs_blob") + F.octet_length("tfs_blob")
-                ).alias("bytes"),
-            )
-            .write.mode("overwrite")
-            .parquet(out)
+        c = spimi.write_units(
+            segs,
+            n_term_buckets,
+            os.path.join(index_dir, "postings", f"shard={shard}"),
+            nullable_bucket=True,
+            segments=F.count(F.lit(1)),
+            terms=F.approx_count_distinct("term"),
+            postings=F.sum("df_seg"),
+            bytes=F.sum(F.octet_length("docs_blob") + F.octet_length("tfs_blob")),
         )
-        c = obs.get
         man.commit(
             name,
             {

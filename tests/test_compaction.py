@@ -11,13 +11,22 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_es_spark.functions.tokenize import tokens
 from kafka_es_spark.operators.compaction import compact_index, recover_swap_dirs
+from kafka_es_spark.operators.dedup import hash32
 from kafka_es_spark.operators.deletes import (
     add_tombstones,
     read_tombstone_ids,
 )
+from kafka_es_spark.operators.positions import (
+    POS_SEGMENT_SCHEMA,
+    build_position_index,
+    build_position_runs,
+    merge_position_runs,
+)
+from kafka_es_spark.operators.spimi import SEGMENT_SCHEMA, build_segments_spimi
 from kafka_es_spark.operators.wand import Searcher, wand_topk
-from kafka_es_spark.plans.build_index import load_stats
+from kafka_es_spark.plans.build_index import build_index, extracted_pages, load_stats
 from kafka_es_spark.plans.manifest import Manifest
 from kafka_es_spark.sources.pages import gen_pages
 from kafka_es_spark.streaming.ingest_stream import append_epoch
@@ -192,3 +201,66 @@ def test_compaction_folds_positions_and_phrase_respects_tombstones(spark, tmp_pa
     # phrase results unchanged in doc set (scores shift with live stats)
     post = phrase_topk(spark, idx, "data index", k=30, round_to=None).collect()
     assert {int(r["doc_id"]) for r in post} == {int(r["doc_id"]) for r in excl}
+
+
+def _rows(df, cols):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+@pytest.mark.parametrize("codec", ["varint", "bp128"])
+def test_compaction_equals_fresh_build_over_live_docs(spark, pages, tmp_path, codec):
+    """Base plus two positioned epochs, some docs tombstoned, then
+    compact_index: the postings and positions units equal a fresh
+    build_segments_spimi / position-run merge over the live (doc_id,
+    terms) rows with the same ids, in every column."""
+    idx = str(tmp_path / f"c-{codec}")
+    build_index(spark, pages, idx, seg_bits=6, n_term_buckets=4,
+                codec=codec)
+    build_position_index(spark, pages, idx)
+    base = spark.read.parquet(os.path.join(idx, "tokens")).select("doc_id", "terms")
+    docs = [base]
+    for e, seed in enumerate((7, 8)):
+        batch = gen_pages(spark, 60, seed=seed, partitions=2).withColumn(
+            "url", F.concat(F.lit(f"e{e}:"), F.col("url"))
+        )
+        append_epoch(spark, batch, idx, epoch=e, seg_bits=6,
+                     n_term_buckets=4, codec=codec, with_positions=True)
+        ids = spark.read.parquet(os.path.join(idx, "docmap", f"epoch={e}"))
+        docs.append(
+            ids.join(extracted_pages(batch), "url")
+            .select("doc_id", tokens(F.col("text")).alias("terms"))
+        )
+    # materialized now: compaction replaces the docmap files it reads
+    live = docs[0].unionByName(docs[1]).unionByName(docs[2]).cache()
+    n = live.count()
+    # every 7th doc, plus the last epoch's tail: rare terms lose whole groups
+    dead = [d for d in range(n) if d % 7 == 3] + list(range(n - 6, n))
+    add_tombstones(spark, idx, doc_ids=dead)
+    pre = spark.read.parquet(os.path.join(idx, "postings")).select(
+        "term", "seg"
+    ).distinct().count()
+    compact_index(spark, idx)
+    live = live.filter(~F.col("doc_id").isin(dead))
+
+    bucket = F.pmod(hash32(F.col("term")), F.lit(4))
+    post_cols = [f.name for f in SEGMENT_SCHEMA.fields] + ["bucket"]
+    want = _rows(
+        build_segments_spimi(live, seg_bits=6, codec=codec)
+        .withColumn("bucket", bucket),
+        post_cols,
+    )
+    got = _rows(spark.read.parquet(os.path.join(idx, "postings")), post_cols)
+    assert got and got == want
+    assert len(got) < pre  # some (term, seg) groups lost every doc
+
+    pos_cols = [f.name for f in POS_SEGMENT_SCHEMA.fields]
+    want = _rows(
+        merge_position_runs(build_position_runs(live, seg_bits=6), 4),
+        pos_cols,
+    )
+    got = _rows(spark.read.parquet(os.path.join(idx, "positions")), pos_cols)
+    assert got and got == want
+    live.unpersist()

@@ -2,6 +2,7 @@
 micro-batch stream → index → query, and the A1 windowed-batching surface."""
 
 import datetime as dt
+import json
 import os
 
 import pytest
@@ -9,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_es_spark.operators.wand import Searcher, wand_topk
-from kafka_es_spark.plans.build_index import load_stats, prepare_docs
+from kafka_es_spark.plans.build_index import build_index, load_stats, prepare_docs
 from kafka_es_spark.plans.manifest import Manifest
 from kafka_es_spark.sources.pages import gen_pages
 from kafka_es_spark.streaming.ingest_stream import (
@@ -468,3 +469,27 @@ def test_streaming_sessionize_stateful_carry(spark, tmp_path):
         (1, sec(0), sec(10), 2),
         (3, sec(0), sec(5), 2),
     }
+
+
+def test_append_epoch_rejects_codec_and_seg_bits_mismatch(spark, tmp_path):
+    idx = str(tmp_path / "bp")
+    build_index(spark, gen_pages(spark, 60, seed=3, partitions=2), idx,
+                seg_bits=6, n_term_buckets=4, codec="bp128")
+    stats_path = os.path.join(idx, "stats.json")
+    with open(stats_path) as f:
+        before = json.load(f)
+    batch = gen_pages(spark, 20, seed=4, partitions=1)
+    with pytest.raises(ValueError, match="codec"):
+        append_epoch(spark, batch, idx, epoch=0, seg_bits=6,
+                     n_term_buckets=4)
+    with pytest.raises(ValueError, match="seg_bits"):
+        append_epoch(spark, batch, idx, epoch=0, seg_bits=7,
+                     n_term_buckets=4, codec="bp128")
+    with open(stats_path) as f:
+        assert json.load(f) == before
+    assert not os.path.exists(os.path.join(idx, "postings", "shard=epoch-00000000"))
+    # the matching append goes through and every unit still decodes
+    append_epoch(spark, batch, idx, epoch=0, seg_bits=6,
+                 n_term_buckets=4, codec="bp128")
+    s = Searcher(spark, idx, cache=False)
+    assert len(s.topk("data index", k=5).collect()) == 5
