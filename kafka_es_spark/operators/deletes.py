@@ -89,22 +89,27 @@ def add_tombstones(
 
 
 def read_tombstone_ids(spark: SparkSession, index_dir: str) -> frozenset[int]:
-    """All pending tombstoned doc_ids (empty set if none). Raises above
+    """All pending tombstoned doc_ids (empty set if none), read with
+    pyarrow in one pass over the ``_deletes/`` units — no Spark job, so a
+    Searcher open or a positional query pays nothing for them. Raises above
     MAX_PENDING_TOMBSTONES — at that point run compact_index."""
+    import numpy as np
+    import pyarrow.dataset as ds
+
     d = tombstone_dir(index_dir)
     if not os.path.isdir(d) or not any(
         n.startswith("unit=") for n in os.listdir(d)
     ):
         return frozenset()
-    rel = spark.read.parquet(d).select("doc_id").distinct()
-    n = rel.count()
-    if n > MAX_PENDING_TOMBSTONES:
+    col = ds.dataset(d, format="parquet").to_table(columns=["doc_id"])["doc_id"]
+    ids = np.unique(col.drop_null().to_numpy())
+    if ids.size > MAX_PENDING_TOMBSTONES:
         raise ValueError(
-            f"{n} pending tombstones exceed MAX_PENDING_TOMBSTONES "
+            f"{ids.size} pending tombstones exceed MAX_PENDING_TOMBSTONES "
             f"({MAX_PENDING_TOMBSTONES}); run compaction.compact_index to "
             "fold deletes into the segments before querying"
         )
-    return frozenset(int(r["doc_id"]) for r in rel.collect())
+    return frozenset(ids.tolist())
 
 
 def clear_tombstones(index_dir: str) -> None:
@@ -233,7 +238,7 @@ def update_by_query(
             must_not=must_not,
         ).withColumn("_hit", F.lit(True))
         dm_dir = os.path.join(index_dir, "docmap")
-        upd = spark.read.parquet(dm_dir).join(ids, "doc_id", "left")
+        upd = s.docmap.join(ids, "doc_id", "left")
         if plan is not None:
             upd = plan.apply(upd, where=F.col("_hit"))
         else:

@@ -36,6 +36,14 @@ Per doc range the scorer chains position-set intersections: occurrences
 become int64 keys ``doc_id·2^POS_BITS + pos`` (sorted by construction),
 and the phrase positions are ``K₁ ∩ (K₀+1)`` chained across slots — one
 vectorized np.intersect1d per slot, cost ~ the rarest slot's postings.
+
+Planning a positional query runs no Spark job. The member terms' dfs are
+looked up on the driver (``wand.index_doc_freqs``: a pyarrow ``isin``
+read of the ``term_stats`` partials, or the pushed-down Spark collect
+above ``wand.DOC_FREQS_MAX_ROWS`` rows), tombstones are read with pyarrow
+(``deletes.read_tombstone_ids``), and ``positions/``, ``range_dls/`` and
+``docmap/`` are opened with their schema taken from a parquet footer
+(``build_index.read_relation``), so the only jobs are the query's own.
 """
 
 from __future__ import annotations
@@ -52,6 +60,7 @@ from pyspark.sql import types as T
 from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
 from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf
+from kafka_es_spark.plans.build_index import read_relation
 from kafka_es_spark.session import local_frame
 
 POS_BITS = spimi.POS_BITS  # doc length < 2^21 tokens — validated at pack time
@@ -237,7 +246,9 @@ def _phrase_topk_slots(
     scoring (cogrouped with range dls), global TakeOrdered is exact."""
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
-    from kafka_es_spark.operators.wand import TOPK_SCHEMA, _seg_dls
+    from kafka_es_spark.operators.wand import (
+        TOPK_SCHEMA, _seg_dls, index_doc_freqs,
+    )
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     k = max(k, fetch_k or 0)
@@ -249,15 +260,7 @@ def _phrase_topk_slots(
     n_docs, avgdl = st["n_docs"], st["avgdl"]
     if not slot_terms or any(not s for s in slot_terms) or n_docs == 0 or avgdl == 0:
         return local_frame(spark, [], TOPK_SCHEMA)
-    uniq = sorted({t for s in slot_terms for t in s})
-    ts = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(F.col("term").isin(uniq))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-    )
-    dfs = {r["term"]: int(r["df"]) for r in ts}
+    dfs = index_doc_freqs(spark, index_dir, {t for s in slot_terms for t in s})
     # a single-term slot whose term is absent anywhere ⇒ no match is
     # possible; a multi-term slot only needs one alternative present
     slot_terms = [[t for t in s if t in dfs] for s in slot_terms]
@@ -274,14 +277,13 @@ def _phrase_topk_slots(
             "with_positions=True (streaming)"
         )
     live = sorted({t for s in slot_terms for t in s})
-    rel = spark.read.parquet(pos_dir)
-    rel = rel.filter(F.col("term").isin(live))
+    rel = read_relation(spark, pos_dir).filter(F.col("term").isin(live))
     if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
         from kafka_es_spark.operators.dedup import hash32_py
 
         bs = sorted({hash32_py(t) % int(st["n_term_buckets"]) for t in live})
         rel = rel.filter(F.col("bucket").isin(bs))
-    dls_rel = spark.read.parquet(os.path.join(index_dir, "range_dls"))
+    dls_rel = read_relation(spark, os.path.join(index_dir, "range_dls"))
 
     def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -331,7 +333,7 @@ def _phrase_topk_slots(
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))
     if with_url:
-        dm = spark.read.parquet(os.path.join(index_dir, "docmap")).select(
+        dm = read_relation(spark, os.path.join(index_dir, "docmap")).select(
             "doc_id", "url"
         )
         out = out.join(dm, "doc_id").orderBy(
@@ -399,7 +401,7 @@ def phrase_match_ids(
             "with_positions=True (streaming)"
         )
     uniq = list(dict.fromkeys(slots))
-    rel = spark.read.parquet(pos_dir).filter(F.col("term").isin(uniq))
+    rel = read_relation(spark, pos_dir).filter(F.col("term").isin(uniq))
     if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
         from kafka_es_spark.operators.dedup import hash32_py
 
@@ -457,7 +459,7 @@ def phrase_prefix_topk(
         return local_frame(spark, [], TOPK_SCHEMA)
     prefix = slots[-1]
     rows = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        read_relation(spark, os.path.join(index_dir, "term_stats"))
         .filter(F.col("term").startswith(prefix))
         .select("term")
         .distinct()
@@ -506,6 +508,7 @@ def _window_anchor_topk(
     everywhere."""
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
+    from kafka_es_spark.operators.wand import index_doc_freqs
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     t, x = anchor, probe
@@ -517,12 +520,7 @@ def _window_anchor_topk(
         "doc_id long, url string, score double" if with_url
         else "doc_id long, score double"
     )
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(F.col("term").isin(sorted(set(idf_terms) | {t})))
-        .groupBy("term").agg(F.sum("df").alias("df")).collect()
-    }
+    dfs = index_doc_freqs(spark, index_dir, set(idf_terms) | {t})
     if t not in dfs or n_docs == 0 or avgdl == 0 or (
         require and x not in dfs
     ):
@@ -534,7 +532,7 @@ def _window_anchor_topk(
             f"index at {index_dir} has no positions/ relation — "
             f"{op_name} needs the positional index"
         )
-    rel = spark.read.parquet(pos_dir).filter(F.col("term").isin([t, x]))
+    rel = read_relation(spark, pos_dir).filter(F.col("term").isin([t, x]))
     if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
         from kafka_es_spark.operators.dedup import hash32_py
 
@@ -575,7 +573,7 @@ def _window_anchor_topk(
     tf_rel = rel.groupBy("seg").applyInPandas(
         lambda _k, pdf: count_surviving(pdf), "doc_id long, tf long"
     )
-    dm = spark.read.parquet(os.path.join(index_dir, "docmap"))
+    dm = read_relation(spark, os.path.join(index_dir, "docmap"))
     out = tf_rel.join(dm.select("doc_id", "url", "dl"), "doc_id")
     if excluded is not None:
         out = out.filter(~F.col("doc_id").isin(sorted(excluded)))
@@ -696,6 +694,7 @@ def span_first_topk(
     from kafka_es_spark.functions.tokenize import tokenize_py
     from kafka_es_spark.operators.compaction import recover_swap_dirs
     from kafka_es_spark.operators.deletes import read_tombstone_ids
+    from kafka_es_spark.operators.wand import index_doc_freqs
     from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     toks = tokenize_py(term)
@@ -710,22 +709,17 @@ def span_first_topk(
         "doc_id long, url string, score double" if with_url
         else "doc_id long, score double"
     )
-    dfrow = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(F.col("term") == t)
-        .agg(F.sum("df").alias("df"))
-        .collect()[0]
-    )
-    if dfrow["df"] is None or n_docs == 0 or avgdl == 0:
+    dfs = index_doc_freqs(spark, index_dir, [t])
+    if t not in dfs or n_docs == 0 or avgdl == 0:
         return local_frame(spark, [], empty)
-    w = idf(n_docs, int(dfrow["df"]))
+    w = idf(n_docs, dfs[t])
     pos_dir = os.path.join(index_dir, "positions")
     if not os.path.isdir(pos_dir):
         raise ValueError(
             f"index at {index_dir} has no positions/ relation — span "
             "queries need the positional index"
         )
-    rel = spark.read.parquet(pos_dir).filter(F.col("term") == t)
+    rel = read_relation(spark, pos_dir).filter(F.col("term") == t)
     if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
         from kafka_es_spark.operators.dedup import hash32_py
 
@@ -764,7 +758,7 @@ def span_first_topk(
     tf_rel = rel.groupBy("seg").applyInPandas(
         lambda _k, pdf: count_window(pdf), "doc_id long, tf long"
     )
-    dm = spark.read.parquet(os.path.join(index_dir, "docmap"))
+    dm = read_relation(spark, os.path.join(index_dir, "docmap"))
     out = tf_rel.join(dm.select("doc_id", "url", "dl"), "doc_id")
     if excluded is not None:
         out = out.filter(~F.col("doc_id").isin(sorted(excluded)))

@@ -115,18 +115,10 @@ def _fuzziness(value, term_len: int) -> int:
     return int(s)
 
 
-def _docmap(searcher) -> DataFrame:
-    import os
-
-    return searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "docmap")
-    )
-
-
 def _stored_col(searcher, field: str) -> DataFrame:
     """The docmap restricted to (doc_id, field); unknown fields fail
     loudly with the stored-field list."""
-    dm = _docmap(searcher)
+    dm = searcher.docmap
     if field not in dm.columns:
         raise DSLError(
             f"field {field!r} is not stored in this index's docmap "
@@ -280,14 +272,10 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         return _Compiled(None, searcher.exists_ids(body["field"]))
 
     if kind == "ids":
-        import os
-
         req = local_frame(
             searcher.spark, [(u,) for u in body["values"]], "url string"
         )
-        dm = searcher.spark.read.parquet(
-            os.path.join(searcher.index_dir, "docmap")
-        ).select("url", "doc_id")
+        dm = searcher.docmap.select("url", "doc_id")
         return _Compiled(
             None, dm.join(F.broadcast(req), "url").select("doc_id")
         )
@@ -563,7 +551,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             )
         nc = int(body.get("num_candidates", 100))
         boost = float(body.get("boost", 1.0))
-        dm = _docmap(searcher).select("doc_id", "url")
+        dm = searcher.docmap.select("doc_id", "url")
         embeddings = emb
         flt = body.get("filter")
         if flt is not None:
@@ -678,7 +666,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             searcher.spark, [(u, float(1e9 - i)) for i, u in enumerate(urls)],
             "url string, score double",
         )
-        dm = _docmap(searcher).select("doc_id", "url")
+        dm = searcher.docmap.select("doc_id", "url")
         pins = pin_df.join(dm, "url").select("doc_id", "score")
         org = _inner_scores(searcher, _compile(searcher, organic, scoring=True, emb=emb))
         org = org.join(F.broadcast(pins.select("doc_id")), "doc_id", "left_anti")
@@ -711,11 +699,7 @@ def _join_doc_fields(searcher, scores: DataFrame, fields) -> tuple:
     the (doc_id, score) frame; returns (frame, {field: sql type})."""
     if not fields:
         return scores, {}
-    import os
-
-    dm = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "docmap")
-    )
+    dm = searcher.docmap
     missing = [f for f in fields if f not in dm.columns]
     if missing:
         raise DSLError(
@@ -962,12 +946,8 @@ def _apply_collapse(searcher, out: DataFrame, spec) -> DataFrame:
     (``max_by`` on a (score, −doc_id) ordering struct). No global
     window — group count bounds the output, so this holds at any hit
     count; the expensive side stays the already-bounded hit relation."""
-    import os
-
     field = spec["field"] if isinstance(spec, dict) else spec
-    dm = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "docmap")
-    )
+    dm = searcher.docmap
     if field not in dm.columns:
         raise DSLError(
             f"collapse field {field!r} is not stored in this index's "
@@ -1233,11 +1213,7 @@ def _apply_highlight(searcher, out: DataFrame, body: dict,
     window = max(1, fragment // 2)
     added_url = "url" not in out.columns
     if added_url:
-        import os
-
-        dm = searcher.spark.read.parquet(
-            os.path.join(searcher.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = searcher.docmap.select("doc_id", "url")
         out = out.join(dm, "doc_id")
     # LEFT join: ES never drops a hit because highlighting found no text
     # for it — the hit keeps its rank with a null snippet (the inner-join
@@ -1276,11 +1252,7 @@ def _apply_source(searcher, out: DataFrame, source) -> DataFrame:
         source = [source]
     if not isinstance(source, list):
         raise DSLError("_source must be false or a field-name list")
-    import os
-
-    dm = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "docmap")
-    )
+    dm = searcher.docmap
     missing = [f for f in source if f not in dm.columns]
     if missing:
         raise DSLError(
@@ -1349,15 +1321,11 @@ def search(
             # semi-join; gate size tracks filter selectivity, so the
             # join strategy is left to AQE (a selective gate
             # broadcasts, an unselective one must not).
-            import os
-
             comp = _compile(searcher, flt, scoring=False)
             gate = comp.gate
             if gate is None:
                 gate = _inner_scores(searcher, comp).select("doc_id")
-            dm = searcher.spark.read.parquet(
-                os.path.join(searcher.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = searcher.docmap.select("doc_id", "url")
             urls = gate.select("doc_id").join(dm, "doc_id")
             if "url" in embeddings.columns:
                 embeddings = embeddings.join(
@@ -1549,17 +1517,13 @@ def search(
         # hit set -> field join -> TakeOrdered; deterministic doc_id
         # tie-break; `from` pages the same total order (search_after is
         # the deep-pagination tier)
-        import os
-
         spec = sort[0] if isinstance(sort, list) else sort
         if isinstance(spec, str):
             field, order = spec, "asc"
         else:
             field, o = _single(spec, "sort")
             order = o.get("order", "asc") if isinstance(o, dict) else o
-        dm = searcher.spark.read.parquet(
-            os.path.join(searcher.index_dir, "docmap")
-        )
+        dm = searcher.docmap
         if field not in dm.columns:
             raise DSLError(f"sort field {field!r} is not stored")
         j = out.select("doc_id").join(dm.select("doc_id", field), "doc_id")
@@ -1595,11 +1559,7 @@ def search(
             .limit(size)
         )
         if with_url:
-            import os
-
-            dm = searcher.spark.read.parquet(
-                os.path.join(searcher.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = searcher.docmap.select("doc_id", "url")
             res = res.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -1779,8 +1739,6 @@ def _run_aggs(
     one terms/histogram/stats agg over a stored field, with named
     metric sub-aggs under terms/histogram buckets; richer shapes stay
     on the dedicated Searcher methods this routes to."""
-    import os
-
     # ES allows N sibling aggs per request; when they are ALL metric
     # aggs (one or many) the response is one row with one column per
     # agg name — still a single hash aggregation over the hit set
@@ -1789,9 +1747,7 @@ def _run_aggs(
         and next(iter(a)) in _METRIC_SUBAGGS
         for a in aggs.values()
     ):
-        dm = searcher.spark.read.parquet(
-            os.path.join(searcher.index_dir, "docmap")
-        )
+        dm = searcher.docmap
         exprs = _sub_agg_exprs(aggs, dm.columns)
         need = sorted(
             {s["field"] for a in aggs.values() for s in a.values()}
@@ -1811,9 +1767,7 @@ def _run_aggs(
     spec = dict(spec)
     sub_spec = spec.pop("aggs", {})
     kind, params = _single(spec, "agg spec")
-    dm = searcher.spark.read.parquet(
-        os.path.join(searcher.index_dir, "docmap")
-    )
+    dm = searcher.docmap
 
     if kind == "filters":
         # named filter buckets: each filter compiles in filter context

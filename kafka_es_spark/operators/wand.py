@@ -51,6 +51,7 @@ from kafka_es_spark.operators.spimi import (
     decode_range_dls, decode_segment, gather_dls,
 )
 from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf, idf_col
+from kafka_es_spark.plans.build_index import read_relation
 from kafka_es_spark.session import local_frame
 
 TOPK_SCHEMA = T.StructType(
@@ -268,19 +269,43 @@ def counted_range_topk(
 DOC_FREQS_MAX_ROWS = 1_000_000
 
 
-def _load_doc_freqs(ts_dir: str) -> dict[str, int] | None:
+def _load_doc_freqs(ts_dir: str, terms=None) -> dict[str, int] | None:
     """term → df summed over the term_stats partials, read with pyarrow
-    (no Spark job); None when the relation has more than
-    ``DOC_FREQS_MAX_ROWS`` rows."""
+    (no Spark job): every term, or only those of ``terms`` present in the
+    index. None when the relation has more than ``DOC_FREQS_MAX_ROWS``
+    rows (the footers' row counts; no data is read to find that out)."""
     import pyarrow.dataset as ds
 
     dset = ds.dataset(ts_dir, format="parquet", partitioning="hive")
     if dset.count_rows() > DOC_FREQS_MAX_ROWS:
         return None
-    agg = dset.to_table(columns=["term", "df"]).group_by("term").aggregate(
-        [("df", "sum")]
-    )
+    flt = None if terms is None else ds.field("term").isin(list(terms))
+    agg = dset.to_table(columns=["term", "df"], filter=flt).group_by(
+        "term"
+    ).aggregate([("df", "sum")])
     return dict(zip(agg["term"].to_pylist(), agg["df_sum"].to_pylist()))
+
+
+def index_doc_freqs(spark: SparkSession, index_dir: str, terms) -> dict[str, int]:
+    """Index-level df of each of ``terms`` present in the index, for the
+    scorers that hold no Searcher: a pyarrow read of the matching
+    ``term_stats`` rows, or above ``DOC_FREQS_MAX_ROWS`` the pushed-down
+    Spark collect a Searcher without a dictionary makes."""
+    ts_dir = os.path.join(index_dir, "term_stats")
+    terms = sorted(set(terms))
+    if not terms:
+        return {}
+    dfs = _load_doc_freqs(ts_dir, terms)
+    if dfs is not None:
+        return dfs
+    rows = (
+        read_relation(spark, ts_dir)
+        .filter(F.col("term").isin(terms))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .collect()
+    )
+    return {r["term"]: int(r["df"]) for r in rows}
 
 
 class Searcher:
@@ -297,26 +322,30 @@ class Searcher:
       weights cost no Spark job. An index with more than
       ``DOC_FREQS_MAX_ROWS`` term_stats rows keeps no dictionary.
 
+    Cached or not, every index relation (postings, term_stats, range_dls
+    and the docmap) is resolved once, at open, with its schema read from a
+    parquet footer (``build_index.read_relation``), so no query runs a
+    schema-inference job. ``docmap`` is that relation, not persisted:
+    every url join and stored-field read of every query class plans on it.
+
     A query is then one Spark job. ``cache=False`` (one-shot readers such
     as ``wand_topk``) persists nothing and loads no dictionary: the
     cogroup shuffles the pruned parquet scan by seg, and ``doc_freqs``
     collects the pushed-down ``term_stats`` rows. The
     ``term_stats`` DataFrame stays available for dictionary scans (prefix,
     fuzzy, wildcard expansion). A Searcher sees the index as it was at
-    open: reopen it after ``append_epoch`` or ``compact_index``."""
+    open, its docmap included (the file listing is fixed when the relation
+    is resolved): reopen it after ``append_epoch`` or ``compact_index``."""
 
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         from kafka_es_spark.operators.compaction import recover_swap_dirs
         from kafka_es_spark.operators.deletes import read_tombstone_ids
-        from kafka_es_spark.plans.build_index import load_stats
+        from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
         self.spark = spark
         self.index_dir = index_dir
-        from kafka_es_spark.plans.build_index import BUCKET_SCHEME
 
-        import os as _os
-
-        if not _os.path.exists(_os.path.join(index_dir, "stats.json")):
+        if not os.path.exists(os.path.join(index_dir, "stats.json")):
             raise FileNotFoundError(
                 f"no index dataset at {index_dir!r} (stats.json missing) — "
                 "build one with plans.build_index / jobs/build_index.py"
@@ -345,17 +374,20 @@ class Searcher:
             if st.get("bucket_scheme") == BUCKET_SCHEME
             else None
         )
-        self.segs = spark.read.parquet(os.path.join(index_dir, "postings"))
+        self.segs = read_relation(spark, os.path.join(index_dir, "postings"))
         # term_stats holds PARTIALS (unit=base + one per streaming epoch;
         # doc sets are disjoint so df/cf sum exactly) — aggregate per term
         ts_dir = os.path.join(index_dir, "term_stats")
         self.term_stats = (
-            spark.read.parquet(ts_dir)
+            read_relation(spark, ts_dir)
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
         # the norms analogue: tiny (1-2 bytes/doc), resident while serving
-        self.range_dls = spark.read.parquet(os.path.join(index_dir, "range_dls"))
+        self.range_dls = read_relation(spark, os.path.join(index_dir, "range_dls"))
+        # not persisted: a corpus-sized relation that queries only join on
+        # a hit set would hold memory for every open Searcher
+        self.docmap = read_relation(spark, os.path.join(index_dir, "docmap"))
         self._cached = cache
         # term → df, read once at open so a query's weights cost no job;
         # None (one-shot readers, or a dictionary over the row cap) means
@@ -480,10 +512,7 @@ class Searcher:
             | self.persistent_excluded
         )
         if exclude_urls is not None:
-            import os as _os
-
-            dm = spark.read.parquet(_os.path.join(self.index_dir, "docmap"))
-            hits = dm.join(
+            hits = self.docmap.join(
                 F.broadcast(exclude_urls.select("url").distinct()), "url"
             ).select("doc_id").collect()
             excluded = excluded | frozenset(int(r["doc_id"]) for r in hits)
@@ -578,9 +607,7 @@ class Searcher:
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         if with_url:
-            dm = spark.read.parquet(os.path.join(self.index_dir, "docmap")).select(
-                "doc_id", "url"
-            )
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -790,9 +817,7 @@ class Searcher:
         )
         out = ranged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
         if with_url:
-            dm = spark.read.parquet(os.path.join(self.index_dir, "docmap")).select(
-                "doc_id", "url"
-            )
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -944,9 +969,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = hits.join(dm, "doc_id").join(
             field_values.select("url", bucket_field, metric_field), "url"
         )
@@ -980,7 +1003,7 @@ class Searcher:
         spark = self.spark
         n_deleted = len(read_tombstone_ids(spark, self.index_dir) or ())
         n_terms = self.term_stats.select("term").distinct().count()
-        segs = spark.read.parquet(os.path.join(self.index_dir, "postings"))
+        segs = read_relation(spark, os.path.join(self.index_dir, "postings"))
         p = self._postings_rows(segs).agg(
             F.count("*").alias("n_postings"),
             F.sum("tf").alias("sum_tf"),
@@ -1016,7 +1039,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not, weights=weights,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         if field_values is None:
             if field not in dm.columns:
                 raise ValueError(
@@ -1231,7 +1254,7 @@ class Searcher:
         if not weights:
             return local_frame(spark, [], out_cols)
         dm = (
-            spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+            self.docmap
             .filter(F.col("url").isin(list(urls)))
             .select("doc_id", "url")
         )
@@ -1493,7 +1516,7 @@ class Searcher:
             # pushes into the (prev, cur)-sorted parquet scan, so a
             # suggest call reads a few row groups, never the corpus.
             # U(prev) = Σ_cur B(prev, cur) by construction.
-            rel = spark.read.parquet(bs_dir).filter(F.col("prev").isin(srcs))
+            rel = read_relation(spark, bs_dir).filter(F.col("prev").isin(srcs))
             # ONE collect for pair counts, unigram counts AND the V scalar
             # (r6: three sequential collect jobs → one union job — each
             # local-mode job costs a fixed ~0.3 s of scheduling, so the
@@ -1593,9 +1616,7 @@ class Searcher:
         found=false rows."""
         spark = self.spark
         req = local_frame(spark, [(u,) for u in urls], "url string")
-        dm = spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("url", "doc_id")
+        dm = self.docmap.select("url", "doc_id")
         if self.persistent_excluded:
             dm = dm.filter(
                 ~F.col("doc_id").isin(sorted(self.persistent_excluded))
@@ -1735,9 +1756,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not, weights=weights,
         )
-        dm = spark.read.parquet(os.path.join(self.index_dir, "docmap")).select(
-            "doc_id", "url"
-        )
+        dm = self.docmap.select("doc_id", "url")
         allowed = (
             hits.join(dm, "doc_id")
             .join(field_values.select("url", field), "url")
@@ -2096,7 +2115,7 @@ class Searcher:
         from kafka_es_spark.operators.dedup import hash32
 
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         score = hash32(
             F.concat(F.col("url"), F.lit(f":{int(seed)}"))
         ) / F.lit(float(2**32))
@@ -2177,7 +2196,7 @@ class Searcher:
         Catalyst folds it into the scan projection; the filter on it runs
         before the TakeOrdered. Nothing materializes corpus-wide."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         # dl (always stored) rides along — token-count-normalized runtime
         # fields are the common case
         if field_values is None:
@@ -2332,7 +2351,7 @@ class Searcher:
         values, exactly ES's text type); docmap stored columns are
         aggregatable doc-values fields. Pure metadata: one docmap
         schema read, no data scan."""
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         rows = [("text", "text", True, False, False),
                 ("url", "keyword", True, True, True),
                 ("dl", "long", False, True, True)]
@@ -2388,9 +2407,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = hits.join(dm, "doc_id").join(field_values, "url")
         names = sorted(filters)
         aggs = [
@@ -2463,9 +2480,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = hits.join(dm, "doc_id").join(
             field_values.select("url", value_field, weight_field), "url"
         )
@@ -2554,7 +2569,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         if field_values is None:
             missing = [f for f in fields if f not in dm.columns]
             if missing:
@@ -2602,9 +2617,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = hits.join(dm, "doc_id").join(field_values, "url")
         names = sorted(filters)
         keys, conds = [], []
@@ -2650,7 +2663,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         cols = [sort_field, metric_field]
         if field_values is None:
             missing = [f for f in cols if f not in dm.columns]
@@ -2715,7 +2728,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", *fields), "url"
         )
@@ -2813,7 +2826,7 @@ class Searcher:
             scored = scored.filter(
                 ~F.col("doc_id").isin(sorted(self.persistent_excluded))
             )
-        dm = spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         out = (
             scored.join(dm.select("doc_id", "url"), "doc_id")
             .join(field_values.select("url", m_field), "url")
@@ -2849,9 +2862,7 @@ class Searcher:
             must_not=must_not,
         )
         if with_url:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            )
+            dm = self.docmap
             return (
                 hits.join(dm.select("doc_id", "url"), "doc_id")
                 .select("doc_id", "url", F.lit(float(boost)).alias("score"))
@@ -2947,9 +2958,7 @@ class Searcher:
             score = F.round(score, round_to)
         cols = ["doc_id", "url"] if with_url else ["doc_id"]
         if with_url:
-            dm = spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id")
         return (
             out.select(*cols, score.alias("score"))
@@ -2987,7 +2996,7 @@ class Searcher:
         the per-value window partitions by the dedup value, so no
         single-partition sort ever sees the full hit set. Either way the
         sub-agg runs over <= shard_size rows."""
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         cols = [field] + ([dedup_field] if dedup_field else [])
         if dedup_field:
             if mode != "or":
@@ -3148,9 +3157,7 @@ class Searcher:
             else F.col("score")
         )
         if with_url:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            )
+            dm = self.docmap
             out = out.join(dm.select("doc_id", "url"), "doc_id")
             cols = ["doc_id", "url", score.alias("score")]
         else:
@@ -3194,7 +3201,7 @@ class Searcher:
         if mode == "and":
             need = self.matching_doc_ids(query, mode="and")
             scores = scores.join(need, "doc_id", "left_semi")
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = scores.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", field), "url"
         )
@@ -3241,7 +3248,7 @@ class Searcher:
         pins = [(u, float(1e9 - i)) for i, u in enumerate(pinned_urls)]
         spark = self.spark
         pin_df = local_frame(spark, pins, "url string, score double")
-        dm = spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         pin_rows = pin_df.join(dm.select("doc_id", "url"), "url")
         if self.persistent_excluded:
             pin_rows = pin_rows.filter(
@@ -3279,7 +3286,7 @@ class Searcher:
         Deterministic url-ordered k cut (equal membership has no
         natural order)."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3319,7 +3326,7 @@ class Searcher:
         weighting); identical here. One hash aggregation over the
         hit-joined field relation."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3358,7 +3365,7 @@ class Searcher:
         has_child_topk, where children are separate rows and a count
         aggregation is unavoidable."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         matched = F.expr(
             f"size(filter({nested_col}, x -> ({predicate})))"
         ).cast("long")
@@ -3398,7 +3405,7 @@ class Searcher:
         count + approx-free count(DISTINCT url) together; the distinct
         rides the same aggregate, bounded by #buckets × #parents."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         base = (
             hits.join(dm.select("doc_id", "url"), "doc_id")
             .join(field_values, "url")
@@ -3441,7 +3448,7 @@ class Searcher:
         Reference parity: ES geo_distance query + geo sort; the query-hit
         intersection mirrors geo_bounding_box above."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3493,7 +3500,7 @@ class Searcher:
         distributed count-by-key."""
         n = float(1 << int(zoom))
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3557,7 +3564,7 @@ class Searcher:
         lon_bits = (nbits + 1) // 2
         lat_bits = nbits // 2
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3632,7 +3639,7 @@ class Searcher:
         aggregation with full map-side combine — four comparisons per
         row, no shuffle beyond the 1-row reduce."""
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3670,7 +3677,7 @@ class Searcher:
         if len(vertices) < 3:
             raise ValueError("geo_polygon needs >= 3 vertices")
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3735,7 +3742,7 @@ class Searcher:
                 self.spark, [], "doc_id long, url string, score double"
             )
         hits = self.matching_doc_ids(" ".join(terms), mode="or")
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         return (
             hits.join(dm.select("doc_id", "url"), "doc_id")
             .select("doc_id", "url", F.lit(1.0).alias("score"))
@@ -3783,7 +3790,7 @@ class Searcher:
             "ring string, km_from double, km_to double",
         )
         hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", lat_field, lon_field), "url"
         )
@@ -3857,7 +3864,7 @@ class Searcher:
             meta = json.load(fh)
         if meta["min_gram"] <= len(pre) <= meta["max_gram"]:
             rel = (
-                self.spark.read.parquet(en_dir)
+                read_relation(self.spark, en_dir)
                 .filter(F.col("gram") == pre)
                 .select("term")
             )
@@ -3945,7 +3952,7 @@ class Searcher:
             .agg(F.count(F.lit(1)).cast("long").alias("score"))
             .filter(F.col("score") >= int(min_children))
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         out = matched.join(dm.select("doc_id", "url"), "url")
         if self.persistent_excluded:
             out = out.filter(
@@ -3979,7 +3986,7 @@ class Searcher:
             parent_query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         urls = hits.join(dm.select("doc_id", "url"), "doc_id").select(
             F.col("url").alias(parent_col)
         )
@@ -4038,9 +4045,7 @@ class Searcher:
             .select(F.col(parent_col).alias("url"))
             .distinct()
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         live = parents.join(dm, "url")
         if self.persistent_excluded:
             live = live.filter(
@@ -4084,9 +4089,7 @@ class Searcher:
         scores = self.relational_scores(query)
         if round_to is not None:
             scores = scores.withColumn("score", F.round("score", round_to))
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         fv_cols = ["url", collapse_field] + (
             [ext_id_col] if ext_id_col else []
         )
@@ -4141,9 +4144,7 @@ class Searcher:
             .limit(max(int(k), int(fetch_k or 0)))
         )
         if with_url:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").select("doc_id", "url", "score")
         return out
 
@@ -4225,9 +4226,7 @@ class Searcher:
         if boost_mode not in combines:
             raise ValueError(f"unknown function_score boost_mode: {boost_mode!r}")
         scores = self.relational_scores(query)
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = (
             scores.join(dm, "doc_id")
             .join(field_values.select("url", field), "url")
@@ -4270,9 +4269,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "url")
+        dm = self.docmap.select("doc_id", "url")
         j = hits.join(dm, "doc_id").join(field_values, "url")
         g = j.groupBy(*sources).agg(F.count("*").alias("doc_count"))
         if after is not None:
@@ -4338,9 +4335,7 @@ class Searcher:
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         if with_url:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -4466,9 +4461,7 @@ class Searcher:
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         if with_url:
-            dm = spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -4481,9 +4474,7 @@ class Searcher:
         because the caller asked for exactly that (the ``global``
         aggregation scope and query-less aggregations). Stays a pure
         column projection: no postings read, no shuffle."""
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id")
+        dm = self.docmap.select("doc_id")
         if self.persistent_excluded:
             dm = dm.filter(
                 ~F.col("doc_id").isin(sorted(self.persistent_excluded))
@@ -4496,7 +4487,7 @@ class Searcher:
         """(doc_id, url, field) for EVERY live doc — the global-scope
         sibling of ``_hit_fields`` (which is hit-scoped). Stored-field
         path reads the docmap column; external path joins by url."""
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self.docmap
         if self.persistent_excluded:
             dm = dm.filter(
                 ~F.col("doc_id").isin(sorted(self.persistent_excluded))
@@ -4562,9 +4553,7 @@ class Searcher:
         if round_to is not None:
             out = out.withColumn("score", F.round("score", round_to))
         if with_url:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "url")
+            dm = self.docmap.select("doc_id", "url")
             out = out.join(dm, "doc_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
             )
@@ -4634,9 +4623,7 @@ class Searcher:
         exclusion; unknown ids simply match nothing (ES semantics)."""
         spark = self.spark
         req = local_frame(spark, [(u,) for u in urls], "url string")
-        dm = spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("url", "doc_id")
+        dm = self.docmap.select("url", "doc_id")
         ids = dm.join(F.broadcast(req), "url").select("doc_id")
         out = self.relational_scores(query).join(ids, "doc_id", "left_semi")
         return self._finish_topk(out, k, round_to, fetch_k, with_url)
@@ -4930,8 +4917,8 @@ def multi_match_topk(
         out = out.withColumn("score", F.round("score", round_to))
     if with_url:
         first = fields[0]
-        dm = spark.read.parquet(
-            os.path.join(field_indexes[first][0], "docmap")
+        dm = read_relation(
+            spark, os.path.join(field_indexes[first][0], "docmap")
         ).select("doc_id", "url")
         out = out.join(dm, "doc_id").orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
@@ -5015,8 +5002,8 @@ def combined_fields_topk(
     dls = None
     for f in fields:
         boost = float(field_indexes[f][1])
-        dm = spark.read.parquet(
-            os.path.join(field_indexes[f][0], "docmap")
+        dm = read_relation(
+            spark, os.path.join(field_indexes[f][0], "docmap")
         ).select("doc_id", (F.lit(boost) * F.col("dl")).alias(f"_dl_{f}"))
         dls = dm if dls is None else dls.join(dm, "doc_id")
     dlc = dls.select(
@@ -5044,8 +5031,8 @@ def combined_fields_topk(
         else F.col("score")
     )
     if with_url:
-        dm0 = spark.read.parquet(
-            os.path.join(field_indexes[fields[0]][0], "docmap")
+        dm0 = read_relation(
+            spark, os.path.join(field_indexes[fields[0]][0], "docmap")
         ).select("doc_id", "url")
         out = out.join(dm0, "doc_id")
         cols = ["doc_id", "url", score.alias("score")]
@@ -5143,7 +5130,7 @@ def build_edge_ngrams(
     if not 1 <= int(min_gram) <= int(max_gram):
         raise ValueError("need 1 <= min_gram <= max_gram")
     ts = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        read_relation(spark, os.path.join(index_dir, "term_stats"))
         .select("term")
         .distinct()
         .filter(F.length("term") >= int(min_gram))

@@ -44,6 +44,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_es_spark.functions.extract import extract_text
 from kafka_es_spark.functions.tokenize import tokens
@@ -303,6 +304,44 @@ def load_stats(index_dir: str) -> dict:
         return json.load(f)
 
 
+# the footer key under which Spark's parquet writer records the data schema
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The Spark data schema recorded in the footer of the first data file
+    under ``path`` (walked in sorted order, skipping the ``_``/``.`` names
+    Spark skips), or None if no file carries it."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.startswith(("_", ".")):
+                continue
+            meta = pq.read_metadata(os.path.join(root, name)).metadata or {}
+            if SPARK_ROW_METADATA in meta:
+                return T.StructType.fromJson(json.loads(meta[SPARK_ROW_METADATA]))
+    return None
+
+
+def read_relation(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    data schema comes from one footer's Spark row metadata (read with
+    pyarrow on the driver) and is handed to ``spark.read.schema``, so
+    opening a relation runs no Spark job. Partition columns are still
+    inferred from the directory names, which reads no file. A relation
+    whose files carry no Spark metadata falls back to inference.
+
+    Engine relations are written by Spark in one schema per relation, so
+    this is the schema inference would find; query paths read index
+    relations only through here."""
+    schema = _footer_schema(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_tokens(spark: SparkSession, index_dir: str) -> DataFrame:
     """The base unit's tokenized corpus (doc_id, url, dl, terms,
     *store_fields) as build_index wrote it. An index built before
@@ -417,14 +456,12 @@ def reindex(
 
     s = Searcher(spark, src_index_dir, cache=False)
     try:
-        dm = spark.read.parquet(os.path.join(src_index_dir, "docmap"))
+        dm = s.docmap
         if query is not None:
             hits = s.matching_doc_ids(query, mode=mode, must_not=must_not)
             urls = hits.join(dm.select("doc_id", "url"), "doc_id").select("url")
         else:
-            from kafka_es_spark.operators.deletes import read_tombstone_ids
-
-            dead = read_tombstone_ids(spark, src_index_dir)
+            dead = s.persistent_excluded
             urls = dm.select("doc_id", "url")
             if dead:
                 # bounded by MAX_PENDING_TOMBSTONES — safe as a literal filter

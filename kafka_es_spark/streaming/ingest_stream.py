@@ -58,9 +58,9 @@ def append_epoch(
     batch: DataFrame,
     index_dir: str,
     epoch: int,
-    seg_bits: int = spimi.SEG_BITS,
+    seg_bits: int | None = None,
     n_term_buckets: int = 8,
-    codec: str = "varint",
+    codec: str | None = None,
     with_positions: bool = False,
     store_fields: tuple[str, ...] = (),
 ) -> dict | None:
@@ -73,7 +73,9 @@ def append_epoch(
     recorded values (stats.json): a mismatched epoch would fork the docmap
     schema (Spark's partition discovery silently drops columns from one
     side) or re-code stats.json so that the existing units no longer
-    decode — so it raises instead."""
+    decode — so it raises instead. ``codec`` and ``seg_bits`` left unset
+    take the recorded values (varint and ``spimi.SEG_BITS`` for a new
+    index)."""
     os.makedirs(index_dir, exist_ok=True)
     man = Manifest(index_dir)
     name = f"epoch-{epoch:08d}"
@@ -86,6 +88,10 @@ def append_epoch(
         return None
     t0 = time.time()
     stats = _read_stats(index_dir)
+    if codec is None:
+        codec = stats.get("codec", "varint")
+    if seg_bits is None:
+        seg_bits = stats.get("seg_bits", spimi.SEG_BITS)
     store_fields = tuple(store_fields)
     recorded = tuple(stats.get("store_fields") or ())
     if os.path.exists(os.path.join(index_dir, "stats.json")):

@@ -481,7 +481,7 @@ def test_append_epoch_rejects_codec_and_seg_bits_mismatch(spark, tmp_path):
     batch = gen_pages(spark, 20, seed=4, partitions=1)
     with pytest.raises(ValueError, match="codec"):
         append_epoch(spark, batch, idx, epoch=0, seg_bits=6,
-                     n_term_buckets=4)
+                     n_term_buckets=4, codec="varint")
     with pytest.raises(ValueError, match="seg_bits"):
         append_epoch(spark, batch, idx, epoch=0, seg_bits=7,
                      n_term_buckets=4, codec="bp128")
@@ -493,3 +493,32 @@ def test_append_epoch_rejects_codec_and_seg_bits_mismatch(spark, tmp_path):
                  n_term_buckets=4, codec="bp128")
     s = Searcher(spark, idx, cache=False)
     assert len(s.topk("data index", k=5).collect()) == 5
+
+
+def test_stream_into_bp128_index_with_narrow_segs(spark, tmp_path):
+    """The stream sink passes no codec or seg_bits, so each epoch takes
+    the index's recorded ones: streaming into a ``bp128``, ``seg_bits=6``
+    index appends (it used to raise at the first epoch) and every unit,
+    base and streamed, decodes."""
+    idx = str(tmp_path / "bp")
+    src = str(tmp_path / "src")
+    build_index(spark, gen_pages(spark, 60, seed=3, partitions=2), idx,
+                seg_bits=6, n_term_buckets=4, codec="bp128")
+    batch = gen_pages(spark, 40, seed=5, partitions=1).withColumn(
+        "url", F.concat(F.lit("https://streamed.example/"), F.col("url"))
+    )
+    batch.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(batch.schema).parquet(src)
+    q = stream_pages_to_index(stream, idx, str(tmp_path / "ckpt"), once=True,
+                              n_term_buckets=4)
+    q.awaitTermination(300)
+    st = load_stats(idx)
+    assert (st["codec"], st["seg_bits"], st["n_docs"]) == ("bp128", 6, 100)
+    assert any(e["name"].startswith("epoch-") for e in Manifest(idx).entries())
+    s = Searcher(spark, idx, cache=False)
+    try:
+        hits = s.topk("data index search", k=100, with_url=True).collect()
+    finally:
+        s.close()
+    assert any(r["url"].startswith("https://streamed.example/") for r in hits)
+    assert any(not r["url"].startswith("https://streamed.example/") for r in hits)
