@@ -451,26 +451,13 @@ def phrase_prefix_topk(
     every expansion term (MultiPhraseQuery's Σ-idf), so scoring stays
     deterministic and oracle-checkable."""
     from kafka_es_spark.functions.tokenize import tokenize_py
+    from kafka_es_spark.operators.wand import TOPK_SCHEMA, index_prefix_terms
 
     slots = tokenize_py(phrase)
     if not slots:
-        from kafka_es_spark.operators.wand import TOPK_SCHEMA
-
         return local_frame(spark, [], TOPK_SCHEMA)
-    prefix = slots[-1]
-    rows = (
-        read_relation(spark, os.path.join(index_dir, "term_stats"))
-        .filter(F.col("term").startswith(prefix))
-        .select("term")
-        .distinct()
-        .orderBy("term")
-        .limit(int(max_expansions))
-        .collect()
-    )
-    expansion = [r["term"] for r in rows]
+    expansion = index_prefix_terms(spark, index_dir, slots[-1], max_expansions)
     if not expansion:
-        from kafka_es_spark.operators.wand import TOPK_SCHEMA
-
         return local_frame(spark, [], TOPK_SCHEMA)
     slot_terms = [[t] for t in slots[:-1]] + [expansion]
     return _phrase_topk_slots(

@@ -8,7 +8,8 @@ plans (and the scale arguments) those operators already carry:
 
 * scoring clauses (``match``, ``term``, ``terms``, ``prefix``) become
   relational-BM25 (doc_id, score) frames — O(postings of the clause's
-  terms), pruned scans, one hash aggregation each;
+  terms), pruned scans, one seg-cogroup each that also applies the
+  clause's operator / minimum_should_match;
 * filter-context clauses (``filter``, ``must_not``, ``exists``,
   ``ids``, ``range``, ``match_phrase``, ``match_all``) become doc-id
   sets applied as left-semi/left-anti joins — never touching idf/avgdl
@@ -16,7 +17,9 @@ plans (and the scale arguments) those operators already carry:
 * ``bool`` composes them with Lucene's semantics: every ``must`` and
   ``filter`` gates, any ``must_not`` excludes, ``should`` adds score
   and — when no must/filter exists — at least ``minimum_should_match``
-  (default 1) must match.
+  (default 1) must match. The must/should clauses a doc matched are
+  counted in the same aggregation that sums its score, so no scorer
+  runs twice.
 
 Scoring model: the Lucene scoring-boolean sum — a doc's score is the
 BM25 sum over every scoring clause it matches (must clauses score too).
@@ -57,11 +60,29 @@ def _as_clauses(v) -> list[dict]:
 class _Compiled:
     """A compiled clause: optional score frame (doc_id, score) and an
     optional gate set (doc_id). A scoring clause used in filter context
-    keeps only its gate."""
+    keeps only its gate. ``one_per_doc``: the score frame provably holds
+    one row per doc (a ``relational_scores`` frame or an aggregate), so
+    ``bool`` can count it toward a must/should floor as is."""
 
-    def __init__(self, scores: DataFrame | None, gate: DataFrame | None):
+    def __init__(self, scores: DataFrame | None, gate: DataFrame | None,
+                 one_per_doc: bool = False):
         self.scores = scores
         self.gate = gate
+        self.one_per_doc = one_per_doc
+
+
+def _text_clause(searcher, q: str, scoring: bool, boost: float = 1.0,
+                 **match) -> _Compiled:
+    """A full-text clause over the analyzed ``text`` field: its hit set
+    in filter context, else its BM25 scores — one postings pass either
+    way (``match``: the mode / min_should_match / must_not arguments of
+    ``relational_scores``, applied inside its kernel)."""
+    if not scoring:
+        return _Compiled(None, searcher.matching_doc_ids(q, **match))
+    scores = searcher.relational_scores(q, **match)
+    if boost != 1.0:
+        scores = scores.withColumn("score", F.col("score") * boost)
+    return _Compiled(scores, None, one_per_doc=True)
 
 
 def _min_should_match(value, total: int) -> int:
@@ -155,29 +176,19 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if isinstance(spec, str):
             spec = {"query": spec}
         q = spec["query"]
-        op = spec.get("operator", "or")
         msm = spec.get("minimum_should_match")
-        gate = None
-        if op == "and":
-            gate = searcher.matching_doc_ids(q, mode="and")
+        match = {}
+        if spec.get("operator", "or") == "and":
+            match["mode"] = "and"
         elif msm is not None:
             from kafka_es_spark.functions.tokenize import tokenize_py
 
-            gate = searcher.matching_doc_ids(
-                q,
-                min_should_match=_min_should_match(
-                    msm, len(set(tokenize_py(q)))
-                ),
+            match["min_should_match"] = _min_should_match(
+                msm, len(set(tokenize_py(q)))
             )
-        if not scoring:
-            return _Compiled(
-                None, gate if gate is not None else searcher.matching_doc_ids(q)
-            )
-        scores = searcher.relational_scores(q)
-        boost = float(spec.get("boost", 1.0))
-        if boost != 1.0:
-            scores = scores.withColumn("score", F.col("score") * boost)
-        return _Compiled(scores, gate)
+        return _text_clause(
+            searcher, q, scoring, float(spec.get("boost", 1.0)), **match
+        )
 
     if kind in ("term", "terms"):
         field, spec = _single(body, kind)
@@ -185,10 +196,9 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             spec["value"] if isinstance(spec, dict) else spec
         ]
         if field == "text":
-            q = " ".join(str(v) for v in vals)
-            if not scoring:
-                return _Compiled(None, searcher.matching_doc_ids(q))
-            return _Compiled(searcher.relational_scores(q), None)
+            return _text_clause(
+                searcher, " ".join(str(v) for v in vals), scoring
+            )
         # keyword path: exact match on a stored field (no analysis) —
         # filter context regardless (keyword hits score 1.0 in ES only
         # via constant_score; keep the honest subset)
@@ -209,10 +219,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if not terms:
             empty = local_frame(searcher.spark, [], "doc_id long")
             return _Compiled(None, empty)
-        q = " ".join(terms)
-        if not scoring:
-            return _Compiled(None, searcher.matching_doc_ids(q))
-        return _Compiled(searcher.relational_scores(q), None)
+        return _text_clause(searcher, " ".join(terms), scoring)
 
     if kind in ("wildcard", "fuzzy", "regexp"):
         field, spec = _single(body, kind)
@@ -243,10 +250,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             return _Compiled(
                 None, local_frame(searcher.spark, [], "doc_id long")
             )
-        q = " ".join(terms)
-        if not scoring:
-            return _Compiled(None, searcher.matching_doc_ids(q))
-        return _Compiled(searcher.relational_scores(q), None)
+        return _text_clause(searcher, " ".join(terms), scoring)
 
     if kind == "match_phrase":
         if scoring:
@@ -353,8 +357,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if not scoring:
             gate = None
             for c in comps:
-                ids = c.gate if c.gate is not None else c.scores.select("doc_id")
-                part = ids.select("doc_id").distinct()
+                part = _ids(c).distinct()
                 gate = part if gate is None else gate.unionByName(part)
             return _Compiled(None, gate.distinct())
         tb = float(body.get("tie_breaker", 0.0))
@@ -374,6 +377,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
                 ).alias("score"),
             ),
             None,
+            one_per_doc=True,
         )
 
     if kind == "wrapper":
@@ -424,7 +428,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if not scoring:
             return _Compiled(None, hits.select("doc_id"))
         return _Compiled(
-            hits.select("doc_id", (F.lit(boost) * v).alias("score")), None
+            hits.select("doc_id", (F.lit(boost) * v).alias("score")), None,
+            one_per_doc=True,
         )
 
     if kind == "distance_feature":
@@ -442,7 +447,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if not scoring:
             return _Compiled(None, hits.select("doc_id"))
         return _Compiled(
-            hits.select("doc_id", (F.lit(boost) * v).alias("score")), None
+            hits.select("doc_id", (F.lit(boost) * v).alias("score")), None,
+            one_per_doc=True,
         )
 
     if kind == "match_bool_prefix":
@@ -476,10 +482,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             return _Compiled(
                 None, local_frame(searcher.spark, [], "doc_id long")
             )
-        q = " ".join(terms)
-        if not scoring:
-            return _Compiled(None, searcher.matching_doc_ids(q))
-        return _Compiled(searcher.relational_scores(q), None)
+        return _text_clause(searcher, " ".join(terms), scoring)
 
     if kind == "terms_set":
         # ES terms_set query: docs containing >= m of the terms where m
@@ -500,39 +503,20 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
                 "minimum_should_match"
             )
         if m_field is None:
-            gate = searcher.matching_doc_ids(q, min_should_match=int(m_lit))
-        else:
-            # per-doc m: pruned postings scan of the query terms → ONE
-            # hash aggregation counting distinct matched terms per doc →
-            # docmap join to the per-doc threshold (terms_set_topk's
-            # plan, gate form)
-            from kafka_es_spark.functions.tokenize import tokenize_py
-
-            qterms = sorted(set(tokenize_py(q)))
-            present = sorted(searcher.doc_freqs(qterms))
-            if not present:
-                return _Compiled(
-                    None, local_frame(searcher.spark, [], "doc_id long")
-                )
-            counts = (
-                searcher._postings_rows(searcher._query_segs(present))
-                .groupBy("doc_id")
-                .agg(F.count_distinct("term").alias("__matched"))
+            return _text_clause(
+                searcher, q, scoring, min_should_match=int(m_lit)
             )
-            if searcher.persistent_excluded:
-                counts = counts.filter(
-                    ~F.col("doc_id").isin(
-                        sorted(searcher.persistent_excluded)
-                    )
-                )
-            gate = (
-                counts.join(_stored_col(searcher, m_field), "doc_id")
-                .filter(F.col("__matched") >= F.col(m_field).cast("long"))
-                .select("doc_id")
-            )
+        # per-doc m: terms_set_topk's seg-cogroup kernel gives each
+        # doc's score and matched-term count in one postings pass; the
+        # stored threshold joins on the dense doc id
+        hits = (
+            searcher.matched_scores(q)
+            .join(_stored_col(searcher, m_field), "doc_id")
+            .filter(F.col("_matched") >= F.col(m_field).cast("long"))
+        )
         if not scoring:
-            return _Compiled(None, gate)
-        return _Compiled(searcher.relational_scores(q), gate)
+            return _Compiled(None, hits.select("doc_id"))
+        return _Compiled(hits.select("doc_id", "score"), None, one_per_doc=True)
 
     if kind == "knn":
         # ES 8.12+ knn QUERY clause (vs the top-level knn section): a
@@ -555,11 +539,8 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         embeddings = emb
         flt = body.get("filter")
         if flt is not None:
-            comp = _compile(searcher, flt, scoring=False, emb=emb)
-            gate = comp.gate
-            if gate is None:
-                gate = _inner_scores(searcher, comp).select("doc_id")
-            urls = gate.select("doc_id").join(dm, "doc_id")
+            gate = _ids(_compile(searcher, flt, scoring=False, emb=emb))
+            urls = gate.join(dm, "doc_id")
             if "url" in embeddings.columns:
                 embeddings = embeddings.join(
                     urls.select("url"), "url", "left_semi"
@@ -647,10 +628,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             return _Compiled(
                 None, local_frame(searcher.spark, [], "doc_id long")
             )
-        q = " ".join(sorted(ranked))
-        if not scoring:
-            return _Compiled(None, searcher.matching_doc_ids(q))
-        return _Compiled(searcher.relational_scores(q), None)
+        return _text_clause(searcher, " ".join(sorted(ranked)), scoring)
 
     if kind == "pinned":
         # ES pinned query: the listed ids (urls here — the engine's _id)
@@ -684,14 +662,10 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
 def _inner_scores(searcher, comp: _Compiled) -> DataFrame:
     """(doc_id, score) for a compiled inner query; a pure filter-context
     inner query scores 1.0 per doc (ES: _score inside script_score /
-    function_score is 1 for non-scoring queries). A clause-level gate
-    (match operator=and / msm) applies before rescoring."""
+    function_score is 1 for non-scoring queries)."""
     if comp.scores is None:
         return comp.gate.select("doc_id", F.lit(1.0).alias("score"))
-    out = comp.scores
-    if comp.gate is not None:
-        out = out.join(comp.gate.select("doc_id"), "doc_id", "left_semi")
-    return out
+    return comp.scores
 
 
 def _join_doc_fields(searcher, scores: DataFrame, fields) -> tuple:
@@ -992,169 +966,158 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
         # (filter context, score 0); a fully EMPTY bool is match_all
         base_ids = searcher.match_all_ids()
         for c in nots:
-            neg = c.gate if c.gate is not None else c.scores.select("doc_id")
-            base_ids = base_ids.join(
-                neg.select("doc_id"), "doc_id", "left_anti"
-            )
+            base_ids = base_ids.join(_ids(c), "doc_id", "left_anti")
         return _Compiled(None, base_ids)
 
-    # score = sum over every scoring clause matched (Lucene boolean sum);
-    # a clause carrying its own gate (match operator=and / msm) only
-    # contributes where that gate passes — partial matches of an AND
-    # clause must not leak score (ES semantics)
-    #
-    # Scale: when must/filter clauses exist, the hit set is their
-    # intersection — so every SHOULD frame semi-joins that pre-gate
-    # BEFORE the score union. A should clause whose score relation is
-    # corpus-sized (rank_feature / distance_feature read the whole
-    # docmap) must never drag the corpus through the sum aggregation
-    # only to be gated afterwards; the pre-gate bounds the union by the
-    # hit set. Semantically a no-op (the same gates re-apply below —
-    # semi-joins commute), and ES itself scores should clauses only for
-    # docs the required clauses admit.
-    pre_gate = None
-    if scoring and should and (must or filt):
-        for c in must:
-            ids = c.gate if c.gate is not None else (
-                c.scores.select("doc_id") if c.scores is not None else None
-            )
-            if ids is None:
-                continue
-            ids = ids.select("doc_id")
-            pre_gate = ids if pre_gate is None else pre_gate.join(
-                ids, "doc_id", "left_semi"
-            )
-        for c in filt:
-            if c.gate is not None:
-                g = c.gate.select("doc_id")
-                pre_gate = g if pre_gate is None else pre_gate.join(
-                    g, "doc_id", "left_semi"
-                )
-
-    def _pregated(frame):
-        if pre_gate is None:
-            return frame
-        return frame.join(pre_gate, "doc_id", "left_semi")
-
-    score_frames = [
-        c.scores if c.gate is None
-        else c.scores.join(c.gate.select("doc_id"), "doc_id", "left_semi")
-        for c in must
-        if c.scores is not None
-    ] + [
-        _pregated(
-            c.scores if c.gate is None
-            else c.scores.join(c.gate.select("doc_id"), "doc_id", "left_semi")
-        )
-        for c in should
-        if c.scores is not None
+    # Gates without a scorer: filter clauses and gate-only must clauses
+    # (range / exists / ids ...). A scored must clause gates by being
+    # COUNTED in the must aggregation below, so its scorer runs once.
+    gates = [_ids(c) for c in must if c.scores is None] + [
+        _ids(c) for c in filt
     ]
-    # a filter-context clause inside should (range/exists/ids/terms —
-    # gate-only, no scores) still ADMITS its docs to the hit set in ES;
-    # it just contributes 0 to the score sum. Without this, a doc
-    # matching only such a should clause silently vanishes. Scoring
-    # context only — in filter context the bool must stay a pure gate
-    # (callers like constant_score require inner.gate).
-    if scoring:
-        score_frames += [
-            _pregated(c.gate.select("doc_id", F.lit(0.0).alias("score")))
-            for c in should
-            if c.scores is None and c.gate is not None
-        ]
-    scores = None
-    for f_ in score_frames:
-        scores = f_ if scores is None else scores.unionByName(f_)
-    if scores is not None:
-        scores = scores.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        # ES: a bool-level boost multiplies the whole bool's summed score
-        b_boost = float(body.get("boost", 1.0))
-        if b_boost != 1.0:
-            scores = scores.withColumn(
-                "score", F.col("score") * b_boost
-            )
-
-    # hit set: every must matches (its gate if present, else its scores'
-    # doc set), every filter matches
-    base = scores
-    if base is None:
-        # pure filter-context bool: hits from the must/filter gates
-        gates = [c.gate for c in must if c.gate is not None] + [
-            c.gate for c in filt if c.gate is not None
-        ]
-        # minimum_should_match over filter-context should clauses (ES
-        # default: 1 when should is the only content, i.e. no gates)
-        msm = (
-            _min_should_match(
-                body.get("minimum_should_match", 1), len(should)
-            )
-            if should
+    must_parts = [(c.scores, c.one_per_doc) for c in must if c.scores is not None]
+    should_parts = [
+        (c.scores, c.one_per_doc) for c in should if c.scores is not None
+    ]
+    if must_parts:
+        # the hit set is the scored musts' (each counted) and the gates'
+        base = _summed(must_parts, floor=len(must_parts))
+    else:
+        # should semantics: gating applies only when there is no
+        # must/filter (then >= minimum_should_match should clauses must
+        # hit, default 1)
+        should_floor = (
+            _min_should_match(body.get("minimum_should_match", 1), len(should))
+            if should and not must and not filt
             else 0
         )
-        should_union = None
-        if should:
-            for c in should:
-                ids = c.gate if c.gate is not None else c.scores.select("doc_id")
-                part = ids.select("doc_id").distinct()
-                should_union = (
-                    part if should_union is None
-                    else should_union.unionByName(part)
-                )
-        if not gates:
-            if should_union is None:
-                raise DSLError("bool resolved to no concrete hit set")
-            # should-only bool of pure filter clauses (e.g.
-            # {bool:{should:[{range:...}]}}): the hit set IS the docs
-            # satisfying >= msm should clauses — ES does not reject it
-            base = (
-                should_union.groupBy("doc_id")
-                .agg(F.count("*").alias("m"))
-                .filter(F.col("m") >= max(msm, 1))
-                .select("doc_id")
+        # a filter-context clause inside should (range/exists/ids/terms —
+        # gate-only, no scores) still ADMITS its docs to the hit set in
+        # ES; it just contributes 0 to the score sum. Without this, a doc
+        # matching only such a should clause silently vanishes. Only when
+        # the bool scores — in filter context a gate-only bool must stay
+        # a pure gate (callers like constant_score require inner.gate).
+        if scoring or should_parts:
+            should_parts += [
+                (c.gate.select("doc_id", F.lit(0.0).alias("score")), False)
+                for c in should if c.scores is None
+            ]
+        if not should_parts:
+            return _gate_bool(body, gates, should, nots)
+        # Scale: every should frame semi-joins the gates BEFORE the score
+        # aggregation, so a corpus-sized should frame is cut to the hit
+        # set first (semantically a no-op: the gates re-apply below).
+        pre_gate = None
+        for g in gates:
+            pre_gate = g if pre_gate is None else pre_gate.join(
+                g, "doc_id", "left_semi"
             )
-        else:
-            base = gates[0].select("doc_id").distinct()
-            for g in gates[1:]:
-                base = base.join(g.select("doc_id"), "doc_id", "left_semi")
-            if should_union is not None and msm > 0:
-                ok = (
-                    should_union.groupBy("doc_id")
-                    .agg(F.count("*").alias("m"))
-                    .filter(F.col("m") >= msm).select("doc_id")
-                )
-                base = base.join(ok, "doc_id", "left_semi")
-        for c in nots:
-            base = base.join(c.gate, "doc_id", "left_anti")
-        return _Compiled(None, base.select("doc_id"))
+        if pre_gate is not None:
+            should_parts = [
+                (f_.join(pre_gate, "doc_id", "left_semi"), one)
+                for f_, one in should_parts
+            ]
+        base = _summed(should_parts, floor=should_floor)
+    for g in gates:
+        base = base.join(g, "doc_id", "left_semi")
+    for c in nots:
+        base = base.join(_ids(c), "doc_id", "left_anti")
+    if must_parts and should_parts:
+        # beside musts a should clause only adds score to the must hits:
+        # its rows are left-joined onto the hit-sized must result and
+        # summed there, so a corpus-sized should frame (rank_feature /
+        # distance_feature read the whole docmap) never enters an
+        # aggregation whole, and no must scorer runs a second time. One
+        # should frame of one row per doc needs no aggregation at all.
+        extra = None
+        for frame, _ in should_parts:
+            f_ = frame.select("doc_id", F.col("score").alias("__s"))
+            extra = f_ if extra is None else extra.unionByName(f_)
+        base = base.join(extra, "doc_id", "left")
+        if len(should_parts) > 1 or not should_parts[0][1]:
+            base = base.groupBy("doc_id", "score").agg(
+                F.sum("__s").alias("__s")
+            )
+        base = base.select("doc_id", (
+            F.col("score") + F.coalesce(F.col("__s"), F.lit(0.0))
+        ).alias("score"))
+    # ES: a bool-level boost multiplies the whole bool's summed score
+    b_boost = float(body.get("boost", 1.0))
+    if b_boost != 1.0:
+        base = base.withColumn("score", F.col("score") * b_boost)
+    return _Compiled(base, None, one_per_doc=True)
 
-    for c in must:
-        gate = c.gate if c.gate is not None else (
-            c.scores.select("doc_id") if c.scores is not None else None
-        )
-        if gate is None:
-            raise DSLError("must clause resolved to no hit set")
-        base = base.join(gate.select("doc_id"), "doc_id", "left_semi")
-    for c in filt:
-        base = base.join(c.gate.select("doc_id"), "doc_id", "left_semi")
-    # should semantics: scores already added; gating applies only when
-    # there is no must/filter (then >= minimum_should_match must hit)
-    if should and not must and not filt:
-        msm = _min_should_match(
-            body.get("minimum_should_match", 1), len(should)
-        )
-        if msm > 1:
-            union = None
-            for c in should:
-                ids = c.gate if c.gate is not None else c.scores.select("doc_id")
-                part = ids.select("doc_id").distinct()
-                union = part if union is None else union.unionByName(part)
-            ok = (
-                union.groupBy("doc_id").agg(F.count("*").alias("m"))
-                .filter(F.col("m") >= msm).select("doc_id")
+
+def _summed(parts, floor: int) -> DataFrame:
+    """One (doc_id, score) row per doc: the score summed over the frames
+    ``parts`` [(frame, one row per doc)], kept where the doc is in at
+    least ``floor`` of them. The count comes from the same aggregation,
+    and a lone frame that already holds one row per doc needs none."""
+    if len(parts) == 1 and floor <= 1:
+        frame, one_per_doc = parts[0]
+        if one_per_doc:
+            return frame.select("doc_id", "score")
+        return frame.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    union = None
+    for frame, one_per_doc in parts:
+        if floor > 1 and not one_per_doc:
+            # a frame repeating a doc would count more than once
+            frame = frame.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        f_ = frame.select("doc_id", "score")
+        union = f_ if union is None else union.unionByName(f_)
+    if floor <= 1:
+        return union.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    return (
+        union.groupBy("doc_id")
+        .agg(F.sum("score").alias("score"), F.count("*").alias("__n"))
+        .filter(F.col("__n") >= floor)
+        .select("doc_id", "score")
+    )
+
+
+def _ids(comp: _Compiled) -> DataFrame:
+    """A compiled clause's hit set (doc_id)."""
+    return (comp.gate if comp.gate is not None else comp.scores).select(
+        "doc_id"
+    )
+
+
+def _gate_bool(body: dict, gates, should, nots) -> _Compiled:
+    """A bool with no score frame (filter context): its hit set from the
+    must/filter gates and >= minimum_should_match (default 1) should
+    clauses, minus must_not."""
+    ok = None
+    if should:
+        # a should-only bool of pure filter clauses (e.g.
+        # {bool:{should:[{range:...}]}}) is the docs satisfying >= msm
+        # should clauses — ES does not reject it
+        union = _ids(should[0]).distinct()
+        for c in should[1:]:
+            union = union.unionByName(_ids(c).distinct())
+        ok = (
+            union.groupBy("doc_id")
+            .agg(F.count("*").alias("m"))
+            .filter(
+                F.col("m")
+                >= _min_should_match(
+                    body.get("minimum_should_match", 1), len(should)
+                )
             )
+            .select("doc_id")
+        )
+    if not gates:
+        if ok is None:
+            raise DSLError("bool resolved to no concrete hit set")
+        base = ok
+    else:
+        base = gates[0].distinct()
+        for g in gates[1:]:
+            base = base.join(g, "doc_id", "left_semi")
+        if ok is not None:
             base = base.join(ok, "doc_id", "left_semi")
     for c in nots:
-        base = base.join(c.gate.select("doc_id"), "doc_id", "left_anti")
-    return _Compiled(base, None)
+        base = base.join(_ids(c), "doc_id", "left_anti")
+    return _Compiled(None, base)
 
 
 def _collect_match_terms(clause) -> list[str]:
@@ -1321,12 +1284,9 @@ def search(
             # semi-join; gate size tracks filter selectivity, so the
             # join strategy is left to AQE (a selective gate
             # broadcasts, an unselective one must not).
-            comp = _compile(searcher, flt, scoring=False)
-            gate = comp.gate
-            if gate is None:
-                gate = _inner_scores(searcher, comp).select("doc_id")
+            gate = _ids(_compile(searcher, flt, scoring=False))
             dm = searcher.docmap.select("doc_id", "url")
-            urls = gate.select("doc_id").join(dm, "doc_id")
+            urls = gate.join(dm, "doc_id")
             if "url" in embeddings.columns:
                 embeddings = embeddings.join(
                     urls.select("url"), "url", "left_semi"
@@ -1427,8 +1387,6 @@ def search(
         out = comp.gate.select(
             "doc_id", F.lit(0.0).alias("score")
         )
-    if comp.gate is not None and comp.scores is not None:
-        out = out.join(comp.gate.select("doc_id"), "doc_id", "left_semi")
     if searcher.persistent_excluded:
         out = out.filter(
             ~F.col("doc_id").isin(sorted(searcher.persistent_excluded))
@@ -1448,11 +1406,8 @@ def search(
     # (ES behavior).
     pf = body.get("post_filter")
     if pf is not None:
-        pcomp = _compile(searcher, pf, scoring=False)
-        pgate = pcomp.gate
-        if pgate is None:
-            pgate = _inner_scores(searcher, pcomp).select("doc_id")
-        out = out.join(pgate.select("doc_id"), "doc_id", "left_semi")
+        pgate = _ids(_compile(searcher, pf, scoring=False))
+        out = out.join(pgate, "doc_id", "left_semi")
     offset = int(body.get("from", 0))
     sort = body.get("sort")
     if sort:
@@ -1778,13 +1733,10 @@ def _run_aggs(
             raise DSLError("filters agg needs filters.{name: clause}")
         parts = []
         for name in sorted(named):
-            comp = _compile(searcher, named[name], scoring=False)
-            gate = comp.gate
-            if gate is None:
-                gate = _inner_scores(searcher, comp).select("doc_id")
+            gate = _ids(_compile(searcher, named[name], scoring=False))
             parts.append(
                 hits.select("doc_id")
-                .join(gate.select("doc_id"), "doc_id", "left_semi")
+                .join(gate, "doc_id", "left_semi")
                 .agg(F.count(F.lit(1)).alias("doc_count"))
                 .select(F.lit(name).alias("bucket"), "doc_count")
             )
@@ -1896,14 +1848,8 @@ def _run_aggs(
         if kind == "filter":
             if not isinstance(params, dict) or not params:
                 raise DSLError("filter agg needs a filter clause")
-            comp = _compile(searcher, params, scoring=False)
-            gate = (
-                comp.gate if comp.gate is not None
-                else _inner_scores(searcher, comp).select("doc_id")
-            )
-            base = hits.select("doc_id").join(
-                gate.select("doc_id"), "doc_id", "left_semi"
-            )
+            gate = _ids(_compile(searcher, params, scoring=False))
+            base = hits.select("doc_id").join(gate, "doc_id", "left_semi")
         else:
             base = searcher.match_all_ids().select("doc_id")
         exprs = [F.count(F.lit(1)).alias("doc_count")]

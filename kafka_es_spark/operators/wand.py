@@ -269,15 +269,24 @@ def counted_range_topk(
 DOC_FREQS_MAX_ROWS = 1_000_000
 
 
-def _load_doc_freqs(ts_dir: str, terms=None) -> dict[str, int] | None:
-    """term → df summed over the term_stats partials, read with pyarrow
-    (no Spark job): every term, or only those of ``terms`` present in the
-    index. None when the relation has more than ``DOC_FREQS_MAX_ROWS``
-    rows (the footers' row counts; no data is read to find that out)."""
+def _term_dictionary(ts_dir: str):
+    """The term_stats partials as a pyarrow dataset, or None when they
+    hold more than ``DOC_FREQS_MAX_ROWS`` rows (the footers' row counts;
+    no data is read to find that out)."""
     import pyarrow.dataset as ds
 
     dset = ds.dataset(ts_dir, format="parquet", partitioning="hive")
-    if dset.count_rows() > DOC_FREQS_MAX_ROWS:
+    return None if dset.count_rows() > DOC_FREQS_MAX_ROWS else dset
+
+
+def _load_doc_freqs(ts_dir: str, terms=None) -> dict[str, int] | None:
+    """term → df summed over the term_stats partials, read with pyarrow
+    (no Spark job): every term, or only those of ``terms`` present in the
+    index. None above ``DOC_FREQS_MAX_ROWS`` rows."""
+    import pyarrow.dataset as ds
+
+    dset = _term_dictionary(ts_dir)
+    if dset is None:
         return None
     flt = None if terms is None else ds.field("term").isin(list(terms))
     agg = dset.to_table(columns=["term", "df"], filter=flt).group_by(
@@ -306,6 +315,36 @@ def index_doc_freqs(spark: SparkSession, index_dir: str, terms) -> dict[str, int
         .collect()
     )
     return {r["term"]: int(r["df"]) for r in rows}
+
+
+def index_prefix_terms(
+    spark: SparkSession, index_dir: str, prefix: str, limit: int
+) -> list[str]:
+    """The first ``limit`` distinct index terms starting with ``prefix``,
+    in alphabetic order (the match_phrase_prefix expansion rule): a
+    pyarrow read of the matching ``term`` values, or above
+    ``DOC_FREQS_MAX_ROWS`` a Spark scan of ``term_stats``."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    ts_dir = os.path.join(index_dir, "term_stats")
+    dset = _term_dictionary(ts_dir)
+    if dset is not None:
+        col = dset.to_table(
+            columns=["term"],
+            filter=pc.starts_with(ds.field("term"), pattern=prefix),
+        ).column("term")
+        return sorted(set(col.to_pylist()))[: int(limit)]
+    rows = (
+        read_relation(spark, ts_dir)
+        .filter(F.col("term").startswith(prefix))
+        .select("term")
+        .distinct()
+        .orderBy("term")
+        .limit(int(limit))
+        .collect()
+    )
+    return [r["term"] for r in rows]
 
 
 class Searcher:
@@ -1039,6 +1078,13 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not, weights=weights,
         )
+        return self._join_fields(hits, field_values, field)
+
+    def _join_fields(
+        self, hits: DataFrame, field_values: DataFrame | None, field: str
+    ) -> DataFrame:
+        """``hits`` (one row per doc_id, any other columns kept) joined to
+        each doc's url and ``field`` value, as in ``_hit_fields``."""
         dm = self.docmap
         if field_values is None:
             if field not in dm.columns:
@@ -1162,15 +1208,15 @@ class Searcher:
         the ``per_bucket`` best-scoring hits — rows (field, doc_count,
         rnk, url, score) ordered by bucket rank then hit rank.
 
-        Plan: the hit set (posting algebra) ⨝ docmap ⨝ field_values is
-        the bucketed relation; scores come from the relational BM25
-        scorer (the same segment-decode path as range_filtered_topk)
-        joined on doc_id; ranking is a window partitioned BY THE BUCKET
-        KEY — per-bucket local sorts, never a global one — and bucket
-        selection is a tiny (#distinct values)-row aggregate broadcast
-        back. ``tie`` optionally overrides the within-bucket tie-break
-        column (default internal doc_id; pass e.g. a corpus id derived
-        from the url when comparing against an external ranking).
+        Plan: the scored hit set (``relational_scores``, one postings
+        pass that applies the match floor and must_not) ⨝ docmap ⨝
+        field_values is the bucketed relation; ranking is a window
+        partitioned BY THE BUCKET KEY — per-bucket local sorts, never a
+        global one — and bucket selection is a tiny (#distinct
+        values)-row aggregate broadcast back. ``tie`` optionally
+        overrides the within-bucket tie-break column (default internal
+        doc_id; pass e.g. a corpus id derived from the url when comparing
+        against an external ranking).
         Scores are OR-mode BM25 sums over the doc's matched query terms
         — on an AND/msm hit set every doc matched its scoring terms, so
         these equal the bool-query scores ES reports in top_hits."""
@@ -1186,18 +1232,14 @@ class Searcher:
         )
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return local_frame(spark, [], out_schema)
-        weights = self._query_weights(qterms)
-        if not weights or (mode == "and" and len(weights) < len(qterms)):
-            return local_frame(spark, [], out_schema)
-        scored = self.relational_scores(query, weights)
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-            weights=weights,
+        scored = self.relational_scores(
+            query, mode=mode, min_should_match=min_should_match,
+            must_not=must_not,
         )
-        js = j.join(scored, "doc_id")
+        j = self._join_fields(scored, field_values, field)
+        js = j
         if round_to is not None:
-            js = js.withColumn("score", F.round("score", round_to))
+            js = j.withColumn("score", F.round("score", round_to))
         js = js.withColumn(
             "_tie", tie if tie is not None else F.col("doc_id")
         )
@@ -1642,55 +1684,102 @@ class Searcher:
         }
 
     def relational_scores(
-        self, query: str, weights: dict[str, float] | None = None
+        self,
+        query: str,
+        weights: dict[str, float] | None = None,
+        mode: str = "or",
+        min_should_match: int | None = None,
+        must_not: str | None = None,
     ) -> DataFrame:
-        """Full OR-mode BM25 scores of every live doc matching >= 1 query
-        term, as a relational (doc_id, score) DataFrame (unrounded) —
-        the building block multi-field scoring composes over. Same
-        segment-decode path as range_filtered_topk: cost O(postings of
-        the query terms), pruned scan, one hash aggregation; pending
-        tombstones excluded. ``weights``: the query terms' idfs when the
-        caller already collected them (``_query_weights``), so the
-        term_stats collect is not repeated."""
+        """BM25 scores of every live doc in the query's hit set, as a
+        relational (doc_id, score) DataFrame (unrounded), one row per doc
+        — the building block multi-field scoring and the DSL compose
+        over. The hit set follows ``matching_doc_ids``: OR, ``mode="and"``
+        or ``min_should_match`` over the query terms, minus ``must_not``
+        docs and pending tombstones; a hit's score is the OR-mode sum over
+        the query terms it contains. ``weights``: the query terms' idfs
+        when the caller already looked them up (``_query_weights``); only
+        its keys, the terms present in the index, are scored.
+
+        The match floor and the negation apply inside the one seg-cogroup
+        kernel of ``matched_scores``, so a scored clause reads its
+        postings once and needs no ``matching_doc_ids`` gate."""
+        return self.matched_scores(
+            query, weights, mode, min_should_match, must_not
+        ).drop("_matched")
+
+    def matched_scores(
+        self,
+        query: str,
+        weights: dict[str, float] | None = None,
+        mode: str = "or",
+        min_should_match: int | None = None,
+        must_not: str | None = None,
+    ) -> DataFrame:
+        """``relational_scores`` with a third column, ``_matched``: how
+        many of the query terms the doc contains — the input of a per-doc
+        match floor (terms_set's ``minimum_should_match_field``).
+
+        One seg-cogroup: postings and range-dls are both seg-organized and
+        a doc lives in exactly ONE range, so per-range numpy scoring (dl
+        gathered position-indexed, per-doc sums pooled in term-lex order)
+        yields final rows with no doc-keyed shuffle — the same plan shape
+        and per-doc sums as topk. ``_matched`` is the doc's posting count
+        from ``_pool``, which IS count_distinct(term): a doc appears at
+        most once per term (one epoch owns a doc, one merged segment row
+        per (term, seg, shard)); the match floor keeps docs whose count
+        reaches it. The negated terms' ids decode from the same pruned
+        scan."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
-        spark = self.spark
+        schema = "doc_id long, score double, _matched long"
         qterms = sorted(set(tokenize_py(query)))
-        empty = "doc_id long, score double"
+        neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(spark, [], empty)
+            return local_frame(self.spark, [], schema)
+        msm = min_should_match
+        if msm is not None and (msm < 1 or mode == "and"):
+            raise ValueError(
+                "min_should_match must be >= 1 and combines with mode='or' "
+                "(mode='and' IS min_should_match=#terms)"
+            )
         if weights is None:
             weights = self._query_weights(qterms)
-        if not weights:
-            return local_frame(spark, [], empty)
-        segs = self._query_segs(list(weights))
-        # One seg-cogroup instead of the old postings⨝dl doc_id shuffle join
-        # + hash aggregation (3 Exchanges → 0): postings and range-dls are
-        # both seg-organized, a doc lives in exactly ONE range, so per-range
-        # numpy scoring (dl gathered position-indexed, per-doc sums pooled
-        # in term-lex order) yields final (doc_id, score) rows with no
-        # doc-keyed shuffle at all — the same plan shape and the same
-        # per-doc sums as topk (guide §2.4).
-        dls_rel = self._query_dls(segs)
+        if not weights or (mode == "and" and len(weights) < len(qterms)) or (
+            msm is not None and len(weights) < msm
+        ):
+            return local_frame(self.spark, [], schema)
+        need = msm if msm is not None else (len(weights) if mode == "and" else 1)
         avgdl, codec = self.avgdl, self.codec
         wmap = {t: float(w) for t, w in weights.items()}
         excluded = self.persistent_excluded or None
 
         def score_range(key, pdf, dpdf):
-            if len(pdf) == 0:
+            pos = pdf[pdf["term"].isin(wmap)]
+            if pos["term"].nunique() < need:
                 return pd.DataFrame(
                     {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
+                     "score": pd.Series(dtype=np.float64),
+                     "_matched": pd.Series(dtype=np.int64)}
                 )
-            uids, _, scores = _pool_cursors(
-                _seg_cursors(key, pdf, dpdf, wmap, avgdl, codec), excluded
+            uids, cnt, scores = _pool_cursors(
+                _seg_cursors(key, pos, dpdf, wmap, avgdl, codec), excluded
             )
-            return pd.DataFrame({"doc_id": uids, "score": scores})
+            keep = cnt >= need
+            neg = pdf[pdf["term"].isin(neg_terms)]
+            if len(neg):
+                neg_ids = np.concatenate(
+                    [decode_segment(r, codec)[0]
+                     for r in neg.to_dict("records")]
+                )
+                keep &= ~np.isin(uids, neg_ids)
+            return pd.DataFrame(
+                {"doc_id": uids[keep], "score": scores[keep],
+                 "_matched": cnt[keep]}
+            )
 
-        return (
-            segs.groupBy("seg")
-            .cogroup(dls_rel.groupBy("seg"))
-            .applyInPandas(score_range, "doc_id long, score double")
+        return self._score_cogroup(
+            sorted(set(wmap) | set(neg_terms)), score_range, schema
         )
 
     def _score_cogroup(self, terms, kernel, schema: str) -> DataFrame:
@@ -1733,47 +1822,25 @@ class Searcher:
         index term_stats and avgdl from the global stats, exactly as ES
         keeps index-level stats under filters.
 
-        Plan: the allowed doc set = query hit set (posting algebra) ⨝
-        docmap ⨝ field_values with the range predicate pushed into the
-        scan; scoring is fully RELATIONAL over the index — posting
-        segments of the query terms decode to (doc_id, term, tf) rows in
-        mapInPandas (pruned scan, no corpus re-tokenize), range_dls
-        decode to (doc_id, dl), and one hash aggregation sums the BM25
-        contributions. Cost ~ O(postings of the query terms), the same
-        as an exhaustive scorer; joins are plain equi-joins Catalyst is
-        free to reorder/broadcast."""
-        from kafka_es_spark.functions.tokenize import tokenize_py
-
-        spark = self.spark
+        Plan: ``relational_scores`` scores the query's hit set (match
+        floor and must_not applied in its one seg-cogroup); the hits join
+        the docmap for their url and semi-join the field_values urls in
+        range (the predicate pushed into the scan). Cost ~ O(postings of
+        the query terms) for one postings pass; both joins are hit-sized
+        equi-joins Catalyst is free to broadcast."""
         k = max(k, fetch_k or 0)
-        qterms = sorted(set(tokenize_py(query)))
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(spark, [], TOPK_SCHEMA)
-        weights = self._query_weights(qterms)
-        if not weights or (mode == "and" and len(weights) < len(qterms)):
-            return local_frame(spark, [], TOPK_SCHEMA)
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not, weights=weights,
-        )
         dm = self.docmap.select("doc_id", "url")
-        allowed = (
-            hits.join(dm, "doc_id")
-            .join(field_values.select("url", field), "url")
-            .filter((F.col(field) >= lo) & (F.col(field) <= hi))
-            .select("doc_id")
-        )
-        # r6: scoring reuses the relational_scores seg-cogroup (final
-        # (doc_id, score) rows with zero doc_id-keyed exchanges) instead of
-        # the old postings ⨝ allowed ⨝ dl_rows ⨝ weights doc_id-shuffle
-        # chain + hash aggregation (guide §2.4). Same weights derivation
-        # (tokenize_py + index idf), same per-contribution arithmetic;
-        # the per-doc sum order is now deterministic (term-lex) where the
-        # hash aggregate's was not. The allowed set stays a plain
-        # equi-join on the rank-sized score relation.
+        allowed = field_values.filter(
+            (F.col(field) >= lo) & (F.col(field) <= hi)
+        ).select("url")
         out = (
-            self.relational_scores(query, weights)
-            .join(allowed, "doc_id")
+            self.relational_scores(
+                query, mode=mode, min_should_match=min_should_match,
+                must_not=must_not,
+            )
+            .join(dm, "doc_id")
+            .join(allowed, "url", "left_semi")
+            .select("doc_id", "score")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
         )
@@ -2781,54 +2848,14 @@ class Searcher:
         (global min_should_match is the constant-m special case, served
         by ``topk(min_should_match=...)``).
 
-        Plan: pruned postings scan → per-doc (distinct-match count, BM25
-        score) in ONE hash aggregation → dense-id docmap join to the m
-        field → filter → TakeOrdered. The m relation joins url-keyed
-        like every field relation; no driver collect anywhere."""
-        from kafka_es_spark.functions.tokenize import tokenize_py
-
-        spark = self.spark
-        qterms = sorted(set(tokenize_py(query)))
-        empty = "doc_id long, url string, score double"
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(spark, [], empty)
-        weights = self._query_weights(qterms)
-        if not weights:
-            return local_frame(spark, [], empty)
-        # r6: one seg-cogroup computes (score, matched) per doc — the old
-        # postings ⨝ dl_rows doc_id-shuffle join + hash aggregation
-        # (3 Exchanges) is gone (guide §2.4, same kernel as
-        # relational_scores). matched = postings per doc, which IS
-        # count_distinct(term): a doc appears at most once per term (one
-        # epoch owns a doc, one merged segment row per (term, seg, shard)).
-        avgdl, codec = self.avgdl, self.codec
-        wmap = {t: float(w) for t, w in weights.items()}
-
-        def score_range(key, pdf, dpdf):
-            if len(pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64),
-                     "_matched": pd.Series(dtype=np.int64)}
-                )
-            uids, matched, scores = _pool_cursors(
-                _seg_cursors(key, pdf, dpdf, wmap, avgdl, codec)
-            )
-            return pd.DataFrame(
-                {"doc_id": uids, "score": scores, "_matched": matched}
-            )
-
-        scored = self._score_cogroup(
-            list(weights), score_range,
-            "doc_id long, score double, _matched long",
-        )
-        if self.persistent_excluded:
-            scored = scored.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        Plan: ``matched_scores`` (per-doc BM25 score and matched-term
+        count in one seg-cogroup) → dense-id docmap join to the m field →
+        filter → TakeOrdered. The m relation joins url-keyed like every
+        field relation; no driver collect anywhere."""
         dm = self.docmap
         out = (
-            scored.join(dm.select("doc_id", "url"), "doc_id")
+            self.matched_scores(query)
+            .join(dm.select("doc_id", "url"), "doc_id")
             .join(field_values.select("url", m_field), "url")
             .filter(F.col("_matched") >= F.col(m_field))
         )
@@ -3193,14 +3220,11 @@ class Searcher:
         proximity signals (function_score_topk covers the multiplicative
         family).
 
-        Plan: relational BM25 scores (pruned postings scan, one hash
-        agg) → dense-id docmap join → url-keyed field join → one Column
+        Plan: relational BM25 scores (one seg-cogroup; ``mode="and"``
+        applies in it) → dense-id docmap join → url-keyed field join → one Column
         expression → TakeOrdered. The feature join touches only hit
         rows."""
-        scores = self.relational_scores(query)
-        if mode == "and":
-            need = self.matching_doc_ids(query, mode="and")
-            scores = scores.join(need, "doc_id", "left_semi")
+        scores = self.relational_scores(query, mode=mode)
         dm = self.docmap
         j = scores.join(dm.select("doc_id", "url"), "doc_id").join(
             field_values.select("url", field), "url"

@@ -302,9 +302,9 @@ class _CountingTermStats:
     ],
 )
 def test_scorer_collects_term_stats_once(spark, idx, docfields, scorer, cache):
-    """A scorer looks its terms' df up once and passes the weights down to
-    matching_doc_ids: a cached Searcher answers from its open-time term
-    dictionary (no term_stats collect), an uncached one collects once.
+    """A scorer looks its terms' df up once: a cached Searcher answers
+    from its open-time term dictionary (no term_stats collect), an
+    uncached one collects once.
     query_string_topk looks up its scoring, ``+`` and ``-`` terms together
     instead of once per clause."""
     s = Searcher(spark, idx, cache=cache)

@@ -1,0 +1,371 @@
+"""A scored clause reads its postings once.
+
+``relational_scores`` applies the match floor (``mode="and"``,
+``min_should_match``) and ``must_not`` inside its seg-cogroup kernel, the
+DSL ``bool`` counts the must (or, with none, the should) clauses a doc
+matched in its one score aggregation and sums should scores onto the must
+hits, and ``range_filtered_topk`` semi-joins the allowed set to the
+scores. Every result here equals the two-pass formulation these replaced:
+OR-mode ``relational_scores`` gated by ``matching_doc_ids`` over the same
+terms, with each must clause's hit set taken from its scorer again."""
+
+import itertools
+import shutil
+
+import pytest
+
+from pyspark.sql import functions as F
+
+from kafka_es_spark.functions.tokenize import tokenize_py
+from kafka_es_spark.operators import wand
+from kafka_es_spark.operators.deletes import add_tombstones
+from kafka_es_spark.operators.positions import (
+    _phrase_topk_slots, build_position_index, phrase_prefix_topk,
+)
+from kafka_es_spark.operators.searchapi import (
+    _compile, _min_should_match, search,
+)
+from kafka_es_spark.operators.wand import Searcher, index_prefix_terms
+from kafka_es_spark.plans.build_index import build_index, read_relation
+
+SEG_BITS = 6
+Q = "data index search query"
+MATCH_MODES = {
+    "or": {},
+    "and": {"mode": "and"},
+    "msm": {"min_should_match": 2},
+    "must_not": {"must_not": "search"},
+}
+
+
+@pytest.fixture(scope="module")
+def base_idx(spark, pages, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("single_pass") / "idx")
+    pg = pages.withColumn(
+        "need", (F.lit(1) + F.abs(F.hash("url")) % 3).cast("long")
+    )
+    build_index(
+        spark, pg, d, seg_bits=SEG_BITS, n_term_buckets=8,
+        store_fields=("need",),
+    )
+    build_position_index(spark, pg, d)
+    return d
+
+
+@pytest.fixture(scope="module", params=[0, 5], ids=["live", "5-tombstones"])
+def searcher(request, spark, base_idx, tmp_path_factory):
+    d = base_idx
+    if request.param:
+        d = str(tmp_path_factory.mktemp("single_pass_del") / "idx")
+        shutil.copytree(base_idx, d)
+        s = Searcher(spark, d, cache=False)
+        hits = sorted(r["doc_id"] for r in s.matching_doc_ids(Q).collect())
+        s.close()
+        add_tombstones(spark, d, doc_ids=hits[:: len(hits) // 5][:5])
+    s = Searcher(spark, d)
+    assert len(s.persistent_excluded) == request.param
+    yield s
+    s.close()
+
+
+@pytest.fixture(scope="module")
+def fields(pages):
+    return pages.select(
+        "url", (F.abs(F.hash("url")) % 100).cast("long").alias("prio")
+    )
+
+
+def _rows(df, digits=9):
+    return sorted(
+        (int(r["doc_id"]), round(float(r["score"]), digits))
+        for r in df.collect()
+    )
+
+
+# --- the two-pass formulation the single-pass compile replaced -----------
+
+
+def _two_pass(s, clause, scoring=True):
+    """(scores, gate) of a match / range / bool clause, compiled the
+    two-pass way: OR-mode scores plus a ``matching_doc_ids`` gate."""
+    kind, body = next(iter(clause.items()))
+    if kind == "match":
+        spec = body["text"]
+        spec = {"query": spec} if isinstance(spec, str) else spec
+        q, msm = spec["query"], spec.get("minimum_should_match")
+        gate = None
+        if spec.get("operator") == "and":
+            gate = s.matching_doc_ids(q, mode="and")
+        elif msm is not None:
+            m = _min_should_match(msm, len(set(tokenize_py(q))))
+            gate = s.matching_doc_ids(q, min_should_match=m)
+        if not scoring:
+            return None, gate if gate is not None else s.matching_doc_ids(q)
+        scores = s.relational_scores(q)
+        boost = float(spec.get("boost", 1.0))
+        if boost != 1.0:
+            scores = scores.withColumn("score", F.col("score") * boost)
+        return scores, gate
+    if kind == "range":
+        field, spec = next(iter(body.items()))
+        return None, s.docmap.filter(F.col(field) >= spec["gte"]).select(
+            "doc_id"
+        )
+    assert kind == "bool"
+    return _two_pass_bool(s, body), None
+
+
+def _ids(scores, gate):
+    return (gate if gate is not None else scores).select("doc_id")
+
+
+def _gated(scores, gate):
+    return scores if gate is None else scores.join(gate, "doc_id", "left_semi")
+
+
+def _two_pass_bool(s, body):
+    def clauses(key, scoring=True):
+        return [_two_pass(s, c, scoring) for c in body.get(key, [])]
+
+    must, should = clauses("must"), clauses("should")
+    filt, nots = clauses("filter", False), clauses("must_not", False)
+    pre = None
+    if should and (must or filt):
+        for c in must + filt:
+            ids = _ids(*c)
+            pre = ids if pre is None else pre.join(ids, "doc_id", "left_semi")
+
+    def pregated(f):
+        return f if pre is None else f.join(pre, "doc_id", "left_semi")
+
+    frames = [_gated(*c) for c in must if c[0] is not None] + [
+        pregated(_gated(*c) if c[0] is not None else
+                 c[1].select("doc_id", F.lit(0.0).alias("score")))
+        for c in should
+    ]
+    scores = frames[0]
+    for f in frames[1:]:
+        scores = scores.unionByName(f)
+    base = scores.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    if float(body.get("boost", 1.0)) != 1.0:
+        base = base.withColumn("score", F.col("score") * body["boost"])
+    for c in must + filt:
+        base = base.join(_ids(*c), "doc_id", "left_semi")
+    if should and not must and not filt:
+        msm = _min_should_match(body.get("minimum_should_match", 1), len(should))
+        if msm > 1:
+            u = None
+            for c in should:
+                part = _ids(*c).distinct()
+                u = part if u is None else u.unionByName(part)
+            ok = u.groupBy("doc_id").count().filter(F.col("count") >= msm)
+            base = base.join(ok.select("doc_id"), "doc_id", "left_semi")
+    for c in nots:
+        base = base.join(_ids(*c), "doc_id", "left_anti")
+    return base
+
+
+def _match(q, **spec):
+    return {"match": {"text": {"query": q, **spec} if spec else q}}
+
+
+RANGE = {"range": {"dl": {"gte": 20}}}
+SHAPES = {
+    "must+filter": {"bool": {"must": [_match("data index")], "filter": [RANGE]}},
+    "two_musts": {"bool": {"must": [_match("data search"), _match("index query")]}},
+    "must+should": {"bool": {
+        "must": [_match("data")], "should": [_match("index term")]}},
+    "musts+shoulds": {"bool": {
+        "must": [_match("data search"), _match("index query")],
+        "should": [_match("index"), _match("term query")]}},
+    "must+range_should": {"bool": {
+        "must": [_match("data")], "should": [RANGE]}},
+    "should_only": {"bool": {"should": [_match("data"), _match("index")]}},
+    "should_msm": {"bool": {
+        "should": [_match("data"), _match("index"), _match("query")],
+        "minimum_should_match": 2}},
+    "must_not": {"bool": {
+        "must": [_match("data index")], "must_not": [_match("search")]}},
+    "nested": {"bool": {
+        "must": [{"bool": {"should": [_match("data"), _match("query")]}}],
+        "should": [_match("index")], "filter": [RANGE]}},
+    "boost": {"bool": {
+        "must": [_match("data index")], "should": [_match("search")],
+        "boost": 2.5}},
+    "match_and": _match("data index", operator="and"),
+    "match_msm": _match(Q, minimum_should_match=2),
+    "bool_match_and_msm": {"bool": {
+        "must": [_match("data index", operator="and")],
+        "should": [_match(Q, minimum_should_match="75%", boost=0.5)]}},
+}
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_dsl_shape_equals_two_pass(searcher, shape):
+    s, query = searcher, SHAPES[shape]
+    got = _compile(s, query, scoring=True)
+    assert got.gate is None and got.one_per_doc
+    scores, gate = _two_pass(s, query)
+    want = _rows(_gated(scores, gate))
+    assert want and _rows(got.scores) == want
+
+
+@pytest.mark.parametrize("mode", sorted(MATCH_MODES))
+def test_relational_scores_equal_gated_or_scores(searcher, mode):
+    """The in-kernel match floor and negation select exactly the
+    ``matching_doc_ids`` hit set, and the scores stay the OR-mode sums to
+    the last bit."""
+    s, kw = searcher, MATCH_MODES[mode]
+    want = _rows(
+        s.relational_scores(Q).join(s.matching_doc_ids(Q, **kw), "doc_id",
+                                    "left_semi"),
+        digits=17,
+    )
+    assert want and _rows(s.relational_scores(Q, **kw), digits=17) == want
+
+
+def test_relational_scores_absent_term_rules(searcher):
+    s = searcher
+    q = Q + " zzzabsent"
+    assert s.relational_scores(q, mode="and").collect() == []
+    assert s.relational_scores(q, min_should_match=5).collect() == []
+    assert _rows(s.relational_scores(q, min_should_match=4)) == _rows(
+        s.relational_scores(Q, mode="and")
+    )
+    with pytest.raises(ValueError):
+        s.relational_scores(Q, mode="and", min_should_match=2)
+
+
+@pytest.mark.parametrize("mode", sorted(MATCH_MODES))
+def test_range_filtered_equals_two_pass(searcher, fields, mode):
+    s, kw = searcher, MATCH_MODES[mode]
+    lo, hi, k = 10, 70, 15
+    dm = s.docmap.select("doc_id", "url")
+    allowed = (
+        s.matching_doc_ids(Q, **kw).join(dm, "doc_id")
+        .join(fields, "url")
+        .filter((F.col("prio") >= lo) & (F.col("prio") <= hi))
+        .select("doc_id")
+    )
+    want = [
+        tuple(r) for r in
+        s.relational_scores(Q).join(allowed, "doc_id")
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        .select("doc_id", F.round("score", 4).alias("score")).collect()
+    ]
+    got = [
+        tuple(r) for r in
+        s.range_filtered_topk(Q, fields, "prio", lo, hi, k=k, **kw).collect()
+    ]
+    assert want and got == want
+
+
+def test_terms_set_field_clause_equals_terms_set_topk(searcher):
+    """The DSL terms_set clause with minimum_should_match_field counts
+    matches with terms_set_topk's kernel: same hits, same scores."""
+    s = searcher
+    terms = ["data", "index", "search", "query"]
+    clause = {"terms_set": {"text": {
+        "terms": terms, "minimum_should_match_field": "need"}}}
+    got = _compile(s, clause, scoring=True)
+    want = _rows(
+        s.terms_set_topk(" ".join(terms), s.docmap.select("url", "need"),
+                         "need", k=10**6, round_to=None)
+    )
+    assert want and _rows(got.scores) == want
+    gate = _compile(s, clause, scoring=False).gate
+    assert sorted(r["doc_id"] for r in gate.collect()) == [d for d, _ in want]
+
+
+# --- plans and jobs --------------------------------------------------------
+
+
+def _executed_plan(df) -> str:
+    """The final adaptive plan of ``df`` after it ran (the top-level
+    initial plan that follows it is cut off)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("\n+- == Initial Plan ==")[0]
+
+
+def test_dsl_body_plans_one_cogroup_and_no_sort_merge_join(searcher):
+    """The serve mix's dsl body (bool must match + filter range): its one
+    scored clause is the only cogroup, and no gate shuffles."""
+    body = {"query": {"bool": {
+        "must": [{"match": {"text": "data index"}}],
+        "filter": [{"range": {"dl": {"gte": 20}}}],
+    }}, "size": 10}
+    plan = _executed_plan(search(searcher, body))
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_must_with_feature_should_sums_onto_must_hits(searcher):
+    """A should clause beside a scored must only adds score to the must
+    hits: the corpus-sized rank_feature frame is left-joined onto the
+    must result, never unioned into a score aggregation whole."""
+    body = {"query": {"bool": {
+        "must": [{"match": {"text": "data index"}}],
+        "should": [{"rank_feature": {
+            "field": "dl", "saturation": {"pivot": 30.0}}}],
+    }}, "size": 10}
+    plan = _executed_plan(search(searcher, body))
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "LeftOuter" in plan and "Union" not in plan, plan
+
+
+def test_range_filtered_or_plans_no_grouped_hit_set(searcher, fields):
+    plan = _executed_plan(
+        searcher.range_filtered_topk(Q, fields, "prio", 10, 70, k=5)
+    )
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+_group = itertools.count()
+
+
+def _warm_jobs(spark, make) -> int:
+    """Spark jobs of the second run of ``make()`` (the first warms up)."""
+    sc = spark.sparkContext
+    make().collect()
+    g = f"single-pass-{next(_group)}"
+    sc.setJobGroup(g, g)
+    try:
+        make().collect()
+        return len(sc.statusTracker().getJobIdsForGroup(g))
+    finally:
+        sc.setJobGroup(f"{g}-done", "")
+
+
+@pytest.mark.parametrize("prefix, limit", [("d", 50), ("t", 3), ("zzq", 50)])
+def test_prefix_expansion_equals_spark_scan(spark, base_idx, monkeypatch,
+                                            prefix, limit):
+    driver = index_prefix_terms(spark, base_idx, prefix, limit)
+    want = [
+        r["term"] for r in
+        read_relation(spark, base_idx + "/term_stats")
+        .filter(F.col("term").startswith(prefix)).select("term").distinct()
+        .orderBy("term").limit(limit).collect()
+    ]
+    monkeypatch.setattr(wand, "DOC_FREQS_MAX_ROWS", 0)
+    assert driver == want
+    assert index_prefix_terms(spark, base_idx, prefix, limit) == want
+
+
+def test_phrase_prefix_expands_without_a_job(spark, base_idx):
+    """A warm phrase_prefix_topk runs the jobs of the phrase it expands to
+    and no more."""
+    expansion = index_prefix_terms(spark, base_idx, "dat", 50)
+    assert expansion
+
+    def slots():
+        return _phrase_topk_slots(
+            spark, base_idx, [["the"], expansion], 10, 0, 4, False, None
+        )
+
+    def prefixed():
+        return phrase_prefix_topk(spark, base_idx, "the dat", k=10)
+
+    assert prefixed().collect() == slots().collect()
+    assert _warm_jobs(spark, prefixed) == _warm_jobs(spark, slots)
