@@ -93,13 +93,13 @@ def _ensure_index(spark, sf_dir) -> str:
     corpus; returns the index dir. The version in the path is bumped
     whenever a cached index from an earlier layout must not be reused:
     v2 format-2 postings, v3 store_fields, v4 the tokens/ relation the
-    positions and bigram builds read."""
+    bigram build reads, v5 format-3 postings that carry their positions."""
     import os
 
     from kafka_es_spark.plans.build_index import build_index
     from kafka_es_spark.sources.pages import docs_as_pages
 
-    idx = f"/tmp/kafka_es_index_v4_{_corpus_tag(sf_dir)}"
+    idx = f"/tmp/kafka_es_index_v5_{_corpus_tag(sf_dir)}"
     if not os.path.exists(os.path.join(idx, "_manifest", "term_stats.json")):
         # lang rides in the docmap as a stored field (ES doc-values
         # analogue) — the x8_facet_stored entry aggregates it with no
@@ -125,7 +125,7 @@ def _ensure_title_index(spark, sf_dir) -> str:
     from kafka_es_spark.plans.build_index import build_index
     from kafka_es_spark.sources.pages import docs_as_pages
 
-    idx = f"/tmp/kafka_es_index_v2_title_{_corpus_tag(sf_dir)}"
+    idx = f"/tmp/kafka_es_index_v3_title_{_corpus_tag(sf_dir)}"
     if not os.path.exists(os.path.join(idx, "_manifest", "term_stats.json")):
         pages = docs_as_pages(spark, sf_dir).withColumn(
             "text", F.array_join(F.slice(_tok("text"), 1, TITLE_TOKENS), " ")
@@ -211,7 +211,7 @@ def _ensure_reindexed(spark, sf_dir) -> str:
     from kafka_es_spark.sources.pages import docs_as_pages
 
     idx = _ensure_index(spark, sf_dir)
-    ridx = f"/tmp/kafka_es_reindex_v1_{_corpus_tag(sf_dir)}"
+    ridx = f"/tmp/kafka_es_reindex_v2_{_corpus_tag(sf_dir)}"
     if not os.path.exists(os.path.join(ridx, "_manifest", "term_stats.json")):
         reindex(
             spark, idx, docs_as_pages(spark, sf_dir), ridx,
@@ -267,26 +267,16 @@ PHRASE = ["part", "filter"]  # bigram present at every driver scale
 
 def _q_phrase_topk(spark, sf_dir):
     """X8 phrase (ES match_phrase, slop=0): exact-adjacency matching over
-    the positional relation (positions/ — per-doc delta-encoded token
-    positions beside the postings). Weight = Σ slot idf (Lucene
+    the postings' position column (pos_blob — per-doc delta-encoded token
+    positions). Weight = Σ slot idf (Lucene
     PhraseQuery), tf = phrase occurrences, BM25 saturation vs dl."""
     from kafka_es_spark.operators.positions import phrase_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = phrase_topk(
         spark, idx, " ".join(PHRASE), k=TOPK, fetch_k=TOPK * 3, with_url=True
     )
     return _topk_by_corpus_id(out)
-
-
-def _ensure_positions(spark, sf_dir, idx):
-    from kafka_es_spark.operators.positions import build_position_index
-    from kafka_es_spark.plans.manifest import Manifest
-    from kafka_es_spark.sources.pages import docs_as_pages
-
-    if not Manifest(idx).is_complete("positions"):
-        build_position_index(spark, docs_as_pages(spark, sf_dir), idx)
 
 
 PHRASE_SLOP = 2
@@ -300,7 +290,6 @@ def _q_sloppy_phrase_topk(spark, sf_dir):
     from kafka_es_spark.operators.positions import phrase_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = phrase_topk(
         spark, idx, " ".join(PHRASE), k=TOPK, slop=PHRASE_SLOP,
         fetch_k=TOPK * 3, with_url=True,
@@ -319,7 +308,6 @@ def _q_phrase_prefix_topk(spark, sf_dir):
     from kafka_es_spark.operators.positions import phrase_prefix_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = phrase_prefix_topk(
         spark, idx, f"{PP_FIRST} {PP_PREFIX}", k=TOPK, fetch_k=TOPK * 3,
         with_url=True,
@@ -1197,7 +1185,6 @@ def _q_intervals(spark, sf_dir):
     from kafka_es_spark.operators.positions import intervals_unordered_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = intervals_unordered_topk(
         spark, idx, IV_ANCHOR, IV_OTHER, max_gaps=IV_GAPS,
         k=TOPK * 3, with_url=True,
@@ -1884,7 +1871,6 @@ def _q_span_not(spark, sf_dir):
     from kafka_es_spark.operators.positions import span_not_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = span_not_topk(
         spark, idx, SN_INC, SN_EXC, pre=SN_PRE, post=SN_POST,
         k=TOPK * 3, with_url=True,
@@ -2013,7 +1999,6 @@ def _q_span_first(spark, sf_dir):
     from kafka_es_spark.operators.positions import span_first_topk
 
     idx = _ensure_index(spark, sf_dir)
-    _ensure_positions(spark, sf_dir, idx)
     out = span_first_topk(
         spark, idx, SF_TERM, SF_END, k=TOPK * 3, with_url=True
     )
@@ -2243,7 +2228,7 @@ def _q_delete_by_query(spark, sf_dir):
     from kafka_es_spark.operators.wand import wand_topk
 
     idx = _ensure_index(spark, sf_dir)
-    didx = f"/tmp/kafka_es_dbq_v1_{_corpus_tag(sf_dir)}"
+    didx = f"/tmp/kafka_es_dbq_v2_{_corpus_tag(sf_dir)}"
     marker = os.path.join(didx, "_dbq_done")
     if not os.path.exists(marker):
         shutil.rmtree(didx, ignore_errors=True)
@@ -2273,7 +2258,7 @@ def _q_update_by_query(spark, sf_dir):
     from kafka_es_spark.operators.wand import Searcher
 
     idx = _ensure_index(spark, sf_dir)
-    uidx = f"/tmp/kafka_es_ubq_v1_{_corpus_tag(sf_dir)}"
+    uidx = f"/tmp/kafka_es_ubq_v2_{_corpus_tag(sf_dir)}"
     marker = os.path.join(uidx, "_ubq_done")
     if not os.path.exists(marker):
         shutil.rmtree(uidx, ignore_errors=True)

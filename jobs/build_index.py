@@ -39,11 +39,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--seg-bits", type=int, default=17)
     p.add_argument("--codec", choices=["varint", "bp128"], default="varint")
     p.add_argument("--resume", action="store_true")
-    p.add_argument("--positions", action="store_true",
-                   help="also build the positional relation (phrase / "
-                        "match_phrase_prefix queries; ~tokens/postings x "
-                        "the posting shuffle, like Lucene "
-                        "index_options=positions)")
     p.add_argument("--store-fields", default=None, metavar="F1,F2",
                    help="comma-separated page columns to store in the "
                         "docmap (doc-values tier: --facet lookups, DSL "
@@ -82,12 +77,6 @@ def main(argv: list[str] | None = None) -> None:
                 f for f in (args.store_fields or "").split(",") if f
             ),
         )
-        if args.positions:
-            from kafka_es_spark.operators.positions import build_position_index
-
-            manifest["positions"] = build_position_index(
-                spark, pages, args.output
-            )
         json.dump(manifest, sys.stdout, indent=2)
         print()
     finally:

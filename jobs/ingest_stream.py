@@ -39,9 +39,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--trigger", type=int, default=10)
     p.add_argument("--max-files-per-trigger", type=int, default=10)
     p.add_argument("--term-buckets", type=int, default=32)
-    p.add_argument("--positions", action="store_true",
-                   help="also append each epoch's positional unit "
-                        "(phrase queries over the streamed index)")
     p.add_argument("--store-fields", default=None, metavar="F1,F2",
                    help="comma-separated page columns stored in the "
                         "docmap (same contract as build_index.py)")
@@ -87,7 +84,6 @@ def main(argv: list[str] | None = None) -> None:
             trigger_seconds=args.trigger,
             n_term_buckets=args.term_buckets,
             once=args.once,
-            with_positions=args.positions,
             compact_every=args.compact_every,
             store_fields=tuple(
                 f for f in (args.store_fields or "").split(",") if f

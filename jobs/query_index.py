@@ -30,7 +30,7 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--min-should-match", type=int, default=None,
                    help="require >= m matching terms (ES minimum_should_match)")
     p.add_argument("--phrase", action="store_true",
-                   help="phrase query (needs positions/); see --slop")
+                   help="phrase query (positions live in postings/); see --slop")
     p.add_argument("--slop", type=int, default=0,
                    help="phrase gap budget (ES match_phrase slop / ordered "
                         "span_near)")

@@ -8,9 +8,9 @@ from 10⁴ small files and pending delete tombstones pile up in ``_deletes/``
 with stats frozen at build time. ``compact_index`` folds everything back to
 one base unit:
 
-* postings and positions: a stored unit row is a run in the index codec
-  (absolute first id, then gaps), so they fold with the build's own
-  encoder — ``spimi.merge_units``: one segment-row shuffle by (term, seg),
+* postings: a stored unit row is a run in the index codec (absolute first
+  id, then gaps, positions alongside), so units fold with the build's own
+  encoder — ``spimi.merge_units``: one unit-row shuffle by (term, seg),
   the shared vectorized merge kernel drops tombstoned ids (with their
   position slices) and re-encodes ONE row per (term, seg). Memory stays
   bounded: a (term, seg) group is ≤ 2^seg_bits postings by construction,
@@ -60,7 +60,8 @@ from kafka_es_spark.operators.deletes import clear_tombstones, read_tombstone_id
 from kafka_es_spark.plans.manifest import Manifest
 from kafka_es_spark.session import local_frame
 
-_SWAP_DIRS = ("postings", "docmap", "range_dls", "term_stats", "positions")
+_SWAP_DIRS = ("postings", "docmap", "range_dls", "term_stats")
+
 
 def recover_swap_dirs(index_dir: str) -> list[str]:
     """Repair a crash inside a compaction swap window: restore any relation
@@ -83,8 +84,6 @@ def recover_swap_dirs(index_dir: str) -> list[str]:
 
 def _swap_in(index_dir: str, name: str) -> None:
     cur = os.path.join(index_dir, name)
-    if not os.path.exists(cur + ".new"):
-        return  # optional relation not part of this compaction
     old = cur + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(cur):
@@ -101,11 +100,14 @@ def compact_index(
     """Merge all build/epoch units into one base unit, applying pending
     tombstones (see module docstring). Returns counters. Quiesce readers
     first; a crash mid-swap is repaired by ``recover_swap_dirs``."""
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
+    from kafka_es_spark.plans.build_index import (
+        BUCKET_SCHEME, check_format, load_stats,
+    )
 
     t0 = time.time()
     recover_swap_dirs(index_dir)
     stats = load_stats(index_dir)
+    check_format(index_dir, stats)
     codec = stats.get("codec", "varint")
     if n_term_buckets is None:
         n_term_buckets = int(stats.get("n_term_buckets") or 8)
@@ -116,35 +118,21 @@ def compact_index(
         else np.empty(0, dtype=np.int64)
     )
 
-    # --- postings and positions: stored rows ARE runs in the index codec
-    # (absolute first id, then gaps), so the build's merge kernel folds
-    # them: one (term, seg) shuffle, tombstoned docs dropped with their
-    # position slices, one row per surviving (term, seg) group. Positions
-    # follow suit so phrase queries stay consistent with the postings.
-    def as_runs(rel: str, *extra: str):
-        return spark.read.parquet(os.path.join(index_dir, rel)).select(
-            "term", "seg", "first_docid", F.col("df_seg").alias("n"),
-            F.col("docs_blob").alias("ids_blob"), "tfs_blob", *extra,
-        )
-
+    # --- postings: stored rows ARE runs in the index codec (absolute first
+    # id, then gaps, positions alongside), so the build's merge kernel
+    # folds them: one (term, seg) shuffle, tombstoned docs dropped with
+    # their position slices, one row per surviving (term, seg) group.
+    runs = spark.read.parquet(os.path.join(index_dir, "postings")).select(
+        "term", "seg", "first_docid", F.col("df_seg").alias("n"),
+        F.col("docs_blob").alias("ids_blob"), "tfs_blob", "pos_blob",
+    )
     spimi.write_units(
         spimi.merge_units(
-            as_runs("postings"), spimi.SEGMENT_SCHEMA,
-            codec=codec, run_codec=codec, dead=dead_arr,
+            runs, spimi.UNIT_SCHEMA, codec=codec, run_codec=codec, dead=dead_arr,
         ),
         n_term_buckets,
         os.path.join(index_dir, "postings.new", "shard=base"),
     )
-    if os.path.isdir(os.path.join(index_dir, "positions")):
-        from kafka_es_spark.operators.positions import POS_UNIT_SCHEMA
-
-        spimi.write_units(
-            spimi.merge_units(
-                as_runs("positions", "pos_blob"), POS_UNIT_SCHEMA, dead=dead_arr
-            ),
-            n_term_buckets,
-            os.path.join(index_dir, "positions.new", "shard=base"),
-        )
 
     # --- docmap: drop tombstoned rows, fold epochs into epoch=base --------
     # stored fields (ES doc-values analogue) ride along — the recorded

@@ -1,32 +1,25 @@
-"""Positional index + phrase queries (ES match_phrase analogue).
+"""Positional queries (ES match_phrase, span and intervals analogues).
 
 The reference delegates phrase search to ES, whose postings carry term
-positions (Lucene index_options=positions). Here positions live in a
-SEPARATE optional relation ``positions/`` beside ``postings/`` — phrase
-queries are rarer than term queries, and keeping positions out of the main
-segment format keeps the hot posting shuffle at format-2 size; the
-positional build is its own job over the tokenized corpus build_index
-wrote to ``tokens/`` (the same rows, so the relations agree by
-construction).
+positions (Lucene ``index_options=positions``, ES's default for text
+fields). Here too positions are a column of the postings: every unit row
+of ``postings/`` (format 3, ``spimi.UNIT_SCHEMA``) carries, per (term,
+doc-range),
 
-Row format (one row per (term, doc-range), same doc-range salt as X4/X5):
-
-    term, seg, df_seg, first_docid, last_docid,
-    docs_blob  — delta-gap varint doc ids (as postings)
-    tfs_blob   — varint per-doc occurrence counts
+    term, seg, df_seg, cf_seg, first_docid, last_docid,
+    docs_blob  — delta-gap doc ids (index codec)
+    tfs_blob   — per-doc occurrence counts (index codec)
     pos_blob   — varint per-doc DELTA-encoded token positions,
                  concatenated in doc order (sum(tf) values)
-    bucket     — term-hash bucket (same md5 scheme as postings pruning)
+    bucket     — term-hash bucket (md5 scheme, as for pruning)
 
-Build is the SPIMI two-stage shape, on the postings' own encoder: the
-position runs are ``spimi.pack_runs`` with a position stream, merged by
-``spimi.merge_units`` — ONE shuffle by (term, seg) and the shared merge
-kernel, which also gathers each doc's position slice. The bucket column
-and the unit write are ``spimi.write_units``, as for postings. The
-position payload makes this exchange carry ~one value per token
-occurrence — inherently ~(tokens/postings)× the format-2 posting shuffle,
-which is exactly why it is opt-in (Lucene pays the same ratio for
-index_options=positions).
+The build packs each doc's positions into the same map-side runs as its
+postings and merges them in the same (term, seg) exchange
+(``spimi.build_segments_spimi``); streaming epochs and compaction write
+the same unit. Parquet column projection gives what Lucene's separate
+``.pos`` file gives: the ``Searcher`` selects the non-positional columns,
+so a term query never reads ``pos_blob``, while the readers here select
+it from the same rows (``_position_rows``).
 
 Phrase scoring follows Lucene's PhraseQuery shape: weight = Σ slot
 idf(term) (member-term document frequencies — no global phrase-df pass
@@ -41,7 +34,7 @@ Planning a positional query runs no Spark job. The member terms' dfs are
 looked up on the driver (``wand.index_doc_freqs``: a pyarrow ``isin``
 read of the ``term_stats`` partials, or the pushed-down Spark collect
 above ``wand.DOC_FREQS_MAX_ROWS`` rows), tombstones are read with pyarrow
-(``deletes.read_tombstone_ids``), and ``positions/``, ``range_dls/`` and
+(``deletes.read_tombstone_ids``), and ``postings/``, ``range_dls/`` and
 ``docmap/`` are opened with their schema taken from a parquet footer
 (``build_index.read_relation``), so the only jobs are the query's own.
 """
@@ -55,134 +48,90 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka_es_spark.functions import codecs
 from kafka_es_spark.operators import spimi
 from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf
-from kafka_es_spark.plans.build_index import read_relation
+from kafka_es_spark.plans.build_index import check_format, load_stats, read_relation
 from kafka_es_spark.session import local_frame
 
 POS_BITS = spimi.POS_BITS  # doc length < 2^21 tokens — validated at pack time
 
-POS_SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("seg", T.LongType(), False),
-        T.StructField("df_seg", T.LongType(), False),
-        T.StructField("first_docid", T.LongType(), False),
-        T.StructField("last_docid", T.LongType(), False),
-        T.StructField("docs_blob", T.BinaryType(), False),
-        T.StructField("tfs_blob", T.BinaryType(), False),
-        T.StructField("pos_blob", T.BinaryType(), False),
-        T.StructField("bucket", T.LongType(), False),
-    ]
+# the unit columns a positional kernel decodes
+POSITION_COLUMNS = (
+    "term", "seg", "df_seg", "first_docid", "docs_blob", "tfs_blob", "pos_blob",
 )
 
 
-# the unit rows before the bucket column is added
-POS_UNIT_SCHEMA = T.StructType(POS_SEGMENT_SCHEMA.fields[:-1])
-
-
-def build_position_runs(
-    docs: DataFrame,
-    seg_bits: int = spimi.SEG_BITS,
-    pack_docs: int = 50_000,
-    terms_col: str = "terms",
-) -> DataFrame:
-    """Narrow stage: per-flush packed position runs (``spimi.pack_runs``)."""
-    return spimi.pack_runs(docs, seg_bits, pack_docs, terms_col, with_positions=True)
-
-
-def merge_position_runs(runs: DataFrame, n_term_buckets: int = 8) -> DataFrame:
-    """The one position-sized shuffle + streaming per-(term, seg) merge
-    (``spimi.merge_units``), with the unit's bucket column."""
-    return spimi.with_bucket(
-        spimi.merge_units(runs, POS_UNIT_SCHEMA), n_term_buckets
-    )
-
-
 def build_position_index(spark: SparkSession, pages: DataFrame, index_dir: str) -> dict:
-    """Add the ``positions/`` relation to an EXISTING index dataset: the
-    (doc_id, terms) rows build_index wrote to ``tokens/`` (so the doc ids
-    are the index's own, not a re-assignment), same seg/bucket scheme as
-    stats.json records. ``pages`` is unused — the corpus is read from
-    ``tokens/``, and an index without it raises; the parameter stays for
-    existing callers. Manifest-committed (``positions`` stage) —
-    rebuild-safe and resumable like every other stage. Streaming epochs
-    append their own positional unit via
-    ``append_epoch(..., with_positions=True)`` (``append_epoch_positions``
-    below); an index mixing positioned and position-less units serves
-    phrase queries over the positioned units only."""
-    import time
-
-    from kafka_es_spark.plans.build_index import load_stats, read_tokens
+    """Positions are built with the postings (format 3), so this runs no
+    Spark job: it checks that ``index_dir`` holds a format-3 index and
+    returns the positional counters ``build_index`` committed — the unit
+    rows (``segments``) and ``postings`` of its shards. ``pages`` is
+    unused; the signature stays for existing callers."""
     from kafka_es_spark.plans.manifest import Manifest
 
-    st = load_stats(index_dir)
-    seg_bits = int(st.get("seg_bits", spimi.SEG_BITS))
-    n_term_buckets = int(st.get("n_term_buckets") or 8)
-    man = Manifest(index_dir)
-    t0 = time.time()
-    docs = read_tokens(spark, index_dir)
-    runs = build_position_runs(docs, seg_bits=seg_bits)
-    c = spimi.write_units(
-        merge_position_runs(runs, n_term_buckets),
-        n_term_buckets,
-        os.path.join(index_dir, "positions", "shard=base"),
-        segments=F.count(F.lit(1)),
-        postings=F.sum("df_seg"),
-    )
-    counters = {
-        "segments": int(c["segments"] or 0),
-        "postings": int(c["postings"] or 0),
-        "elapsed_sec": time.time() - t0,
+    check_format(index_dir, load_stats(index_dir))
+    shards = [e for e in Manifest(index_dir).entries() if e["name"].startswith("shard-")]
+    return {
+        "segments": sum(int(e["segments"]) for e in shards),
+        "postings": sum(int(e["postings"]) for e in shards),
     }
-    man.commit("positions", counters)
-    return counters
 
 
-def append_epoch_positions(
-    docs: DataFrame,
-    index_dir: str,
-    epoch_name: str,
-    seg_bits: int,
-    n_term_buckets: int,
-) -> None:
-    """Write one streaming epoch's positional unit under
-    ``positions/shard=<epoch>`` (docs: the epoch's (doc_id, terms) with
-    FINAL dense ids — called by append_epoch before its manifest commit,
-    so the C1 contract covers positions too: a replayed epoch overwrites
-    its own positional files)."""
-    spimi.write_units(
-        merge_position_runs(build_position_runs(docs, seg_bits=seg_bits), n_term_buckets),
-        n_term_buckets,
-        os.path.join(index_dir, "positions", f"shard={epoch_name}"),
+def _open_index(spark: SparkSession, index_dir: str) -> tuple[dict, frozenset | None]:
+    """(stats, pending tombstones or None) of an index a positional query
+    may read: a crashed compaction swap is repaired first, and an index
+    whose postings carry no positions raises (``check_format``)."""
+    from kafka_es_spark.operators.compaction import recover_swap_dirs
+    from kafka_es_spark.operators.deletes import read_tombstone_ids
+
+    recover_swap_dirs(index_dir)
+    st = load_stats(index_dir)
+    check_format(index_dir, st)
+    # pending delete tombstones apply to positional results exactly as to
+    # term queries (the format-enforced X9 contract)
+    return st, read_tombstone_ids(spark, index_dir) or None
+
+
+def _position_rows(spark: SparkSession, index_dir: str, st: dict, terms) -> DataFrame:
+    """The unit rows of ``terms`` with their positions: ``postings/``
+    opened without a schema job, pruned by term and, when the index
+    records the query side's hash scheme, by bucket."""
+    from kafka_es_spark.plans.build_index import BUCKET_SCHEME
+
+    terms = sorted(set(terms))
+    rel = read_relation(spark, os.path.join(index_dir, "postings")).filter(
+        F.col("term").isin(terms)
     )
+    if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
+        from kafka_es_spark.operators.dedup import hash32_py
+
+        nb = int(st["n_term_buckets"])
+        rel = rel.filter(F.col("bucket").isin(sorted({hash32_py(t) % nb for t in terms})))
+    return rel.select(*POSITION_COLUMNS)
 
 
-def decode_position_segment(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Row → (doc_ids, tfs, absolute positions concatenated per doc)."""
-    n = int(row["df_seg"])
-    ids = codecs.delta_decode(
-        codecs.varint_decode(bytes(row["docs_blob"]), n)
-    ).astype(np.int64)
-    tfs = codecs.varint_decode(bytes(row["tfs_blob"]), n).astype(np.int64)
-    total = int(tfs.sum())
-    posd = codecs.varint_decode(bytes(row["pos_blob"]), total)
+def decode_position_segment(
+    row, codec: str = "varint"
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Unit row → (doc_ids, tfs, absolute positions concatenated per doc);
+    ``codec`` is the index codec of ``docs_blob``/``tfs_blob``."""
+    ids, tfs = spimi.decode_segment(row, codec)
+    posd = codecs.varint_decode(bytes(row["pos_blob"]), int(tfs.sum()))
     starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
     pos = spimi.rebase_cumsum(posd, starts, tfs).astype(np.int64)
     return ids, tfs, pos
 
 
-def _slot_keys(rows: list[dict]) -> np.ndarray:
+def _slot_keys(rows: list[dict], codec: str) -> np.ndarray:
     """One phrase slot's occurrences within a doc range as sorted int64
-    keys doc_id·2^POS_BITS + pos (rows = the slot term's position-segment
-    rows, possibly several units, concatenated in doc order)."""
+    keys doc_id·2^POS_BITS + pos (rows = the slot term's unit rows,
+    possibly several units, concatenated in doc order)."""
     rows = sorted(rows, key=lambda r: r["first_docid"])
     parts = []
     for r in rows:
-        ids, tfs, pos = decode_position_segment(r)
+        ids, tfs, pos = decode_position_segment(r, codec)
         parts.append((np.repeat(ids, tfs) << POS_BITS) + pos)
     return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
 
@@ -244,20 +193,13 @@ def _phrase_topk_slots(
     (MultiPhraseQuery's Σ-idf), tf = distinct qualifying end positions,
     BM25 saturation vs doc length. Distributed like wand: per-doc-range
     scoring (cogrouped with range dls), global TakeOrdered is exact."""
-    from kafka_es_spark.operators.compaction import recover_swap_dirs
-    from kafka_es_spark.operators.deletes import read_tombstone_ids
     from kafka_es_spark.operators.wand import (
         TOPK_SCHEMA, _seg_dls, index_doc_freqs,
     )
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     k = max(k, fetch_k or 0)
-    recover_swap_dirs(index_dir)
-    # pending delete tombstones apply to phrase results exactly as to
-    # term queries (the format-enforced X9 contract)
-    excluded = read_tombstone_ids(spark, index_dir) or None
-    st = load_stats(index_dir)
-    n_docs, avgdl = st["n_docs"], st["avgdl"]
+    st, excluded = _open_index(spark, index_dir)
+    n_docs, avgdl, codec = st["n_docs"], st["avgdl"], st["codec"]
     if not slot_terms or any(not s for s in slot_terms) or n_docs == 0 or avgdl == 0:
         return local_frame(spark, [], TOPK_SCHEMA)
     dfs = index_doc_freqs(spark, index_dir, {t for s in slot_terms for t in s})
@@ -268,21 +210,8 @@ def _phrase_topk_slots(
         return local_frame(spark, [], TOPK_SCHEMA)
     w_total = float(sum(idf(n_docs, dfs[t]) for s in slot_terms for t in s))
 
-    pos_dir = os.path.join(index_dir, "positions")
-    if not os.path.isdir(pos_dir):
-        raise ValueError(
-            f"index at {index_dir} has no positions/ relation — phrase "
-            "queries need the positional index; run "
-            "positions.build_position_index (batch) or append epochs with "
-            "with_positions=True (streaming)"
-        )
     live = sorted({t for s in slot_terms for t in s})
-    rel = read_relation(spark, pos_dir).filter(F.col("term").isin(live))
-    if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
-        from kafka_es_spark.operators.dedup import hash32_py
-
-        bs = sorted({hash32_py(t) % int(st["n_term_buckets"]) for t in live})
-        rel = rel.filter(F.col("bucket").isin(bs))
+    rel = _position_rows(spark, index_dir, st, live)
     dls_rel = read_relation(spark, os.path.join(index_dir, "range_dls"))
 
     def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
@@ -298,7 +227,7 @@ def _phrase_topk_slots(
             by_term.setdefault(r["term"], []).append(r)
         if any(all(t not in by_term for t in s) for s in slot_terms):
             return empty  # some slot has no occurrences in this range
-        keys = {t: _slot_keys(by_term[t]) for t in set(by_term) & set(live)}
+        keys = {t: _slot_keys(by_term[t], codec) for t in set(by_term) & set(live)}
 
         def slot_union(s: list[str]) -> np.ndarray:
             parts = [keys[t] for t in s if t in keys]
@@ -352,7 +281,7 @@ def phrase_topk(
     with_url: bool = False,
     fetch_k: int | None = None,
 ) -> DataFrame:
-    """Phrase top-k over the positional relation. slop=0 is the exact-
+    """Phrase top-k over the postings' positions. slop=0 is the exact-
     adjacency ES match_phrase; slop>0 is the ordered sloppy phrase (ES
     span_near with in_order=true): slots must appear in order with at most
     ``slop`` extra token gaps shared across the chain, tf = distinct
@@ -377,36 +306,19 @@ def phrase_match_ids(
     most ``slop`` shared gaps) — the filter-context phrase primitive that
     query_string's quoted clauses compose on (must = left-semi join,
     ``-"..."`` = left-anti join). Same slot-chain kernel as phrase_topk
-    minus scoring: positions relation only, pruned to the phrase terms'
-    buckets, per-doc-range chain, no range_dls read. Doc ranges are
+    minus scoring: the phrase terms' unit rows only, bucket-pruned,
+    per-doc-range chain, no range_dls read. Doc ranges are
     disjoint, so per-range unique ids are globally unique — no distinct
     shuffle needed. Pending tombstones excluded (X9 contract)."""
     from kafka_es_spark.functions.tokenize import tokenize_py
-    from kafka_es_spark.operators.compaction import recover_swap_dirs
-    from kafka_es_spark.operators.deletes import read_tombstone_ids
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     slots = tokenize_py(phrase)
     if not slots:
         return local_frame(spark, [], "doc_id long")
-    recover_swap_dirs(index_dir)
-    excluded = read_tombstone_ids(spark, index_dir) or None
-    st = load_stats(index_dir)
-    pos_dir = os.path.join(index_dir, "positions")
-    if not os.path.isdir(pos_dir):
-        raise ValueError(
-            f"index at {index_dir} has no positions/ relation — phrase "
-            "clauses need the positional index; run "
-            "positions.build_position_index (batch) or append epochs with "
-            "with_positions=True (streaming)"
-        )
+    st, excluded = _open_index(spark, index_dir)
+    codec = st["codec"]
     uniq = list(dict.fromkeys(slots))
-    rel = read_relation(spark, pos_dir).filter(F.col("term").isin(uniq))
-    if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
-        from kafka_es_spark.operators.dedup import hash32_py
-
-        bs = sorted({hash32_py(t) % int(st["n_term_buckets"]) for t in uniq})
-        rel = rel.filter(F.col("bucket").isin(bs))
+    rel = _position_rows(spark, index_dir, st, uniq)
     slop_i = int(slop)
 
     def match_range(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -418,7 +330,7 @@ def phrase_match_ids(
             by_term.setdefault(r["term"], []).append(r)
         if any(t not in by_term for t in uniq):
             return empty
-        keys = {t: _slot_keys(by_term[t]) for t in uniq}
+        keys = {t: _slot_keys(by_term[t], codec) for t in uniq}
         cur = _chain_slots([keys[t] for t in slots], slop_i)
         if cur.size == 0:
             return empty
@@ -476,7 +388,6 @@ def _window_anchor_topk(
     k: int,
     round_to: int | None,
     with_url: bool,
-    op_name: str,
 ) -> DataFrame:
     """Shared engine for window-conditioned single-term matching: keep an
     ``anchor``-term occurrence at position p iff a ``probe``-term
@@ -486,23 +397,18 @@ def _window_anchor_topk(
     (index-level dfs — Lucene SpanWeight/IntervalQuery scoring); BM25
     saturation vs doc length.
 
-    Plan: position segments of exactly two terms (term + bucket pruned
+    Plan: the unit rows of exactly two terms (term + bucket pruned
     scan), grouped per doc range; inside a range the window test is
     |offsets| vectorized sorted-array memberships over
     (doc<<POS_BITS)+pos keys — shifted keys that cross a doc boundary
     are masked, so a probe hit at the end of one doc can never affect
     the start of the next. One TakeOrdered; tombstones drop as
     everywhere."""
-    from kafka_es_spark.operators.compaction import recover_swap_dirs
-    from kafka_es_spark.operators.deletes import read_tombstone_ids
     from kafka_es_spark.operators.wand import index_doc_freqs
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     t, x = anchor, probe
-    recover_swap_dirs(index_dir)
-    excluded = read_tombstone_ids(spark, index_dir) or None
-    st = load_stats(index_dir)
-    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
+    st, excluded = _open_index(spark, index_dir)
+    n_docs, avgdl, codec = int(st["n_docs"]), float(st["avgdl"]), st["codec"]
     empty = (
         "doc_id long, url string, score double" if with_url
         else "doc_id long, score double"
@@ -513,22 +419,7 @@ def _window_anchor_topk(
     ):
         return local_frame(spark, [], empty)
     w = sum(idf(n_docs, dfs[q]) for q in idf_terms if q in dfs)
-    pos_dir = os.path.join(index_dir, "positions")
-    if not os.path.isdir(pos_dir):
-        raise ValueError(
-            f"index at {index_dir} has no positions/ relation — "
-            f"{op_name} needs the positional index"
-        )
-    rel = read_relation(spark, pos_dir).filter(F.col("term").isin([t, x]))
-    if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
-        from kafka_es_spark.operators.dedup import hash32_py
-
-        nb = int(st["n_term_buckets"])
-        rel = rel.filter(
-            F.col("bucket").isin(
-                sorted({hash32_py(t) % nb, hash32_py(x) % nb})
-            )
-        )
+    rel = _position_rows(spark, index_dir, st, [t, x])
     offs = list(offsets)
 
     def count_surviving(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -537,10 +428,10 @@ def _window_anchor_topk(
              "tf": pd.Series(dtype=np.int64)}
         )
         recs = pdf.to_dict("records")
-        anc = _slot_keys([r for r in recs if r["term"] == t])
+        anc = _slot_keys([r for r in recs if r["term"] == t], codec)
         if anc.size == 0:
             return empty_p
-        prb = _slot_keys([r for r in recs if r["term"] == x])
+        prb = _slot_keys([r for r in recs if r["term"] == x], codec)
         hit = np.zeros(anc.size, dtype=bool)
         if prb.size:
             # probe∈{p+d : d ∈ offsets} — one membership test per offset,
@@ -610,7 +501,6 @@ def span_not_topk(
         spark, index_dir, ti[0], tx[0],
         offsets=list(range(-pre_i, post_i + 1)), require=False,
         idf_terms=[ti[0]], k=k, round_to=round_to, with_url=with_url,
-        op_name="span_not",
     )
 
 
@@ -652,7 +542,7 @@ def intervals_unordered_topk(
     return _window_anchor_topk(
         spark, index_dir, ta[0], to[0], offsets=offs, require=True,
         idf_terms=[ta[0], to[0]], k=k, round_to=round_to,
-        with_url=with_url, op_name="intervals",
+        with_url=with_url,
     )
 
 
@@ -672,26 +562,21 @@ def span_first_topk(
     span_term). The representative of the span family beyond span_near
     (which ``phrase_topk(slop=...)`` already serves).
 
-    Plan: the term's position segments only (bucket-pruned scan), one
+    Plan: the term's unit rows only (bucket-pruned scan), one
     vectorized position filter per doc range, dl joined from the docmap
     (the format-2 per-doc source of record), one TakeOrdered. The term's
     df for idf comes from term_stats — index-level stats, unchanged by
     the position window (exactly Lucene: SpanWeight uses the term's
     docFreq)."""
     from kafka_es_spark.functions.tokenize import tokenize_py
-    from kafka_es_spark.operators.compaction import recover_swap_dirs
-    from kafka_es_spark.operators.deletes import read_tombstone_ids
     from kafka_es_spark.operators.wand import index_doc_freqs
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
 
     toks = tokenize_py(term)
     if len(toks) != 1:
         raise ValueError("span_first takes exactly one analyzed term")
     t = toks[0]
-    recover_swap_dirs(index_dir)
-    excluded = read_tombstone_ids(spark, index_dir) or None
-    st = load_stats(index_dir)
-    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
+    st, excluded = _open_index(spark, index_dir)
+    n_docs, avgdl, codec = int(st["n_docs"]), float(st["avgdl"]), st["codec"]
     empty = (
         "doc_id long, url string, score double" if with_url
         else "doc_id long, score double"
@@ -700,19 +585,7 @@ def span_first_topk(
     if t not in dfs or n_docs == 0 or avgdl == 0:
         return local_frame(spark, [], empty)
     w = idf(n_docs, dfs[t])
-    pos_dir = os.path.join(index_dir, "positions")
-    if not os.path.isdir(pos_dir):
-        raise ValueError(
-            f"index at {index_dir} has no positions/ relation — span "
-            "queries need the positional index"
-        )
-    rel = read_relation(spark, pos_dir).filter(F.col("term") == t)
-    if st.get("bucket_scheme") == BUCKET_SCHEME and st.get("n_term_buckets"):
-        from kafka_es_spark.operators.dedup import hash32_py
-
-        rel = rel.filter(
-            F.col("bucket") == hash32_py(t) % int(st["n_term_buckets"])
-        )
+    rel = _position_rows(spark, index_dir, st, [t])
     end_i = int(end)
 
     def count_window(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -724,7 +597,7 @@ def span_first_topk(
             return empty_p
         parts_id, parts_tf = [], []
         for r in pdf.to_dict("records"):
-            ids, tfs, pos = decode_position_segment(r)
+            ids, tfs, pos = decode_position_segment(r, codec)
             keep = pos < end_i
             if not keep.any():
                 continue

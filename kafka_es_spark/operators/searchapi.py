@@ -85,16 +85,17 @@ def _text_clause(searcher, q: str, scoring: bool, boost: float = 1.0,
     return _Compiled(scores, None, one_per_doc=True)
 
 
-def _min_should_match(value, total: int) -> int:
+def _min_should_match(value, total: int, lowest: int = 1) -> int:
     """Resolve an ES ``minimum_should_match`` value against ``total``
     optional clauses (the Lucene grammar): an int or int string is a
     fixed count, a NEGATIVE count means ``total - n`` may be required,
     ``"P%"`` is ``floor(total * P/100)``, and ``"-P%"`` means that
     percentage (rounded down) may be MISSING. Conditional forms
     (``"3<90%"``) are out of scope and fail loudly. The result is
-    clamped to >= 1 (a computed 0 still needs one optional clause to
-    hit — BooleanQuery with no required clauses); values above
-    ``total`` are kept as-is and simply match nothing, like ES."""
+    clamped to >= ``lowest``: 1 by default (a computed 0 still needs one
+    optional clause to hit — BooleanQuery with no required clauses), 0
+    beside required clauses; values above ``total`` are kept as-is and
+    simply match nothing, like ES."""
     import math
 
     if isinstance(value, int):
@@ -109,11 +110,11 @@ def _min_should_match(value, total: int) -> int:
         if s.endswith("%"):
             p = float(s[:-1])
             cnt = int(math.floor(abs(p) * total / 100.0))
-            return max(1, (total - cnt) if p < 0 else cnt)
+            return max(lowest, (total - cnt) if p < 0 else cnt)
         n = int(s)
     if n < 0:
         n = total + n
-    return max(1, n)
+    return max(lowest, n)
 
 
 def _fuzziness(value, term_len: int) -> int:
@@ -983,14 +984,7 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
         # the hit set is the scored musts' (each counted) and the gates'
         base = _summed(must_parts, floor=len(must_parts))
     else:
-        # should semantics: gating applies only when there is no
-        # must/filter (then >= minimum_should_match should clauses must
-        # hit, default 1)
-        should_floor = (
-            _min_should_match(body.get("minimum_should_match", 1), len(should))
-            if should and not must and not filt
-            else 0
-        )
+        should_floor = _should_floor(body, should, gated=bool(gates))
         # a filter-context clause inside should (range/exists/ids/terms —
         # gate-only, no scores) still ADMITS its docs to the hit set in
         # ES; it just contributes 0 to the score sum. Without this, a doc
@@ -1017,6 +1011,13 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
                 (f_.join(pre_gate, "doc_id", "left_semi"), one)
                 for f_, one in should_parts
             ]
+            if not should_floor:
+                # optional shoulds: every gated doc is a hit, scored by
+                # its should sum (0 where none matches) — the gate joins
+                # the union as a 0-score frame that it bounds
+                should_parts.append(
+                    (pre_gate.select("doc_id", F.lit(0.0).alias("score")), False)
+                )
         base = _summed(should_parts, floor=should_floor)
     for g in gates:
         base = base.join(g, "doc_id", "left_semi")
@@ -1082,12 +1083,26 @@ def _ids(comp: _Compiled) -> DataFrame:
     )
 
 
+def _should_floor(body: dict, should, gated: bool) -> int:
+    """How many ``should`` clauses a hit must match. ES 7.x defaults
+    minimum_should_match to 1 in a bool with no must or filter clause
+    (``gated`` False) and to 0 beside one; an explicit value always
+    applies (and may resolve to 0 beside a must or filter)."""
+    if not should:
+        return 0
+    msm = body.get("minimum_should_match")
+    if msm is None:
+        return 0 if gated else 1
+    return _min_should_match(msm, len(should), lowest=0 if gated else 1)
+
+
 def _gate_bool(body: dict, gates, should, nots) -> _Compiled:
     """A bool with no score frame (filter context): its hit set from the
-    must/filter gates and >= minimum_should_match (default 1) should
-    clauses, minus must_not."""
+    must/filter gates and >= ``_should_floor`` should clauses, minus
+    must_not."""
     ok = None
-    if should:
+    floor = _should_floor(body, should, gated=bool(gates))
+    if floor:
         # a should-only bool of pure filter clauses (e.g.
         # {bool:{should:[{range:...}]}}) is the docs satisfying >= msm
         # should clauses — ES does not reject it
@@ -1097,12 +1112,7 @@ def _gate_bool(body: dict, gates, should, nots) -> _Compiled:
         ok = (
             union.groupBy("doc_id")
             .agg(F.count("*").alias("m"))
-            .filter(
-                F.col("m")
-                >= _min_should_match(
-                    body.get("minimum_should_match", 1), len(should)
-                )
-            )
+            .filter(F.col("m") >= floor)
             .select("doc_id")
         )
     if not gates:
@@ -1320,7 +1330,7 @@ def search(
     if isinstance(query, dict) and len(query) == 1 and \
             next(iter(query)) in delegated:
         # top-level scoring forms served whole by their dedicated
-        # engines (phrase-weighted BM25 over the positional relation;
+        # engines (phrase-weighted BM25 over the postings' positions;
         # the query-string mini-language compilers). Render sections
         # don't compose with a delegated top-k, so only query/size are
         # admitted here; inside bool these stay filter-context.

@@ -20,15 +20,18 @@ Two stages, exactly one wide shuffle:
    since ranges partition the doc space). No second merge pass is needed;
    segments ARE the index format.
 
-Segment row schema (format 2): term, seg, df_seg, cf_seg, first_docid,
-last_docid, docs_blob (delta-gap + codec), tfs_blob.
+Unit row schema (format 3, ``UNIT_SCHEMA``): term, seg, df_seg, cf_seg,
+first_docid, last_docid, docs_blob (delta-gap + codec), tfs_blob (codec),
+pos_blob (each doc's token positions, delta-coded, varint). Positions are
+a column of the postings, as Lucene keeps them an option of the same
+postings (``index_options=positions``): a term query's parquet scan
+projects ``pos_blob`` out, a phrase query reads it from the same rows.
 
-This module is the one run encoder of the index. Postings, the positional
-relation, streaming epochs and compaction all write their units through
-it:
+This module is the one run encoder of the index. The build's shards,
+streaming epochs and compaction all write their units through it:
 
 * ``pack_runs`` / ``pack_flush`` — map side: invert a flush of docs into
-  varint runs, one per (term, seg), with an optional position stream;
+  varint runs, one per (term, seg), positions included;
 * ``merge_units`` / ``merge_runs`` — the one (term, seg) shuffle and the
   vectorized merge kernel: decode, drop dead ids, one lexsort by (group,
   doc_id), gather position slices, re-delta, encode in the index codec.
@@ -234,11 +237,10 @@ def build_segments(
 # --- the run format and its one encoder --------------------------------------
 #
 # A run is one (term, seg) slice of postings: ``n`` docs, ``ids_blob`` =
-# the absolute first doc id then gaps, ``tfs_blob`` = per-doc tf and, for
-# the positional relation, ``pos_blob`` = each doc's token positions,
-# delta-coded and absolute at every doc start (sum(tf) values). Map-side
-# runs travel as varint (bp128 blobs are block-structured, not
-# concatenative). A stored unit row is a run in the index codec, so
+# the absolute first doc id then gaps, ``tfs_blob`` = per-doc tf and
+# ``pos_blob`` = each doc's token positions, delta-coded and absolute at
+# every doc start (sum(tf) values). Map-side runs travel as varint (bp128
+# blobs are block-structured, not concatenative). A stored unit row is a run in the index codec, so
 # compaction merges stored rows with the same kernel the build merges
 # runs with.
 
@@ -250,14 +252,16 @@ RUN_SCHEMA = T.StructType(
         T.StructField("n", T.LongType(), False),
         T.StructField("ids_blob", T.BinaryType(), False),
         T.StructField("tfs_blob", T.BinaryType(), False),
+        T.StructField("pos_blob", T.BinaryType(), False),
     ]
 )
 
-POS_RUN_SCHEMA = T.StructType(
-    list(RUN_SCHEMA.fields) + [T.StructField("pos_blob", T.BinaryType(), False)]
+# a stored unit row: the segment columns plus the position stream
+UNIT_SCHEMA = T.StructType(
+    list(SEGMENT_SCHEMA.fields) + [T.StructField("pos_blob", T.BinaryType(), False)]
 )
 
-POS_BITS = 21  # doc length < 2^21 tokens — validated when packing positions
+POS_BITS = 21  # doc length < 2^21 tokens — validated when packing
 
 
 def deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -298,7 +302,6 @@ def pack_flush(
     pdf: pd.DataFrame,
     seg_bits: int,
     terms_col: str = "terms",
-    with_positions: bool = False,
     metrics=None,
 ) -> pd.DataFrame | None:
     """Invert a frame of (doc_id, terms) rows into varint runs, one per
@@ -311,7 +314,7 @@ def pack_flush(
         metrics.add("tokens", int(lens.sum()))
     if lens.sum() == 0:
         return None
-    if with_positions and int(lens.max()) >= (1 << POS_BITS):
+    if int(lens.max()) >= (1 << POS_BITS):
         raise ValueError(
             f"document of {int(lens.max())} tokens exceeds the "
             f"2^{POS_BITS} position key space"
@@ -334,20 +337,20 @@ def pack_flush(
     segs_ = ids >> seg_bits
     starts = group_starts(tcg, segs_)  # run starts, posting space
     nlens = np.diff(np.append(starts, ids.size))
-    out = {
-        "term": np.asarray(uniq, dtype=object)[tcg[starts]],
-        "seg": segs_[starts],
-        "first_docid": ids[starts],
-        "n": nlens,
-        "ids_blob": codecs.varint_encode_segmented(deltas(ids, starts), nlens),
-        "tfs_blob": codecs.varint_encode_segmented(tfs, nlens),
-    }
-    if with_positions:
-        pos = (np.arange(tc.size, dtype=np.int64) - np.repeat(_starts(lens), lens))[order]
-        out["pos_blob"] = codecs.varint_encode_segmented(
-            deltas(pos, dstarts), np.add.reduceat(tfs, starts)
-        )
-    return pd.DataFrame(out)
+    pos = (np.arange(tc.size, dtype=np.int64) - np.repeat(_starts(lens), lens))[order]
+    return pd.DataFrame(
+        {
+            "term": np.asarray(uniq, dtype=object)[tcg[starts]],
+            "seg": segs_[starts],
+            "first_docid": ids[starts],
+            "n": nlens,
+            "ids_blob": codecs.varint_encode_segmented(deltas(ids, starts), nlens),
+            "tfs_blob": codecs.varint_encode_segmented(tfs, nlens),
+            "pos_blob": codecs.varint_encode_segmented(
+                deltas(pos, dstarts), np.add.reduceat(tfs, starts)
+            ),
+        }
+    )
 
 
 def pack_runs(
@@ -355,16 +358,14 @@ def pack_runs(
     seg_bits: int,
     pack_docs: int,
     terms_col: str = "terms",
-    with_positions: bool = False,
     metrics=None,
 ) -> DataFrame:
     """Narrow stage: ``pack_flush`` over up to ``pack_docs`` docs at a time
     (longer runs amortize per-run overhead)."""
-    schema = POS_RUN_SCHEMA if with_positions else RUN_SCHEMA
 
     def flush(frames: list[pd.DataFrame]) -> pd.DataFrame | None:
         pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        return pack_flush(pdf, seg_bits, terms_col, with_positions, metrics)
+        return pack_flush(pdf, seg_bits, terms_col, metrics)
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: list[pd.DataFrame] = []
@@ -384,7 +385,7 @@ def pack_runs(
             if out is not None and len(out):
                 yield out
 
-    return docs.select("doc_id", terms_col).mapInPandas(pack, schema)
+    return docs.select("doc_id", terms_col).mapInPandas(pack, RUN_SCHEMA)
 
 
 MERGED_COLUMNS = (
@@ -427,25 +428,25 @@ def merge_runs(
     gs = group_starts(lab_o)
     glens = np.diff(np.append(gs, ids_o.size))
     first = gfirst[lab_o[gs]]
-    out = {
-        "term": terms[first],
-        "seg": segs_[first],
-        "df_seg": glens,
-        "cf_seg": np.add.reduceat(tfs_o, gs),
-        "first_docid": ids_o[gs],
-        "last_docid": ids_o[gs + glens - 1],
-        "docs_blob": codecs.encode_segmented(deltas(ids_o, gs), glens, codec),
-        "tfs_blob": codecs.encode_segmented(tfs_o, glens, codec),
-    }
-    if "pos_blob" in pdf.columns:
-        occ = _starts(tfs)
-        posd = codecs.decode_concat(pdf["pos_blob"], np.add.reduceat(tfs, rs), "varint")
-        pos = rebase_cumsum(posd, occ, tfs).astype(np.int64)
-        pos_o = gather_slices(pos, occ, tfs, order)
-        out["pos_blob"] = codecs.varint_encode_segmented(
-            deltas(pos_o, _starts(tfs_o)), np.add.reduceat(tfs_o, gs)
-        )
-    return pd.DataFrame(out)
+    occ = _starts(tfs)
+    posd = codecs.decode_concat(pdf["pos_blob"], np.add.reduceat(tfs, rs), "varint")
+    pos = rebase_cumsum(posd, occ, tfs).astype(np.int64)
+    pos_o = gather_slices(pos, occ, tfs, order)
+    return pd.DataFrame(
+        {
+            "term": terms[first],
+            "seg": segs_[first],
+            "df_seg": glens,
+            "cf_seg": np.add.reduceat(tfs_o, gs),
+            "first_docid": ids_o[gs],
+            "last_docid": ids_o[gs + glens - 1],
+            "docs_blob": codecs.encode_segmented(deltas(ids_o, gs), glens, codec),
+            "tfs_blob": codecs.encode_segmented(tfs_o, glens, codec),
+            "pos_blob": codecs.varint_encode_segmented(
+                deltas(pos_o, _starts(tfs_o)), np.add.reduceat(tfs_o, gs)
+            ),
+        }
+    )
 
 
 def merge_units(
@@ -495,42 +496,38 @@ def build_segments_spimi(
     """X4/X5 — the true SPIMI two-stage build: per-partition inverted RUNS
     are delta-gapped and varint-encoded BEFORE the shuffle (map-side
     compression, ``pack_runs``), then merged per (term, doc-range) into
-    final segment rows (``merge_units``). vs shuffling raw (term, doc_id,
+    final unit rows (``merge_units``). vs shuffling raw (term, doc_id,
     tf, dl) rows this moves ~5-10× fewer bytes and rows through the
     exchange — at 100 TB the posting shuffle is THE dominant cost, so
-    map-side encoding is the design, not an optimization. Output rows are
-    bit-identical to ``build_segments(doc_term_freqs(docs))`` (tested).
-    Memory stays bounded: a (term, seg) group is ≤ 2^seg_bits postings by
-    construction (the doc-range salt)."""
+    map-side encoding is the design, not an optimization. Positions ride
+    the same exchange, so one shuffle builds the postings and their
+    position stream; the ``SEGMENT_SCHEMA`` columns are bit-identical to
+    ``build_segments(doc_term_freqs(docs))`` (tested). Memory stays
+    bounded: a (term, seg) group is ≤ 2^seg_bits postings by construction
+    (the doc-range salt)."""
     runs = pack_runs(docs, seg_bits, pack_docs, terms_col, metrics=metrics)
-    return merge_units(runs, SEGMENT_SCHEMA, codec, metrics=metrics)
-
-
-def with_bucket(segs: DataFrame, n_term_buckets: int, nullable: bool = False) -> DataFrame:
-    """``bucket = pmod(hash32(term), n)``: the portable md5 hash the query
-    side recomputes driver-side to prune files. The value is never null;
-    ``nullable`` only sets the parquet flag, which each relation keeps as
-    it has always stored it (optional in build and epoch postings,
-    required in positions and compacted postings)."""
-    from kafka_es_spark.operators.dedup import hash32
-
-    b = F.pmod(hash32(F.col("term")), F.lit(n_term_buckets))
-    return segs.withColumn("bucket", b if nullable else F.coalesce(b, F.lit(0)))
+    return merge_units(runs, UNIT_SCHEMA, codec, metrics=metrics)
 
 
 def write_units(
     segs: DataFrame,
     n_term_buckets: int,
     path: str,
-    nullable_bucket: bool = False,
     **observed: Column,
 ) -> dict:
-    """The layout of every unit write (postings and positions; build, epoch
-    and compaction): ``with_bucket``, one partition per bucket, rows sorted
-    by (term, seg), so a query prunes files by bucket and row groups by
-    term. ``observed`` aggregates ride the write; returns their values."""
+    """The layout of every unit write (build shards, epochs and
+    compaction): a ``bucket = pmod(hash32(term), n)`` column — the
+    portable md5 hash the query side recomputes driver-side to prune
+    files — one partition per bucket, rows sorted by (term, seg), so a
+    query prunes files by bucket and row groups by term. ``observed``
+    aggregates ride the write; returns their values."""
+    from kafka_es_spark.operators.dedup import hash32
+
+    # never null; the coalesce makes Spark write it as a required column,
+    # so every unit file has one parquet schema
+    bucket = F.coalesce(F.pmod(hash32(F.col("term")), F.lit(n_term_buckets)), F.lit(0))
     out = (
-        with_bucket(segs, n_term_buckets, nullable_bucket)
+        segs.withColumn("bucket", bucket)
         .repartition(n_term_buckets, "bucket")
         .sortWithinPartitions("term", "seg")
     )

@@ -379,7 +379,9 @@ class Searcher:
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         from kafka_es_spark.operators.compaction import recover_swap_dirs
         from kafka_es_spark.operators.deletes import read_tombstone_ids
-        from kafka_es_spark.plans.build_index import BUCKET_SCHEME, load_stats
+        from kafka_es_spark.plans.build_index import (
+            BUCKET_SCHEME, check_format, load_stats,
+        )
 
         self.spark = spark
         self.index_dir = index_dir
@@ -397,12 +399,7 @@ class Searcher:
         # the exclusion, callers need not thread the set through
         self.persistent_excluded = read_tombstone_ids(spark, index_dir)
         st = load_stats(index_dir)
-        if st.get("format") != 2:
-            raise ValueError(
-                f"index at {index_dir} is format {st.get('format', 1)}; this "
-                "engine reads format 2 (postings without per-posting dl + "
-                "range_dls norms) — rebuild with build_index"
-            )
+        check_format(index_dir, st)
         self.n_docs, self.avgdl, self.codec = st["n_docs"], st["avgdl"], st["codec"]
         self.seg_bits = int(st.get("seg_bits", 17))
         # prune only when the index explicitly records the scheme this query
@@ -413,7 +410,12 @@ class Searcher:
             if st.get("bucket_scheme") == BUCKET_SCHEME
             else None
         )
-        self.segs = read_relation(spark, os.path.join(index_dir, "postings"))
+        # without the position stream: parquet projects pos_blob out of
+        # every term query's scan and of the serving cache (positional
+        # queries read it through operators.positions)
+        self.segs = read_relation(
+            spark, os.path.join(index_dir, "postings")
+        ).drop("pos_blob")
         # term_stats holds PARTIALS (unit=base + one per streaming epoch;
         # doc sets are disjoint so df/cf sum exactly) — aggregate per term
         ts_dir = os.path.join(index_dir, "term_stats")
@@ -1043,7 +1045,7 @@ class Searcher:
         n_deleted = len(read_tombstone_ids(spark, self.index_dir) or ())
         n_terms = self.term_stats.select("term").distinct().count()
         segs = read_relation(spark, os.path.join(self.index_dir, "postings"))
-        p = self._postings_rows(segs).agg(
+        p = self._postings_rows(segs.drop("pos_blob")).agg(
             F.count("*").alias("n_postings"),
             F.sum("tf").alias("sum_tf"),
         ).collect()[0]
@@ -2924,7 +2926,7 @@ class Searcher:
         scan), decode to (doc_id, term, tf) rows, ONE hash aggregation to
         tf totals, dl joined from the same segments' range_dls, TakeOrdered
         for the k cut — cost O(postings of the clause terms), no corpus
-        scan, no positions relation needed (single-term spans never
+        scan, no position stream read (single-term spans never
         overlap, so span freq is exactly the postings tf sum)."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
@@ -4389,7 +4391,7 @@ class Searcher:
         expansion of every must clause, every must phrase, no must_not
         term, and no must_not phrase. Phrase clauses are filter-context
         (``phrase_match_ids`` — they gate but don't score, the
-        constant-score ES filter shape) and need the positional relation.
+        constant-score ES filter shape) and read the postings' positions.
 
         Plan: one relational-BM25 aggregation over the positive terms'
         postings, then left-semi / left-anti joins against the (small)
@@ -4675,7 +4677,7 @@ class Searcher:
         positive clause a must GROUP (a ``a|b`` group needs >= 1 member).
         Scoring is the Lucene scoring-boolean rewrite either way: BM25
         sum over every positive term the doc matches. Phrases are
-        filter-context through the positional relation. Plan shape is
+        filter-context through the postings' positions. Plan shape is
         query_string_topk's: one relational-BM25 aggregation + per-clause
         semi/anti joins, each O(postings of that clause's terms)."""
         import re
@@ -4727,7 +4729,7 @@ class Searcher:
         if not positive:
             # no positive terms, but quoted phrases may still carry the
             # query (qs='"exact phrase"'): ES returns the phrase matches.
-            # Build the hit set from the positional relation at constant
+            # Build the hit set from the postings' positions at constant
             # 0 score (phrases are filter-context in this engine); the
             # group loop below still applies negations and AND gating.
             pos_phrases = sorted(

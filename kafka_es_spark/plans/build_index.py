@@ -5,9 +5,12 @@ Layout of an index dataset at ``index_dir``:
 
     tokens/epoch=base/*.parquet    (doc_id, url, dl, terms, *store_fields):
                                    the extracted, doc-id'd, tokenized corpus,
-                                   written once; the docmap, shard, positions
-                                   and bigram jobs all read it
-    postings/shard=<i>/*.parquet   segment rows (spimi.SEGMENT_SCHEMA + bucket)
+                                   written once; the docmap, shard and bigram
+                                   jobs all read it
+    postings/shard=<i>/*.parquet   unit rows (spimi.UNIT_SCHEMA + bucket):
+                                   the segment columns plus pos_blob, each
+                                   doc's token positions (format 3 — there
+                                   is no separate positions/ relation)
     docmap/epoch=*/*.parquet       (doc_id, url, dl); epoch=base for the
                                    batch unit, epoch=<n> per streaming epoch
                                    (one uniform partitioned layout — mixed
@@ -17,14 +20,15 @@ Layout of an index dataset at ``index_dir``:
                                    format 2 — dl no longer rides per posting)
     term_stats/unit=*/*.parquet    (term, df, cf) PARTIALS (base + one per
                                    streaming epoch); readers sum per term
-    stats.json                     {format, n_docs, avgdl, total_tokens,
+    stats.json                     {format: 3, n_docs, avgdl, total_tokens,
                                     codec, seg_bits, n_term_buckets,
                                     bucket_scheme}
     _manifest/*.json               per-stage commit entries + counters
 
 Plan shape / scale notes:
 * exactly one wide shuffle carries posting-sized data (the (term, seg)
-  groupBy in spimi.build_segments); tokenize+invert are narrow maps;
+  exchange of spimi.build_segments_spimi, positions included);
+  tokenize+invert are narrow maps;
 * doc-id assignment shuffles page-sized rows by a uniform hash bucket;
 * segment rows are repartitioned by term-hash bucket and sorted by
   (term, seg) within files, so query reads prune to the query terms via
@@ -58,6 +62,11 @@ from kafka_es_spark.plans.manifest import Manifest
 # (or partially built) under a different scheme must fall back to unpruned
 # scans rather than silently dropping query terms (ADVICE r2).
 BUCKET_SCHEME = "md5h32"
+
+# stats.json ``format`` of the layout this engine writes and reads: 3 keeps
+# positions as the ``pos_blob`` column of postings/ (2 had them in a
+# separate positions/ relation, or not at all)
+INDEX_FORMAT = 3
 
 
 def extracted_pages(
@@ -130,8 +139,8 @@ def build_index(
 
     # --- tokens: the extracted, doc-id'd, tokenized corpus, written once ---
     # Every later job reads this relation instead of re-deriving it: the
-    # docmap is a column projection of it, the shard jobs invert its terms,
-    # and positions / bigram stats read it back (read_tokens). Only the
+    # docmap is a column projection of it, the shard jobs invert its terms
+    # and positions, and bigram stats read it back (read_tokens). Only the
     # extracted text is cached, and only for this one job: an Arrow UDF in
     # the lineage defeats column pruning, and assign_doc_ids reads its input
     # twice (the bucket-count job, then the window), so without the persist
@@ -194,7 +203,7 @@ def build_index(
         ).parquet(os.path.join(docmap_dir, "epoch=base"))
         tok = man.read("tokens")
         stats = {
-            "format": 2,
+            "format": INDEX_FORMAT,
             "n_docs": int(tok["docs"]),
             "avgdl": float(tok["avgdl"]),
             "total_tokens": int(tok["tokens"]),
@@ -245,7 +254,8 @@ def build_index(
         )
         # SPIMI two-stage: runs are varint-encoded map-side, so the one
         # posting-sized exchange moves ~5-10x fewer bytes/rows than raw
-        # (term, doc, tf, dl) rows would (spimi.build_segments_spimi)
+        # (term, doc, tf, dl) rows would; the position stream rides the
+        # same exchange into the same units (spimi.build_segments_spimi)
         segs = spimi.build_segments_spimi(
             sdocs, seg_bits=seg_bits, codec=codec, metrics=metrics
         )
@@ -256,7 +266,6 @@ def build_index(
             segs,
             n_term_buckets,
             os.path.join(index_dir, "postings", f"shard={shard}"),
-            nullable_bucket=True,
             segments=F.count(F.lit(1)),
             terms=F.approx_count_distinct("term"),
             postings=F.sum("df_seg"),
@@ -302,6 +311,22 @@ def build_index(
 def load_stats(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "stats.json")) as f:
         return json.load(f)
+
+
+def check_format(index_dir: str, st: dict) -> None:
+    """Raise unless ``index_dir`` (stats ``st``) is in the layout this
+    engine reads: format 3, positions inside postings/. A format-2 index,
+    or any index with a positions/ directory, would be read half-way (its
+    units carry no pos_blob), so it must be rebuilt."""
+    fmt = st.get("format", 1)
+    pos_dir = os.path.isdir(os.path.join(index_dir, "positions"))
+    if fmt != INDEX_FORMAT or pos_dir:
+        raise ValueError(
+            f"index at {index_dir} is format {fmt}"
+            f"{' with a positions/ directory' if pos_dir else ''}; this engine "
+            f"reads format {INDEX_FORMAT}, whose postings carry their "
+            "positions (pos_blob) — rebuild it with build_index"
+        )
 
 
 # the footer key under which Spark's parquet writer records the data schema
@@ -352,8 +377,7 @@ def read_tokens(spark: SparkSession, index_dir: str) -> DataFrame:
     the manifest records either (an ``epoch-*`` or ``compact-*`` entry, or
     a docmap that folded epochs in) the base tokens no longer describe the
     live corpus — they miss the streamed docs and keep deleted ones — and
-    this raises rather than let positions or bigram stats be rebuilt from
-    them."""
+    this raises rather than let bigram stats be rebuilt from them."""
     path = os.path.join(index_dir, "tokens", "epoch=base")
     man = Manifest(index_dir)
     if not (man.is_complete("tokens") and os.path.isdir(path)):
@@ -372,7 +396,7 @@ def read_tokens(spark: SparkSession, index_dir: str) -> DataFrame:
             f"{path} is stale: the manifest records streamed or compacted "
             f"units ({', '.join(stale)}) that tokens/ does not hold; build "
             "the index afresh (build_index into a new directory) to get "
-            "positions or bigram stats over the live corpus"
+            "bigram stats over the live corpus"
         )
     return spark.read.parquet(path)
 
@@ -383,9 +407,9 @@ def build_bigram_stats(
     """Add the ``bigram_stats/`` relation to an EXISTING index dataset:
     (prev, cur, n) corpus bigram counts under ``unit=base``, the
     phrase suggester's language model (mirrors term_stats' partials
-    layout so streaming epochs could append their own units). Opt-in
-    like the positional index — ES only pays for the phrase-suggest
-    data structures when the mapping asks for them.
+    layout so streaming epochs could append their own units). Opt-in:
+    ES only pays for the phrase-suggest data structures when the mapping
+    asks for them.
 
     Why index-time: the suggester previously re-derived these counts
     from the corpus PER QUERY (a full tokenize + transition scan per

@@ -40,7 +40,12 @@ from pyspark.sql import functions as F
 
 from kafka_es_spark.functions.tokenize import tokens
 from kafka_es_spark.operators import spimi
-from kafka_es_spark.plans.build_index import extracted_pages
+from kafka_es_spark.plans.build_index import (
+    BUCKET_SCHEME,
+    INDEX_FORMAT,
+    check_format,
+    extracted_pages,
+)
 from kafka_es_spark.plans.manifest import Manifest
 
 
@@ -49,7 +54,7 @@ def _read_stats(index_dir: str) -> dict:
     if os.path.exists(p):
         with open(p) as f:
             return json.load(f)
-    return {"format": 2, "n_docs": 0, "avgdl": 0.0, "total_tokens": 0,
+    return {"format": INDEX_FORMAT, "n_docs": 0, "avgdl": 0.0, "total_tokens": 0,
             "codec": "varint", "seg_bits": spimi.SEG_BITS}
 
 
@@ -61,19 +66,18 @@ def append_epoch(
     seg_bits: int | None = None,
     n_term_buckets: int = 8,
     codec: str | None = None,
-    with_positions: bool = False,
     store_fields: tuple[str, ...] = (),
 ) -> dict | None:
     """Append one micro-batch of pages to the index as shard ``epoch-<n>``.
     Idempotent: a committed epoch is skipped entirely (exactly-once under
     foreachBatch replay). Returns the committed counters (None if skipped).
-    ``with_positions=True`` also writes the epoch's positional unit (phrase
-    queries then cover streamed docs; see operators.positions).
-    ``store_fields``, ``codec`` and ``seg_bits`` must MATCH the index's
-    recorded values (stats.json): a mismatched epoch would fork the docmap
-    schema (Spark's partition discovery silently drops columns from one
-    side) or re-code stats.json so that the existing units no longer
-    decode — so it raises instead. ``codec`` and ``seg_bits`` left unset
+    The epoch's unit carries its positions like every build unit, so
+    phrase queries cover streamed docs. ``store_fields``, ``codec`` and
+    ``seg_bits`` must MATCH the index's recorded values (stats.json): a
+    mismatched epoch would fork the docmap schema (Spark's partition
+    discovery silently drops columns from one side) or re-code stats.json
+    so that the existing units no longer decode — so it raises instead,
+    as it does on an index in an older layout (``check_format``). ``codec`` and ``seg_bits`` left unset
     take the recorded values (varint and ``spimi.SEG_BITS`` for a new
     index)."""
     os.makedirs(index_dir, exist_ok=True)
@@ -95,6 +99,7 @@ def append_epoch(
     store_fields = tuple(store_fields)
     recorded = tuple(stats.get("store_fields") or ())
     if os.path.exists(os.path.join(index_dir, "stats.json")):
+        check_format(index_dir, stats)
         if recorded != store_fields:
             raise ValueError(
                 f"append_epoch(store_fields={list(store_fields)}) does not "
@@ -164,17 +169,11 @@ def append_epoch(
         spark.read.parquet(dm_out).select("doc_id", "dl"), seg_bits=seg_bits
     ).write.mode("overwrite").parquet(rd_out)
 
-    if with_positions:
-        from kafka_es_spark.operators.positions import append_epoch_positions
-
-        append_epoch_positions(docs, index_dir, name, seg_bits, n_term_buckets)
-
     out = os.path.join(index_dir, "postings", f"shard={name}")
     spimi.write_units(
         spimi.build_segments_spimi(docs, seg_bits=seg_bits, codec=codec),
         n_term_buckets,
         out,
-        nullable_bucket=True,
     )
 
     # incremental stats — O(epoch), never O(index) (VERDICT r2 §wrong 3):
@@ -212,8 +211,6 @@ def append_epoch(
     # bucketed under a different hash, and pruning against them would
     # silently drop query terms (ADVICE r2). Fresh index (base == 0)
     # establishes the scheme.
-    from kafka_es_spark.plans.build_index import BUCKET_SCHEME
-
     if base == 0:
         consistent = True
     else:
@@ -222,7 +219,7 @@ def append_epoch(
             and stats.get("bucket_scheme") == BUCKET_SCHEME
         )
     new_stats = {
-        "format": 2,
+        "format": INDEX_FORMAT,
         "n_docs": int(st["n"]),
         "avgdl": float(st["a"] or 0.0),
         "total_tokens": int(st["s"] or 0),
@@ -285,7 +282,6 @@ def stream_pages_to_index(
     trigger_seconds: int | None = 10,
     n_term_buckets: int = 8,
     once: bool = False,
-    with_positions: bool = False,
     compact_every: int | None = None,
     store_fields: tuple[str, ...] = (),
 ):
@@ -308,7 +304,7 @@ def stream_pages_to_index(
     def sink(batch: DataFrame, epoch: int) -> None:
         append_epoch(
             spark, batch, index_dir, epoch, n_term_buckets=n_term_buckets,
-            with_positions=with_positions, store_fields=store_fields,
+            store_fields=store_fields,
         )
         if compact_every is not None:
             from kafka_es_spark.operators.compaction import (

@@ -18,13 +18,7 @@ from kafka_es_spark.operators.deletes import (
     add_tombstones,
     read_tombstone_ids,
 )
-from kafka_es_spark.operators.positions import (
-    POS_SEGMENT_SCHEMA,
-    build_position_index,
-    build_position_runs,
-    merge_position_runs,
-)
-from kafka_es_spark.operators.spimi import SEGMENT_SCHEMA, build_segments_spimi
+from kafka_es_spark.operators.spimi import UNIT_SCHEMA, build_segments_spimi
 from kafka_es_spark.operators.wand import Searcher, wand_topk
 from kafka_es_spark.plans.build_index import build_index, extracted_pages, load_stats
 from kafka_es_spark.plans.manifest import Manifest
@@ -170,9 +164,8 @@ def test_compaction_is_rerunnable(spark, tmp_path):
 
 def test_compaction_folds_positions_and_phrase_respects_tombstones(spark, tmp_path):
     """Phrase queries exclude persistent tombstones BEFORE compaction and
-    the positional relation is folded (deletes physical) BY compaction."""
+    the postings' positions are folded (deletes physical) BY compaction."""
     from kafka_es_spark.operators.positions import (
-        build_position_index,
         decode_position_segment,
         phrase_topk,
     )
@@ -181,7 +174,6 @@ def test_compaction_folds_positions_and_phrase_respects_tombstones(spark, tmp_pa
     idx = str(tmp_path / "pcidx")
     pages = gen_pages(spark, 150, seed=4, partitions=3)
     build_index(spark, pages, idx, seg_bits=6, n_term_buckets=4)
-    build_position_index(spark, pages, idx)
 
     base = phrase_topk(spark, idx, "data index", k=30, round_to=None).collect()
     assert base, "corpus should contain the phrase"
@@ -194,10 +186,11 @@ def test_compaction_folds_positions_and_phrase_respects_tombstones(spark, tmp_pa
 
     compact_index(spark, idx)
     # positions folded to one base shard; dead docs physically gone
-    assert os.listdir(os.path.join(idx, "positions")) == ["shard=base"]
-    for r in spark.read.parquet(os.path.join(idx, "positions")).collect():
-        ids, _, _ = decode_position_segment(r)
+    assert os.listdir(os.path.join(idx, "postings")) == ["shard=base"]
+    for r in spark.read.parquet(os.path.join(idx, "postings")).collect():
+        ids, tfs, pos = decode_position_segment(r)
         assert not (set(int(x) for x in ids) & dead), r["term"]
+        assert pos.size == tfs.sum()
     # phrase results unchanged in doc set (scores shift with live stats)
     post = phrase_topk(spark, idx, "data index", k=30, round_to=None).collect()
     assert {int(r["doc_id"]) for r in post} == {int(r["doc_id"]) for r in excl}
@@ -212,14 +205,13 @@ def _rows(df, cols):
 
 @pytest.mark.parametrize("codec", ["varint", "bp128"])
 def test_compaction_equals_fresh_build_over_live_docs(spark, pages, tmp_path, codec):
-    """Base plus two positioned epochs, some docs tombstoned, then
-    compact_index: the postings and positions units equal a fresh
-    build_segments_spimi / position-run merge over the live (doc_id,
-    terms) rows with the same ids, in every column."""
+    """Base plus two epochs, some docs tombstoned, then compact_index: the
+    postings units equal a fresh build_segments_spimi over the live
+    (doc_id, terms) rows with the same ids, in every column, positions
+    included."""
     idx = str(tmp_path / f"c-{codec}")
     build_index(spark, pages, idx, seg_bits=6, n_term_buckets=4,
                 codec=codec)
-    build_position_index(spark, pages, idx)
     base = spark.read.parquet(os.path.join(idx, "tokens")).select("doc_id", "terms")
     docs = [base]
     for e, seed in enumerate((7, 8)):
@@ -227,7 +219,7 @@ def test_compaction_equals_fresh_build_over_live_docs(spark, pages, tmp_path, co
             "url", F.concat(F.lit(f"e{e}:"), F.col("url"))
         )
         append_epoch(spark, batch, idx, epoch=e, seg_bits=6,
-                     n_term_buckets=4, codec=codec, with_positions=True)
+                     n_term_buckets=4, codec=codec)
         ids = spark.read.parquet(os.path.join(idx, "docmap", f"epoch={e}"))
         docs.append(
             ids.join(extracted_pages(batch), "url")
@@ -246,7 +238,7 @@ def test_compaction_equals_fresh_build_over_live_docs(spark, pages, tmp_path, co
     live = live.filter(~F.col("doc_id").isin(dead))
 
     bucket = F.pmod(hash32(F.col("term")), F.lit(4))
-    post_cols = [f.name for f in SEGMENT_SCHEMA.fields] + ["bucket"]
+    post_cols = UNIT_SCHEMA.names + ["bucket"]
     want = _rows(
         build_segments_spimi(live, seg_bits=6, codec=codec)
         .withColumn("bucket", bucket),
@@ -255,12 +247,4 @@ def test_compaction_equals_fresh_build_over_live_docs(spark, pages, tmp_path, co
     got = _rows(spark.read.parquet(os.path.join(idx, "postings")), post_cols)
     assert got and got == want
     assert len(got) < pre  # some (term, seg) groups lost every doc
-
-    pos_cols = [f.name for f in POS_SEGMENT_SCHEMA.fields]
-    want = _rows(
-        merge_position_runs(build_position_runs(live, seg_bits=6), 4),
-        pos_cols,
-    )
-    got = _rows(spark.read.parquet(os.path.join(idx, "positions")), pos_cols)
-    assert got and got == want
     live.unpersist()

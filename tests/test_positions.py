@@ -1,18 +1,15 @@
-"""Positional index + phrase queries: encode/merge round-trip and
-rank-identity of phrase_topk vs a brute-force positional scorer."""
+"""Positions as a column of postings + phrase queries: encode/merge
+round-trip and rank-identity of phrase_topk vs a brute-force positional
+scorer."""
 
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from kafka_es_spark.operators.positions import (
-    build_position_index,
-    build_position_runs,
     decode_position_segment,
-    merge_position_runs,
     phrase_topk,
 )
+from kafka_es_spark.operators.spimi import UNIT_SCHEMA, merge_units, pack_runs
 from kafka_es_spark.operators.wand import idf
 from kafka_es_spark.plans.build_index import build_index, prepare_docs
 from kafka_es_spark.sources.pages import gen_pages
@@ -22,7 +19,6 @@ from kafka_es_spark.sources.pages import gen_pages
 def pidx(spark, pages, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("pos") / "pidx")
     build_index(spark, pages, d, seg_bits=6, n_term_buckets=4)
-    build_position_index(spark, pages, d)
     return d
 
 
@@ -36,7 +32,7 @@ def test_position_roundtrip_exact(spark, pages, pidx):
     for d, ts in zip(doc_terms["doc_id"], doc_terms["terms"]):
         for p, t in enumerate(ts):
             truth.setdefault(t, {}).setdefault(int(d), []).append(p)
-    seg_rows = spark.read.parquet(os.path.join(pidx, "positions")).collect()
+    seg_rows = spark.read.parquet(os.path.join(pidx, "postings")).collect()
     by_term: dict[str, list] = {}
     for r in seg_rows:
         by_term.setdefault(r["term"], []).append(r)
@@ -58,10 +54,8 @@ def test_merge_equals_direct_runs(spark, pages):
     """Merging shuffled runs must reproduce each (term, doc)'s positions
     regardless of input partitioning."""
     docs = prepare_docs(pages)
-    a = merge_position_runs(build_position_runs(docs, seg_bits=6), 4)
-    b = merge_position_runs(
-        build_position_runs(docs.repartition(7), seg_bits=6), 4
-    )
+    a = merge_units(pack_runs(docs, 6, 50_000), UNIT_SCHEMA)
+    b = merge_units(pack_runs(docs.repartition(7), 6, 50_000), UNIT_SCHEMA)
     ka = {(r["term"], r["seg"]): (bytes(r["docs_blob"]), bytes(r["tfs_blob"]),
                                   bytes(r["pos_blob"])) for r in a.collect()}
     kb = {(r["term"], r["seg"]): (bytes(r["docs_blob"]), bytes(r["tfs_blob"]),
@@ -170,19 +164,23 @@ def test_phrase_order_sensitivity(spark, pages, pidx):
 
 
 def test_streaming_epochs_with_positions_serve_phrases(spark, tmp_path):
-    """Epochs appended with with_positions=True extend phrase coverage:
-    phrase results over two epochs equal brute force over the union corpus
-    (doc ids re-mapped by url), and a position-less index raises the
-    documented error."""
+    """Appended epochs carry their positions with no flag: phrase results
+    over two epochs equal brute force over the union corpus (doc ids
+    re-mapped by url). An index in the old layout — format 2, or any
+    index with a positions/ directory — raises the rebuild error on open
+    and on a positional query."""
+    import json
+    import os
+    import shutil
+
+    from kafka_es_spark.operators.wand import Searcher
     from kafka_es_spark.streaming.ingest_stream import append_epoch
 
     idx = str(tmp_path / "spidx")
     p1 = gen_pages(spark, 90, seed=1, partitions=2)
     p2 = gen_pages(spark, 60, seed=2, partitions=2)
-    append_epoch(spark, p1, idx, epoch=0, seg_bits=6, n_term_buckets=4,
-                 with_positions=True)
-    append_epoch(spark, p2, idx, epoch=1, seg_bits=6, n_term_buckets=4,
-                 with_positions=True)
+    append_epoch(spark, p1, idx, epoch=0, seg_bits=6, n_term_buckets=4)
+    append_epoch(spark, p2, idx, epoch=1, seg_bits=6, n_term_buckets=4)
     both = p1.unionByName(p2)
     doc_terms = prepare_docs(both).select("doc_id", "url", "terms").toPandas()
     want = brute_phrase_topk(doc_terms, ["data", "index"], 10)
@@ -198,11 +196,28 @@ def test_streaming_epochs_with_positions_serve_phrases(spark, tmp_path):
         assert r["score"] == pytest.approx(ws, rel=1e-12)
     assert {r["url"] for r in got} == want_urls
 
-    # position-less index: documented error
-    idx2 = str(tmp_path / "noposidx")
-    append_epoch(spark, p1, idx2, epoch=0, seg_bits=6, n_term_buckets=4)
-    with pytest.raises(ValueError, match="positions/"):
-        phrase_topk(spark, idx2, "data index", k=5).collect()
+    # the old layout: a positions/ directory beside the postings ...
+    old = str(tmp_path / "posdir")
+    shutil.copytree(idx, old)
+    os.makedirs(os.path.join(old, "positions", "shard=base"))
+    for op in (
+        lambda: Searcher(spark, old, cache=False),
+        lambda: phrase_topk(spark, old, "data index", k=5).collect(),
+    ):
+        with pytest.raises(ValueError, match="positions/ directory.*rebuild"):
+            op()
+    # ... or a format-2 stats.json
+    shutil.rmtree(os.path.join(old, "positions"))
+    with open(os.path.join(old, "stats.json")) as f:
+        st = json.load(f)
+    with open(os.path.join(old, "stats.json"), "w") as f:
+        json.dump({**st, "format": 2}, f)
+    for op in (
+        lambda: Searcher(spark, old, cache=False),
+        lambda: phrase_topk(spark, old, "data index", k=5).collect(),
+    ):
+        with pytest.raises(ValueError, match="format 2;.*rebuild"):
+            op()
 
 
 def brute_sloppy_topk(doc_terms, slots, slop, k):
@@ -314,15 +329,12 @@ def test_span_first_window_semantics(spark, pages, tmp_path):
 
     import numpy as np
 
-    from kafka_es_spark.operators.positions import (
-        build_position_index, span_first_topk,
-    )
+    from kafka_es_spark.operators.positions import span_first_topk
     from kafka_es_spark.operators.wand import round_half_up
     from kafka_es_spark.plans.build_index import build_index, prepare_docs
 
     d = str(tmp_path / "idxsf")
     build_index(spark, pages, d, seg_bits=6, n_term_buckets=4)
-    build_position_index(spark, pages, d)
     toks = {
         r["doc_id"]: list(r["terms"])
         for r in prepare_docs(pages).select("doc_id", "terms").collect()

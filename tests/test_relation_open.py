@@ -22,7 +22,6 @@ import kafka_es_spark
 from kafka_es_spark.operators.compaction import compact_index
 from kafka_es_spark.operators.deletes import add_tombstones, read_tombstone_ids
 from kafka_es_spark.operators.positions import (
-    build_position_index,
     intervals_unordered_topk,
     phrase_match_ids,
     phrase_prefix_topk,
@@ -37,7 +36,7 @@ from kafka_es_spark.sources.pages import PAGES_SCHEMA, gen_pages
 
 SEG_BITS = 6
 RELATIONS = (
-    "docmap", "postings", "positions", "range_dls", "term_stats", "tokens",
+    "docmap", "postings", "range_dls", "term_stats", "tokens",
     "_deletes",
 )
 
@@ -49,7 +48,6 @@ def idx(spark, pages, tmp_path_factory):
         spark, pages, d, seg_bits=SEG_BITS, n_term_buckets=4,
         store_fields=("lang",),
     )
-    build_position_index(spark, pages, d)
     return d
 
 
@@ -82,7 +80,7 @@ def _assert_same_schemas(spark, index_dir, where):
 
 
 def test_read_relation_schema_equals_inference(spark, pages, idx, tmp_path):
-    """Every index relation, after a build with positions and tombstones
+    """Every index relation, after a build with tombstones
     (postings ``shard=0`` is an int partition), after an epoch append
     (``shard=epoch-*`` makes it a string) and after compaction."""
     d = str(tmp_path / "idx")
@@ -98,7 +96,7 @@ def test_read_relation_schema_equals_inference(spark, pages, idx, tmp_path):
 
     append_epoch(
         spark, epoch_pages, d, epoch=0, seg_bits=SEG_BITS, n_term_buckets=4,
-        with_positions=True, store_fields=("lang",),
+        store_fields=("lang",),
     )
     _assert_same_schemas(spark, d, "append_epoch")
     compact_index(spark, d)

@@ -82,3 +82,61 @@ def test_run_encoding_has_one_home():
             if name in RUN_ENCODERS:
                 found.append(f"{rel}:{node.lineno} {name}")
     assert not found, "run encoding outside spimi.py/codecs.py: " + ", ".join(found)
+
+
+# --- positions are a column of postings --------------------------------------
+
+RETIRED = {
+    "with_positions", "POS_UNIT_SCHEMA", "POS_SEGMENT_SCHEMA", "POS_RUN_SCHEMA",
+    "nullable_bucket", "build_position_runs", "merge_position_runs",
+    "append_epoch_positions",
+}
+# the one site that looks for the old layout, to refuse it
+LAYOUT_CHECK = ("plans/build_index.py", "check_format")
+
+
+def _names(node: ast.AST) -> set[str]:
+    if isinstance(node, ast.Name):
+        return {node.id}
+    if isinstance(node, ast.Attribute):
+        return {node.attr}
+    if isinstance(node, ast.arg):
+        return {node.arg}
+    if isinstance(node, ast.keyword) and node.arg:
+        return {node.arg}
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return {node.name}
+    if isinstance(node, ast.alias):
+        return {node.name, node.asname or node.name}
+    return set()
+
+
+def test_positions_have_no_relation_of_their_own():
+    """No module in the package names the retired positional-relation API
+    (the ``with_positions`` switch, the ``POS_*`` schemas, the separate
+    position build, the bucket nullability split) or joins a
+    ``"positions"`` path segment — except ``check_format``, which looks
+    for an old-layout ``positions/`` directory to refuse it."""
+    root = pathlib.Path(kafka_es_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        for node in ast.walk(tree):
+            if (rel, getattr(node, "name", None)) == LAYOUT_CHECK:
+                allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            for name in _names(node) & RETIRED:
+                found.append(f"{rel}:{getattr(node, 'lineno', '?')} {name}")
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "join"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "positions"
+                    for a in node.args
+                )
+                and id(node) not in allowed
+            ):
+                found.append(f"{rel}:{node.lineno} joins 'positions'")
+    assert not found, "positional-relation code: " + ", ".join(found)

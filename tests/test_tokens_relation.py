@@ -1,6 +1,7 @@
 """The ``tokens/`` relation: build_index writes the extracted, doc-id'd,
-tokenized corpus once, and the docmap, shard, positions and bigram jobs
-read it instead of re-deriving the corpus from pages."""
+tokenized corpus once, and the docmap, shard (postings with their
+positions) and bigram jobs read it instead of re-deriving the corpus from
+pages."""
 
 import json
 import os
@@ -12,12 +13,8 @@ from pyspark.sql import functions as F
 
 from kafka_es_spark.functions.tokenize import tokens
 from kafka_es_spark.operators.cooccur import bigram_counts
-from kafka_es_spark.operators.positions import (
-    POS_SEGMENT_SCHEMA,
-    build_position_index,
-    build_position_runs,
-    merge_position_runs,
-)
+from kafka_es_spark.operators.positions import build_position_index
+from kafka_es_spark.operators.spimi import UNIT_SCHEMA, merge_units, pack_runs
 from kafka_es_spark.plans.build_index import (
     build_bigram_stats,
     build_index,
@@ -35,7 +32,6 @@ def tidx(spark, pages, tmp_path_factory):
         spark, pages, d, seg_bits=SEG_BITS, n_term_buckets=BUCKETS,
         store_fields=("lang",),
     )
-    build_position_index(spark, pages, d)
     build_bigram_stats(spark, pages, d)
     return d
 
@@ -62,18 +58,15 @@ def test_tokens_rows_equal_prepare_docs(spark, pages, tidx):
 
 
 def test_positions_equal_runs_over_prepare_docs(spark, pages, tidx):
-    """The positions relation built from tokens/ is row- and byte-identical
-    to merging position runs over a fresh prepare_docs(pages)."""
-    cols = [f.name for f in POS_SEGMENT_SCHEMA.fields]
+    """The postings units (positions included) built from tokens/ are row-
+    and byte-identical to merging runs over a fresh prepare_docs(pages)."""
+    cols = UNIT_SCHEMA.names
     want = _sorted_rows(
-        merge_position_runs(
-            build_position_runs(prepare_docs(pages), seg_bits=SEG_BITS),
-            n_term_buckets=BUCKETS,
-        ),
+        merge_units(pack_runs(prepare_docs(pages), SEG_BITS, 50_000), UNIT_SCHEMA),
         cols,
     )
     got = _sorted_rows(
-        spark.read.parquet(os.path.join(tidx, "positions", "shard=base")), cols
+        spark.read.parquet(os.path.join(tidx, "postings", "shard=0")), cols
     )
     assert got and got == want
 
@@ -87,15 +80,13 @@ def test_bigram_stats_equal_counts_over_text_tokens(spark, pages, tidx):
     assert got and got == want
 
 
-def test_positions_and_bigrams_raise_without_tokens(spark, pages, tidx, tmp_path):
+def test_bigrams_raise_without_tokens(spark, pages, tidx, tmp_path):
     """An index built before tokens/ existed (no relation, no manifest
     entry) fails loudly instead of re-deriving the corpus from pages."""
     old = str(tmp_path / "old")
     shutil.copytree(tidx, old)
     shutil.rmtree(os.path.join(old, "tokens"))
     os.remove(os.path.join(old, "_manifest", "tokens.json"))
-    with pytest.raises(FileNotFoundError, match="tokens"):
-        build_position_index(spark, pages, old)
     with pytest.raises(FileNotFoundError, match="tokens"):
         build_bigram_stats(spark, pages, old)
 
@@ -135,13 +126,15 @@ def test_resume_after_tokens_stage_reproduces_stats(spark, pages, tidx, tmp_path
     )
 
 
-def test_positions_and_bigrams_raise_on_a_streamed_or_compacted_index(
+def test_bigrams_raise_on_a_streamed_or_compacted_index(
     spark, pages, tidx, tmp_path
 ):
     """tokens/ holds only the base unit: after an epoch is appended, or a
     compaction folds epochs and tombstones into the base, rebuilding
-    positions or bigram stats from it would drop the streamed docs and
-    keep the deleted ones — so it raises."""
+    bigram stats from it would drop the streamed docs and keep the
+    deleted ones — so it raises. Positions need no rebuild: they ride
+    every epoch and compaction unit, and ``build_position_index`` only
+    checks the layout."""
     from kafka_es_spark.operators.compaction import compact_index
     from kafka_es_spark.operators.deletes import add_tombstones
     from kafka_es_spark.sources.pages import gen_pages
@@ -158,6 +151,5 @@ def test_positions_and_bigrams_raise_on_a_streamed_or_compacted_index(
     assert add_tombstones(spark, d, doc_ids=[0]) == 1
     compact_index(spark, d)
     with pytest.raises(ValueError, match="stale.*compact-"):
-        build_position_index(spark, pages, d)
-    with pytest.raises(ValueError, match="stale"):
         build_bigram_stats(spark, pages, d)
+    assert build_position_index(spark, pages, d)["postings"] > 0
