@@ -16,9 +16,10 @@ plans (and the scale arguments) those operators already carry:
   (the ES filter contract);
 * ``bool`` composes them with Lucene's semantics: every ``must`` and
   ``filter`` gates, any ``must_not`` excludes, ``should`` adds score
-  and — when no must/filter exists — at least ``minimum_should_match``
-  (default 1) must match. The must/should clauses a doc matched are
-  counted in the same aggregation that sums its score, so no scorer
+  and at least ``minimum_should_match`` should clauses must match (ES
+  7.x: 1 by default when no must/filter exists, else 0; an explicit
+  value always applies). ``_summed`` counts the must/should clauses a
+  doc matched in the same aggregation that sums its score, so no scorer
   runs twice.
 
 Scoring model: the Lucene scoring-boolean sum — a doc's score is the
@@ -38,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_es_spark.operators.wand import index_prefix_terms
 from kafka_es_spark.session import local_frame
 
 
@@ -212,11 +214,9 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         if field != "text":
             raise DSLError("prefix targets the analyzed 'text' field only")
         value = spec["value"] if isinstance(spec, dict) else spec
-        rows = (
-            searcher.term_stats.filter(F.col("term").startswith(value))
-            .select("term").orderBy("term").limit(50).collect()
+        terms = index_prefix_terms(
+            searcher.spark, searcher.index_dir, value, 50
         )
-        terms = [r["term"] for r in rows]
         if not terms:
             empty = local_frame(searcher.spark, [], "doc_id long")
             return _Compiled(None, empty)
@@ -474,11 +474,9 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
             )
         cap = int(spec.get("max_expansions", 50))
         fixed, pre = toks[:-1], toks[-1]
-        rows = (
-            searcher.term_stats.filter(F.col("term").startswith(pre))
-            .select("term").orderBy("term").limit(cap).collect()
-        )
-        terms = sorted(set(fixed) | {r["term"] for r in rows})
+        terms = sorted(set(fixed) | set(index_prefix_terms(
+            searcher.spark, searcher.index_dir, pre, cap
+        )))
         if not terms:
             return _Compiled(
                 None, local_frame(searcher.spark, [], "doc_id long")
@@ -977,30 +975,27 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
         _ids(c) for c in filt
     ]
     must_parts = [(c.scores, c.one_per_doc) for c in must if c.scores is not None]
+    floor = _should_floor(body, should, gated=bool(must or filt))
     should_parts = [
         (c.scores, c.one_per_doc) for c in should if c.scores is not None
     ]
-    if must_parts:
-        # the hit set is the scored musts' (each counted) and the gates'
-        base = _summed(must_parts, floor=len(must_parts))
-    else:
-        should_floor = _should_floor(body, should, gated=bool(gates))
+    if floor or not must_parts:
         # a filter-context clause inside should (range/exists/ids/terms —
-        # gate-only, no scores) still ADMITS its docs to the hit set in
-        # ES; it just contributes 0 to the score sum. Without this, a doc
-        # matching only such a should clause silently vanishes. Only when
-        # the bool scores — in filter context a gate-only bool must stay
-        # a pure gate (callers like constant_score require inner.gate).
-        if scoring or should_parts:
-            should_parts += [
-                (c.gate.select("doc_id", F.lit(0.0).alias("score")), False)
-                for c in should if c.scores is None
-            ]
-        if not should_parts:
-            return _gate_bool(body, gates, should, nots)
+        # gate-only, no scores) still ADMITS its docs to the hit set, and
+        # counts toward the floor; it just contributes 0 to the score sum
+        should_parts += [(_zero(c.gate), False) for c in should if c.scores is None]
+    if must_parts:
+        # the hit set is the scored musts' (each counted) and the gates';
+        # beside them a should clause adds score to the must hits and
+        # counts toward an explicit floor, in the one aggregation that
+        # sums it onto them — no must scorer runs a second time
+        base = _summed(must_parts, floor=len(must_parts))
+        for g in gates:
+            base = base.join(g, "doc_id", "left_semi")
+    else:
         # Scale: every should frame semi-joins the gates BEFORE the score
         # aggregation, so a corpus-sized should frame is cut to the hit
-        # set first (semantically a no-op: the gates re-apply below).
+        # set first
         pre_gate = None
         for g in gates:
             pre_gate = g if pre_gate is None else pre_gate.join(
@@ -1011,37 +1006,18 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
                 (f_.join(pre_gate, "doc_id", "left_semi"), one)
                 for f_, one in should_parts
             ]
-            if not should_floor:
+            if not floor:
                 # optional shoulds: every gated doc is a hit, scored by
                 # its should sum (0 where none matches) — the gate joins
                 # the union as a 0-score frame that it bounds
-                should_parts.append(
-                    (pre_gate.select("doc_id", F.lit(0.0).alias("score")), False)
-                )
-        base = _summed(should_parts, floor=should_floor)
-    for g in gates:
-        base = base.join(g, "doc_id", "left_semi")
+                should_parts.append((_zero(pre_gate), False))
+        base = _summed(should_parts, floor=floor)
     for c in nots:
         base = base.join(_ids(c), "doc_id", "left_anti")
     if must_parts and should_parts:
-        # beside musts a should clause only adds score to the must hits:
-        # its rows are left-joined onto the hit-sized must result and
-        # summed there, so a corpus-sized should frame (rank_feature /
-        # distance_feature read the whole docmap) never enters an
-        # aggregation whole, and no must scorer runs a second time. One
-        # should frame of one row per doc needs no aggregation at all.
-        extra = None
-        for frame, _ in should_parts:
-            f_ = frame.select("doc_id", F.col("score").alias("__s"))
-            extra = f_ if extra is None else extra.unionByName(f_)
-        base = base.join(extra, "doc_id", "left")
-        if len(should_parts) > 1 or not should_parts[0][1]:
-            base = base.groupBy("doc_id", "score").agg(
-                F.sum("__s").alias("__s")
-            )
-        base = base.select("doc_id", (
-            F.col("score") + F.coalesce(F.col("__s"), F.lit(0.0))
-        ).alias("score"))
+        base = _summed(should_parts, floor, onto=base)
+    if not scoring:
+        return _Compiled(None, base.select("doc_id"))
     # ES: a bool-level boost multiplies the whole bool's summed score
     b_boost = float(body.get("boost", 1.0))
     if b_boost != 1.0:
@@ -1049,31 +1025,57 @@ def _compile_bool(searcher, body: dict, scoring: bool, emb=None) -> _Compiled:
     return _Compiled(base, None, one_per_doc=True)
 
 
-def _summed(parts, floor: int) -> DataFrame:
-    """One (doc_id, score) row per doc: the score summed over the frames
-    ``parts`` [(frame, one row per doc)], kept where the doc is in at
-    least ``floor`` of them. The count comes from the same aggregation,
-    and a lone frame that already holds one row per doc needs none."""
-    if len(parts) == 1 and floor <= 1:
+def _zero(ids: DataFrame) -> DataFrame:
+    """A hit set as a 0-score frame: its docs count, they add no score."""
+    return ids.select("doc_id", F.lit(0.0).alias("score"))
+
+
+def _summed(parts, floor: int, onto: DataFrame | None = None) -> DataFrame:
+    """The one clause counter of ``bool``: one (doc_id, score) row per
+    doc, the score summed over the frames ``parts`` [(frame, one row per
+    doc)] and kept where the doc is in at least ``floor`` of them. The
+    count comes from the same aggregation, and a lone frame that already
+    holds one row per doc needs none.
+
+    ``onto``: one (doc_id, score) row per hit (a bool's must hits). The
+    parts then only add score to those hits and count toward the floor
+    there: their rows are left-joined onto the hit-sized frame, so a
+    corpus-sized part (rank_feature / distance_feature read the whole
+    docmap) never enters an aggregation whole. One part of one row per
+    doc needs no aggregation unless a floor applies."""
+
+    if onto is None and len(parts) == 1 and floor <= 1:
         frame, one_per_doc = parts[0]
         if one_per_doc:
             return frame.select("doc_id", "score")
         return frame.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    # a doc in the union is in one part at least; a hit of ``onto`` may
+    # be in none
+    counted = floor > (1 if onto is None else 0)
+    col = "score" if onto is None else "__s"
     union = None
     for frame, one_per_doc in parts:
-        if floor > 1 and not one_per_doc:
+        if counted and not one_per_doc:
             # a frame repeating a doc would count more than once
             frame = frame.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        f_ = frame.select("doc_id", "score")
+        f_ = frame.select("doc_id", F.col("score").alias(col))
         union = f_ if union is None else union.unionByName(f_)
-    if floor <= 1:
-        return union.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    return (
-        union.groupBy("doc_id")
-        .agg(F.sum("score").alias("score"), F.count("*").alias("__n"))
-        .filter(F.col("__n") >= floor)
-        .select("doc_id", "score")
+    aggs = [F.sum(col).alias(col)] + (
+        [F.count(col).alias("__n")] if counted else []
     )
+    if onto is None:
+        out = union.groupBy("doc_id").agg(*aggs)
+    else:
+        out = onto.join(union, "doc_id", "left")
+        if counted or len(parts) > 1 or not parts[0][1]:
+            out = out.groupBy("doc_id", "score").agg(*aggs)
+    if counted:
+        out = out.filter(F.col("__n") >= floor)
+    if onto is None:
+        return out.select("doc_id", "score")
+    return out.select("doc_id", (
+        F.col("score") + F.coalesce(F.col(col), F.lit(0.0))
+    ).alias("score"))
 
 
 def _ids(comp: _Compiled) -> DataFrame:
@@ -1094,40 +1096,6 @@ def _should_floor(body: dict, should, gated: bool) -> int:
     if msm is None:
         return 0 if gated else 1
     return _min_should_match(msm, len(should), lowest=0 if gated else 1)
-
-
-def _gate_bool(body: dict, gates, should, nots) -> _Compiled:
-    """A bool with no score frame (filter context): its hit set from the
-    must/filter gates and >= ``_should_floor`` should clauses, minus
-    must_not."""
-    ok = None
-    floor = _should_floor(body, should, gated=bool(gates))
-    if floor:
-        # a should-only bool of pure filter clauses (e.g.
-        # {bool:{should:[{range:...}]}}) is the docs satisfying >= msm
-        # should clauses — ES does not reject it
-        union = _ids(should[0]).distinct()
-        for c in should[1:]:
-            union = union.unionByName(_ids(c).distinct())
-        ok = (
-            union.groupBy("doc_id")
-            .agg(F.count("*").alias("m"))
-            .filter(F.col("m") >= floor)
-            .select("doc_id")
-        )
-    if not gates:
-        if ok is None:
-            raise DSLError("bool resolved to no concrete hit set")
-        base = ok
-    else:
-        base = gates[0].distinct()
-        for g in gates[1:]:
-            base = base.join(g, "doc_id", "left_semi")
-        if ok is not None:
-            base = base.join(ok, "doc_id", "left_semi")
-    for c in nots:
-        base = base.join(_ids(c), "doc_id", "left_anti")
-    return _Compiled(None, base)
 
 
 def _collect_match_terms(clause) -> list[str]:

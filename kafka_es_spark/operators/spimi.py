@@ -541,13 +541,18 @@ def write_units(
     return obs.get
 
 
+def decode_ids(row, codec: str = "varint") -> np.ndarray:
+    """A segment row's doc ids alone, with no tf decode: the input of a
+    hit set or a negation."""
+    gaps = codecs.decode(bytes(row["docs_blob"]), int(row["df_seg"]), codec)
+    return codecs.delta_decode(gaps).astype(np.int64)
+
+
 def decode_segment(row, codec: str = "varint"):
     """Segment row → (doc_ids, tfs) numpy arrays. Used by scorers/tests.
     Doc lengths come from the range dl array (``decode_range_dls``)."""
-    n = int(row["df_seg"])
-    gaps = codecs.decode(bytes(row["docs_blob"]), n, codec)
-    tfs = codecs.decode(bytes(row["tfs_blob"]), n, codec)
-    return codecs.delta_decode(gaps).astype(np.int64), tfs.astype(np.int64)
+    tfs = codecs.decode(bytes(row["tfs_blob"]), int(row["df_seg"]), codec)
+    return decode_ids(row, codec), tfs.astype(np.int64)
 
 
 def build_range_dls(docs: DataFrame, seg_bits: int = SEG_BITS) -> DataFrame:

@@ -24,8 +24,14 @@ Query plan (SURVEY.md §3.3):
    principle of Broder et al. and Ding & Suel, see PAPERS.md, applied to
    doc-id windows): a window is scored only if the sum of its per-term
    contribution maxima can reach the k-th best score θ. AND,
-   minimum_should_match and search_after count each doc's matched terms
-   in one exhaustive pass (``counted_range_topk``). Ties break score desc,
+   minimum_should_match and search_after count the CLAUSES each doc
+   matched in one exhaustive pass (``counted_range_topk``, ``_seg_hits``)
+   and keep the docs at the floor. A clause is one query term, or a
+   group of terms ORed (a clause list, as query_string's ``+`` groups
+   pass). Every seg kernel shares one match front end
+   (``Searcher._match``: floor, absent-term rules) and one per-range
+   match core (``_seg_match``: by-term grouping, the floor early-out,
+   the must_not decode, the tombstone drop). Ties break score desc,
    doc_id asc.
 
 Rank-identity discipline: every scorer takes its contributions from
@@ -39,6 +45,7 @@ float64 scores for the same doc, equal to a sequential per-term sum.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -48,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_es_spark.operators.spimi import (
-    decode_range_dls, decode_segment, gather_dls,
+    decode_ids, decode_range_dls, decode_segment, gather_dls,
 )
 from kafka_es_spark.operators.bm25 import contrib, contrib_col, idf, idf_col
 from kafka_es_spark.plans.build_index import read_relation
@@ -116,19 +123,97 @@ class _Cursor:
         self.contrib = contrib(np.concatenate(tf_l), dls, w, avgdl)
 
 
-def _seg_cursors(key, pdf: pd.DataFrame, dpdf: pd.DataFrame,
+def _seg_cursors(key, by_term: dict[str, list[dict]], dpdf: pd.DataFrame,
                  weights: dict[str, float], avgdl: float,
                  codec: str) -> list[_Cursor]:
-    """One seg-cogroup group's cursors, one per term, in sorted-term
-    order; every term in ``pdf`` must have a weight."""
+    """One seg-cogroup group's cursors: one per weighted term with rows
+    in the group, in sorted-term order."""
     dl_base, dl_arr = _seg_dls(key, dpdf)
+    return [
+        _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
+        for t in sorted(weights)
+        if t in by_term
+    ]
+
+
+class _Match(NamedTuple):
+    """A match request resolved against the index (``Searcher._match``).
+
+    ``clauses``: each clause's terms present in the index (ORed within
+    the clause); ``need``: how many clauses a hit must match; ``neg``:
+    the negated terms; ``weights``: the scored terms' weights — every
+    clause term, plus any term that only adds score. ``plain``: each
+    clause is one distinct term and the clause terms are the scored
+    terms, so a doc's posting count over the scored terms IS its clause
+    count."""
+
+    clauses: list[list[str]]
+    need: int
+    neg: list[str]
+    weights: dict[str, float]
+    plain: bool
+
+
+def _seg_match(pdf: pd.DataFrame, m: _Match, excluded: frozenset[int] | None,
+               codec: str):
+    """The match core of every seg kernel: one seg group's segment rows
+    by term, and the doc ids the group drops — ``excluded`` (tombstones)
+    plus every doc of a negated term, decoded from the same pruned scan.
+    None when fewer than ``m.need`` clauses have postings in the group:
+    no doc there can qualify, so nothing is decoded."""
     by_term: dict[str, list[dict]] = {}
     for r in pdf.to_dict("records"):
         by_term.setdefault(r["term"], []).append(r)
-    return [
-        _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
-        for t in sorted(by_term)
+    if sum(any(t in by_term for t in c) for c in m.clauses) < m.need:
+        return None
+    neg = [decode_ids(r, codec) for t in m.neg for r in by_term.get(t, ())]
+    if neg:
+        excluded = (excluded or frozenset()) | frozenset(
+            np.concatenate(neg).tolist()
+        )
+    return by_term, excluded
+
+
+def _clause_counts(uids: np.ndarray, term_ids: dict[str, np.ndarray],
+                   clauses: list[list[str]]) -> np.ndarray:
+    """How many of ``clauses`` each of ``uids`` (ascending) matched: a
+    doc counts once per clause however many of its terms it holds."""
+    hit = [
+        np.unique(np.concatenate([term_ids[t] for t in c if t in term_ids]))
+        for c in clauses
+        if any(t in term_ids for t in c)
     ]
+    ids, n = np.unique(np.concatenate(hit), return_counts=True)
+    at = np.minimum(np.searchsorted(ids, uids), ids.size - 1)
+    return np.where(ids[at] == uids, n[at], 0)
+
+
+def _seg_hits(key, pdf: pd.DataFrame, dpdf: pd.DataFrame | None, m: _Match,
+              excluded: frozenset[int] | None, codec: str, avgdl: float):
+    """One seg group's hits: the docs that match at least ``m.need``
+    clauses and are not dropped (``_seg_match``), as ascending doc ids,
+    their clause counts and their BM25 sums over the scored terms
+    (pooled in sorted-term order, as every scorer pools).
+    ``dpdf=None`` is the no-score mode: only the clause terms' doc ids
+    are decoded (no dl gather, no tf decode) and the sums are 0."""
+    g = _seg_match(pdf, m, excluded, codec)
+    if g is None:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    by_term, dead = g
+    if dpdf is None:
+        terms = sorted({t for c in m.clauses for t in c if t in by_term})
+        ids = [np.concatenate([decode_ids(r, codec) for r in by_term[t]])
+               for t in terms]
+        vals = [np.zeros(i.size) for i in ids]
+    else:
+        cursors = _seg_cursors(key, by_term, dpdf, m.weights, avgdl, codec)
+        terms = [t for t in sorted(m.weights) if t in by_term]
+        ids, vals = [c.ids for c in cursors], [c.contrib for c in cursors]
+    uids, cnt, sums = _pool(np.concatenate(ids), np.concatenate(vals), dead)
+    if not m.plain:
+        cnt = _clause_counts(uids, dict(zip(terms, ids)), m.clauses)
+    keep = cnt >= m.need
+    return uids[keep], cnt[keep], sums[keep]
 
 
 def _pool_cursors(
@@ -546,8 +631,24 @@ class Searcher:
         small by contract (pending deletes since the last rebuild)."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
-        k = max(k, fetch_k or 0)
-        spark = self.spark
+        qterms = sorted(set(tokenize_py(query)))
+        if must_not and not qterms and tokenize_py(must_not):
+            raise ValueError(
+                "pure-negation query: must_not requires at least one "
+                "positive term (ES match_all + must_not is a full "
+                "corpus scan — not a top-k posting-list query)"
+            )
+        weights = None
+        if boosts:
+            # query-time boosts (ES term ^boost): scale the term weight —
+            # pure driver arithmetic, the scorers are boost-agnostic
+            weights = {
+                t: w * float(boosts.get(t, 1.0))
+                for t, w in self._query_weights(qterms).items()
+            }
+        m = self._match(query, mode, min_should_match, must_not, weights)
+        if m is None:
+            return local_frame(self.spark, [], TOPK_SCHEMA)
         excluded = (
             frozenset(int(d) for d in (exclude_doc_ids or ()))
             | self.persistent_excluded
@@ -557,103 +658,35 @@ class Searcher:
                 F.broadcast(exclude_urls.select("url").distinct()), "url"
             ).select("doc_id").collect()
             excluded = excluded | frozenset(int(r["doc_id"]) for r in hits)
-        excluded = excluded or None
-        qterms = sorted(set(tokenize_py(query)))
-        neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            if neg_terms and not qterms:
-                raise ValueError(
-                    "pure-negation query: must_not requires at least one "
-                    "positive term (ES match_all + must_not is a full "
-                    "corpus scan — not a top-k posting-list query)"
-                )
-            return local_frame(spark, [], TOPK_SCHEMA)
+        k = max(k, fetch_k or 0)
 
-        # query-time boosts (ES term ^boost): scale the term weight —
-        # pure driver arithmetic, the scorers are boost-agnostic
-        weights = {
-            t: idf(self.n_docs, df) * float((boosts or {}).get(t, 1.0))
-            for t, df in self.doc_freqs(qterms).items()
-        }
-        if not weights:
-            return local_frame(spark, [], TOPK_SCHEMA)
-        if mode == "and" and len(weights) < len(qterms):
-            # a required term has no postings anywhere — no doc can match
-            return local_frame(spark, [], TOPK_SCHEMA)
-        msm = min_should_match
-        if msm is not None and (msm < 1 or mode == "and"):
-            raise ValueError(
-                "min_should_match must be >= 1 and combines with mode='or' "
-                "(mode='and' IS min_should_match=#terms)"
-            )
-        if msm is not None and len(weights) < msm:
-            # fewer terms exist in the index than the match floor requires
-            return local_frame(spark, [], TOPK_SCHEMA)
-        term_order = sorted(weights)
+        def rank(cursors, dead):
+            if m.need > 1:
+                return counted_range_topk(cursors, k, m.need, dead)
+            return blockmax_topk_vectorized(cursors, k, excluded=dead)
+
+        ranged = self._ranked(m, excluded or None, rank)
+        return self._finish_topk(ranged, k, round_to, None, with_url)
+
+    def _ranked(self, m: _Match, excluded: frozenset[int] | None,
+                rank) -> DataFrame:
+        """The seg cogroup behind ``topk`` and ``search_after_topk``: per
+        seg group, ``rank(cursors, dropped doc ids)`` → [(doc_id, score)]
+        over the match core's (``_seg_match``) cursors of the scored
+        terms. ``m`` is a query string's (``m.plain``), so the rankers'
+        per-doc cursor count is its clause count."""
         avgdl, codec = self.avgdl, self.codec
 
-        segs = self._query_segs(sorted(set(weights) | set(neg_terms)))
-        dls_rel = self._query_dls(segs)
-
         def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
-            dl_base, dl_arr = _seg_dls(key, dpdf)
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            n_pos = sum(1 for t in term_order if t in by_term)
-            if (mode == "and" and n_pos < len(term_order)) or (
-                msm is not None and n_pos < msm
-            ) or n_pos == 0:
-                # this doc range can't host a qualifying doc — skip
-                # without decoding anything
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
-            range_excluded = excluded
-            if neg_terms:
-                neg_ids = [
-                    decode_segment(r, codec)[0]
-                    for t in neg_terms
-                    for r in by_term.get(t, [])
-                ]
-                if neg_ids:
-                    range_excluded = (excluded or frozenset()) | frozenset(
-                        int(d) for d in np.concatenate(neg_ids)
-                    )
-            cursors = [
-                _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
-                for t in term_order
-                if t in by_term
-            ]
-            if mode == "and":
-                top = counted_range_topk(cursors, k, len(cursors), range_excluded)
-            elif msm is not None and msm > 1:
-                top = counted_range_topk(cursors, k, msm, range_excluded)
-            else:
-                top = blockmax_topk_vectorized(cursors, k, excluded=range_excluded)
+            g = _seg_match(pdf, m, excluded, codec)
+            top = [] if g is None else rank(
+                _seg_cursors(key, g[0], dpdf, m.weights, avgdl, codec), g[1]
+            )
             return pd.DataFrame(top, columns=["doc_id", "score"])
 
-        ranged = (
-            segs.groupBy("seg")
-            .cogroup(dls_rel.groupBy("seg"))
-            .applyInPandas(score_range, TOPK_SCHEMA)
+        return self._score_cogroup(
+            sorted(set(m.weights) | set(m.neg)), score_range, TOPK_SCHEMA
         )
-        out = ranged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        if with_url:
-            dm = self.docmap.select("doc_id", "url")
-            out = out.join(dm, "doc_id").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-        return out
-
 
     def prefix_topk(
         self,
@@ -665,22 +698,17 @@ class Searcher:
         fetch_k: int | None = None,
     ) -> DataFrame:
         """ES prefix-query analogue: expand the prefix against the term
-        dictionary (term_stats — the filter pushes into the parquet scan,
-        which is term-sorted within bucket files) to the first
+        dictionary (``index_prefix_terms``: a driver-side pyarrow read of
+        term_stats, no Spark job below ``DOC_FREQS_MAX_ROWS``) to the first
         ``max_expansions`` terms in ALPHABETIC order (the
         match_phrase_prefix expansion rule — deterministic, unlike
         df-ranked rewrites), then score the expansion as a plain OR
         disjunction through the standard block-max path. Scores are
         regular BM25 over the expanded terms (Lucene's scoring-boolean
         rewrite), so the result is oracle-checkable."""
-        rows = (
-            self.term_stats.filter(F.col("term").startswith(prefix))
-            .select("term")
-            .orderBy("term")
-            .limit(int(max_expansions))
-            .collect()
+        terms = index_prefix_terms(
+            self.spark, self.index_dir, prefix, max_expansions
         )
-        terms = [r["term"] for r in rows]
         if not terms:
             return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
@@ -791,82 +819,19 @@ class Searcher:
         exhaustive (see counted_range_topk: pruning against a cursor-
         filtered θ is unsound); stateless between pages, like
         search_after and unlike scroll contexts."""
-        from kafka_es_spark.functions.tokenize import tokenize_py
+        m = self._match(query, mode, min_should_match, must_not)
+        if m is None:
+            return local_frame(self.spark, [], TOPK_SCHEMA)
 
-        spark = self.spark
-        qterms = sorted(set(tokenize_py(query)))
-        neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(spark, [], TOPK_SCHEMA)
-        msm = min_should_match
-        if msm is not None and (msm < 1 or mode == "and"):
-            raise ValueError(
-                "min_should_match must be >= 1 and combines with mode='or' "
-                "(mode='and' IS min_should_match=#terms)"
-            )
-        weights = self._query_weights(qterms)
-        if not weights or (mode == "and" and len(weights) < len(qterms)) or (
-            msm is not None and len(weights) < msm
-        ):
-            return local_frame(spark, [], TOPK_SCHEMA)
-        need = msm if msm is not None else (len(qterms) if mode == "and" else 1)
-        term_order = sorted(weights)
-        avgdl, codec = self.avgdl, self.codec
-        excluded = self.persistent_excluded or None
-        segs = self._query_segs(sorted(set(weights) | set(neg_terms)))
-        dls_rel = self._query_dls(segs)
+        def rank(cursors, dead):
+            return counted_range_topk(cursors, k, m.need, dead, round_to, after)
 
-        def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
-            if len(pdf) == 0:
-                return empty
-            dl_base, dl_arr = _seg_dls(key, dpdf)
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            n_pos = sum(1 for t in term_order if t in by_term)
-            if n_pos < need or n_pos == 0:
-                return empty
-            range_excluded = excluded
-            if neg_terms:
-                neg_ids = [
-                    decode_segment(r, codec)[0]
-                    for t in neg_terms
-                    for r in by_term.get(t, [])
-                ]
-                if neg_ids:
-                    range_excluded = (excluded or frozenset()) | frozenset(
-                        int(d) for d in np.concatenate(neg_ids)
-                    )
-            cursors = [
-                _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
-                for t in term_order
-                if t in by_term
-            ]
-            top = counted_range_topk(
-                cursors, k, need, range_excluded, round_to, after
-            )
-            return pd.DataFrame(top, columns=["doc_id", "score"])
-
-        ranged = (
-            segs.groupBy("seg")
-            .cogroup(dls_rel.groupBy("seg"))
-            .applyInPandas(score_range, TOPK_SCHEMA)
-        )
-        out = ranged.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-        if with_url:
-            dm = self.docmap.select("doc_id", "url")
-            out = out.join(dm, "doc_id").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-        return out
+        ranged = self._ranked(m, self.persistent_excluded or None, rank)
+        return self._finish_topk(ranged, k, None, None, with_url)
 
     def matching_doc_ids(
         self,
-        query: str,
+        query: str | list[str],
         mode: str = "or",
         min_should_match: int | None = None,
         must_not: str | None = None,
@@ -876,74 +841,19 @@ class Searcher:
         behind ``_count`` and aggregations): OR = union of the query
         terms' posting lists, AND = intersection, min_should_match = docs
         on >= m lists; minus must_not docs and pending tombstones.
-        ``weights``: the query terms' idfs when the caller already
-        collected them (``_query_weights``); only its keys, the terms
-        present in the index, are used, so term_stats is not collected
-        again.
+        ``query`` and ``weights`` as in ``_match``; only the keys of
+        ``weights``, the terms present in the index, are used, so
+        term_stats is not collected again.
 
-        No scoring, so no range_dls read and no _Cursor decode of tfs —
-        one pruned postings scan, per-range vectorized set algebra in
-        applyInPandas, output one row per matching doc. Distributed by
-        doc range exactly like topk (a doc lives in one range, so ranges
-        are disjoint and need no dedup)."""
-        from kafka_es_spark.functions.tokenize import tokenize_py
-
-        spark = self.spark
-        qterms = sorted(set(tokenize_py(query)))
-        neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
-        out_schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
-        if not qterms:
-            return local_frame(spark, [], out_schema)
-        msm = min_should_match
-        if msm is not None and (msm < 1 or mode == "and"):
-            raise ValueError(
-                "min_should_match must be >= 1 and combines with mode='or' "
-                "(mode='and' IS min_should_match=#terms)"
-            )
-        if weights is None:
-            weights = self._query_weights(qterms)
-        present = sorted(weights)
-        if not present or (mode == "and" and len(present) < len(qterms)) or (
-            msm is not None and len(present) < msm
-        ):
-            return local_frame(spark, [], out_schema)
-        codec = self.codec
-        excluded = self.persistent_excluded or None
-        need = msm if msm is not None else (len(present) if mode == "and" else 1)
-
-        segs = self._query_segs(sorted(set(present) | set(neg_terms)))
-
-        def collect_range(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            pos = [t for t in present if t in by_term]
-            if len(pos) < need:
-                return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64)})
-            # one id array per positive term (a term's segments within the
-            # range are disjoint doc runs, so plain concat has no dups)
-            per_term = [
-                np.concatenate(
-                    [decode_segment(r, codec)[0] for r in by_term[t]]
-                )
-                for t in pos
-            ]
-            aid = np.concatenate(per_term)
-            uids, cnt = np.unique(aid, return_counts=True)
-            uids = uids[cnt >= need]
-            for t in neg_terms:
-                rows_t = by_term.get(t)
-                if rows_t is not None and uids.size:
-                    neg = np.concatenate(
-                        [decode_segment(r, codec)[0] for r in rows_t]
-                    )
-                    uids = uids[~np.isin(uids, neg)]
-            if excluded is not None and uids.size:
-                dead = np.fromiter(excluded, dtype=np.int64, count=len(excluded))
-                uids = uids[~np.isin(uids, dead)]
-            return pd.DataFrame({"doc_id": uids})
-
-        return segs.groupBy("seg").applyInPandas(collect_range, out_schema)
+        The no-score mode of the ``matched_scores`` kernel (``_seg_hits``
+        with no dl rows): no range_dls read and no tf decode — one pruned
+        postings scan grouped by doc range, output one row per matching
+        doc. A doc lives in one range, so ranges are disjoint and need no
+        dedup."""
+        return self._hits(
+            self._match(query, mode, min_should_match, must_not, weights),
+            score=False,
+        )
 
     def match_count(self, query: str, mode: str = "or",
                     min_should_match: int | None = None,
@@ -1687,7 +1597,7 @@ class Searcher:
 
     def relational_scores(
         self,
-        query: str,
+        query: str | list[str],
         weights: dict[str, float] | None = None,
         mode: str = "or",
         min_should_match: int | None = None,
@@ -1697,11 +1607,13 @@ class Searcher:
         relational (doc_id, score) DataFrame (unrounded), one row per doc
         — the building block multi-field scoring and the DSL compose
         over. The hit set follows ``matching_doc_ids``: OR, ``mode="and"``
-        or ``min_should_match`` over the query terms, minus ``must_not``
-        docs and pending tombstones; a hit's score is the OR-mode sum over
-        the query terms it contains. ``weights``: the query terms' idfs
-        when the caller already looked them up (``_query_weights``); only
-        its keys, the terms present in the index, are scored.
+        or ``min_should_match`` over the query's clauses, minus
+        ``must_not`` docs and pending tombstones; a hit's score is the
+        OR-mode sum over the scored terms it contains. ``query`` and
+        ``weights`` as in ``_match``: a list of clause strings makes each
+        clause a group of terms a doc matches with any of them, and only
+        the keys of ``weights``, the terms present in the index, are
+        scored.
 
         The match floor and the negation apply inside the one seg-cogroup
         kernel of ``matched_scores``, so a scored clause reads its
@@ -1712,76 +1624,112 @@ class Searcher:
 
     def matched_scores(
         self,
-        query: str,
+        query: str | list[str],
         weights: dict[str, float] | None = None,
         mode: str = "or",
         min_should_match: int | None = None,
         must_not: str | None = None,
     ) -> DataFrame:
         """``relational_scores`` with a third column, ``_matched``: how
-        many of the query terms the doc contains — the input of a per-doc
-        match floor (terms_set's ``minimum_should_match_field``).
+        many of the query's clauses the doc matched (for a query string,
+        how many of its terms) — the input of a per-doc match floor
+        (terms_set's ``minimum_should_match_field``).
 
         One seg-cogroup: postings and range-dls are both seg-organized and
         a doc lives in exactly ONE range, so per-range numpy scoring (dl
         gathered position-indexed, per-doc sums pooled in term-lex order)
         yields final rows with no doc-keyed shuffle — the same plan shape
-        and per-doc sums as topk. ``_matched`` is the doc's posting count
-        from ``_pool``, which IS count_distinct(term): a doc appears at
-        most once per term (one epoch owns a doc, one merged segment row
-        per (term, seg, shard)); the match floor keeps docs whose count
-        reaches it. The negated terms' ids decode from the same pruned
-        scan."""
+        and per-doc sums as topk. The match floor, the negated terms
+        (decoded from the same pruned scan) and the tombstones apply in
+        the kernel, ``_seg_hits``."""
+        return self._hits(
+            self._match(query, mode, min_should_match, must_not, weights),
+            score=True,
+        )
+
+    def _match(
+        self,
+        query: str | list[str],
+        mode: str = "or",
+        min_should_match: int | None = None,
+        must_not: str | None = None,
+        weights: dict[str, float] | None = None,
+    ) -> _Match | None:
+        """The one match front end of the seg kernels: resolve a request
+        to its present clause terms, negated terms and floor ``need``.
+
+        ``query``: a string, one clause per distinct term, or a list of
+        clause strings, each matching a doc that holds any of its terms.
+        A hit matches every clause (``mode="and"``), at least
+        ``min_should_match`` of them, or else one, and holds no
+        ``must_not`` term. ``weights``: the scored terms' weights when the
+        caller already has them — a clause term missing from it is absent
+        from the index, and a term in no clause adds score without
+        counting toward the floor; else the clause terms' idfs.
+
+        None when no doc can match: no clause, an empty index, or fewer
+        clauses with a present term than the floor needs (so an AND term
+        absent from the whole index empties the result)."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
-        schema = "doc_id long, score double, _matched long"
-        qterms = sorted(set(tokenize_py(query)))
-        neg_terms = sorted(set(tokenize_py(must_not))) if must_not else []
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(self.spark, [], schema)
         msm = min_should_match
         if msm is not None and (msm < 1 or mode == "and"):
             raise ValueError(
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
+        if isinstance(query, str):
+            clauses = [[t] for t in sorted(set(tokenize_py(query)))]
+        else:
+            clauses = [sorted(set(tokenize_py(q))) for q in query]
+        if not clauses or self.n_docs == 0 or self.avgdl == 0:
+            return None
         if weights is None:
-            weights = self._query_weights(qterms)
-        if not weights or (mode == "and" and len(weights) < len(qterms)) or (
-            msm is not None and len(weights) < msm
-        ):
+            weights = self._query_weights(
+                sorted({t for c in clauses for t in c})
+            )
+        present = [[t for t in c if t in weights] for c in clauses]
+        need = msm if msm is not None else (
+            len(clauses) if mode == "and" else 1
+        )
+        if sum(1 for c in present if c) < need:
+            return None
+        plain = all(len(c) <= 1 for c in present) and sorted(
+            t for c in present for t in c
+        ) == sorted(weights)
+        neg = sorted(set(tokenize_py(must_not))) if must_not else []
+        return _Match(
+            present, need, neg, {t: float(w) for t, w in weights.items()},
+            plain,
+        )
+
+    def _hits(self, m: _Match | None, score: bool) -> DataFrame:
+        """The frame of ``matched_scores`` (``score``) or of
+        ``matching_doc_ids``: one ``_seg_hits`` kernel, over the seg
+        cogroup of postings and range dls when it scores, else over the
+        postings alone."""
+        schema = "doc_id long, score double, _matched long" if score else (
+            T.StructType([T.StructField("doc_id", T.LongType(), False)])
+        )
+        if m is None:
             return local_frame(self.spark, [], schema)
-        need = msm if msm is not None else (len(weights) if mode == "and" else 1)
         avgdl, codec = self.avgdl, self.codec
-        wmap = {t: float(w) for t, w in weights.items()}
         excluded = self.persistent_excluded or None
+        cols = ["doc_id", "score", "_matched"] if score else ["doc_id"]
 
-        def score_range(key, pdf, dpdf):
-            pos = pdf[pdf["term"].isin(wmap)]
-            if pos["term"].nunique() < need:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64),
-                     "_matched": pd.Series(dtype=np.int64)}
-                )
-            uids, cnt, scores = _pool_cursors(
-                _seg_cursors(key, pos, dpdf, wmap, avgdl, codec), excluded
-            )
-            keep = cnt >= need
-            neg = pdf[pdf["term"].isin(neg_terms)]
-            if len(neg):
-                neg_ids = np.concatenate(
-                    [decode_segment(r, codec)[0]
-                     for r in neg.to_dict("records")]
-                )
-                keep &= ~np.isin(uids, neg_ids)
+        def kernel(key, pdf, dpdf):
+            uids, cnt, sums = _seg_hits(key, pdf, dpdf, m, excluded, codec, avgdl)
             return pd.DataFrame(
-                {"doc_id": uids[keep], "score": scores[keep],
-                 "_matched": cnt[keep]}
-            )
+                {"doc_id": uids, "score": sums, "_matched": cnt}
+            )[cols]
 
-        return self._score_cogroup(
-            sorted(set(wmap) | set(neg_terms)), score_range, schema
+        if score:
+            return self._score_cogroup(
+                sorted(set(m.weights) | set(m.neg)), kernel, schema
+            )
+        terms = sorted({t for c in m.clauses for t in c} | set(m.neg))
+        return self._query_segs(terms).groupBy("seg").applyInPandas(
+            lambda key, pdf: kernel(key, pdf, None), schema
         )
 
     def _score_cogroup(self, terms, kernel, schema: str) -> DataFrame:
@@ -3889,17 +3837,18 @@ class Searcher:
         with open(meta_p) as fh:
             meta = json.load(fh)
         if meta["min_gram"] <= len(pre) <= meta["max_gram"]:
-            rel = (
+            rows = (
                 read_relation(self.spark, en_dir)
                 .filter(F.col("gram") == pre)
                 .select("term")
+                .orderBy("term").limit(int(max_expansions)).collect()
             )
+            exp = [r["term"] for r in rows]
         else:  # ES falls back to a prefix query outside the gram range
-            rel = self.term_stats.filter(
-                F.col("term").startswith(pre)
-            ).select("term")
-        rows = rel.orderBy("term").limit(int(max_expansions)).collect()
-        terms = sorted(set(fixed) | {r["term"] for r in rows})
+            exp = index_prefix_terms(
+                self.spark, self.index_dir, pre, max_expansions
+            )
+        terms = sorted(set(fixed) | set(exp))
         if not terms:
             return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
@@ -3927,23 +3876,16 @@ class Searcher:
         disjunction scores as plain BM25 OR through the block-max path
         (Lucene's scoring-boolean rewrite keeps it oracle-checkable).
 
-        The dictionary probe is one pushed-down prefix scan over
-        term_stats (term-sorted bucket files) collecting ≤ max_expansions
-        rows; everything after is the standard pruned top-k plan."""
+        The dictionary probe is ``index_prefix_terms`` (as prefix_topk);
+        everything after is the standard pruned top-k plan."""
         from kafka_es_spark.functions.tokenize import tokenize_py
 
         toks = tokenize_py(query)
         if not toks:
             return local_frame(self.spark, [], TOPK_SCHEMA)
         fixed, pre = toks[:-1], toks[-1]
-        rows = (
-            self.term_stats.filter(F.col("term").startswith(pre))
-            .select("term")
-            .orderBy("term")
-            .limit(int(max_expansions))
-            .collect()
-        )
-        terms = sorted(set(fixed) | {r["term"] for r in rows})
+        exp = index_prefix_terms(self.spark, self.index_dir, pre, max_expansions)
+        terms = sorted(set(fixed) | set(exp))
         if not terms:
             return local_frame(self.spark, [], TOPK_SCHEMA)
         return self.topk(
@@ -4393,10 +4335,12 @@ class Searcher:
         (``phrase_match_ids`` — they gate but don't score, the
         constant-score ES filter shape) and read the postings' positions.
 
-        Plan: one relational-BM25 aggregation over the positive terms'
-        postings, then left-semi / left-anti joins against the (small)
-        per-clause hit-id sets — each O(postings of that clause's terms),
-        no corpus scan anywhere."""
+        Plan: one seg-cogroup over the positive and ``-`` terms'
+        postings (``relational_scores``): the ``+`` clauses are its
+        clauses, every one of which a hit matches, the bare terms only add
+        score, and the ``-`` terms drop their docs in the same kernel.
+        Quoted phrases then left-semi / left-anti join their positional
+        hit sets. No corpus scan anywhere."""
         import re
 
         from kafka_es_spark.functions.tokenize import tokenize_py
@@ -4418,16 +4362,16 @@ class Searcher:
             if not toks:
                 continue
             if is_prefix:
-                rows = (
-                    self.term_stats.filter(F.col("term").startswith(toks[0]))
-                    .select("term").orderBy("term")
-                    .limit(int(max_expansions)).collect()
+                exp = index_prefix_terms(
+                    spark, self.index_dir, toks[0], max_expansions
                 )
-                exp = [r["term"] for r in rows]
                 if psign == "-":
                     not_terms.extend(exp)
                 elif psign == "+":
-                    must_groups.append(exp or ["\x00nomatch"])
+                    if not exp:
+                        # a required prefix that expanded to nothing
+                        return local_frame(spark, [], TOPK_SCHEMA)
+                    must_groups.append(exp)
                 else:
                     should_terms.extend(exp)
             else:
@@ -4439,34 +4383,17 @@ class Searcher:
                 else:
                     should_terms.extend(toks)
 
-        positive = sorted(
-            set(should_terms) | {t for g in must_groups for t in g if t != "\x00nomatch"}
-        )
-        if not positive or any(g == ["\x00nomatch"] for g in must_groups):
+        positive = sorted(set(should_terms).union(*must_groups))
+        if not positive:
             return local_frame(spark, [], TOPK_SCHEMA)
-        # one doc_freqs lookup for the scoring, + and - terms; each clause
-        # below gets its slice of the weights, so none looks them up again
-        weights = self._query_weights(sorted(set(positive) | set(not_terms)))
-
-        def clause_weights(terms) -> dict[str, float]:
-            return {t: weights[t] for t in terms if t in weights}
-
-        out = self.relational_scores(" ".join(positive), clause_weights(positive))
-        for g in must_groups:
-            out = out.join(
-                self.matching_doc_ids(
-                    " ".join(g), mode="or", weights=clause_weights(g)
-                ),
-                "doc_id", "left_semi",
-            )
-        if not_terms:
-            nots = sorted(set(not_terms))
-            out = out.join(
-                self.matching_doc_ids(
-                    " ".join(nots), mode="or", weights=clause_weights(nots)
-                ),
-                "doc_id", "left_anti",
-            )
+        # the + clauses gate inside the one scoring pass: with none, each
+        # positive term is a should clause of its own
+        query = [" ".join(g) for g in must_groups] or " ".join(positive)
+        out = self.relational_scores(
+            query, self._query_weights(positive),
+            mode="and" if must_groups else "or",
+            must_not=" ".join(sorted(set(not_terms))) or None,
+        )
         if must_phrases or not_phrases:
             from kafka_es_spark.operators.positions import phrase_match_ids
 
@@ -4480,18 +4407,7 @@ class Searcher:
                     phrase_match_ids(spark, self.index_dir, p, slop=slop),
                     "doc_id", "left_anti",
                 )
-        out = (
-            out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(max(int(k), int(fetch_k or 0)))
-        )
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        if with_url:
-            dm = self.docmap.select("doc_id", "url")
-            out = out.join(dm, "doc_id").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-        return out
+        return self._finish_topk(out, k, round_to, fetch_k, with_url)
 
     def match_all_ids(self) -> DataFrame:
         """ES ``match_all`` in filter context: every LIVE doc id (docmap
@@ -4677,16 +4593,23 @@ class Searcher:
         positive clause a must GROUP (a ``a|b`` group needs >= 1 member).
         Scoring is the Lucene scoring-boolean rewrite either way: BM25
         sum over every positive term the doc matches. Phrases are
-        filter-context through the postings' positions. Plan shape is
-        query_string_topk's: one relational-BM25 aggregation + per-clause
-        semi/anti joins, each O(postings of that clause's terms)."""
+        filter-context through the postings' positions.
+
+        Plan: query_string_topk's. One ``relational_scores`` seg-cogroup
+        scores the positive terms; under ``"and"`` each group of terms
+        alone is one of its clauses, and the ``-`` terms drop their docs
+        in the same kernel. A group holding a phrase gates on the union of
+        its phrases' positional hit sets, its bare terms taken as
+        one-word phrases; ``-`` phrases anti-join theirs."""
         import re
 
         from kafka_es_spark.functions.tokenize import tokenize_py
+        from kafka_es_spark.operators.positions import phrase_match_ids
 
         if default_operator not in ("or", "and"):
             raise ValueError("default_operator must be 'or' or 'and'")
         spark = self.spark
+        conj = default_operator == "and"
         groups: list[tuple[bool, list[str], list[str]]] = []
         # '|' binds tighter than whitespace: normalize 'a | b' to 'a|b'
         # so one fragment is one clause group
@@ -4697,6 +4620,7 @@ class Searcher:
             frag = frag.lstrip("-")
             terms: list[str] = []
             phrases: list[str] = []
+            unexpanded = False
             for piece in frag.split("|"):
                 if not piece:
                     continue
@@ -4705,83 +4629,83 @@ class Searcher:
                 elif piece.endswith("*") and len(piece) > 1:
                     base = tokenize_py(piece.rstrip("*"))
                     if base:
-                        rows = (
-                            self.term_stats
-                            .filter(F.col("term").startswith(base[0]))
-                            .select("term").orderBy("term")
-                            .limit(int(max_expansions)).collect()
+                        exp = index_prefix_terms(
+                            spark, self.index_dir, base[0], max_expansions
                         )
-                        terms.extend(r["term"] for r in rows)
-                        if not rows:
-                            terms.append("\x00nomatch")
+                        terms.extend(exp)
+                        unexpanded |= not exp
                 else:
                     terms.extend(tokenize_py(piece))
             if not terms and not phrases:
+                if conj and not neg and unexpanded:
+                    # a required group whose prefix expanded to nothing
+                    return local_frame(spark, [], TOPK_SCHEMA)
                 continue
             groups.append((neg, terms, phrases))
 
-        from kafka_es_spark.operators.positions import phrase_match_ids
-
-        positive = sorted(
-            {t for neg, ts, _ in groups for t in ts
-             if not neg and t != "\x00nomatch"}
-        )
-        if not positive:
-            # no positive terms, but quoted phrases may still carry the
-            # query (qs='"exact phrase"'): ES returns the phrase matches.
-            # Build the hit set from the postings' positions at constant
-            # 0 score (phrases are filter-context in this engine); the
-            # group loop below still applies negations and AND gating.
-            pos_phrases = sorted(
-                {p for neg, _, phs in groups if not neg for p in phs}
+        def words(negated: bool) -> list[str]:
+            return sorted(
+                {t for neg, ts, _ in groups if neg == negated for t in ts}
             )
-            if not pos_phrases:
-                return local_frame(spark, [], TOPK_SCHEMA)
-            ids = None
-            for p in pos_phrases:
-                pm = phrase_match_ids(spark, self.index_dir, p).select(
-                    "doc_id"
-                )
-                ids = pm if ids is None else ids.unionByName(pm)
-            out = ids.distinct().select(
-                "doc_id", F.lit(0.0).alias("score")
+
+        positive, nots = words(False), words(True)
+        if positive:
+            clauses = [" ".join(ts) for neg, ts, phs in groups
+                       if conj and not neg and not phs]
+            out = self.relational_scores(
+                clauses or " ".join(positive), self._query_weights(positive),
+                mode="and" if clauses else "or",
+                must_not=" ".join(nots) or None,
             )
         else:
-            out = self.relational_scores(" ".join(positive))
+            # no positive terms, but quoted phrases may still carry the
+            # query (qs='"exact phrase"'): ES returns the phrase matches
+            out = self._phrase_hits(
+                [p for neg, _, phs in groups if not neg for p in phs], nots
+            )
+            if out is None:
+                return local_frame(spark, [], TOPK_SCHEMA)
 
         for neg, ts, phrases in groups:
-            ts = [t for t in ts if t != "\x00nomatch"]
             if neg:
-                if ts:
-                    out = out.join(
-                        self.matching_doc_ids(" ".join(sorted(set(ts)))),
-                        "doc_id", "left_anti",
-                    )
                 for p in phrases:
                     out = out.join(
                         phrase_match_ids(spark, self.index_dir, p),
                         "doc_id", "left_anti",
                     )
-                continue
-            if default_operator == "and":
+            elif conj and phrases:
                 # the whole group is one must clause: >= 1 member matches
                 ids = None
-                if ts:
-                    ids = self.matching_doc_ids(" ".join(sorted(set(ts))))
-                for p in phrases:
+                for p in phrases + ts:
                     pm = phrase_match_ids(spark, self.index_dir, p)
                     ids = pm if ids is None else ids.union(pm).distinct()
-                if ids is None:
-                    return local_frame(spark, [], TOPK_SCHEMA)
                 out = out.join(ids, "doc_id", "left_semi")
-            else:
-                # should group: phrases still gate nothing in OR mode —
-                # ES treats a should phrase as optional signal; terms
-                # already score through `positive`. A should PHRASE does
-                # gate in ES only when it is the lone clause; that case
-                # has no positive terms and returned empty above.
-                pass
+            # a should group gates nothing in OR mode — ES treats a
+            # should phrase as optional signal; terms already score
+            # through `positive`. A should PHRASE gates in ES only when
+            # it is the lone clause: that is the no-positive-term case.
         return self._finish_topk(out, k, round_to, fetch_k, with_url)
+
+    def _phrase_hits(self, phrases: list[str], nots: list[str]) -> DataFrame | None:
+        """The hit set of a simple_query_string with no positive term:
+        the docs matching any of ``phrases`` (None when there are none),
+        at constant 0 score (phrases are filter-context in this engine),
+        minus the docs holding any of the ``nots`` terms. No scoring pass
+        runs, so the negated terms gate through ``matching_doc_ids``."""
+        from kafka_es_spark.operators.positions import phrase_match_ids
+
+        ids = None
+        for p in sorted(set(phrases)):
+            pm = phrase_match_ids(self.spark, self.index_dir, p).select("doc_id")
+            ids = pm if ids is None else ids.unionByName(pm)
+        if ids is None:
+            return None
+        out = ids.distinct().select("doc_id", F.lit(0.0).alias("score"))
+        if nots:
+            out = out.join(
+                self.matching_doc_ids(" ".join(nots)), "doc_id", "left_anti"
+            )
+        return out
 
     def topk_many(
         self,

@@ -20,7 +20,8 @@ from kafka_es_spark.functions.tokenize import tokenize_py
 from kafka_es_spark.operators import wand
 from kafka_es_spark.operators.deletes import add_tombstones
 from kafka_es_spark.operators.positions import (
-    _phrase_topk_slots, build_position_index, phrase_prefix_topk,
+    _phrase_topk_slots, build_position_index, phrase_match_ids,
+    phrase_prefix_topk,
 )
 from kafka_es_spark.operators.searchapi import (
     _compile, _min_should_match, search,
@@ -369,3 +370,240 @@ def test_phrase_prefix_expands_without_a_job(spark, base_idx):
 
     assert prefixed().collect() == slots().collect()
     assert _warm_jobs(spark, prefixed) == _warm_jobs(spark, slots)
+
+
+# --- query_string / simple_query_string: the + groups gate in the one pass --
+
+
+def _scan_prefix(s, prefix, limit=50):
+    """The Spark ``term_stats`` scan every prefix site ran before it read
+    the dictionary with ``index_prefix_terms``."""
+    return [
+        r["term"] for r in
+        s.term_stats.filter(F.col("term").startswith(prefix)).select("term")
+        .orderBy("term").limit(limit).collect()
+    ]
+
+
+def _phrase_ids(s, p):
+    return phrase_match_ids(s.spark, s.index_dir, p)
+
+
+def _two_pass_clauses(s, positive, groups=(), nots=(), not_phrases=()):
+    """query_string / simple_query_string the two-pass way: OR-mode
+    ``relational_scores`` over the positive terms (or, with none, the
+    first group's phrase hits at score 0), one ``matching_doc_ids`` ∪
+    phrase-hits semi-join per required group ``(terms, phrases)``, and
+    anti-joins of the negated terms and phrases."""
+    if positive:
+        out = s.relational_scores(" ".join(positive))
+    else:
+        out = None
+        for p in groups[0][1]:
+            ids = _phrase_ids(s, p)
+            out = ids if out is None else out.union(ids)
+        out = out.distinct().select("doc_id", F.lit(0.0).alias("score"))
+    for terms, phrases in groups:
+        ids = s.matching_doc_ids(" ".join(terms)) if terms else None
+        for p in phrases:
+            ids = _phrase_ids(s, p) if ids is None else ids.union(_phrase_ids(s, p))
+        out = out.join(ids.distinct(), "doc_id", "left_semi")
+    if nots:
+        out = out.join(s.matching_doc_ids(" ".join(nots)), "doc_id", "left_anti")
+    for p in not_phrases:
+        out = out.join(_phrase_ids(s, p), "doc_id", "left_anti")
+    return out
+
+
+def _qs_cases(s):
+    """name → (engine call, two-pass reference), over every row."""
+    s_terms = _scan_prefix(s, "s")
+    big = 10**6
+
+    def qs(q):
+        return lambda: s.query_string_topk(q, k=big, round_to=None)
+
+    def sqs(q, op="or"):
+        return lambda: s.simple_query_string_topk(
+            q, default_operator=op, k=big, round_to=None)
+
+    return {
+        "qs_must_should_not": (
+            qs("+data +index search -query"),
+            _two_pass_clauses(s, ["data", "index", "search"],
+                              [(["data"], []), (["index"], [])], ["query"])),
+        "qs_prefix_group": (
+            qs("+s* data"),
+            _two_pass_clauses(s, sorted(set(s_terms) | {"data"}), [(s_terms, [])])),
+        "qs_no_must": (
+            qs("data index -search"),
+            _two_pass_clauses(s, ["data", "index"], nots=["search"])),
+        "qs_phrase": (
+            qs('+data "index search" -"query term"'),
+            _two_pass_clauses(s, ["data"], [(["data"], []), ([], ["index search"])],
+                              not_phrases=["query term"])),
+        "sqs_and_or_group": (
+            sqs("data|index search", "and"),
+            _two_pass_clauses(s, ["data", "index", "search"],
+                              [(["data", "index"], []), (["search"], [])])),
+        "sqs_and_phrase": (
+            sqs('data "index search" -query', "and"),
+            _two_pass_clauses(s, ["data"], [(["data"], []), ([], ["index search"])],
+                              ["query"])),
+        # '|' binds a quoted phrase only when it has no space in it
+        "sqs_and_mixed_group": (
+            sqs('query|"index" data', "and"),
+            _two_pass_clauses(s, ["data", "query"],
+                              [(["query"], ["index"]), (["data"], [])])),
+        "sqs_or_prefix": (
+            sqs("sear* -query"),
+            _two_pass_clauses(s, _scan_prefix(s, "sear"), nots=["query"])),
+        "sqs_phrase_only": (
+            sqs('"search query" "data index" -term'),
+            _two_pass_clauses(s, [], [([], ["search query", "data index"])],
+                              ["term"])),
+    }
+
+
+QS_CASES = [
+    "qs_must_should_not", "qs_prefix_group", "qs_no_must", "qs_phrase",
+    "sqs_and_or_group", "sqs_and_phrase", "sqs_and_mixed_group",
+    "sqs_or_prefix", "sqs_phrase_only",
+]
+
+
+@pytest.mark.parametrize("case", QS_CASES)
+def test_query_string_forms_equal_two_pass(searcher, case):
+    """Every row, to the last bit, equals the two-pass formulation."""
+    make, reference = _qs_cases(searcher)[case]
+    want = _rows(reference, digits=17)
+    assert want and _rows(make(), digits=17) == want
+
+
+@pytest.mark.parametrize("form", ["query_string", "sqs_and"])
+def test_and_forms_run_fewer_warm_jobs(spark, searcher, form):
+    s = searcher
+    if form == "query_string":
+        def make():
+            return s.query_string_topk("+data +index search", k=10)
+        groups = [(["data"], []), (["index"], [])]
+    else:
+        def make():
+            return s.simple_query_string_topk(
+                "data|index search", default_operator="and", k=10)
+        groups = [(["data", "index"], []), (["search"], [])]
+
+    def two_pass():
+        return s._finish_topk(
+            _two_pass_clauses(s, ["data", "index", "search"], groups),
+            10, 4, None, False)
+
+    assert make().collect() == two_pass().collect()
+    assert _warm_jobs(spark, make) < _warm_jobs(spark, two_pass)
+
+
+# --- prefix expansion reads the dictionary, not term_stats with Spark --------
+
+
+def _prefix_sites(s):
+    """name → (site call, the same call over the Spark-scan expansion)."""
+    big = 10**6
+
+    def dsl(query):
+        return lambda: search(s, {"query": query, "size": big}, round_to=None)
+
+    def fixed(prefix, *terms):
+        return " ".join(sorted(set(terms) | set(_scan_prefix(s, prefix))))
+
+    return {
+        "prefix_topk": (lambda: s.prefix_topk("se", k=big),
+                        lambda: s.topk(fixed("se"), k=big)),
+        "bool_prefix_topk": (lambda: s.bool_prefix_topk("index se", k=big),
+                             lambda: s.topk(fixed("se", "index"), k=big)),
+        "sayt_fallback": (lambda: s.sayt_topk("index sea", k=big),
+                          lambda: s.topk(fixed("sea", "index"), k=big)),
+        "dsl_prefix": (dsl({"prefix": {"text": "se"}}),
+                       dsl({"terms": {"text": _scan_prefix(s, "se")}})),
+        "dsl_match_bool_prefix": (
+            dsl({"match_bool_prefix": {"text": "index se"}}),
+            dsl({"match": {"text": fixed("se", "index")}})),
+    }
+
+
+@pytest.mark.parametrize("site", [
+    "prefix_topk", "bool_prefix_topk", "sayt_fallback", "dsl_prefix",
+    "dsl_match_bool_prefix",
+])
+def test_prefix_sites_keep_their_rows(spark, searcher, site):
+    """query_string's and simple_query_string's ``*`` clauses are checked
+    against the Spark scan in ``test_query_string_forms_equal_two_pass``."""
+    from kafka_es_spark.operators.wand import build_edge_ngrams
+
+    if site == "sayt_fallback":
+        # grams of at most 2 chars: the 3-char prefix falls back to the
+        # dictionary
+        build_edge_ngrams(spark, searcher.index_dir, 1, 2)
+    make, reference = _prefix_sites(searcher)[site]
+    want = _rows(reference(), digits=17)
+    assert want and _rows(make(), digits=17) == want
+
+
+def test_warm_prefix_topk_runs_the_jobs_of_its_expansion(spark, searcher):
+    s = searcher
+    terms = " ".join(index_prefix_terms(spark, s.index_dir, "se", 50))
+
+    def spark_scan():
+        return s.topk(" ".join(_scan_prefix(s, "se")))
+
+    prefix = _warm_jobs(spark, lambda: s.prefix_topk("se"))
+    assert prefix == _warm_jobs(spark, lambda: s.topk(terms))
+    assert prefix == _warm_jobs(spark, spark_scan) - 1
+
+
+# --- guards ------------------------------------------------------------------
+
+
+# boosting_topk's negative query is a different term set that demotes docs
+# and never gates them, so its two passes do not read the same postings.
+PAIRING_EXEMPT = {"boosting_topk"}
+
+
+def _searcher_calls() -> dict[str, set[str]]:
+    """Searcher method → the attribute names it calls."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(wand))
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "Searcher")
+    return {
+        f.name: {c.func.attr for c in ast.walk(f)
+                 if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)}
+        for f in cls.body if isinstance(f, ast.FunctionDef)
+    }
+
+
+def test_no_searcher_method_pairs_a_hit_set_with_a_scoring_pass():
+    """A scored clause reads its postings once: a method that scores
+    counts its required clauses in that pass instead of semi-joining a
+    ``matching_doc_ids`` hit set over the same terms."""
+    paired = {
+        name for name, calls in _searcher_calls().items()
+        if "matching_doc_ids" in calls
+        and calls & {"relational_scores", "matched_scores"}
+    }
+    assert paired == PAIRING_EXEMPT
+
+
+def test_match_validation_is_spelled_once():
+    import inspect
+
+    assert inspect.getsource(wand).count("min_should_match must be >= 1") == 1
+
+
+def test_searchapi_has_no_gate_bool():
+    import inspect
+
+    from kafka_es_spark.operators import searchapi
+
+    assert "_gate_bool" not in inspect.getsource(searchapi)

@@ -1,6 +1,6 @@
 """Warm Spark jobs, stages and latency of each perfbench serving class.
 
-    python tools/query_jobs.py [--classes dsl,...] [--plans DIR]
+    python tools/query_jobs.py [--classes dsl,...] [--extra] [--plans DIR]
 
 Runs the classes of the perfbench ``serve`` mix on its cached 10k-page
 corpus and serving index (a checkout's first run makes them in a separate
@@ -13,6 +13,14 @@ Each class runs ``CALLS`` times in a row, each call under its own job group
 (``setJobGroup``). The jobs, stages and tasks of the SECOND call come from
 ``statusTracker`` (the first call warms the reader caches and the Python
 workers); ``p50_ms`` is the median wall time of calls 2..``CALLS``.
+``--extra`` also runs three classes the serve mix does not issue, over
+the same index and built from the mix's head terms h0..h3 (no draw, so
+the serve draws are unchanged): ``query_string`` (``+h0 h1 p* -h3``, the
+shape of ``__spark_entry__``'s ``QS_QUERY``, with ``p`` the first two
+letters of h2), ``sqs_and`` (``h0 h1|h2`` under
+``default_operator="and"``) and ``prefix`` (``prefix_topk`` of h0's first
+two letters). ``--classes`` may name them too.
+
 ``--plans DIR`` also writes each class's final executed plan (after its
 last call) to ``DIR/<class>.txt``, with the index and run paths written as
 ``<index>`` and ``<tmp>``; the engine's broadcast threshold comes from
@@ -38,6 +46,22 @@ from perfbench.trace import job_counts  # noqa: E402
 # The serve mix's seed and the calls per class (the first warms up).
 SEED = 1
 CALLS = 4
+EXTRA_CLASSES = ("query_string", "sqs_and", "prefix")
+
+
+def extra_call(s, head: list[str], name: str):
+    """The engine call of an ``--extra`` class over head terms ``head``."""
+    from perfbench.workloads import K
+
+    if name == "query_string":
+        return s.query_string_topk(
+            f"+{head[0]} {head[1]} {head[2][:2]}* -{head[3]}", k=K)
+    if name == "sqs_and":
+        return s.simple_query_string_topk(
+            f"{head[0]} {head[1]}|{head[2]}", default_operator="and", k=K)
+    if name == "prefix":
+        return s.prefix_topk(head[0][:2], k=K)
+    raise ValueError(name)
 
 
 def measure(sc, name: str, make, plans: dict | None) -> dict:
@@ -69,6 +93,8 @@ def measure(sc, name: str, make, plans: dict | None) -> dict:
 def main(argv=None) -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--classes", help="comma-separated classes (default all)")
+    p.add_argument("--extra", action="store_true",
+                   help="also run " + ", ".join(EXTRA_CLASSES))
     p.add_argument("--plans", help="write each class's executed plan here")
     args = p.parse_args(argv)
     if args.plans:
@@ -95,7 +121,9 @@ def main(argv=None) -> None:
         s = Searcher(spark, idx)
         qr = QueryRunner(types.SimpleNamespace(spark=spark), s, idx, o, mix,
                          spark.read.parquet(path))
-        wanted = args.classes.split(",") if args.classes else inputs.QUERY_CLASSES
+        wanted = args.classes.split(",") if args.classes else list(
+            inputs.QUERY_CLASSES
+        ) + list(EXTRA_CLASSES if args.extra else ())
         plans = args.plans and {"dir": args.plans, "paths": {
             os.path.abspath(idx): "<index>", run_dir: "<tmp>",
         }}
@@ -105,6 +133,11 @@ def main(argv=None) -> None:
                 q = mix.draw(name)
                 rows.append(measure(spark.sparkContext, name,
                                     lambda q=q: qr.call(q), plans))
+        for name in EXTRA_CLASSES:
+            if name in wanted:
+                rows.append(measure(
+                    spark.sparkContext, name,
+                    lambda name=name: extra_call(s, mix.head, name), plans))
     finally:
         if s is not None:
             s.close()
