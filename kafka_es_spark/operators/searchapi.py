@@ -36,10 +36,13 @@ operators.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_es_spark.operators.wand import index_prefix_terms
+from kafka_es_spark.operators import aggs
+from kafka_es_spark.operators.wand import index_prefix_terms, snippet
 from kafka_es_spark.session import local_frame
 
 
@@ -574,10 +577,7 @@ def _compile(searcher, clause: dict, scoring: bool, emb=None) -> _Compiled:
         scores = ids.select(
             "doc_id", (F.col("cos") * F.lit(boost)).alias("score")
         )
-        if searcher.persistent_excluded:
-            scores = scores.filter(
-                ~F.col("doc_id").isin(sorted(searcher.persistent_excluded))
-            )
+        scores = searcher._live(scores)
         if not scoring:
             return _Compiled(None, scores.select("doc_id"))
         return _Compiled(scores, None)
@@ -1060,15 +1060,15 @@ def _summed(parts, floor: int, onto: DataFrame | None = None) -> DataFrame:
             frame = frame.groupBy("doc_id").agg(F.sum("score").alias("score"))
         f_ = frame.select("doc_id", F.col("score").alias(col))
         union = f_ if union is None else union.unionByName(f_)
-    aggs = [F.sum(col).alias(col)] + (
+    sums = [F.sum(col).alias(col)] + (
         [F.count(col).alias("__n")] if counted else []
     )
     if onto is None:
-        out = union.groupBy("doc_id").agg(*aggs)
+        out = union.groupBy("doc_id").agg(*sums)
     else:
         out = onto.join(union, "doc_id", "left")
         if counted or len(parts) > 1 or not parts[0][1]:
-            out = out.groupBy("doc_id", "score").agg(*aggs)
+            out = out.groupBy("doc_id", "score").agg(*sums)
     if counted:
         out = out.filter(F.col("__n") >= floor)
     if onto is None:
@@ -1161,18 +1161,7 @@ def _apply_highlight(searcher, out: DataFrame, body: dict,
     # alternative silently empties the page when the docs_text relation
     # doesn't cover the index's urls, a hard-to-diagnose mismatch)
     j = out.join(docs_text.select("url", "text"), "url", "left")
-    big = F.lit(2_000_000_000)
-    lower_t = F.lower(F.col("text"))
-    ps = [
-        F.when(F.instr(lower_t, F.lit(t)) > 0, F.instr(lower_t, F.lit(t)))
-        .otherwise(big)
-        for t in qterms
-    ]
-    first = ps[0] if len(ps) == 1 else F.least(*ps)
-    start = F.greatest(F.lit(1), first - F.lit(window))
-    snip = F.when(
-        first < big, F.substring(F.col("text"), start, F.lit(fragment))
-    ).otherwise(F.substring(F.col("text"), F.lit(1), F.lit(fragment)))
+    snip = snippet(qterms, window, fragment)
     drop = {"text", "url"} if added_url else {"text"}
     keep = [c for c in out.columns if c not in drop]
     return j.select(*keep, snip.alias("snippet")).orderBy(
@@ -1365,17 +1354,14 @@ def search(
         out = comp.gate.select(
             "doc_id", F.lit(0.0).alias("score")
         )
-    if searcher.persistent_excluded:
-        out = out.filter(
-            ~F.col("doc_id").isin(sorted(searcher.persistent_excluded))
-        )
+    out = searcher._live(out)
     # top-level min_score excludes docs from hits AND aggregations
     # (query-phase cutoff, compared on the raw score like ES)
     if body.get("min_score") is not None:
         out = out.filter(F.col("score") >= float(body["min_score"]))
-    aggs = body.get("aggs") or body.get("aggregations")
-    if aggs:
-        return _run_aggs(searcher, out, aggs, docs_text=docs_text)
+    body_aggs = body.get("aggs") or body.get("aggregations")
+    if body_aggs:
+        return _run_aggs(searcher, out, body_aggs, docs_text=docs_text)
     # post_filter narrows the HITS only, after the aggregation phase —
     # the faceted-navigation contract: facets show the whole hit set,
     # the page shows the user's current facet selection. Filter-context
@@ -1547,10 +1533,7 @@ def _hybrid_rrf(
 
     comp = _compile(searcher, body["query"], scoring=True)
     lex = _inner_scores(searcher, comp)
-    if searcher.persistent_excluded:
-        lex = lex.filter(
-            ~F.col("doc_id").isin(sorted(searcher.persistent_excluded))
-        )
+    lex = searcher._live(lex)
     # TakeOrdered the big hit relation down to the window FIRST, then
     # rank the ≤window-row result — a row_number window straight over
     # the full hit set would drag every hit through one partition
@@ -1631,28 +1614,19 @@ def _apply_rescore(searcher, out: DataFrame, resc) -> DataFrame:
     return out
 
 
-_METRIC_SUBAGGS = {
-    "avg": lambda f: F.round(F.avg(f), 4),
-    "sum": lambda f: F.sum(f).cast("long"),
-    "min": lambda f: F.min(f),
-    "max": lambda f: F.max(f),
-    "value_count": lambda f: F.count(f),
-}
-
-
-def _sub_agg_exprs(spec: dict, dm_cols) -> list:
-    """The ``aggs`` block nested under a bucket agg: named metric
-    sub-aggregations (avg/sum/min/max/value_count over a stored field),
-    each one more expression in the SAME hash aggregation as doc_count —
-    sub-aggs never add a shuffle or a second pass over the hit set."""
-    exprs = []
+def _metric_specs(spec: dict, dm_cols) -> dict[str, tuple[str, str]]:
+    """Named metric aggs (avg/sum/min/max/value_count over a stored
+    field) as ``{name: (kind, field)}`` — sibling metric aggs, or the
+    ``aggs`` block nested under a bucket agg, where each is one more
+    column in the SAME hash aggregation as doc_count: sub-aggs never add
+    a shuffle or a second pass over the hit set."""
+    named = {}
     for name, sub in spec.items():
         skind, sparams = _single(sub, f"sub-agg {name!r}")
-        fn = _METRIC_SUBAGGS.get(skind)
-        if fn is None:
+        if skind not in aggs.METRICS:
             raise DSLError(
                 f"sub-agg {name!r}: unsupported type {skind!r} "
-                f"(metric sub-aggs: {sorted(_METRIC_SUBAGGS)})"
+                f"(metric sub-aggs: {sorted(aggs.METRICS)})"
             )
         sfield = sparams["field"]
         if sfield not in dm_cols:
@@ -1660,47 +1634,43 @@ def _sub_agg_exprs(spec: dict, dm_cols) -> list:
                 f"sub-agg field {sfield!r} is not stored in this "
                 "index's docmap"
             )
-        exprs.append(fn(sfield).alias(name))
-    return exprs
+        named[name] = (skind, sfield)
+    return named
 
 
 def _run_aggs(
-    searcher, hits: DataFrame, aggs: dict, docs_text: DataFrame | None = None
+    searcher, hits: DataFrame, body_aggs: dict,
+    docs_text: DataFrame | None = None,
 ) -> DataFrame:
     """The body's ``aggs`` section over the query's FULL hit set (never
-    the size-capped page — ES aggregates all matching docs). Supported:
-    one terms/histogram/stats agg over a stored field, with named
-    metric sub-aggs under terms/histogram buckets; richer shapes stay
-    on the dedicated Searcher methods this routes to."""
+    the size-capped page — ES aggregates all matching docs). Parses each
+    agg's params and runs the ``operators/aggs.py`` kernel its
+    ``Searcher`` method runs, over the hits joined to their stored fields
+    (``Searcher._agg_input``). Supported: sibling metric aggs, or one
+    bucket/metric agg per request, with named metric sub-aggs under
+    terms/histogram/filter/global or one top_hits sub-agg under terms."""
+    dm = searcher.docmap
     # ES allows N sibling aggs per request; when they are ALL metric
     # aggs (one or many) the response is one row with one column per
     # agg name — still a single hash aggregation over the hit set
-    if aggs and all(
-        isinstance(a, dict) and len(a) == 1
-        and next(iter(a)) in _METRIC_SUBAGGS
-        for a in aggs.values()
+    if body_aggs and all(
+        isinstance(a, dict) and len(a) == 1 and next(iter(a)) in aggs.METRICS
+        for a in body_aggs.values()
     ):
-        dm = searcher.docmap
-        exprs = _sub_agg_exprs(aggs, dm.columns)
-        need = sorted(
-            {s["field"] for a in aggs.values() for s in a.values()}
-        )
-        return (
-            hits.select("doc_id")
-            .join(dm.select("doc_id", *need), "doc_id")
-            .agg(*exprs)
-        )
-    if len(aggs) != 1:
+        named = _metric_specs(body_aggs, dm.columns)
+        return aggs.metrics(searcher._agg_input(
+            hits.select("doc_id"), [f for _, f in named.values()]
+        ), named)
+    if len(body_aggs) != 1:
         raise DSLError(
             "multiple top-level aggs are supported only when all are "
-            f"metric aggs ({sorted(_METRIC_SUBAGGS)}); bucket aggs go "
+            f"metric aggs ({sorted(aggs.METRICS)}); bucket aggs go "
             "one per request"
         )
-    _, spec = _single(aggs, "aggs")
+    _, spec = _single(body_aggs, "aggs")
     spec = dict(spec)
     sub_spec = spec.pop("aggs", {})
     kind, params = _single(spec, "agg spec")
-    dm = searcher.docmap
 
     if kind == "filters":
         # named filter buckets: each filter compiles in filter context
@@ -1718,16 +1688,11 @@ def _run_aggs(
                 .agg(F.count(F.lit(1)).alias("doc_count"))
                 .select(F.lit(name).alias("bucket"), "doc_count")
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy("bucket")
+        return reduce(DataFrame.unionByName, parts).orderBy("bucket")
 
     if kind == "composite":
-        # paginated multi-source terms: groupBy every source field, key
-        # order is the pagination order, the after cursor lexicographic-
-        # filters, size caps the page. One hash aggregation regardless
-        # of source count; pagination never re-aggregates prior pages.
+        # paginated multi-source terms: sources are named stored fields,
+        # the after cursor is keyed by source name
         sources = params.get("sources")
         if not isinstance(sources, list) or not sources:
             raise DSLError("composite needs sources[]")
@@ -1744,39 +1709,18 @@ def _run_aggs(
                 raise DSLError(f"composite field {f_!r} is not stored")
             names.append(name)
             cols.append(f_)
-        size = int(params.get("size", 10))
-        j2 = hits.select("doc_id").join(dm.select("doc_id", *cols), "doc_id")
-        agg = j2.groupBy(
-            *[F.col(c).alias(n) for c, n in zip(cols, names)]
-        ).agg(F.count("*").alias("doc_count"))
         after = params.get("after")
-        if after is not None:
-            # strictly-after in the composite key order: lexicographic
-            # (k1 > a1) OR (k1 = a1 AND k2 > a2) OR ...
-            conds = []
-            for i, n in enumerate(names):
-                eqs = [F.col(names[j]) == F.lit(after[names[j]]) for j in range(i)]
-                gt = F.col(n) > F.lit(after[n])
-                c = gt
-                for e in eqs:
-                    c = c & e
-                conds.append(c)
-            cond = conds[0]
-            for c in conds[1:]:
-                cond = cond | c
-            agg = agg.filter(cond)
-        return agg.orderBy(*[F.col(n).asc() for n in names]).limit(size)
+        j = searcher._agg_input(hits.select("doc_id"), cols).select(
+            *[F.col(c).alias(n) for c, n in zip(cols, names)]
+        )
+        return aggs.composite(
+            j, names, int(params.get("size", 10)),
+            None if after is None else [after[n] for n in names],
+        )
 
     if kind == "significant_text":
-        # ES significant_text agg: terms over-represented in the hit
-        # set vs the whole index, JLH-scored ((fg%−bg%)·(fg%/bg%), the
-        # ES default heuristic). Foreground df re-tokenizes the HIT
-        # docs only (the significant_text contract — it analyzes
-        # _source text, no term vectors needed); background df is the
-        # index's own term_stats — no second corpus pass. Mirrors
-        # Searcher.significant_terms exactly (pytest pins identity).
-        from kafka_es_spark.functions.tokenize import tokens
-
+        # ES significant_text: the significant_terms kernel over the hit
+        # docs' _source text (no term vectors needed)
         if params.get("field", "text") != "text":
             raise DSLError("significant_text targets the 'text' field")
         if docs_text is None:
@@ -1784,38 +1728,10 @@ def _run_aggs(
                 "significant_text needs the docs_text relation (url, "
                 "text) — this index stores no original text by design"
             )
-        size = int(params.get("size", 10))
-        mdc = int(params.get("min_doc_count", 3))
-        j2 = (
-            hits.select("doc_id")
-            .join(dm.select("doc_id", "url"), "doc_id")
-            .join(docs_text.select("url", "text"), "url")
-        )
-        n_fg = j2.count()
-        if n_fg == 0:
-            return local_frame(
-                searcher.spark, [],
-                "term string, fg_count long, bg_count long, "
-                "sig_score double",
-            )
-        fg = (
-            j2.select(
-                F.explode(F.array_distinct(tokens("text"))).alias("term")
-            )
-            .groupBy("term")
-            .agg(F.count("*").alias("fg_count"))
-            .filter(F.col("fg_count") >= mdc)
-        )
-        bg = searcher.term_stats.select(
-            "term", F.col("df").alias("bg_count")
-        )
-        fgp = F.col("fg_count") / F.lit(float(n_fg))
-        bgp = F.col("bg_count") / F.lit(float(searcher.n_docs))
-        return (
-            fg.join(bg, "term")
-            .withColumn("sig_score", F.round((fgp - bgp) * (fgp / bgp), 4))
-            .orderBy(F.col("sig_score").desc(), F.col("term").asc())
-            .limit(size)
+        return aggs.significant_terms(
+            searcher._agg_input(hits.select("doc_id"), ["text"], docs_text),
+            searcher.term_stats, searcher.n_docs,
+            int(params.get("size", 10)), int(params.get("min_doc_count", 3)),
         )
 
     if kind in ("filter", "global"):
@@ -1823,21 +1739,18 @@ def _run_aggs(
         # filter-context clause, ``global`` ignores the query and
         # aggregates the whole live corpus (the ES all-docs bucket).
         # doc_count plus any metric sub-aggs ride ONE hash aggregation.
-        if kind == "filter":
+        named = _metric_specs(sub_spec, dm.columns)
+        need = [f for _, f in named.values()]
+        if kind == "global":
+            base = searcher._agg_input(None, need)
+        else:
             if not isinstance(params, dict) or not params:
                 raise DSLError("filter agg needs a filter clause")
             gate = _ids(_compile(searcher, params, scoring=False))
             base = hits.select("doc_id").join(gate, "doc_id", "left_semi")
-        else:
-            base = searcher.match_all_ids().select("doc_id")
-        exprs = [F.count(F.lit(1)).alias("doc_count")]
-        if sub_spec:
-            exprs += _sub_agg_exprs(sub_spec, dm.columns)
-            need = sorted(
-                {s["field"] for a in sub_spec.values() for s in a.values()}
-            )
-            base = base.join(dm.select("doc_id", *need), "doc_id")
-        return base.agg(*exprs)
+            if named:
+                base = searcher._agg_input(base, need)
+        return aggs.metrics(base, named, doc_count=True)
 
     field = params["field"]
     if field not in dm.columns:
@@ -1860,172 +1773,85 @@ def _run_aggs(
                 )
             top_hits_spec = next(iter(th.values()))["top_hits"]
             sub_spec = {}
-    subs = _sub_agg_exprs(sub_spec, dm.columns)
-    need = sorted(
-        {field} | {s["field"] for a in sub_spec.values() for s in a.values()}
+    named = _metric_specs(sub_spec, dm.columns)
+    subs = aggs.metric_columns(named)
+    j = searcher._agg_input(
+        hits.select("doc_id"), [field, *[f for _, f in named.values()]]
     )
-    j = hits.select("doc_id").join(dm.select("doc_id", *need), "doc_id")
-    if kind == "terms" and top_hits_spec is not None:
-        # terms + top_hits: per-bucket best hits. The window partitions
-        # BY THE BUCKET KEY — per-bucket local sorts, never a global
-        # one; bucket selection is a (#distinct values)-row aggregate
-        # broadcast back (Searcher.top_hits's exact plan shape).
-        from pyspark.sql import Window
-
+    if top_hits_spec is not None:
+        # terms + top_hits: per-bucket best hits, ranked on the raw score
         if "score" not in hits.columns:
             raise DSLError("top_hits needs a scoring query")
-        size = int(params.get("size", 10))
-        per = int(top_hits_spec.get("size", 3))
-        j2 = (
-            hits.select("doc_id", "score")
-            .join(dm.select("doc_id", "url", field), "doc_id")
-            .withColumnRenamed(field, "value")
-        )
-        tb = (
-            j2.groupBy("value").agg(F.count("*").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col("value").asc())
-            .limit(size)
-        )
-        w = Window.partitionBy("value").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            j2.join(F.broadcast(tb), "value")
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= per)
-            .select(
-                "value", "doc_count", "rnk", "url",
-                F.round("score", 4).alias("score"),
-            )
-            .orderBy(
-                F.col("doc_count").desc(), F.col("value").asc(),
-                F.col("rnk").asc(),
-            )
-        )
+        j2 = searcher._agg_input(
+            hits.select("doc_id", "score"), [field]
+        ).withColumnRenamed(field, "value")
+        return aggs.top_hits(
+            j2, "value", int(params.get("size", 10)),
+            int(top_hits_spec.get("size", 3)),
+        ).withColumn("score", F.round("score", 4))
     if kind == "terms":
-        size = int(params.get("size", 10))
         key = F.col(field)
         if params.get("missing") is not None:
             # ES terms `missing`: docs lacking the field bucket under
             # the given substitute value instead of dropping out
             key = F.coalesce(key, F.lit(params["missing"]))
-        agg = j.groupBy(key.alias("value")).agg(
-            F.count("*").alias("doc_count"), *subs
-        )
-        if int(params.get("min_doc_count", 1)) > 1:
-            agg = agg.filter(
-                F.col("doc_count") >= int(params["min_doc_count"])
-            )
         # ES terms `order`: _key / _count / a metric sub-agg name;
-        # default doc_count desc. Key asc is always the tie-break —
-        # bucket selection at the size cut stays deterministic.
+        # default doc_count desc (the kernel keeps key asc as the tie-break)
+        lead = None
         order = params.get("order")
         if order:
             oname, direction = _single(order, "terms order")
             ocol = {"_key": "value", "_count": "doc_count"}.get(oname, oname)
-            if ocol not in agg.columns:
+            if ocol not in ("value", "doc_count", *named):
                 raise DSLError(
                     f"terms order key {oname!r} is neither _key/_count "
                     "nor a sibling sub-agg name"
                 )
             if direction not in ("asc", "desc"):
                 raise DSLError("terms order direction must be asc|desc")
-            lead = (
+            lead = [
                 F.col(ocol).asc() if direction == "asc"
                 else F.col(ocol).desc()
-            )
-            return agg.orderBy(lead, F.col("value").asc()).limit(size)
-        return agg.orderBy(
-            F.col("doc_count").desc(), F.col("value").asc()
-        ).limit(size)
+            ]
+        return aggs.terms(
+            j.withColumn("value", key), ["value"], subs,
+            size=int(params.get("size", 10)), order=lead,
+            min_doc_count=int(params.get("min_doc_count", 1)),
+        )
     if kind == "histogram":
-        iv = float(params["interval"])
-        bucket = (F.floor(F.col(field) / iv) * iv).alias("bucket_key")
-        return (
-            j.groupBy(bucket)
-            .agg(F.count("*").alias("doc_count"), *subs)
-            .orderBy("bucket_key")
+        key = aggs.histogram_key(field, params["interval"])
+        return aggs.terms(
+            j.withColumn("bucket_key", key), ["bucket_key"], subs, order=[]
         )
     if kind == "stats":
-        return j.agg(
-            F.count(field).alias("n_docs_agg"),
-            F.min(field).alias("min_v"),
-            F.max(field).alias("max_v"),
-            F.sum(field).cast("long").alias("sum_v"),
-            F.round(F.avg(field), 4).alias("avg_v"),
-        )
+        return aggs.stats(j, field)
     if kind == "extended_stats":
-        # ES extended_stats: stats + sum_of_squares / variance (POP) /
-        # std_deviation — one hash aggregation, same as stats
-        return j.agg(
-            F.count(field).alias("n_docs_agg"),
-            F.min(field).alias("min_v"),
-            F.max(field).alias("max_v"),
-            F.sum(field).cast("long").alias("sum_v"),
-            F.round(F.avg(field), 4).alias("avg_v"),
-            F.round(
-                F.sum(F.col(field) * F.col(field)).cast("double"), 4
-            ).alias("sum_sq"),
-            F.round(F.var_pop(field), 4).alias("variance"),
-            F.round(F.stddev_pop(field), 4).alias("std_dev"),
+        return aggs.extended_stats(j, field).select(
+            "n_docs_agg", "min_v", "max_v", "sum_v", "avg_v", "sum_sq",
+            "variance", "std_dev",
         )
     if kind == "cardinality":
         # ES cardinality is HLL++-approximate by design; the scale
-        # default here mirrors Searcher.agg_cardinality
-        # (approx_count_distinct), and precision_threshold -1 /
-        # "exact": true switches to the exact shuffle-keyed count (what
-        # an oracle can reproduce)
-        exact = bool(params.get("exact", False))
-        c = (
-            F.count_distinct(field) if exact
-            else F.approx_count_distinct(field)
-        )
-        return j.agg(c.cast("long").alias("value_count"))
-    if kind == "value_count":
-        return j.agg(F.count(field).cast("long").alias("value_count"))
-    if kind in ("avg", "sum", "min", "max"):
-        return j.agg(_METRIC_SUBAGGS[kind](field).alias(kind))
+        # default mirrors Searcher.agg_cardinality
+        # (approx_count_distinct), and "exact": true switches to the
+        # exact shuffle-keyed count (what an oracle can reproduce)
+        return aggs.cardinality(j, field, bool(params.get("exact", False)))
+    if kind in aggs.METRICS:
+        return aggs.metrics(j, {kind: (kind, field)})
     if kind == "percentiles":
         pcts = [float(p) for p in params.get("percents", [25.0, 50.0, 75.0])]
-        parr = F.array(*[F.lit(p) for p in pcts])
-        exact = bool(params.get("exact", True))
-        agg_fn = (
-            F.percentile(field, F.array(*[F.lit(p / 100.0) for p in pcts]))
-            if exact
-            else F.percentile_approx(
-                field, F.array(*[F.lit(p / 100.0) for p in pcts]),
-                int(params.get("accuracy", 10000)),
-            )
-        )
-        return (
-            j.agg(agg_fn.alias("vals"))
-            .select(F.posexplode("vals").alias("pos", "value"))
-            .select(
-                F.element_at(parr, F.col("pos") + 1).alias("pct"),
-                F.round(F.col("value").cast("double"), 4).alias("value"),
-            )
-            .orderBy("pct")
-        )
+        return aggs.percentiles(
+            j, field, [p / 100.0 for p in pcts], pcts,
+            bool(params.get("exact", True)),
+            int(params.get("accuracy", 10000)),
+        ).withColumn("value", F.round("value", 4)).orderBy("pct")
     if kind == "missing":
-        return j.filter(F.col(field).isNull()).agg(
-            F.count(F.lit(1)).alias("doc_count")
+        return aggs.value_counts(j, field).select(
+            F.col("missing_count").alias("doc_count")
         )
     if kind == "median_absolute_deviation":
-        # ES MAD agg (t-digest-approximate in ES): exact here —
-        # median(|x − median(x)|) as a 1-row median pre-pass broadcast
-        # back, then one aggregation (same plan the ES|QL MAD uses)
-        med = j.agg(F.percentile(field, F.lit(0.5)).alias("__m"))
-        return (
-            j.crossJoin(F.broadcast(med))
-            .agg(
-                F.round(
-                    F.percentile(
-                        F.abs(F.col(field) - F.col("__m")), F.lit(0.5)
-                    ),
-                    4,
-                ).alias("mad")
-            )
-        )
+        # ES MAD agg (t-digest-approximate in ES): exact here
+        return aggs.median_absolute_deviation(j, field)
     if kind == "range":
         # ES range agg: half-open [from, to) buckets, each counted
         # independently (overlaps allowed); key = "from-to" with ES's
@@ -2033,27 +1859,12 @@ def _run_aggs(
         ranges = params.get("ranges")
         if not isinstance(ranges, list) or not ranges:
             raise DSLError("range agg needs ranges[]")
-        parts = []
-        for r in ranges:
-            lo, hi = r.get("from"), r.get("to")
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col(field) >= float(lo))
-            if hi is not None:
-                cond = cond & (F.col(field) < float(hi))
-            key = (
-                f"{lo if lo is not None else '*'}-"
-                f"{hi if hi is not None else '*'}"
-            )
-            parts.append(
-                j.filter(cond)
-                .agg(F.count(F.lit(1)).alias("doc_count"))
-                .select(F.lit(key).alias("bucket"), "doc_count")
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy("bucket")
+        rows = aggs.range_rows(
+            [(r.get("from"), r.get("to")) for r in ranges], str
+        )
+        return aggs.ranges(j, F.col(field), rows).select(
+            F.col("key").alias("bucket"), "doc_count"
+        ).orderBy("bucket")
     if kind == "date_histogram":
         iv = params.get("calendar_interval") or params.get(
             "fixed_interval"

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_es_spark.operators import aggs
 from kafka_es_spark.operators.spimi import (
     decode_ids, decode_range_dls, decode_segment, gather_dls,
 )
@@ -309,6 +310,25 @@ def round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
     comparisons see exactly what the client saw."""
     scale = 10.0 ** digits
     return np.floor(x * scale + 0.5) / scale
+
+
+def snippet(qterms, window: int, length: int):
+    """The highlight snippet of the ``text`` column: ``length`` characters
+    starting ``window`` before the first case-insensitive occurrence of
+    any of ``qterms`` (the earliest across terms), clamped to the text
+    start; the text's first ``length`` characters when none occurs."""
+    big = F.lit(2_000_000_000)
+    lower_t = F.lower(F.col("text"))
+    ps = [
+        F.when(F.instr(lower_t, F.lit(t)) > 0, F.instr(lower_t, F.lit(t)))
+        .otherwise(big)
+        for t in qterms
+    ]
+    first = ps[0] if len(ps) == 1 else F.least(*ps)
+    start = F.greatest(F.lit(1), first - F.lit(int(window)))
+    return F.when(
+        first < big, F.substring(F.col("text"), start, F.lit(int(length)))
+    ).otherwise(F.substring(F.col("text"), F.lit(1), F.lit(int(length))))
 
 
 def counted_range_topk(
@@ -887,16 +907,9 @@ class Searcher:
         key on high-cardinality columns and reduce to a tiny
         (#distinct-values)-row aggregate — the classic shuffle-then-
         partial-agg plan; Catalyst broadcasts whichever side is small."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        return (
-            j.groupBy(field)
-            .agg(F.count("*").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col(field).asc())
-            .limit(int(size))
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [field], field_values)
+        return aggs.terms(j, [field], size=size)
 
     def terms_metric_agg(
         self,
@@ -916,26 +929,13 @@ class Searcher:
         the metrics ride the same partial aggregation, so the nested
         request costs exactly one more column per metric, not a second
         pass."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap.select("doc_id", "url")
-        j = hits.join(dm, "doc_id").join(
-            field_values.select("url", bucket_field, metric_field), "url"
-        )
-        return (
-            j.groupBy(bucket_field)
-            .agg(
-                F.count("*").alias("doc_count"),
-                F.round(F.avg(metric_field), 4).alias("avg_v"),
-                F.sum(metric_field).cast("long").alias("sum_v"),
-                F.min(metric_field).alias("min_v"),
-                F.max(metric_field).alias("max_v"),
-            )
-            .orderBy(F.col("doc_count").desc(), F.col(bucket_field).asc())
-            .limit(int(size))
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [bucket_field, metric_field], field_values)
+        subs = aggs.metric_columns({
+            f"{kind}_v": (kind, metric_field)
+            for kind in ("avg", "sum", "min", "max")
+        })
+        return aggs.terms(j, [bucket_field], subs, size=size)
 
     def index_stats(self) -> DataFrame:
         """ES ``_stats`` analogue computed from the index relations
@@ -953,7 +953,7 @@ class Searcher:
 
         spark = self.spark
         n_deleted = len(read_tombstone_ids(spark, self.index_dir) or ())
-        n_terms = self.term_stats.select("term").distinct().count()
+        n_terms = self.term_stats.count()
         segs = read_relation(spark, os.path.join(self.index_dir, "postings"))
         p = self._postings_rows(segs.drop("pos_blob")).agg(
             F.count("*").alias("n_postings"),
@@ -970,45 +970,62 @@ class Searcher:
             "sum_tf long, avgdl double",
         )
 
-    def _hit_fields(
-        self, query: str, field_values: DataFrame | None, field: str,
-        mode: str = "or", min_should_match: int | None = None,
-        must_not: str | None = None,
-        weights: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """The hit set joined to its per-doc field values — the shared
-        input relation of every aggregation (doc_id, url, field).
-
-        ``field_values=None`` reads the field from the docmap's STORED
-        fields instead (the ES doc-values path — fields persisted at
-        build via ``build_index(store_fields=...)``, plus ``dl``, which
-        every index stores): one join on the dense doc id, no external
-        table, no second url-keyed shuffle. The external-relation path
-        stays for fields the index doesn't store. ``weights``: as in
-        ``matching_doc_ids``."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not, weights=weights,
+    def _live(self, frame: DataFrame) -> DataFrame:
+        """``frame`` without the docs the index's pending tombstones
+        delete."""
+        if not self.persistent_excluded:
+            return frame
+        return frame.filter(
+            ~F.col("doc_id").isin(sorted(self.persistent_excluded))
         )
-        return self._join_fields(hits, field_values, field)
 
-    def _join_fields(
-        self, hits: DataFrame, field_values: DataFrame | None, field: str
+    def _agg_input(
+        self,
+        hits: DataFrame | None,
+        cols: list[str] | None,
+        field_values: DataFrame | None = None,
+        how: str = "inner",
     ) -> DataFrame:
-        """``hits`` (one row per doc_id, any other columns kept) joined to
-        each doc's url and ``field`` value, as in ``_hit_fields``."""
+        """The input relation of every aggregation: ``hits`` (one row per
+        doc_id, any other columns kept; None = every live doc, the
+        ``global`` scope) joined to each doc's url and ``cols`` values.
+
+        ``field_values=None`` reads ``cols`` from the docmap's STORED
+        fields (the ES doc-values path — fields persisted at build via
+        ``build_index(store_fields=...)``, plus ``dl``, which every index
+        stores): one join on the dense doc id, no external table, no
+        second url-keyed shuffle. Otherwise ``cols`` come from the
+        external (url, ...) relation ``field_values`` joined on url
+        (``how``: "left" keeps hits it has no row for, their values
+        null); a col it lacks is read from the stored fields, and
+        ``cols=None`` takes all of its columns. A ``hits`` that already
+        carries ``url`` skips the docmap when it needs no stored field."""
         dm = self.docmap
+        ext = set(field_values.columns) if field_values is not None else set()
+        if cols is not None:
+            cols = [c for c in dict.fromkeys(cols) if c not in ("doc_id", "url")]
+        stored = [c for c in cols or () if c not in ext]
+        missing = [c for c in stored if c not in dm.columns]
+        if missing:
+            raise ValueError(
+                f"fields {missing} are not stored in this index's docmap "
+                f"(stored: {sorted(set(dm.columns) - {'doc_id'})}); "
+                "build with store_fields=(...) or pass field_values"
+            )
+        if hits is None:
+            j = self._live(dm.select("doc_id", "url", *stored))
+        elif "url" in hits.columns and not stored:
+            j = hits
+        else:
+            url = [] if "url" in hits.columns else ["url"]
+            j = hits.join(dm.select("doc_id", *url, *stored), "doc_id")
         if field_values is None:
-            if field not in dm.columns:
-                raise ValueError(
-                    f"field {field!r} is not stored in this index's docmap "
-                    f"(stored: {sorted(set(dm.columns) - {'doc_id'})}); "
-                    "build with store_fields=(...) or pass field_values"
-                )
-            return hits.join(dm.select("doc_id", "url", field), "doc_id")
-        return hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", field), "url"
-        )
+            return j
+        if cols is not None:
+            field_values = field_values.select(
+                "url", *[c for c in cols if c in ext]
+            )
+        return j.join(field_values, "url", how)
 
     def highlight_topk(
         self,
@@ -1039,21 +1056,9 @@ class Searcher:
         # rank with a null snippet (ES never drops a hit because the
         # highlighter had nothing to read)
         j = out.join(docs_text.select("url", "text"), "url", "left")
-        big = F.lit(2_000_000_000)
-        lower_t = F.lower(F.col("text"))
-        ps = [
-            F.when(F.instr(lower_t, F.lit(t)) > 0, F.instr(lower_t, F.lit(t)))
-            .otherwise(big)
-            for t in qterms
-        ]
-        first = ps[0] if len(ps) == 1 else F.least(*ps)
-        start = F.greatest(F.lit(1), first - F.lit(int(window)))
-        snip = F.when(
-            first < big,
-            F.substring(F.col("text"), start, F.lit(2 * int(window))),
-        ).otherwise(F.substring(F.col("text"), F.lit(1), F.lit(2 * int(window))))
         return j.select(
-            "doc_id", "url", "score", snip.alias("snippet")
+            "doc_id", "url", "score",
+            snippet(qterms, window, 2 * int(window)).alias("snippet"),
         ).orderBy(F.col("score").desc(), F.col("doc_id").asc())
 
     def _postings_rows(self, segs: DataFrame) -> DataFrame:
@@ -1132,52 +1137,21 @@ class Searcher:
         Scores are OR-mode BM25 sums over the doc's matched query terms
         — on an AND/msm hit set every doc matched its scoring terms, so
         these equal the bool-query scores ES reports in top_hits."""
-        from pyspark.sql import Window
-
         from kafka_es_spark.functions.tokenize import tokenize_py
 
-        spark = self.spark
-        qterms = sorted(set(tokenize_py(query)))
-        out_schema = (
-            f"{field} string, doc_count long, rnk long, url string, "
-            "score double"
-        )
-        if not qterms or self.n_docs == 0 or self.avgdl == 0:
-            return local_frame(spark, [], out_schema)
+        if not tokenize_py(query) or self.n_docs == 0 or self.avgdl == 0:
+            return local_frame(
+                self.spark, [], f"{field} string, doc_count long, "
+                "rnk long, url string, score double",
+            )
         scored = self.relational_scores(
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        j = self._join_fields(scored, field_values, field)
-        js = j
+        j = self._agg_input(scored, [field], field_values)
         if round_to is not None:
-            js = j.withColumn("score", F.round("score", round_to))
-        js = js.withColumn(
-            "_tie", tie if tie is not None else F.col("doc_id")
-        )
-        w = Window.partitionBy(field).orderBy(
-            F.col("score").desc(), F.col("_tie").asc()
-        )
-        ranked = js.withColumn("rnk", F.row_number().over(w)).filter(
-            F.col("rnk") <= int(per_bucket)
-        )
-        top_b = (
-            j.groupBy(field)
-            .agg(F.count("*").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col(field).asc())
-            .limit(int(buckets))
-        )
-        return (
-            ranked.join(F.broadcast(top_b), field)
-            .select(
-                field, "doc_count",
-                F.col("rnk").cast("long").alias("rnk"), "url", "score",
-            )
-            .orderBy(
-                F.col("doc_count").desc(), F.col(field).asc(),
-                F.col("rnk").asc(),
-            )
-        )
+            j = j.withColumn("score", F.round("score", round_to))
+        return aggs.top_hits(j, field, buckets, per_bucket, tie)
 
     def explain(
         self,
@@ -1212,10 +1186,7 @@ class Searcher:
             .filter(F.col("url").isin(list(urls)))
             .select("doc_id", "url")
         )
-        if self.persistent_excluded:
-            dm = dm.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        dm = self._live(dm)
         segs = self._query_segs(list(weights))
         w_df = local_frame(
             spark, [(t, float(w)) for t, w in sorted(weights.items())],
@@ -1571,10 +1542,7 @@ class Searcher:
         spark = self.spark
         req = local_frame(spark, [(u,) for u in urls], "url string")
         dm = self.docmap.select("url", "doc_id")
-        if self.persistent_excluded:
-            dm = dm.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        dm = self._live(dm)
         hit = dm.join(F.broadcast(req), "url")
         out = req.join(hit, "url", "left").select(
             "url", F.col("doc_id").isNotNull().alias("found"), "doc_id"
@@ -1827,37 +1795,10 @@ class Searcher:
         corpus), distinct-per-doc aggregation to fg df, broadcast-sized
         join against the term_stats aggregate. The only corpus-sized
         input is the pre-existing index metadata."""
-        from kafka_es_spark.functions.tokenize import tokens
-
-        hits = self._hit_fields(
-            query, docs_text, "text", mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        n_fg = hits.count()
-        if n_fg == 0:
-            return local_frame(
-                self.spark, [],
-                "term string, fg_count long, bg_count long, sig_score double",
-            )
-        fg = (
-            hits.select(F.explode(F.array_distinct(tokens("text"))).alias("term"))
-            .groupBy("term")
-            .agg(F.count("*").alias("fg_count"))
-            .filter(F.col("fg_count") >= int(min_doc_count))
-        )
-        bg = self.term_stats.select(
-            "term", F.col("df").alias("bg_count")
-        )
-        n_bg = self.n_docs
-        fgp = F.col("fg_count") / F.lit(float(n_fg))
-        bgp = F.col("bg_count") / F.lit(float(n_bg))
-        return (
-            fg.join(bg, "term")
-            .withColumn(
-                "sig_score", F.round((fgp - bgp) * (fgp / bgp), 4)
-            )
-            .orderBy(F.col("sig_score").desc(), F.col("term").asc())
-            .limit(int(size))
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.significant_terms(
+            self._agg_input(hits, ["text"], docs_text), self.term_stats,
+            self.n_docs, size, min_doc_count,
         )
 
     def agg_histogram(
@@ -1876,16 +1817,11 @@ class Searcher:
         ordered by bucket asc (ES histogram key order). Empty buckets are
         omitted (ES min_doc_count=1 behavior). One shuffle to the tiny
         (#buckets)-row aggregate after the hit/field joins."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [field], field_values).select(
+            aggs.histogram_key(field, interval).cast("long").alias("bucket")
         )
-        bucket = (F.floor(F.col(field) / F.lit(interval)) * F.lit(interval))
-        return (
-            j.groupBy(bucket.cast("long").alias("bucket"))
-            .agg(F.count("*").alias("doc_count"))
-            .orderBy("bucket")
-        )
+        return aggs.terms(j, ["bucket"], order=[])
 
     def agg_stats(
         self,
@@ -1900,17 +1836,8 @@ class Searcher:
         max_v, sum_v, avg_v) over the matching docs' numeric ``field`` —
         a pure partial-aggregate plan (map-side combine, single tiny
         reduce)."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        return j.agg(
-            F.count(field).alias("n_docs_agg"),
-            F.min(field).alias("min_v"),
-            F.max(field).alias("max_v"),
-            F.sum(field).cast("long").alias("sum_v"),
-            F.round(F.avg(field), 4).alias("avg_v"),
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.stats(self._agg_input(hits, [field], field_values), field)
 
     def sort_topk(
         self,
@@ -1936,10 +1863,8 @@ class Searcher:
         ``track_scores=false``. ``fetch_k`` over-fetches so a caller
         re-ranking on an external tie key (corpus id from the url) keeps
         every member of a field-value tie group at the k boundary."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [field], field_values)
         order = F.col(field).asc() if ascending else F.col(field).desc()
         return (
             j.select("doc_id", "url", field)
@@ -1968,15 +1893,10 @@ class Searcher:
         switches to ``count(DISTINCT field)`` (a shuffle keyed on the
         value — fine for low-cardinality fields and for oracle
         checking)."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.cardinality(
+            self._agg_input(hits, [field], field_values), field, exact, rsd
         )
-        agg = (
-            F.countDistinct(field) if exact
-            else F.approx_count_distinct(field, rsd)
-        )
-        return j.agg(agg.alias("value_count"))
 
     def agg_percentiles(
         self,
@@ -2002,23 +1922,10 @@ class Searcher:
         the hit set doesn't fit an aggregation buffer). Reference parity:
         the reference delegates percentile aggs to ES's t-digest
         (`reference/src/main/.../BulkAction.kt` index ops)."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        pcts = [float(p) for p in percents]
-        parr = F.array(*[F.lit(p) for p in pcts])
-        agg_fn = (
-            F.percentile(field, parr) if exact
-            else F.percentile_approx(field, parr, accuracy)
-        )
-        out = (
-            j.agg(agg_fn.alias("vals"))
-            .select(F.posexplode("vals").alias("pos", "value"))
-            .select(
-                F.element_at(parr, F.col("pos") + 1).alias("pct"),
-                F.col("value").cast("double").alias("value"),
-            )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        out = aggs.percentiles(
+            self._agg_input(hits, [field], field_values), field, percents,
+            percents, exact, accuracy,
         )
         if round_to is not None:
             out = out.withColumn("value", F.round("value", round_to))
@@ -2045,28 +1952,15 @@ class Searcher:
         Plan: one aggregate row of |values| conditional sums + the total
         (all map-side combinable over the hit-join scan), unpivoted with
         ``stack`` — #values output rows, no second shuffle."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        vals = [float(v) for v in values]
-        aggs = [
-            F.sum(F.when(F.col(field) <= F.lit(v), 1).otherwise(0))
-            .cast("double").alias(f"_le{i}")
-            for i, v in enumerate(vals)
-        ] + [F.count(F.lit(1)).cast("double").alias("_n")]
-        stack = ", ".join(
-            f"CAST({v!r} AS DOUBLE), _le{i}" for i, v in enumerate(vals)
-        )
-        out = (
-            j.agg(*aggs)
-            .selectExpr(
-                f"stack({len(vals)}, {stack}) AS (value, _le)", "_n"
-            )
-            .select(
-                "value",
-                (F.lit(100.0) * F.col("_le") / F.col("_n")).alias("pct"),
-            )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        out = aggs.named_counts(
+            self._agg_input(hits, [field], field_values),
+            [(f"CAST({float(v)!r} AS DOUBLE)", F.col(field) <= F.lit(float(v)))
+             for v in values],
+            key="value", extra={"_n": F.count(F.lit(1)).cast("double")},
+        ).select(
+            "value",
+            (F.lit(100.0) * F.col("doc_count") / F.col("_n")).alias("pct"),
         )
         if round_to is not None:
             out = out.withColumn("pct", F.round("pct", round_to))
@@ -2094,7 +1988,9 @@ class Searcher:
         and independent of partitioning/summation order — a float64 sum
         would drift with partition count and break both the two-
         parallelism identity and the SQL oracle. min/max need no cast."""
-        j = self._hit_fields(query, field_values, field, mode=mode)
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [field], field_values
+        )
         mapped = F.expr(map_script)
         if reduce in ("sum", "avg"):
             mapped = F.round(mapped, 6).cast("decimal(38,6)")
@@ -2142,10 +2038,7 @@ class Searcher:
             hits.join(dm.select("doc_id", "url"), "doc_id")
             .select("doc_id", "url", score.alias("score"))
         )
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         return out.orderBy(
             F.col("score").desc(), F.col("url").asc()
         ).limit(int(k))
@@ -2176,7 +2069,9 @@ class Searcher:
             raise ValueError(f"probability must be in (0, 1], got {probability}")
         from kafka_es_spark.operators.dedup import hash32
 
-        j = self._hit_fields(query, field_values, field, mode=mode)
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [field], field_values
+        )
         u = hash32(F.concat(F.col("url"), F.lit(f":{int(seed)}"))) / F.lit(
             float(2**32)
         )
@@ -2212,34 +2107,21 @@ class Searcher:
         Plan: the expression is a pure Column over the hit join —
         Catalyst folds it into the scan projection; the filter on it runs
         before the TakeOrdered. Nothing materializes corpus-wide."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
         # dl (always stored) rides along — token-count-normalized runtime
         # fields are the common case
-        if field_values is None:
-            missing = [c for c in stored_cols if c not in dm.columns]
-            if missing:
-                raise ValueError(
-                    f"runtime field needs stored columns {missing} "
-                    f"(stored: {sorted(set(dm.columns) - {'doc_id'})})"
-                )
-            j = hits.join(
-                dm.select("doc_id", "url", "dl", *stored_cols), "doc_id"
-            )
-        else:
-            j = hits.join(dm.select("doc_id", "url", "dl"), "doc_id").join(
-                field_values, "url"
-            )
+        cols = ["dl", *(
+            stored_cols if field_values is None else field_values.columns
+        )]
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), cols, field_values
+        )
         rf = F.expr(runtime_expr).cast("double")
         if round_to is not None:
             rf = F.round(rf, round_to)
         out = j.select("doc_id", "url", rf.alias("rf"))
         if where is not None:
             out = out.filter(where)
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         return out.orderBy(F.col("rf").desc(), F.col("url").asc()).limit(int(k))
 
     def agg_ranges(
@@ -2263,41 +2145,12 @@ class Searcher:
         beyond the (n_ranges)-row aggregate), then a left join back from
         the ranges relation to restore empty buckets."""
 
-        def _key(lo, hi):
-            f = lambda v: "*" if v is None else format(float(v), "g")
-            return f"{f(lo)}-{f(hi)}"
-
-        rdf = local_frame(
-            self.spark,
-            [
-                (_key(lo, hi),
-                 None if lo is None else float(lo),
-                 None if hi is None else float(hi))
-                for lo, hi in ranges
-            ],
-            "range_key string, lo double, hi double",
-        )
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        cond = (
-            (F.col("lo").isNull() | (F.col(field) >= F.col("lo")))
-            & (F.col("hi").isNull() | (F.col(field) < F.col("hi")))
-        )
-        counts = (
-            j.join(F.broadcast(rdf), cond)
-            .groupBy("range_key")
-            .agg(F.count("*").alias("doc_count"))
-        )
-        return (
-            rdf.select("range_key")
-            .join(counts, "range_key", "left")
-            .select(
-                "range_key",
-                F.coalesce("doc_count", F.lit(0)).cast("long").alias("doc_count"),
-            )
-            .orderBy("range_key")
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.ranges(
+            self._agg_input(hits, [field], field_values), F.col(field),
+            aggs.range_rows(ranges),
+        ).select(F.col("key").alias("range_key"), "doc_count").orderBy(
+            "range_key"
         )
 
     def agg_ip_range(
@@ -2327,38 +2180,16 @@ class Searcher:
                 rows.append((r, int(net.network_address),
                              int(net.network_address) + net.num_addresses))
             else:
-                lo, hi = r
-                key = (
-                    f"{lo if lo is not None else '*'}-"
-                    f"{hi if hi is not None else '*'}"
+                rows += aggs.range_rows(
+                    [r], str, lambda a: int(ipaddress.IPv4Address(a))
                 )
-                rows.append((
-                    key,
-                    None if lo is None else int(ipaddress.IPv4Address(lo)),
-                    None if hi is None else int(ipaddress.IPv4Address(hi)),
-                ))
-        rdf = local_frame(
-            self.spark, rows, "range_key string, lo long, hi long"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [field], field_values
         )
-        j = self._hit_fields(query, field_values, field, mode=mode)
-        v = ipv4_to_long(F.col(field))
-        cond = (
-            (F.col("lo").isNull() | (v >= F.col("lo")))
-            & (F.col("hi").isNull() | (v < F.col("hi")))
-        )
-        counts = (
-            j.join(F.broadcast(rdf), cond)
-            .groupBy("range_key")
-            .agg(F.count("*").alias("doc_count"))
-        )
-        return (
-            rdf.select("range_key")
-            .join(counts, "range_key", "left")
-            .select(
-                "range_key",
-                F.coalesce("doc_count", F.lit(0)).cast("long").alias("doc_count"),
-            )
-            .orderBy("range_key")
+        return aggs.ranges(
+            j, ipv4_to_long(F.col(field)), rows, bound="long"
+        ).select(F.col("key").alias("range_key"), "doc_count").orderBy(
+            "range_key"
         )
 
     def field_caps(self) -> DataFrame:
@@ -2420,24 +2251,12 @@ class Searcher:
         Single-pass plan: one conditional-sum aggregate row (map-side
         combine, no per-bucket scan), unpivoted to ``(filter_key,
         doc_count)`` rows with ``stack``."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap.select("doc_id", "url")
-        j = hits.join(dm, "doc_id").join(field_values, "url")
-        names = sorted(filters)
-        aggs = [
-            F.sum(F.when(F.expr(filters[n]), 1).otherwise(0))
-            .cast("long").alias(f"_b{i}")
-            for i, n in enumerate(names)
-        ]
-        stack = ", ".join(f"'{n}', _b{i}" for i, n in enumerate(names))
-        return (
-            j.agg(*aggs)
-            .selectExpr(f"stack({len(names)}, {stack}) AS (filter_key, doc_count)")
-            .orderBy("filter_key")
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.named_counts(
+            self._agg_input(hits, None, field_values),
+            [(f"'{n}'", F.expr(filters[n])) for n in sorted(filters)],
+            key="filter_key",
+        ).orderBy("filter_key")
 
     def agg_extended_stats(
         self,
@@ -2458,25 +2277,9 @@ class Searcher:
         spelled as the one expression shape ``sq/n − (s/n)·(s/n)`` so an
         oracle computing the identical IEEE ops bit-matches before the
         4dp rounding (same discipline as the BM25 score oracles)."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        c = F.col(field)
-        base = j.agg(
-            F.count(field).alias("n_docs_agg"),
-            F.min(field).alias("min_v"),
-            F.max(field).alias("max_v"),
-            F.sum(field).cast("long").alias("sum_v"),
-            F.sum(c * c).cast("long").alias("sum_sq"),
-        )
-        mean = "(CAST(sum_v AS DOUBLE) / n_docs_agg)"
-        var = f"(CAST(sum_sq AS DOUBLE) / n_docs_agg - {mean} * {mean})"
-        return base.selectExpr(
-            "n_docs_agg", "min_v", "max_v", "sum_v", "sum_sq",
-            f"round({mean}, 4) AS avg_v",
-            f"round({var}, 4) AS variance",
-            f"round(sqrt({var}), 4) AS std_dev",
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.extended_stats(
+            self._agg_input(hits, [field], field_values), field
         )
 
     def agg_weighted_avg(
@@ -2493,14 +2296,8 @@ class Searcher:
         weighted_avg)`` — Σ(value·weight)/Σ(weight) over the hit set.
         Both sums accumulate as exact int64 (integral fields), so the
         single double division is engine-portable before rounding."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap.select("doc_id", "url")
-        j = hits.join(dm, "doc_id").join(
-            field_values.select("url", value_field, weight_field), "url"
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [value_field, weight_field], field_values)
         base = j.agg(
             F.sum(F.col(value_field) * F.col(weight_field))
             .cast("long").alias("sum_vw"),
@@ -2524,13 +2321,9 @@ class Searcher:
         ``(value_count, missing_count)`` — hits with a non-null ``field``
         vs hits where it is null (the ``missing`` agg counts docs the
         value_count skips; together they partition the hit set)."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        return j.agg(
-            F.count(field).alias("value_count"),
-            (F.count(F.lit(1)) - F.count(field)).alias("missing_count"),
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.value_counts(
+            self._agg_input(hits, [field], field_values), field
         )
 
     def agg_rare_terms(
@@ -2551,15 +2344,10 @@ class Searcher:
         builds, and the rarity filter is a post-aggregation predicate
         Catalyst keeps in the same stage, so exactness costs nothing
         extra at any corpus size."""
-        j = self._hit_fields(
-            query, field_values, field, mode=mode,
-            min_should_match=min_should_match, must_not=must_not,
-        )
-        return (
-            j.groupBy(field)
-            .agg(F.count("*").alias("doc_count"))
-            .filter(F.col("doc_count") <= int(max_doc_count))
-            .orderBy(F.col("doc_count").asc(), F.col(field).asc())
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.terms(
+            self._agg_input(hits, [field], field_values), [field],
+            order=[F.col("doc_count").asc()], max_doc_count=max_doc_count,
         )
 
     def agg_multi_terms(
@@ -2582,28 +2370,9 @@ class Searcher:
         docmap (the doc-values path: one dense-id join)."""
         if len(fields) < 2:
             raise ValueError("multi_terms needs >= 2 fields (use facet_terms)")
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap
-        if field_values is None:
-            missing = [f for f in fields if f not in dm.columns]
-            if missing:
-                raise ValueError(
-                    f"fields {missing} not stored in this index's docmap; "
-                    "build with store_fields=(...) or pass field_values"
-                )
-            j = hits.join(dm.select("doc_id", *fields), "doc_id")
-        else:
-            j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-                field_values.select("url", *fields), "url"
-            )
-        return (
-            j.groupBy(*fields)
-            .agg(F.count("*").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), *[F.col(f).asc() for f in fields])
-            .limit(int(size))
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.terms(
+            self._agg_input(hits, fields, field_values), fields, size=size
         )
 
     def agg_adjacency_matrix(
@@ -2630,30 +2399,17 @@ class Searcher:
                 "adjacency_matrix is quadratic in filter count; "
                 f"{len(filters)} > 50 (ES caps at 100)"
             )
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap.select("doc_id", "url")
-        j = hits.join(dm, "doc_id").join(field_values, "url")
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
         names = sorted(filters)
-        keys, conds = [], []
+        named = []
         for i, n in enumerate(names):
-            keys.append(n)
-            conds.append(F.expr(filters[n]))
+            named.append((f"'{n}'", F.expr(filters[n])))
             for m in names[i + 1:]:
-                keys.append(f"{n}&{m}")
-                conds.append(F.expr(filters[n]) & F.expr(filters[m]))
-        aggs = [
-            F.sum(F.when(c, 1).otherwise(0)).cast("long").alias(f"_b{i}")
-            for i, c in enumerate(conds)
-        ]
-        stack = ", ".join(
-            f"'{k}', _b{i}" for i, k in enumerate(keys)
-        )
+                named.append(
+                    (f"'{n}&{m}'", F.expr(filters[n]) & F.expr(filters[m]))
+                )
         return (
-            j.agg(*aggs)
-            .selectExpr(f"stack({len(keys)}, {stack}) AS (key, doc_count)")
+            aggs.named_counts(self._agg_input(hits, None, field_values), named)
             .filter(F.col("doc_count") > 0)
             .orderBy("key")
         )
@@ -2676,24 +2432,8 @@ class Searcher:
         peaked". Ties break on url asc (ES picks arbitrarily; this is
         deterministic). Plan: hit fields → TakeOrderedAndProject — the
         limit rides the sort, no full-sort shuffle at any corpus size."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap
-        cols = [sort_field, metric_field]
-        if field_values is None:
-            missing = [f for f in cols if f not in dm.columns]
-            if missing:
-                raise ValueError(
-                    f"fields {missing} not stored in this index's docmap; "
-                    "build with store_fields=(...) or pass field_values"
-                )
-            j = hits.join(dm.select("doc_id", "url", *cols), "doc_id")
-        else:
-            j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-                field_values.select("url", *cols), "url"
-            )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, [sort_field, metric_field], field_values)
         key = F.col(sort_field).desc() if sort == "desc" else F.col(sort_field).asc()
         return (
             j.orderBy(key, F.col("url").asc())
@@ -2707,12 +2447,19 @@ class Searcher:
 
     def terms_enum(self, prefix: str, size: int = 10) -> DataFrame:
         """ES ``_terms_enum`` API: index-dictionary terms starting with
-        ``prefix``, term-ordered, with their doc frequencies — served
-        straight from the term_stats relation (a dictionary scan; no
-        postings are touched). Like ES, the df reflects the built index:
-        pending tombstones don't lower it until merge. At scale the
-        prefix predicate pushes into the parquet scan and the top-``size``
-        rides a TakeOrdered, so cost is O(matching dictionary rows)."""
+        ``prefix``, term-ordered, with their doc frequencies — no postings
+        are touched. Like ES, the df reflects the built index: pending
+        tombstones don't lower it until merge. A cached Searcher answers
+        from the dictionary it loaded at open (no Spark job); otherwise the
+        prefix predicate pushes into the term_stats scan and the top-
+        ``size`` rides a TakeOrdered, so cost is O(matching dictionary
+        rows)."""
+        if self._dfs is not None:
+            rows = sorted(
+                (t, int(df)) for t, df in self._dfs.items()
+                if t.startswith(prefix)
+            )[: int(size)]
+            return local_frame(self.spark, rows, "term string, doc_count long")
         return (
             self.term_stats.filter(F.col("term").startswith(prefix))
             .select("term", F.col("df").cast("long").alias("doc_count"))
@@ -2741,24 +2488,18 @@ class Searcher:
         row, never a second pass over the data."""
         from functools import reduce as _reduce
 
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", *fields), "url"
-        )
-        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        j = self._agg_input(hits, fields, field_values)
+        sums = [F.count(F.lit(1)).cast("long").alias("n")]
         for fx in fields:
             x = F.col(fx).cast("double")
-            aggs.append(F.sum(x).alias(f"s1_{fx}"))
+            sums.append(F.sum(x).alias(f"s1_{fx}"))
         for fx in fields:
             for fy in fields:
                 x = F.col(fx).cast("double")
                 y = F.col(fy).cast("double")
-                aggs.append(F.sum(x * y).alias(f"sxy_{fx}_{fy}"))
-        row = j.agg(*aggs)
+                sums.append(F.sum(x * y).alias(f"sxy_{fx}_{fy}"))
+        row = j.agg(*sums)
         outs = []
         for fx in fields:
             for fy in fields:
@@ -2926,10 +2667,7 @@ class Searcher:
         out = self._score_cogroup(
             toks, score_range, "doc_id long, score double"
         )
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         score = F.col("score")
         if round_to is not None:
             score = F.round(score, round_to)
@@ -2973,7 +2711,6 @@ class Searcher:
         the per-value window partitions by the dedup value, so no
         single-partition sort ever sees the full hit set. Either way the
         sub-agg runs over <= shard_size rows."""
-        dm = self.docmap
         cols = [field] + ([dedup_field] if dedup_field else [])
         if dedup_field:
             if mode != "or":
@@ -2981,10 +2718,8 @@ class Searcher:
                     "diversified_sampler streams the OR-mode hit set "
                     "(ES semantics); mode='and' is not supported"
                 )
-            top = (
-                self.relational_scores(query)
-                .withColumn("score", F.round("score", 4))
-                .join(dm.select("doc_id", "url"), "doc_id")
+            top = self.relational_scores(query).withColumn(
+                "score", F.round("score", 4)
             )
         else:
             top = self.topk(
@@ -2992,16 +2727,7 @@ class Searcher:
                 with_url=True, fetch_k=fetch_k or 3 * int(shard_size),
                 mode=mode,
             )
-        if field_values is None:
-            missing = [c for c in cols if c not in dm.columns]
-            if missing:
-                raise ValueError(
-                    f"fields {missing} not stored in this index's docmap; "
-                    "build with store_fields=(...) or pass field_values"
-                )
-            j = top.join(dm.select("url", *cols), "url")
-        else:
-            j = top.join(field_values.select("url", *cols), "url")
+        j = self._agg_input(top, cols, field_values)
         if dedup_field:
             wd = Window.partitionBy(dedup_field).orderBy(
                 F.col("score").desc(), F.col("url").asc()
@@ -3125,10 +2851,7 @@ class Searcher:
             sorted({m for m, _ in member_rows}), score_range,
             "doc_id long, score double",
         )
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         score = (
             F.round(F.col("score"), round_to) if round_to is not None
             else F.col("score")
@@ -3224,10 +2947,7 @@ class Searcher:
         pin_df = local_frame(spark, pins, "url string, score double")
         dm = self.docmap
         pin_rows = pin_df.join(dm.select("doc_id", "url"), "url")
-        if self.persistent_excluded:
-            pin_rows = pin_rows.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        pin_rows = self._live(pin_rows)
         organic = self.topk(
             query, k=int(k) + len(pins), round_to=round_to,
             fetch_k=3 * (int(k) + len(pins)), with_url=True, mode=mode,
@@ -3259,10 +2979,9 @@ class Searcher:
         the OR of the two lon half-ranges, exactly ES's wrap semantics.
         Deterministic url-ordered k cut (equal membership has no
         natural order)."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         lat, lon = F.col(lat_field), F.col(lon_field)
         cond = (lat <= F.lit(float(top))) & (lat >= F.lit(float(bottom)))
@@ -3299,10 +3018,9 @@ class Searcher:
         accumulates on the flat projection for geo_points (no spherical
         weighting); identical here. One hash aggregation over the
         hit-joined field relation."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         return j.agg(
             F.count(F.lit(1)).cast("long").alias("doc_count"),
@@ -3338,21 +3056,15 @@ class Searcher:
         no explode; only the hit-set join moves data. Contrast
         has_child_topk, where children are separate rows and a count
         aggregation is unavoidable."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
         matched = F.expr(
             f"size(filter({nested_col}, x -> ({predicate})))"
         ).cast("long")
         out = (
-            hits.join(dm.select("doc_id", "url"), "doc_id")
-            .join(field_values, "url")
+            self._agg_input(self.matching_doc_ids(query, mode), None, field_values)
             .select("doc_id", "url", matched.alias("score"))
             .filter(F.col("score") >= int(min_matches))
         )
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         return out.orderBy(
             F.col("score").desc(), F.col("url").asc()
         ).limit(int(k))
@@ -3378,23 +3090,14 @@ class Searcher:
         (Generate — no shuffle), then one hash aggregation computing
         count + approx-free count(DISTINCT url) together; the distinct
         rides the same aggregate, bounded by #buckets × #parents."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
         base = (
-            hits.join(dm.select("doc_id", "url"), "doc_id")
-            .join(field_values, "url")
+            self._agg_input(self.matching_doc_ids(query, mode), None, field_values)
             .select("url", F.explode(nested_col).alias("x"))
             .select("url", F.expr(key_expr).alias("key"))
         )
-        return (
-            base.groupBy("key")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("doc_count"),
-                F.countDistinct("url").cast("long").alias("parent_count"),
-            )
-            .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-            .limit(int(size))
-        )
+        return aggs.terms(base, ["key"], [
+            F.countDistinct("url").cast("long").alias("parent_count")
+        ], size=size)
 
     def geo_distance(
         self,
@@ -3421,23 +3124,13 @@ class Searcher:
 
         Reference parity: ES geo_distance query + geo sort; the query-hit
         intersection mirrors geo_bounding_box above."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
-        )
-        rad = 3.141592653589793 / 180.0
-        la1 = F.lit(float(origin_lat) * rad)
-        lo1 = F.lit(float(origin_lon) * rad)
-        la2 = F.col(lat_field).cast("double") * F.lit(rad)
-        lo2 = F.col(lon_field).cast("double") * F.lit(rad)
-        h = (
-            F.pow(F.sin((la2 - la1) / F.lit(2.0)), 2)
-            + F.cos(la1) * F.cos(la2)
-            * F.pow(F.sin((lo2 - lo1) / F.lit(2.0)), 2)
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         dist = F.round(
-            F.lit(2.0 * 6371.0) * F.asin(F.sqrt(h)), round_to
+            aggs.haversine_km(lat_field, lon_field, origin_lat, origin_lon),
+            round_to,
         ).alias("distance_km")
         return (
             j.select(
@@ -3473,10 +3166,9 @@ class Searcher:
         partial map-side combine) → TakeOrdered(size). Scales as a plain
         distributed count-by-key."""
         n = float(1 << int(zoom))
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         rad = 3.141592653589793 / 180.0
         lat = F.least(
@@ -3499,13 +3191,7 @@ class Searcher:
             "/", F.lit(str(int(zoom))),
             clamp(xf).cast("string"), clamp(yf).cast("string"),
         )
-        return (
-            j.select(key.alias("key"))
-            .groupBy("key")
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-            .limit(int(size))
-        )
+        return aggs.terms(j.select(key.alias("key")), ["key"], size=size)
 
     def geohash_grid(
         self,
@@ -3537,10 +3223,9 @@ class Searcher:
         nbits = 5 * p
         lon_bits = (nbits + 1) // 2
         lat_bits = nbits // 2
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         clampc = lambda c, n: F.least(  # noqa: E731 — cell ∈ [0, 2^b-1]
             F.lit((1 << n) - 1),
@@ -3587,13 +3272,9 @@ class Searcher:
             )
             for m in range(p)
         ])
-        return (
-            j.select(code.alias("_code"))
-            .select(key.alias("key"))
-            .groupBy("key")
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-            .limit(int(size))
+        return aggs.terms(
+            j.select(code.alias("_code")).select(key.alias("key")), ["key"],
+            size=size,
         )
 
     def geo_bounds(
@@ -3612,10 +3293,9 @@ class Searcher:
         geo_point fields get exactly these four extrema. One hash
         aggregation with full map-side combine — four comparisons per
         row, no shuffle beyond the 1-row reduce."""
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         lat = F.col(lat_field).cast("double")
         lon = F.col(lon_field).cast("double")
@@ -3650,10 +3330,9 @@ class Searcher:
         cut like geo_bounding_box."""
         if len(vertices) < 3:
             raise ValueError("geo_polygon needs >= 3 vertices")
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
         y = F.col(lat_field).cast("double")
         x = F.col(lon_field).cast("double")
@@ -3749,55 +3428,18 @@ class Searcher:
         one (n_rings)-row aggregate, then a left join back restores
         empty rings — identical cost shape to agg_ranges."""
 
-        def _key(lo, hi):
-            f = lambda v: "*" if v is None else format(float(v), "g")  # noqa: E731
-            return f"{f(lo)}-{f(hi)}"
-
-        rdf = local_frame(
-            self.spark,
-            [
-                (_key(lo, hi),
-                 None if lo is None else float(lo),
-                 None if hi is None else float(hi))
-                for lo, hi in rings
-            ],
-            "ring string, km_from double, km_to double",
+        j = self._agg_input(
+            self.matching_doc_ids(query, mode), [lat_field, lon_field],
+            field_values,
         )
-        hits = self.matching_doc_ids(query, mode=mode)
-        dm = self.docmap
-        j = hits.join(dm.select("doc_id", "url"), "doc_id").join(
-            field_values.select("url", lat_field, lon_field), "url"
+        dist = F.round(
+            aggs.haversine_km(lat_field, lon_field, origin_lat, origin_lon),
+            round_to,
         )
-        rad = 3.141592653589793 / 180.0
-        la1 = F.lit(float(origin_lat) * rad)
-        lo1 = F.lit(float(origin_lon) * rad)
-        la2 = F.col(lat_field).cast("double") * F.lit(rad)
-        lo2 = F.col(lon_field).cast("double") * F.lit(rad)
-        h = (
-            F.pow(F.sin((la2 - la1) / F.lit(2.0)), 2)
-            + F.cos(la1) * F.cos(la2)
-            * F.pow(F.sin((lo2 - lo1) / F.lit(2.0)), 2)
-        )
-        dist = F.round(F.lit(2.0 * 6371.0) * F.asin(F.sqrt(h)), round_to)
-        d = j.select(dist.alias("_d"))
-        cond = (
-            (F.col("km_from").isNull() | (F.col("_d") >= F.col("km_from")))
-            & (F.col("km_to").isNull() | (F.col("_d") < F.col("km_to")))
-        )
-        counts = (
-            d.join(F.broadcast(rdf), cond)
-            .groupBy("ring")
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-        )
-        return (
-            rdf.join(counts, "ring", "left")
-            .select(
-                "ring", "km_from", "km_to",
-                F.coalesce(F.col("doc_count"), F.lit(0)).cast("long")
-                .alias("doc_count"),
-            )
-            .orderBy(F.col("km_from").asc_nulls_first())
-        )
+        return aggs.ranges(j, dist, aggs.range_rows(rings)).select(
+            F.col("key").alias("ring"), F.col("lo").alias("km_from"),
+            F.col("hi").alias("km_to"), "doc_count",
+        ).orderBy(F.col("km_from").asc_nulls_first())
 
     def sayt_topk(
         self,
@@ -3922,10 +3564,7 @@ class Searcher:
         )
         dm = self.docmap
         out = matched.join(dm.select("doc_id", "url"), "url")
-        if self.persistent_excluded:
-            out = out.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
+        out = self._live(out)
         # url tiebreak, not internal doc id: urls are stable across index
         # builds, internal dense ids are not
         return (
@@ -3982,11 +3621,8 @@ class Searcher:
         kids = self.has_parent_children(
             parent_query, children, parent_col=parent_col, mode=mode
         )
-        return (
-            kids.groupBy(F.col(child_field).alias("key"))
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-            .limit(int(size))
+        return aggs.terms(
+            kids.select(F.col(child_field).alias("key")), ["key"], size=size
         )
 
     def parent_agg(
@@ -4015,17 +3651,9 @@ class Searcher:
         )
         dm = self.docmap.select("doc_id", "url")
         live = parents.join(dm, "url")
-        if self.persistent_excluded:
-            live = live.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
-        return (
-            live.join(field_values.select("url", field), "url")
-            .groupBy(F.col(field).alias("key"))
-            .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-            .orderBy(F.col("doc_count").desc(), F.col("key").asc())
-            .limit(int(size))
-        )
+        live = self._live(live)
+        j = self._agg_input(live, [field], field_values)
+        return aggs.terms(j.select(F.col(field).alias("key")), ["key"], size=size)
 
     def collapse_topk(
         self,
@@ -4233,26 +3861,10 @@ class Searcher:
         predicate pushes into the aggregate, and the per-page result is
         size rows — so walking 10^9 buckets never materializes them in
         one response."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.composite(
+            self._agg_input(hits, None, field_values), sources, size, after
         )
-        dm = self.docmap.select("doc_id", "url")
-        j = hits.join(dm, "doc_id").join(field_values, "url")
-        g = j.groupBy(*sources).agg(F.count("*").alias("doc_count"))
-        if after is not None:
-            if len(after) != len(sources):
-                raise ValueError(
-                    f"after key arity {len(after)} != sources arity {len(sources)}"
-                )
-            # strict tuple > after: (a > A) OR (a = A AND b > B) OR ...
-            cond = F.lit(False)
-            eq = F.lit(True)
-            for col, val in zip(sources, after):
-                cond = cond | (eq & (F.col(col) > F.lit(val)))
-                eq = eq & (F.col(col) == F.lit(val))
-            g = g.filter(cond)
-        return g.orderBy(*[F.col(c).asc() for c in sources]).limit(int(size))
 
     def rescore_topk(
         self,
@@ -4294,20 +3906,10 @@ class Searcher:
             F.lit(float(query_weight)) * F.col("base_score")
             + F.lit(float(rescore_weight)) * F.coalesce(F.col("sec_score"), F.lit(0.0))
         )
-        out = (
-            win.join(sec, "doc_id", "left")
-            .select("doc_id", total.alias("score"))
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(max(int(k), int(fetch_k or 0)))
+        out = win.join(sec, "doc_id", "left").select(
+            "doc_id", total.alias("score")
         )
-        if round_to is not None:
-            out = out.withColumn("score", F.round("score", round_to))
-        if with_url:
-            dm = self.docmap.select("doc_id", "url")
-            out = out.join(dm, "doc_id").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            )
-        return out
+        return self._finish_topk(out, k, round_to, fetch_k, with_url)
 
     def query_string_topk(
         self,
@@ -4416,35 +4018,7 @@ class Searcher:
         because the caller asked for exactly that (the ``global``
         aggregation scope and query-less aggregations). Stays a pure
         column projection: no postings read, no shuffle."""
-        dm = self.docmap.select("doc_id")
-        if self.persistent_excluded:
-            dm = dm.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
-        return dm
-
-    def _field_rel(
-        self, field_values: DataFrame | None, field: str
-    ) -> DataFrame:
-        """(doc_id, url, field) for EVERY live doc — the global-scope
-        sibling of ``_hit_fields`` (which is hit-scoped). Stored-field
-        path reads the docmap column; external path joins by url."""
-        dm = self.docmap
-        if self.persistent_excluded:
-            dm = dm.filter(
-                ~F.col("doc_id").isin(sorted(self.persistent_excluded))
-            )
-        if field_values is None:
-            if field not in dm.columns:
-                raise ValueError(
-                    f"field {field!r} is not stored in this index's docmap "
-                    f"(stored: {sorted(set(dm.columns) - {'doc_id'})}); "
-                    "build with store_fields=(...) or pass field_values"
-                )
-            return dm.select("doc_id", "url", field)
-        return dm.select("doc_id", "url").join(
-            field_values.select("url", field), "url"
-        )
+        return self._live(self.docmap.select("doc_id"))
 
     def exists_ids(
         self, field: str, field_values: DataFrame | None = None
@@ -4454,7 +4028,7 @@ class Searcher:
         ``field_values`` relation counts as missing too (ES: no indexed
         value), which the inner url join gives for free."""
         return (
-            self._field_rel(field_values, field)
+            self._agg_input(None, [field], field_values)
             .filter(F.col(field).isNotNull())
             .select("doc_id")
         )
@@ -4515,18 +4089,10 @@ class Searcher:
         ``exists_ids`` over the hit set: hit ids LEFT JOIN the field
         relation, count the nulls. External relations may omit rows
         entirely (absent ≡ null), so the join is left, not inner."""
-        hits = self.matching_doc_ids(
-            query, mode=mode, min_should_match=min_should_match,
-            must_not=must_not,
-        )
-        fv = self._field_rel(field_values, field).select("doc_id", field)
-        return (
-            hits.join(fv, "doc_id", "left")
-            .agg(
-                F.sum(F.col(field).isNull().cast("long"))
-                .cast("long").alias("doc_count")
-            )
-        )
+        hits = self.matching_doc_ids(query, mode, min_should_match, must_not)
+        return aggs.value_counts(
+            self._agg_input(hits, [field], field_values, how="left"), field
+        ).select(F.col("missing_count").alias("doc_count"))
 
     def agg_global(
         self,
@@ -4538,14 +4104,7 @@ class Searcher:
         beside it (the classic "facet counts vs the whole corpus"
         denominator). Same output shape as ``agg_stats``; one partial
         aggregate over the field relation."""
-        fv = self._field_rel(field_values, field)
-        return fv.agg(
-            F.count(field).alias("n_docs_agg"),
-            F.min(field).alias("min_v"),
-            F.max(field).alias("max_v"),
-            F.sum(field).cast("long").alias("sum_v"),
-            F.round(F.avg(field), 4).alias("avg_v"),
-        )
+        return aggs.stats(self._agg_input(None, [field], field_values), field)
 
     def ids_topk(
         self,
@@ -4614,14 +4173,16 @@ class Searcher:
         # '|' binds tighter than whitespace: normalize 'a | b' to 'a|b'
         # so one fragment is one clause group
         qs = re.sub(r"\s*\|\s*", "|", qs)
-        # each fragment: (negated, terms, phrases)
-        for frag in re.findall(r'-?"[^"]*"|\S+', qs):
+        # each fragment: (negated, terms, phrases). A fragment runs to the
+        # next space outside quotes, so a group member may be a phrase with
+        # spaces in it ('a|"b c"'); a stray quote falls back to \S+
+        for frag in re.findall(r'-?(?:"[^"]*"|[^\s|"]+|\|)+|\S+', qs):
             neg = frag.startswith("-")
             frag = frag.lstrip("-")
             terms: list[str] = []
             phrases: list[str] = []
             unexpanded = False
-            for piece in frag.split("|"):
+            for piece in re.findall(r'(?:"[^"]*"|[^|"])+|"', frag):
                 if not piece:
                     continue
                 if len(piece) >= 2 and piece[0] == '"' and piece[-1] == '"':

@@ -450,11 +450,18 @@ def _qs_cases(s):
             sqs('data "index search" -query', "and"),
             _two_pass_clauses(s, ["data"], [(["data"], []), ([], ["index search"])],
                               ["query"])),
-        # '|' binds a quoted phrase only when it has no space in it
         "sqs_and_mixed_group": (
             sqs('query|"index" data', "and"),
             _two_pass_clauses(s, ["data", "query"],
                               [(["query"], ["index"]), (["data"], [])])),
+        # a '|' group member may be a phrase with a space in it
+        "sqs_or_phrase_group": (
+            sqs('query|"index search" data'),
+            _two_pass_clauses(s, ["data", "query"])),
+        "sqs_and_phrase_group": (
+            sqs('query|"index search" data', "and"),
+            _two_pass_clauses(s, ["data", "query"],
+                              [(["query"], ["index search"]), (["data"], [])])),
         "sqs_or_prefix": (
             sqs("sear* -query"),
             _two_pass_clauses(s, _scan_prefix(s, "sear"), nots=["query"])),
@@ -468,7 +475,8 @@ def _qs_cases(s):
 QS_CASES = [
     "qs_must_should_not", "qs_prefix_group", "qs_no_must", "qs_phrase",
     "sqs_and_or_group", "sqs_and_phrase", "sqs_and_mixed_group",
-    "sqs_or_prefix", "sqs_phrase_only",
+    "sqs_or_phrase_group", "sqs_and_phrase_group", "sqs_or_prefix",
+    "sqs_phrase_only",
 ]
 
 

@@ -13,13 +13,16 @@ Each class runs ``CALLS`` times in a row, each call under its own job group
 (``setJobGroup``). The jobs, stages and tasks of the SECOND call come from
 ``statusTracker`` (the first call warms the reader caches and the Python
 workers); ``p50_ms`` is the median wall time of calls 2..``CALLS``.
-``--extra`` also runs three classes the serve mix does not issue, over
+``--extra`` also runs four classes the serve mix does not issue, over
 the same index and built from the mix's head terms h0..h3 (no draw, so
 the serve draws are unchanged): ``query_string`` (``+h0 h1 p* -h3``, the
 shape of ``__spark_entry__``'s ``QS_QUERY``, with ``p`` the first two
 letters of h2), ``sqs_and`` (``h0 h1|h2`` under
-``default_operator="and"``) and ``prefix`` (``prefix_topk`` of h0's first
-two letters). ``--classes`` may name them too.
+``default_operator="and"``), ``prefix`` (``prefix_topk`` of h0's first
+two letters) and ``dsl_aggs`` (two ``_search`` bodies matching ``h0 h1``:
+a ``terms(lang)`` agg with an ``avg(dl)`` sub-agg, and an
+``extended_stats(dl)`` agg; a call collects both). ``--classes`` may name
+them too.
 
 ``--plans DIR`` also writes each class's final executed plan (after its
 last call) to ``DIR/<class>.txt``, with the index and run paths written as
@@ -46,11 +49,14 @@ from perfbench.trace import job_counts  # noqa: E402
 # The serve mix's seed and the calls per class (the first warms up).
 SEED = 1
 CALLS = 4
-EXTRA_CLASSES = ("query_string", "sqs_and", "prefix")
+EXTRA_CLASSES = ("query_string", "sqs_and", "prefix", "dsl_aggs")
 
 
 def extra_call(s, head: list[str], name: str):
-    """The engine call of an ``--extra`` class over head terms ``head``."""
+    """The engine call of an ``--extra`` class over head terms ``head``: a
+    DataFrame, or a list of them for a class that issues several
+    requests."""
+    from kafka_es_spark.operators.searchapi import search
     from perfbench.workloads import K
 
     if name == "query_string":
@@ -61,6 +67,17 @@ def extra_call(s, head: list[str], name: str):
             f"{head[0]} {head[1]}|{head[2]}", default_operator="and", k=K)
     if name == "prefix":
         return s.prefix_topk(head[0][:2], k=K)
+    if name == "dsl_aggs":
+        query = {"match": {"text": f"{head[0]} {head[1]}"}}
+        return [
+            search(s, {"query": query, "aggs": {"by_lang": {
+                "terms": {"field": "lang", "size": K},
+                "aggs": {"avg_dl": {"avg": {"field": "dl"}}},
+            }}}),
+            search(s, {"query": query, "aggs": {
+                "s": {"extended_stats": {"field": "dl"}},
+            }}),
+        ]
     raise ValueError(name)
 
 
@@ -72,13 +89,17 @@ def measure(sc, name: str, make, plans: dict | None) -> dict:
         group = f"query-jobs-{name}-{i}"
         sc.setJobGroup(group, name)
         t = time.perf_counter()
-        df = make()
-        df.collect()
+        dfs = make()
+        dfs = dfs if isinstance(dfs, list) else [dfs]
+        for df in dfs:
+            df.collect()
         times.append(time.perf_counter() - t)
         if i == 1:
             counts = job_counts(sc, group)
     if plans:
-        text = df._jdf.queryExecution().executedPlan().toString()
+        text = "\n".join(
+            df._jdf.queryExecution().executedPlan().toString() for df in dfs
+        )
         for path, placeholder in plans["paths"].items():
             text = text.replace(path, placeholder)
         with open(os.path.join(plans["dir"], f"{name}.txt"), "w") as f:
